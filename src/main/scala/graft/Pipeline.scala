@@ -95,15 +95,21 @@ object Pipeline {
     * normalized and upserted; pks whose LATEST pulled version carries
     * the soft-delete flag become DELETE batches instead (see
     * [[loadLatest]]). Returns (rows written, next cursor) — deletes
-    * advance the cursor like any other change. */
+    * advance the cursor like any other change. The pull is pinned once
+    * ([[Pin]]) and the loads and the next cursor all read that one
+    * snapshot: a live source re-read per action could otherwise show
+    * the cursor rows the loads never saw, and they would be skipped
+    * for good. */
   def incrementalSync(spark: SparkSession, sync: ObjectSync, cursor: Any,
                       batchSize: Int)(
       execute: (String, JdbcUpsertSink.Batch) => Unit): (Long, Option[Any]) = {
     val src = IncrementalSource(sync.read, sync.cursorField)
-    val pulled = src.pull(spark, cursor,
-      sync.read(spark).columns.toSeq)
-    val n = loadLatest(pulled, sync, batchSize)(execute)
-    (n, src.nextCursor(pulled))
+    val pulled = Pin.pin(src.pull(spark, cursor,
+      sync.read(spark).columns.toSeq))
+    try {
+      val n = loadLatest(pulled, sync, batchSize)(execute)
+      (n, src.nextCursor(pulled))
+    } finally Pin.unpin(pulled)
   }
 
   /** Ad-hoc backfill (SURVEY §3.1 entry point 3): re-extract a cursor

@@ -3,6 +3,7 @@ package graft.sources
 import java.sql.{Connection, DriverManager, PreparedStatement}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.AccumulatorV2
 
 /** Derby ANSI-MERGE dialect of the load side — the EXECUTED sibling of
   * [[JdbcUpsertSink]]'s PostgreSQL SQL generation (r13, VERDICT item
@@ -233,13 +234,15 @@ object PgDialect extends UpsertDialect {
 
 /** Executed JDBC write protocol over embedded Derby: per-partition
   * connections (no driver bottleneck — the 100 TB shape), staged
-  * batches, one MERGE + one commit per partition, keyed deletes, and a
-  * cursor store whose advance can join a load transaction.
+  * batches, and ONE transaction per partition that upserts the
+  * partition's live rows and deletes its tombstoned keys, plus a cursor
+  * store whose advance can join a load transaction.
   *
   * Exactly-once ladder, smallest honest claim first:
-  *  - every partition write is ATOMIC (stage + MERGE + commit is one
-  *    transaction; a task failure before commit leaves the target
-  *    untouched and Spark's task retry replays the partition);
+  *  - every partition write is ATOMIC (stage + MERGE + keyed DELETE +
+  *    commit is one transaction; a task failure before commit leaves
+  *    the target untouched — upserts and deletes alike — and Spark's
+  *    task retry replays the partition);
   *  - every write is IDEMPOTENT (keyed MERGE / keyed DELETE), so
   *    replaying a committed partition converges — this is what makes
   *    the multi-partition load safe without a global transaction;
@@ -364,51 +367,67 @@ object JdbcExec {
                 batchSize: Int): Unit =
     DerbyDialect.loadBatch(conn, table, schema, pk, rows, batchSize)
 
-  /** Distributed executed upsert: each partition opens its own
-    * connection and runs ONE atomic load+commit transaction in the
-    * url's dialect (staged MERGE on Derby, batched ON CONFLICT on
-    * PostgreSQL). Input must be PK-unique (dedupe latest-wins
-    * upstream); repartition by PK hash upstream to avoid
-    * cross-partition lock contention. */
-  def writeUpsert(df: DataFrame, url: String, table: String,
-                  pk: Seq[String], batchSize: Int = 1000): Unit = {
-    val schema = df.schema
-    val dialect = dialectFor(url)
-    df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) withConnection(url) { conn =>
+  /** The one per-partition write routine behind [[writeUpsert]],
+    * [[writeDeletes]] and [[syncOnce]]: on ONE connection and in ONE
+    * transaction, stream the partition's `live` rows through the url's
+    * dialect (staged MERGE on Derby, batched ON CONFLICT on
+    * PostgreSQL), then DELETE its tombstoned keys, then commit; any
+    * failure rolls both back. `deadKeys` (pk values in `pk` order) is
+    * read only after `live` is drained, so a caller may fill it while
+    * `live` streams. A partition with nothing to write opens no
+    * connection. */
+  private final case class PartitionWrite(url: String, table: String,
+                                          schema: StructType, pk: Seq[String],
+                                          batchSize: Int) {
+    private val dialect = dialectFor(url)
+    private val deleteSql = dialect.deleteSql(table, pk)
+    private val keyTypes = pk.map(k => schema(k).dataType).toArray
+
+    def apply(live: Iterator[Row], deadKeys: () => Iterator[Row]): Unit =
+      if (live.hasNext || deadKeys().hasNext) withConnection(url) { conn =>
         conn.setAutoCommit(false)
         try {
-          dialect.loadBatch(conn, table, schema, pk, rows, batchSize)
+          if (live.hasNext)
+            dialect.loadBatch(conn, table, schema, pk, live, batchSize)
+          val keys = deadKeys()
+          if (keys.hasNext) {
+            val ps = conn.prepareStatement(deleteSql)
+            try keys.grouped(batchSize).foreach { chunk =>
+              chunk.foreach { r =>
+                var i = 0
+                while (i < keyTypes.length) {
+                  bindValue(ps, i + 1, r.get(i), keyTypes(i)); i += 1
+                }
+                ps.addBatch()
+              }
+              ps.executeBatch()
+            } finally ps.close()
+          }
           conn.commit()
         } catch { case e: Throwable => conn.rollback(); throw e }
       }
+  }
+
+  /** Distributed executed upsert: each partition runs ONE atomic
+    * load+commit transaction ([[PartitionWrite]]). Input must be
+    * PK-unique (dedupe latest-wins upstream); repartition by PK hash
+    * upstream to avoid cross-partition lock contention. */
+  def writeUpsert(df: DataFrame, url: String, table: String,
+                  pk: Seq[String], batchSize: Int = 1000): Unit = {
+    val write = PartitionWrite(url, table, df.schema, pk, batchSize)
+    df.foreachPartition { rows: Iterator[Row] =>
+      write(rows, () => Iterator.empty)
     }
   }
 
   /** Distributed tombstone delete — keyed, hence replay-idempotent;
-    * same per-partition single-transaction protocol. */
+    * same per-partition single-transaction routine. */
   def writeDeletes(df: DataFrame, url: String, table: String,
                    pk: Seq[String], batchSize: Int = 1000): Unit = {
     val keyed = df.select(pk.map(org.apache.spark.sql.functions.col): _*)
-    val width = pk.length
-    val keyTypes = keyed.schema.fields.map(_.dataType)
-    val sql = dialectFor(url).deleteSql(table, pk)
+    val write = PartitionWrite(url, table, keyed.schema, pk, batchSize)
     keyed.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) withConnection(url) { conn =>
-        conn.setAutoCommit(false)
-        try {
-          val ps = conn.prepareStatement(sql)
-          try rows.grouped(batchSize).foreach { chunk =>
-            chunk.foreach { r =>
-              var i = 0
-              while (i < width) { bindValue(ps, i + 1, r.get(i), keyTypes(i)); i += 1 }
-              ps.addBatch()
-            }
-            ps.executeBatch()
-          } finally ps.close()
-          conn.commit()
-        } catch { case e: Throwable => conn.rollback(); throw e }
-      }
+      write(Iterator.empty, () => rows)
     }
   }
 
@@ -418,44 +437,70 @@ object JdbcExec {
     spark.read.jdbc(url, s""""$table"""", props)
   }
 
+  /** Row count and largest non-null cursor of one [[syncOnce]] write
+    * action. Spark merges accumulator updates from successful tasks
+    * only, so a failed or retried partition attempt never counts. */
+  private final class SyncTally
+      extends AccumulatorV2[java.lang.Long, (Long, Option[Long])] {
+    private var rows = 0L
+    private var seen = false
+    private var max = Long.MinValue
+    def isZero: Boolean = rows == 0 && !seen
+    def copy(): SyncTally = {
+      val t = new SyncTally; t.rows = rows; t.seen = seen; t.max = max; t
+    }
+    def reset(): Unit = { rows = 0; seen = false; max = Long.MinValue }
+    def add(cursor: java.lang.Long): Unit = {
+      rows += 1
+      if (cursor != null) { seen = true; max = math.max(max, cursor) }
+    }
+    def merge(other: AccumulatorV2[java.lang.Long, (Long, Option[Long])]): Unit =
+      other match {
+        case t: SyncTally =>
+          rows += t.rows
+          if (t.seen) { seen = true; max = math.max(max, t.max) }
+      }
+    def value: (Long, Option[Long]) = (rows, if (seen) Some(max) else None)
+  }
+
   /** One incremental sync pass — the reference's extract→load loop
     * shape run end-to-end in the target database: pull rows strictly
-    * past the stored cursor, split soft-deletes, dedupe latest-wins
-    * per key, MERGE the live rows, DELETE the tombstoned keys, then
-    * advance the cursor LAST, in its own transaction. The cursor
-    * deliberately commits after (not atomically with) the distributed
-    * loads: correctness rests on the keyed writes being idempotent, so
-    * a crash anywhere before the cursor commit replays at most one
-    * pull into convergent MERGEs/DELETEs. The pulled batch is EAGERLY
-    * pinned (localCheckpoint: materialize now + cut lineage) before
-    * anything reads it, so the cursor, the upserts, and the deletes
-    * are all computed from ONE snapshot even when the underlying
-    * source mutates between actions (ADVICE r13; hardened r14→r15:
-    * persist() was lazy AND evictable — partitions could materialize
-    * at different times across the four actions, or be evicted and
-    * recomputed from the mutated source AFTER the cursor was taken,
-    * silently skipping rows the cursor had already passed; the
-    * checkpoint removes the recompute path entirely). Returns the new
-    * cursor (old one if the pull was empty). */
+    * past the stored cursor, dedupe latest-wins per key, then ONE Spark
+    * action writes everything: per partition, one transaction MERGEs
+    * the live rows and DELETEs the tombstoned keys ([[PartitionWrite]]),
+    * while an accumulator tallies the row count and the max cursor.
+    * Rows whose deleted flag is null take neither route. Keys are
+    * PK-unique after the window and its exchange has hash-partitioned
+    * them by PK, so a key's upsert and delete never span partitions.
+    *
+    * The cursor advances LAST, in its own transaction, and deliberately
+    * after (not atomically with) the distributed loads: correctness
+    * rests on the keyed writes being idempotent, so a crash anywhere
+    * before the cursor commit replays at most one pull into convergent
+    * MERGEs/DELETEs. A pull whose cursor values are all null fails
+    * loudly after its loads and commits no cursor (never a sentinel).
+    *
+    * The pulled batch is EAGERLY pinned (localCheckpoint:
+    * materialize now + cut lineage) even though only one action reads
+    * it: a retried shuffle map task or a re-planned AQE stage would
+    * otherwise re-read a live source, and the rows written, the rows
+    * counted and the cursor taken could then disagree — rows the cursor
+    * has passed would be skipped for good (ADVICE r13; r14→r15:
+    * persist() was lazy AND evictable, so it was no snapshot either).
+    * Returns the new cursor (the old one if the pull was empty; an
+    * empty pull writes nothing and opens no write connection). */
   def syncOnce(spark: SparkSession, url: String, table: String,
                pk: Seq[String], stateTable: String, obj: String,
                pull: Long => DataFrame, cursorField: String,
                deletedField: String, batchSize: Int = 1000): Long = {
     import org.apache.spark.sql.functions._
     val cursors = new JdbcCursorStore(url, stateTable)
-    cursors.init()
-    val last = cursors.get(obj).getOrElse(Long.MinValue)
-    // Pin ONE snapshot of the pull: isEmpty, the max-cursor agg, the
-    // upsert and the delete below are four separate Spark actions, and
-    // an unpinned live source could serve each a different view. The
-    // pin is EAGER (default: localCheckpoint, not persist() — see the
-    // method scaladoc for why lazy/evictable caching was not a
-    // snapshot); the mechanism is the spark.graft.pin.mode knob (r16):
-    // `reliable` checkpoints to a DFS dir so the snapshot survives
-    // executor loss mid-sync — A/B numbers in SCALE.md §r16.2.
+    val last = cursors.initAndGet(obj).getOrElse(Long.MinValue)
+    // spark.graft.pin.mode picks the pin (r16): `reliable` checkpoints
+    // to a DFS dir so the snapshot survives executor loss mid-sync —
+    // A/B numbers in SCALE.md §r16.2
     val batch = graft.Pin.pin(pull(last))
     try {
-      if (batch.isEmpty) return last
       // latest-wins per key on the cursor field (MERGE needs PK-unique)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(pk.map(col): _*)
@@ -463,23 +508,37 @@ object JdbcExec {
       val latest = batch
         .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
         .drop("_rn")
-        .persist()
-      try {
-        val live = latest.filter(!col(deletedField))
-        val dead = latest.filter(col(deletedField))
-        val newCursor = batch.agg(max(col(cursorField))).head().getLong(0)
-        // distributed idempotent loads first …
-        writeUpsert(live, url, table, pk, batchSize)
-        writeDeletes(dead, url, table, pk, batchSize)
-        // … then the cursor advance commits last, separately; replay
-        // of this window is safe because every load above is keyed.
+      val schema = latest.schema
+      val cursorAt = schema.fieldIndex(cursorField)
+      val deletedAt = schema.fieldIndex(deletedField)
+      val keyAt = pk.map(schema.fieldIndex)
+      val write = PartitionWrite(url, table, schema, pk, batchSize)
+      val tally = new SyncTally
+      spark.sparkContext.register(tally)
+      latest.foreachPartition { rows: Iterator[Row] =>
+        val deadKeys = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val live = rows.filter { r =>
+          tally.add(r.get(cursorAt).asInstanceOf[java.lang.Long])
+          if (r.isNullAt(deletedAt)) false
+          else if (r.getBoolean(deletedAt)) {
+            deadKeys += Row.fromSeq(keyAt.map(r.get)); false
+          } else true
+        }
+        write(live, () => deadKeys.iterator)
+      }
+      val (rows, maxCursor) = tally.value
+      if (rows == 0) last
+      else {
+        val newCursor = maxCursor.getOrElse(throw new IllegalStateException(
+          s"$obj: $cursorField is null on every pulled row; " +
+            "the cursor cannot advance"))
         withConnection(url) { conn =>
           conn.setAutoCommit(false)
           try { cursors.putInTxn(conn, obj, newCursor); conn.commit() }
           catch { case e: Throwable => conn.rollback(); throw e }
         }
         newCursor
-      } finally latest.unpersist()
+      }
     } finally graft.Pin.unpin(batch)
   }
 }
@@ -494,12 +553,19 @@ final class JdbcCursorStore(url: String, table: String) {
     StructField("cursor_val", LongType)))
 
   /** Create the state table if absent (in the url's dialect). */
-  def init(): Unit = JdbcExec.withConnection(url) { conn =>
+  def init(): Unit = JdbcExec.withConnection(url)(ensure)
+
+  def get(obj: String): Option[Long] = JdbcExec.withConnection(url)(read(_, obj))
+
+  /** [[init]] then [[get]] on ONE connection — a sync's cursor read. */
+  def initAndGet(obj: String): Option[Long] =
+    JdbcExec.withConnection(url) { conn => ensure(conn); read(conn, obj) }
+
+  private def ensure(conn: Connection): Unit =
     JdbcExec.ensureTable(conn, table, schema, pk = Seq("obj"),
       dialect = JdbcExec.dialectFor(url))
-  }
 
-  def get(obj: String): Option[Long] = JdbcExec.withConnection(url) { conn =>
+  private def read(conn: Connection, obj: String): Option[Long] = {
     val ps = conn.prepareStatement(
       s"""SELECT "cursor_val" FROM "$table" WHERE "obj" = ?""")
     try {

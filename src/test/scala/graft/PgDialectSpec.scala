@@ -26,8 +26,9 @@ class PgDialectSpec extends SparkSpec {
   }
 
   test("syncOnce drives create -> ON CONFLICT upsert -> tombstone " +
-    "DELETE -> cursor, in order, each load in its own transaction, " +
-    "with latest-wins parameters; replay converges") {
+    "DELETE -> cursor, in order, a partition's upsert and delete in one " +
+    "transaction and the cursor in its own, with latest-wins " +
+    "parameters; replay converges") {
     RecordingJdbc.register()
     val url = s"jdbc:postgresql://fake/pgd${System.nanoTime}"
     val db = RecordingJdbc.db(url)
@@ -50,8 +51,13 @@ class PgDialectSpec extends SparkSpec {
       (2L, "b2", 120L, false),  // in-window update: latest wins
       (3L, "c", 130L, true))    // tombstone: DELETE route
       .toDF("id", "name", "cur", "is_deleted").coalesce(1)
-    val c = JdbcExec.syncOnce(spark, url, "acct_tgt", Seq("id"),
+    // one shuffle partition: the tombstone shares its partition, and so
+    // its transaction, with the live rows
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val c = try JdbcExec.syncOnce(spark, url, "acct_tgt", Seq("id"),
       "pg_state", "acct", _ => batch, "cur", "is_deleted", batchSize = 10)
+    finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
     assert(c == 130L)
 
     val ev = db.seq
@@ -91,6 +97,14 @@ class PgDialectSpec extends SparkSpec {
       s"upsert not committed after its batch: $onConn")
     assert(!onConn.exists(_.contains("pg_state")),
       s"cursor statements leaked into the load transaction: $onConn")
+    // the tombstone DELETE runs in the same partition transaction as
+    // the upsert: same connection, before that connection's commit
+    val delConn = ev(iDel).split(" ")(0)
+    assert(delConn == upConn,
+      s"tombstone DELETE on $delConn, upsert on $upConn:\n${ev.mkString("\n")}")
+    val delIdx = onConn.indexWhere(_.contains("executeBatch: DELETE FROM"))
+    assert(batchIdx < delIdx && delIdx < commitIdx,
+      s"DELETE not inside the upsert's transaction: $onConn")
     // the cursor advance is its own transaction (cursor-LAST protocol)
     val curConn = ev(iCur).split(" ")(0)
     assert(curConn != upConn, "cursor shared the upsert connection")

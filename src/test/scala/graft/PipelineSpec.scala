@@ -52,6 +52,34 @@ class PipelineSpec extends SparkSpec {
     assert(n2 == 0 && next2.isEmpty)
   }
 
+  test("incremental sync under a live source: rows that become " +
+    "visible during the load are left for the next sync, never lost") {
+    // ids 0..49 are visible when the sync starts; the first sink call
+    // makes 50..99 visible (one source partition, so the run is
+    // deterministic). The cursor must not pass rows the loads never saw.
+    PipelineSpec.visible = 50L
+    val sync = ObjectSync("live_t",
+      s => {
+        import s.implicits._
+        s.sparkContext.parallelize(Seq(0), 1)
+          .flatMap(_ => 0L until PipelineSpec.visible).toDF("id")
+          .withColumn("cur", col("id"))
+      },
+      pk = "id", cursorField = "cur")
+    PipelineSpec.rows.clear()
+    def sink(sql: String, batch: graft.sources.JdbcUpsertSink.Batch): Unit = {
+      PipelineSpec.visible = 100L
+      batch.foreach(r => PipelineSpec.rows.add(r.head.asInstanceOf[Long]))
+    }
+    val (n1, c1) = Pipeline.incrementalSync(spark, sync, -1L, 1000)(sink)
+    assert(n1 == 50 && c1.contains(49L), s"first sync wrote $n1, cursor $c1")
+    val (n2, c2) = Pipeline.incrementalSync(spark, sync, c1.get, 1000)(sink)
+    assert(n2 == 50 && c2.contains(99L), s"second sync wrote $n2, cursor $c2")
+    import scala.jdk.CollectionConverters._
+    val seen = PipelineSpec.rows.asScala.map(_.toLong).toSeq
+    assert(seen.sorted == (0L to 99L), "rows lost or written twice")
+  }
+
   test("incremental sync routes soft-deleted rows to DELETE batches") {
     val softSync = eventsSync.copy(
       read = s => eventsSync.read(s)
@@ -231,4 +259,6 @@ object PipelineSpec {
   val rows = new ConcurrentLinkedQueue[java.lang.Long]()
   val upserts = new ConcurrentLinkedQueue[java.lang.Long]()
   val deletes = new ConcurrentLinkedQueue[java.lang.Long]()
+  // ids the live source of the live-source spec serves: 0 until visible
+  @volatile var visible = 0L
 }
