@@ -11,12 +11,11 @@ import org.apache.spark.storage.StorageLevel
   * [[graft.operators.CorpusPipeline.stages]] / incStages (stage frames
   * feed the next stage AND the audit ledger — an unpinned stage
   * re-plans its whole prefix under AQE on every consumer),
-  * [[graft.sources.JdbcExec.syncOnce]] and
-  * [[graft.Pipeline.incrementalSync]] (the rows written, the rows
-  * counted and the cursor taken must come from the same rows even if
-  * the source mutates; syncOnce reads its pin in ONE action, but a
-  * retried shuffle map task or a re-planned AQE stage would re-read an
-  * unpinned live source), the iterative min-label CC in LlmOps
+  * [[graft.sources.JdbcExec.syncOnce]], which every cursor-driven
+  * sync runs (the rows written, the rows counted and the cursor taken
+  * must come from the same rows even if the source mutates; syncOnce
+  * reads its pin in ONE action, but a retried shuffle map task or a
+  * re-planned AQE stage would re-read an unpinned live source), the iterative min-label CC in LlmOps
   * (per-round label frames — exactly the superstep state a cluster job
   * reliable-checkpoints every N rounds), DedupArtifacts.append and the
   * streaming maintenance loops (lineage must be TRUNCATED before the

@@ -2,25 +2,32 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DataType, StructType}
-import graft.sources.{IncrementalSource, JdbcUpsertSink}
+import graft.sources.{IncrementalSource, JdbcExec}
 
-/** The reference's top-level lifecycle (SURVEY §3.1), composed from the
-  * operator layers: full table sync and incremental sync of a described
-  * object into an upsert sink. This is the "a user of the reference
-  * could switch" surface — the same three stages (extract → transform →
-  * load) as pure DataFrame passes plus the sink protocol.
+/** The reference's top-level lifecycle (SURVEY §3.1): full,
+  * incremental, backfill and streaming sync of a described object into
+  * a JDBC target, plus the describe-driven V2 syncs over the
+  * `graft-soql` source. There is one lifecycle: every entry point
+  * creates (and drift-ALTERs) its target from the typed source schema,
+  * then runs [[JdbcExec.load]] — one latest-wins window and ONE Spark
+  * action whose partitions each upsert their live rows and delete their
+  * tombstoned keys in one transaction. The cursor-driven entries go
+  * through [[JdbcExec.syncOnce]], which pins the pull, reads the stored
+  * cursor first and commits the new one last. The statement dialect
+  * follows the url ([[graft.sources.UpsertDialect]]).
   *
-  * Scale notes: every stage is a narrow transform or a single keyed
-  * shuffle (dedupe); the sink writes per-partition. The pipeline never
-  * collects; cursor state is one scalar per object. Repartitioning by
-  * the PK before the sink keeps ON CONFLICT contention partition-local.
+  * Scale notes: the pipeline never collects; the one shuffle is the
+  * latest-wins window, which also hash-partitions the writes by PK, so
+  * MERGE contention stays partition-local. Cursor state is one scalar
+  * per object, in the target database.
   */
 object Pipeline {
 
   /** Declarative object config: where it comes from, its key, its
-    * cursor, and the target-type map (describe()-driven). */
+    * bigint cursor, and the target-type map (describe()-driven). The
+    * target table and its cursor-state key are both `name`. */
   final case class ObjectSync(
       name: String,
       read: SparkSession => DataFrame,
@@ -31,120 +38,88 @@ object Pipeline {
       // flagged rows are propagated as DELETEs, not upserts
       deleteField: Option[String] = None)
 
-  /** Transform pass: apply the Salesforce→PG type map (cast columns
-    * present in the map, keep the rest), then drop exact-duplicate
-    * rows per PK keeping the latest by cursor — deterministic MERGE
-    * semantics before the sink ever sees the batch. */
-  def normalize(df: DataFrame, sync: ObjectSync): DataFrame = {
-    val casted = sync.targetTypes.foldLeft(df) { case (d, (c, t)) =>
+  /** The Salesforce→PG type map: cast the columns present in `types`,
+    * keep the rest. Latest-wins is the load step's job. */
+  def normalize(df: DataFrame, types: Map[String, DataType]): DataFrame =
+    types.foldLeft(df) { case (d, (c, t)) =>
       if (d.columns.contains(c)) d.withColumn(c, col(c).cast(t)) else d
     }
-    // tiebreak for duplicate (pk, cursor) pairs: a stable hash over all
-    // non-pk columns — pk itself is constant within the partition, so it
-    // cannot break ties; without this the survivor is partition-order
-    // nondeterministic
-    val tiebreak = xxhash64(
-      casted.columns.filter(_ != sync.pk).map(c => col(c).cast("string")): _*)
-    val w = Window.partitionBy(sync.pk)
-      .orderBy(desc(sync.cursorField), tiebreak.desc)
-    casted.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+
+  /** Create `table` from `schema` if it is absent, and ALTER in the
+    * columns it lacks — the describe-driven DDL, on one connection. */
+  private def ensureTarget(url: String, table: String, schema: StructType,
+                           pk: Seq[String]): Unit = {
+    val dialect = JdbcExec.dialectFor(url)
+    JdbcExec.withConnection(url) { conn =>
+      JdbcExec.ensureTable(conn, table, schema, pk, dialect)
+      JdbcExec.ensureColumns(conn, table, schema, dialect)
+    }
   }
 
-  /** Shared load pass for one pulled window/micro-batch: normalize FIRST
-    * (latest version per pk, including the soft-delete flag), then route
-    * each pk by its LATEST version — upsert if live, DELETE if flagged.
-    * A window can contain delete-then-undelete sequences for one pk; an
-    * older tombstone must never outlive a newer live version, and a
-    * stale live version must never resurrect a pk whose latest state is
-    * deleted (both violate the latest-wins contract normalize exists
-    * for). Returns the number of live rows upserted. */
-  private def loadLatest(batch: DataFrame, sync: ObjectSync, batchSize: Int)(
-      execute: (String, JdbcUpsertSink.Batch) => Unit): Long = {
-    val latest = normalize(batch, sync)
-    val (live, dead) = sync.deleteField match {
-      case Some(f) =>
-        (latest.filter(!coalesce(col(f), lit(false))).drop(f),
-         Some(latest.filter(coalesce(col(f), lit(false)))))
-      case None => (latest, None)
-    }
-    val n = live.count()
-    if (n > 0)
-      JdbcUpsertSink.writeUpsert(
-        live.repartition(col(sync.pk)), sync.name, Seq(sync.pk),
-        batchSize)(execute)
-    dead.foreach { d =>
-      JdbcUpsertSink.writeDeletes(
-        d.select(col(sync.pk)).distinct().repartition(col(sync.pk)),
-        sync.name, Seq(sync.pk), batchSize)(execute)
-    }
-    n
+  /** `df` under the object's type map, with the target ensured to match. */
+  private def typedTarget(url: String, sync: ObjectSync,
+                          df: DataFrame): DataFrame = {
+    val typed = normalize(df, sync.targetTypes)
+    ensureTarget(url, sync.name, typed.schema, Seq(sync.pk))
+    typed
   }
 
-  /** Stage 1+2+3, full sync: read everything, then the same
-    * latest-version routing as every other sync path — a source with a
-    * soft-delete flag never upserts its dead rows on a full sync
-    * either (their pks get DELETEs, keeping an existing target
-    * consistent). Returns live rows written. `execute` abstracts the
-    * JDBC round-trip (JdbcUpsertSink.writeUpsert). */
-  def fullSync(spark: SparkSession, sync: ObjectSync, batchSize: Int)(
-      execute: (String, JdbcUpsertSink.Batch) => Unit): Long =
-    loadLatest(sync.read(spark), sync, batchSize)(execute)
+  private def load(url: String, sync: ObjectSync, batch: DataFrame,
+                   batchSize: Int): Long =
+    JdbcExec.load(batch.sparkSession, url, sync.name, Seq(sync.pk), batch,
+      sync.cursorField, sync.deleteField, batchSize).live
 
-  /** Incremental sync: rows with cursor strictly past `cursor`,
-    * normalized and upserted; pks whose LATEST pulled version carries
-    * the soft-delete flag become DELETE batches instead (see
-    * [[loadLatest]]). Returns (rows written, next cursor) — deletes
-    * advance the cursor like any other change. The pull is pinned once
-    * ([[Pin]]) and the loads and the next cursor all read that one
-    * snapshot: a live source re-read per action could otherwise show
-    * the cursor rows the loads never saw, and they would be skipped
-    * for good. */
-  def incrementalSync(spark: SparkSession, sync: ObjectSync, cursor: Any,
-                      batchSize: Int)(
-      execute: (String, JdbcUpsertSink.Batch) => Unit): (Long, Option[Any]) = {
+  /** Full sync: read everything and load it. A source with a
+    * soft-delete flag never upserts its dead rows on a full sync either
+    * (their pks get DELETEs, keeping an existing target consistent).
+    * Returns the live rows written. */
+  def fullSync(spark: SparkSession, url: String, sync: ObjectSync,
+               batchSize: Int): Long =
+    load(url, sync, typedTarget(url, sync, sync.read(spark)), batchSize)
+
+  /** Incremental sync: rows with cursor strictly past the cursor stored
+    * for `sync.name` in `stateTable`, loaded and then committed as the
+    * new cursor — deletes advance it like any other change. The pull is
+    * pinned once, so the rows written and the cursor taken come from
+    * one snapshot even under a live source. Returns the new cursor (the
+    * stored one if nothing was pulled). */
+  def incrementalSync(spark: SparkSession, url: String, sync: ObjectSync,
+                      stateTable: String, batchSize: Int): Long = {
+    val fields = typedTarget(url, sync, sync.read(spark)).columns.toSeq
     val src = IncrementalSource(sync.read, sync.cursorField)
-    val pulled = Pin.pin(src.pull(spark, cursor,
-      sync.read(spark).columns.toSeq))
-    try {
-      val n = loadLatest(pulled, sync, batchSize)(execute)
-      (n, src.nextCursor(pulled))
-    } finally Pin.unpin(pulled)
+    JdbcExec.syncOnce(spark, url, sync.name, Seq(sync.pk), stateTable,
+      sync.name,
+      past => normalize(src.pull(spark, past, fields), sync.targetTypes),
+      sync.cursorField, sync.deleteField.orNull, batchSize)
   }
 
   /** Ad-hoc backfill (SURVEY §3.1 entry point 3): re-extract a cursor
-    * range [lo, hi] and upsert it — idempotent because the sink is a
-    * keyed MERGE. Returns rows written. */
-  def backfillSync(spark: SparkSession, sync: ObjectSync, lo: Any, hi: Any,
-                   batchSize: Int)(
-      execute: (String, JdbcUpsertSink.Batch) => Unit): Long = {
-    val src = IncrementalSource(sync.read, sync.cursorField)
-    val pulled = src.pullRange(spark, lo, hi, sync.read(spark).columns.toSeq)
-    loadLatest(pulled, sync, batchSize)(execute)
+    * range [lo, hi] and load it — idempotent because the sink is a
+    * keyed MERGE; the stored cursor is left alone. Returns the live
+    * rows written. */
+  def backfillSync(spark: SparkSession, url: String, sync: ObjectSync,
+                   lo: Any, hi: Any, batchSize: Int): Long = {
+    val pulled = IncrementalSource(sync.read, sync.cursorField)
+      .pullRange(spark, lo, hi, sync.read(spark).columns.toSeq)
+    load(url, sync, typedTarget(url, sync, pulled), batchSize)
   }
 
-  /** Continuous incremental sync: the streaming twin of
-    * [[incrementalSync]]. A file-source stream watches `sourceDir`
-    * (the landing zone an extractor appends batches to); every
-    * micro-batch runs the same normalize → keyed-MERGE path via
-    * foreachBatch, so batch and streaming share one code path
-    * (Spark's unified model). The checkpoint carries the source
-    * offsets — exactly the cursor role CursorStore plays for batch
-    * syncs. Upserts are idempotent, so micro-batch replays after a
-    * failure are safe (effectively exactly-once in the target); the
-    * per-key DELETEs are equally idempotent, so the soft-delete
-    * tombstones ride the same replay guarantee.
-    */
-  def streamingSync(spark: SparkSession, sync: ObjectSync,
+  /** Continuous incremental sync: a file-source stream watches
+    * `sourceDir` (the landing zone an extractor appends batches to) and
+    * every micro-batch runs the same load step through foreachBatch, so
+    * batch and streaming share one code path (Spark's unified model).
+    * The checkpoint carries the source offsets — the cursor role the
+    * state table plays for batch syncs. Keyed upserts and deletes are
+    * idempotent, so micro-batch replays after a failure converge
+    * (effectively exactly-once in the target). */
+  def streamingSync(spark: SparkSession, url: String, sync: ObjectSync,
                     sourceDir: String, schema: StructType,
-                    checkpoint: String, batchSize: Int)(
-      execute: (String, JdbcUpsertSink.Batch) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.schema(schema).parquet(sourceDir)
+                    checkpoint: String, batchSize: Int): StreamingQuery =
+    typedTarget(url, sync, spark.readStream.schema(schema).parquet(sourceDir))
       .writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        loadLatest(batch.toDF(), sync, batchSize)(execute)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        load(url, sync, batch, batchSize)
         ()
       }
       .start()
@@ -159,7 +134,7 @@ object Pipeline {
     *    is PUSHED into the endpoint's SOQL WHERE (V2LifecycleSpec
     *    asserts the endpoint saw it), so pre-cursor rows never leave
     *    the remote API;
-    *  - normalize: the ObjectSync-style target-type cast map, applied
+    *  - normalize: the target-type cast map ([[normalize]]), applied
     *    AFTER the pushable filter so the cast never blocks pushdown;
     *  - sink + cursor: [[graft.sources.JdbcExec.syncOnce]] — snapshot
     *    pinning, latest-wins dedupe, keyed MERGE/DELETE partitions,
@@ -175,21 +150,13 @@ object Pipeline {
                  targetTypes: Map[String, DataType] = Map.empty,
                  stateTable: String = "graft_sync_state",
                  batchSize: Int = 1000): Long = {
-    import graft.sources.JdbcExec
     val described = spark.read.format("graft-soql")
       .option("object", obj).load()
-    def typed(df: DataFrame): DataFrame =
-      targetTypes.foldLeft(df) { case (d, (c, t)) =>
-        if (d.columns.contains(c)) d.withColumn(c, col(c).cast(t)) else d
-      }
     val table = s"${obj}_tgt"
-    val dialect = JdbcExec.dialectFor(url)
-    JdbcExec.withConnection(url) { conn =>
-      JdbcExec.ensureTable(conn, table, typed(described).schema, pk, dialect)
-      JdbcExec.ensureColumns(conn, table, typed(described).schema, dialect)
-    }
+    ensureTarget(url, table, normalize(described, targetTypes).schema, pk)
     JdbcExec.syncOnce(spark, url, table, pk, stateTable, obj,
-      past => typed(described.filter(col(cursorField) > lit(past))),
+      past => normalize(described.filter(col(cursorField) > lit(past)),
+        targetTypes),
       cursorField, deletedField, batchSize)
   }
 
@@ -254,16 +221,5 @@ object Pipeline {
       n -> syncOnceV2(spark, url, o.name, o.pk, o.cursorField,
         o.deletedField, o.targetTypes, stateTable, batchSize)
     }
-  }
-
-  /** DDL for the object's target table from its actual schema. The
-    * soft-delete flag never reaches the target (loadLatest drops it
-    * from upserts), so it is excluded here too. */
-  def targetDdl(spark: SparkSession, sync: ObjectSync): String = {
-    val schema = normalize(sync.read(spark), sync).schema
-    val target = sync.deleteField.fold(schema)(f =>
-      org.apache.spark.sql.types.StructType(
-        schema.fields.filterNot(_.name == f)))
-    JdbcUpsertSink.createTableSql(sync.name, target, Seq(sync.pk))
   }
 }

@@ -276,19 +276,21 @@ object LlmOps {
     * snapshot and every batch reads them. Values are the exact
     * in-flight derivation at build time, so the oracle SQL is
     * identical. Baked-in knob: the window length k
-    * (`spark.graft.dedup.substringK`, harness-pinned default 8) — a
-    * retune means a fresh index write, the AnnIndex caveat verbatim. */
+    * (`spark.graft.dedup.substringK`, harness-pinned default 8). It is
+    * part of both the table name and the memo key, so a retune builds
+    * (or finds) the store for the new k and never reads another k's. */
   private val substrStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), String]()
 
-  private[graft] def substringIndexPrefix(s: SparkSession, d: String): String =
-    substrStores.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      val prefix = "graft_substr_" +
+  private[graft] def substringIndexPrefix(s: SparkSession, d: String): String = {
+    val k = substringK(s)
+    substrStores.computeIfAbsent((ScaleOps.sessionId(s), d, k), { _ =>
+      val prefix = s"graft_substr_k${k}_" +
         DedupArtifacts.corpusSlug(s, d, Seq("documents"))
       if (!s.catalog.tableExists(s"${prefix}_win")) {
         graft.functions.VectorExprs.register(s)
         val ex = dedupDocs(s, d).select(col("doc_id"),
-          explode(expr(s"graft_shingles(text, ${substringK(s)})")).as("w"))
+          explode(expr(s"graft_shingles(text, $k)")).as("w"))
         DedupArtifacts.reset(s, s"${prefix}_win")
         // store bytes ≈ 8× the source text (each token opens one
         // k-window, so windows replicate the text ~k-fold; parquet
@@ -302,6 +304,7 @@ object LlmOps {
       }
       prefix
     })
+  }
 
   /** Exact-substring pair detection over k-token window postings
     * (VERDICT r7 "What's missing" #1 — the standard complement to

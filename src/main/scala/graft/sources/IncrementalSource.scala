@@ -35,11 +35,4 @@ final case class IncrementalSource(
     read(spark)
       .filter(col(cursorField) >= lo && col(cursorField) <= hi)
       .select(fields.map(col): _*)
-
-  /** The next cursor after a pull (max modstamp seen). */
-  def nextCursor(pulled: DataFrame): Option[Any] = {
-    val r = pulled.agg(org.apache.spark.sql.functions.max(col(cursorField)))
-      .head()
-    if (r.isNullAt(0)) None else Some(r.get(0))
-  }
 }

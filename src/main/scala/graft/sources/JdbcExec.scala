@@ -29,8 +29,8 @@ import org.apache.spark.util.AccumulatorV2
   *
   * MERGE contract: the staged batch must be PK-UNIQUE — ANSI MERGE
   * raises a duplicate-key error if two source rows hit the same
-  * target key (probed; Derby error 23505). The orchestration layer
-  * ([[JdbcExec.syncOnce]]) dedupes latest-wins per key before the
+  * target key (probed; Derby error 23505). The load step
+  * ([[JdbcExec.load]]) dedupes latest-wins per key before the
   * write, exactly like the `i_upsert_latest_wins` operator.
   */
 object DerbySql {
@@ -232,11 +232,13 @@ object PgDialect extends UpsertDialect {
     }
 }
 
-/** Executed JDBC write protocol over embedded Derby: per-partition
-  * connections (no driver bottleneck — the 100 TB shape), staged
-  * batches, and ONE transaction per partition that upserts the
-  * partition's live rows and deletes its tombstoned keys, plus a cursor
-  * store whose advance can join a load transaction.
+/** The executed JDBC write protocol, in the url's dialect
+  * ([[UpsertDialect]]): per-partition connections (no driver
+  * bottleneck — the 100 TB shape), batched statements, and ONE
+  * transaction per partition that upserts the partition's live rows
+  * and deletes its tombstoned keys. Every sync path runs its
+  * [[JdbcExec.load]] step; the incremental ones add the cursor
+  * ([[JdbcExec.syncOnce]]).
   *
   * Exactly-once ladder, smallest honest claim first:
   *  - every partition write is ATOMIC (stage + MERGE + keyed DELETE +
@@ -246,9 +248,9 @@ object PgDialect extends UpsertDialect {
   *  - every write is IDEMPOTENT (keyed MERGE / keyed DELETE), so
   *    replaying a committed partition converges — this is what makes
   *    the multi-partition load safe without a global transaction;
-  *  - the CURSOR advance is the last write and can share a single
-  *    connection's transaction with a final load batch
-  *    ([[JdbcCursorStore.putInTxn]]): a crash between the load and the
+  *  - the CURSOR advance is the last write, committed on its own
+  *    connection after every partition has committed
+  *    ([[JdbcCursorStore.putInTxn]]): a crash between the loads and the
   *    cursor commit re-pulls one batch into the idempotent MERGE —
   *    never loses data, never double-applies it.
   */
@@ -357,18 +359,8 @@ object JdbcExec {
     } finally ps.close()
   }
 
-  /** One staged-MERGE load on an existing connection/transaction — the
-    * single-connection building block both the distributed writer and
-    * the cursor-paired final batch use. Does NOT commit. (Kept as the
-    * Derby-dialect entry point; dialect-dispatched callers go through
-    * [[UpsertDialect.loadBatch]].) */
-  def loadBatch(conn: Connection, table: String, schema: StructType,
-                pk: Seq[String], rows: Iterator[Row],
-                batchSize: Int): Unit =
-    DerbyDialect.loadBatch(conn, table, schema, pk, rows, batchSize)
-
   /** The one per-partition write routine behind [[writeUpsert]],
-    * [[writeDeletes]] and [[syncOnce]]: on ONE connection and in ONE
+    * [[writeDeletes]] and [[load]]: on ONE connection and in ONE
     * transaction, stream the partition's `live` rows through the url's
     * dialect (staged MERGE on Derby, batched ON CONFLICT on
     * PostgreSQL), then DELETE its tombstoned keys, then commit; any
@@ -437,41 +429,101 @@ object JdbcExec {
     spark.read.jdbc(url, s""""$table"""", props)
   }
 
-  /** Row count and largest non-null cursor of one [[syncOnce]] write
-    * action. Spark merges accumulator updates from successful tasks
-    * only, so a failed or retried partition attempt never counts. */
-  private final class SyncTally
-      extends AccumulatorV2[java.lang.Long, (Long, Option[Long])] {
+  /** What one [[load]] action wrote: every row after latest-wins, the
+    * live (upserted) rows among them, and the largest non-null cursor. */
+  private[graft] final case class Loaded(rows: Long, live: Long,
+                                        maxCursor: Option[Long])
+
+  /** The [[Loaded]] tally of one [[load]] action. Spark merges
+    * accumulator updates from successful tasks only, so a failed or
+    * retried partition attempt never counts. */
+  private final class SyncTally extends AccumulatorV2[java.lang.Long, Loaded] {
     private var rows = 0L
+    private var live = 0L
     private var seen = false
     private var max = Long.MinValue
-    def isZero: Boolean = rows == 0 && !seen
+    def isZero: Boolean = rows == 0 && live == 0 && !seen
     def copy(): SyncTally = {
-      val t = new SyncTally; t.rows = rows; t.seen = seen; t.max = max; t
+      val t = new SyncTally
+      t.rows = rows; t.live = live; t.seen = seen; t.max = max; t
     }
-    def reset(): Unit = { rows = 0; seen = false; max = Long.MinValue }
+    def reset(): Unit = { rows = 0; live = 0; seen = false; max = Long.MinValue }
     def add(cursor: java.lang.Long): Unit = {
       rows += 1
       if (cursor != null) { seen = true; max = math.max(max, cursor) }
     }
-    def merge(other: AccumulatorV2[java.lang.Long, (Long, Option[Long])]): Unit =
+    def addLive(): Unit = live += 1
+    def merge(other: AccumulatorV2[java.lang.Long, Loaded]): Unit =
       other match {
         case t: SyncTally =>
           rows += t.rows
+          live += t.live
           if (t.seen) { seen = true; max = math.max(max, t.max) }
       }
-    def value: (Long, Option[Long]) = (rows, if (seen) Some(max) else None)
+    def value: Loaded = Loaded(rows, live, if (seen) Some(max) else None)
+  }
+
+  /** The load step of every sync path: latest-wins per key, then ONE
+    * Spark action in which each partition MERGEs its live rows and
+    * DELETEs its tombstoned keys in one transaction ([[PartitionWrite]]),
+    * while a [[SyncTally]] counts what it wrote. Keys are PK-unique after
+    * the window and its exchange has hash-partitioned them by PK, so a
+    * key's upsert and delete never span partitions.
+    *
+    * Latest-wins is the one rule all syncs share: per key the row with
+    * the largest cursor; on a cursor tie a tombstone beats a live row;
+    * on a tie in both, the larger xxhash64 over the non-key columns (as
+    * strings), so the survivor never depends on input order. Without a
+    * `deletedField` every row is live; a row whose flag is null takes
+    * neither route. The flag column is written like any other column.
+    * The cursor must be a bigint column. */
+  private[graft] def load(spark: SparkSession, url: String, table: String,
+                          pk: Seq[String], batch: DataFrame,
+                          cursorField: String, deletedField: Option[String],
+                          batchSize: Int): Loaded = {
+    import org.apache.spark.sql.functions._
+    require(batch.schema(cursorField).dataType == LongType,
+      s"$cursorField must be a bigint cursor, not ${batch.schema(cursorField).dataType}")
+    val tiebreak = xxhash64(
+      batch.columns.filterNot(pk.contains).map(col(_).cast(StringType)).toSeq: _*)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(pk.map(col): _*)
+      .orderBy((col(cursorField).desc +: deletedField.map(col(_).desc).toSeq
+        :+ tiebreak.desc): _*)
+    val latest = batch
+      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+      .drop("_rn")
+    val schema = latest.schema
+    val cursorAt = schema.fieldIndex(cursorField)
+    val deletedAt = deletedField.map(schema.fieldIndex)
+    val keyAt = pk.map(schema.fieldIndex)
+    val write = PartitionWrite(url, table, schema, pk, batchSize)
+    val tally = new SyncTally
+    spark.sparkContext.register(tally)
+    latest.foreachPartition { rows: Iterator[Row] =>
+      val deadKeys = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val live = rows.filter { r =>
+        tally.add(r.get(cursorAt).asInstanceOf[java.lang.Long])
+        val isLive = deletedAt match {
+          case None => true
+          case Some(i) if r.isNullAt(i) => false
+          case Some(i) if r.getBoolean(i) =>
+            deadKeys += Row.fromSeq(keyAt.map(r.get)); false
+          case _ => true
+        }
+        if (isLive) tally.addLive()
+        isLive
+      }
+      write(live, () => deadKeys.iterator)
+    }
+    tally.value
   }
 
   /** One incremental sync pass — the reference's extract→load loop
-    * shape run end-to-end in the target database: pull rows strictly
-    * past the stored cursor, dedupe latest-wins per key, then ONE Spark
-    * action writes everything: per partition, one transaction MERGEs
-    * the live rows and DELETEs the tombstoned keys ([[PartitionWrite]]),
-    * while an accumulator tallies the row count and the max cursor.
-    * Rows whose deleted flag is null take neither route. Keys are
-    * PK-unique after the window and its exchange has hash-partitioned
-    * them by PK, so a key's upsert and delete never span partitions.
+    * shape run end-to-end in the target database: read the stored
+    * cursor, pull rows strictly past it, run the [[load]] step, then
+    * commit the new cursor. `deletedField` may be null for an object
+    * without a soft-delete flag (every row is then live).
     *
     * The cursor advances LAST, in its own transaction, and deliberately
     * after (not atomically with) the distributed loads: correctness
@@ -493,7 +545,6 @@ object JdbcExec {
                pk: Seq[String], stateTable: String, obj: String,
                pull: Long => DataFrame, cursorField: String,
                deletedField: String, batchSize: Int = 1000): Long = {
-    import org.apache.spark.sql.functions._
     val cursors = new JdbcCursorStore(url, stateTable)
     val last = cursors.initAndGet(obj).getOrElse(Long.MinValue)
     // spark.graft.pin.mode picks the pin (r16): `reliable` checkpoints
@@ -501,35 +552,11 @@ object JdbcExec {
     // A/B numbers in SCALE.md §r16.2
     val batch = graft.Pin.pin(pull(last))
     try {
-      // latest-wins per key on the cursor field (MERGE needs PK-unique)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(pk.map(col): _*)
-        .orderBy(col(cursorField).desc, col(deletedField).desc)
-      val latest = batch
-        .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-        .drop("_rn")
-      val schema = latest.schema
-      val cursorAt = schema.fieldIndex(cursorField)
-      val deletedAt = schema.fieldIndex(deletedField)
-      val keyAt = pk.map(schema.fieldIndex)
-      val write = PartitionWrite(url, table, schema, pk, batchSize)
-      val tally = new SyncTally
-      spark.sparkContext.register(tally)
-      latest.foreachPartition { rows: Iterator[Row] =>
-        val deadKeys = scala.collection.mutable.ArrayBuffer.empty[Row]
-        val live = rows.filter { r =>
-          tally.add(r.get(cursorAt).asInstanceOf[java.lang.Long])
-          if (r.isNullAt(deletedAt)) false
-          else if (r.getBoolean(deletedAt)) {
-            deadKeys += Row.fromSeq(keyAt.map(r.get)); false
-          } else true
-        }
-        write(live, () => deadKeys.iterator)
-      }
-      val (rows, maxCursor) = tally.value
-      if (rows == 0) last
+      val loaded = load(spark, url, table, pk, batch, cursorField,
+        Option(deletedField), batchSize)
+      if (loaded.rows == 0) last
       else {
-        val newCursor = maxCursor.getOrElse(throw new IllegalStateException(
+        val newCursor = loaded.maxCursor.getOrElse(throw new IllegalStateException(
           s"$obj: $cursorField is null on every pulled row; " +
             "the cursor cannot advance"))
         withConnection(url) { conn =>
@@ -544,9 +571,10 @@ object JdbcExec {
 }
 
 /** Cursor state table IN the target database — the reference keeps its
-  * last-modstamp sync state next to the data so the cursor advance can
-  * share a transaction with a load ([[putInTxn]]); the file-backed
-  * [[CursorStore]] remains the offline twin for non-JDBC pipelines. */
+  * last-modstamp sync state next to the data. [[JdbcExec.syncOnce]]
+  * commits the advance on its own connection after the loads;
+  * [[putInTxn]] takes the caller's connection, so a caller may also
+  * pair an advance with a load in one transaction. */
 final class JdbcCursorStore(url: String, table: String) {
   private val schema = StructType(Seq(
     StructField("obj", StringType, nullable = false),

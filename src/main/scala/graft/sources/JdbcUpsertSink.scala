@@ -1,22 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
-/** The reference's load side (SURVEY §1.1/§3.1): PostgreSQL table
-  * creation from a described schema, bulk load, and incremental upsert
-  * (`INSERT … ON CONFLICT (pk) DO UPDATE`). No PostgreSQL server exists
-  * in this environment, so the executable surface is the SQL/DDL
-  * generation plus the partition-level write protocol; the network call
-  * itself is the single `???`-equivalent seam (`executeBatch`), injected
-  * so tests drive everything around it.
-  *
-  * Scale notes (100 TB): writes go through `df.foreachPartition`, so
-  * each executor opens its own connection and streams its partition in
-  * `batchSize` chunks — no driver bottleneck, no collect. Upsert stages
-  * through per-partition batches into ON CONFLICT statements, keeping
-  * the transaction scope per batch; repartition the input by PK hash to
-  * avoid cross-partition PK contention on the target.
+/** The reference's load side (SURVEY §1.1/§3.1) in its PostgreSQL
+  * dialect: table creation from a described schema, schema-drift
+  * ALTERs, the keyed upsert (`INSERT … ON CONFLICT (pk) DO UPDATE`),
+  * the tombstone DELETE, and the jsonb rendering. This object only
+  * renders SQL; [[PgDialect]] executes it through [[JdbcExec]]'s
+  * per-partition write, the same path the Derby dialect runs. No
+  * PostgreSQL server exists offline, so PgDialectSpec executes the PG
+  * statements against a recording fake connection.
   */
 object JdbcUpsertSink {
 
@@ -137,45 +130,4 @@ object JdbcUpsertSink {
   def deleteSql(table: String, pk: Seq[String]): String =
     s"DELETE FROM ${q(table)} WHERE " +
       pk.map(c => s"${q(c)} = ?").mkString(" AND ")
-
-  /** One executor-side batch: column-ordered parameter rows for the
-    * prepared statement. */
-  type Batch = Seq[Seq[Any]]
-
-  /** Distributed upsert write. `execute` abstracts the JDBC round-trip
-    * (prepared-statement batch execution) — the only piece that needs a
-    * live server. Returns per-partition row counts via accumulator-free
-    * side effects kept inside `execute`.
-    */
-  def writeUpsert(df: DataFrame, table: String, pk: Seq[String],
-                  batchSize: Int, maxAttempts: Int = 3)(
-      execute: (String, Batch) => Unit): Unit = {
-    val sql = upsertSql(table, df.schema, pk)
-    val width = df.schema.length
-    df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      rows.grouped(batchSize).foreach { chunk =>
-        val batch: Batch = chunk.map(r => (0 until width).map(r.get))
-        // executor-side transient-failure retry per batch; safe to
-        // replay because the statement is a keyed MERGE
-        Retry.withBackoff(maxAttempts)(execute(sql, batch))
-      }
-    }
-  }
-
-  /** Distributed tombstone delete: `df` must carry exactly the pk
-    * columns. Same per-partition batch protocol as writeUpsert. */
-  def writeDeletes(df: DataFrame, table: String, pk: Seq[String],
-                   batchSize: Int, maxAttempts: Int = 3)(
-      execute: (String, Batch) => Unit): Unit = {
-    val sql = deleteSql(table, pk)
-    val keyed = df.select(pk.map(org.apache.spark.sql.functions.col): _*)
-    val width = pk.length
-    keyed.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      rows.grouped(batchSize).foreach { chunk =>
-        val batch: Batch = chunk.map(r => (0 until width).map(r.get))
-        // deletes are idempotent by key — replay-safe under retry
-        Retry.withBackoff(maxAttempts)(execute(sql, batch))
-      }
-    }
-  }
 }

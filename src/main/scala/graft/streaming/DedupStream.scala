@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * corpus." Each micro-batch of delta documents runs the SAME
   * [[LlmOps.incrementalDedup]] the batch entry runs — foreachBatch is
   * exactly Spark's unified-model bridge, so batch and streaming share
-  * one code path (the [[graft.Pipeline.streamingSync]] shape applied to
-  * the LLM layer) — then appends its survivors' postings so the next
+  * one code path (as [[graft.Pipeline.streamingSync]] runs the batch
+  * syncs' load step per micro-batch) — then appends its survivors' postings so the next
   * micro-batch judges against them. DedupStreamSpec pins parity:
   * streamed micro-batches ≡ the one-shot batch result on the same
   * delta — FOR ID-ORDERED BATCHES (the same scope PipelineStream

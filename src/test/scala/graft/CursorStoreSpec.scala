@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.sources.CursorStore
+import graft.sources.{CursorStore, JdbcCursorStore, JdbcExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 class CursorStoreSpec extends AnyFunSuite {
@@ -52,7 +52,7 @@ class CursorStoreSpec extends AnyFunSuite {
 
   test("drives incrementalSync end to end: cursor advances and the " +
     "second run pulls nothing") {
-    val st = freshStore
+    val url = s"jdbc:derby:memory:cursorsync${System.nanoTime};create=true"
     val sync = Pipeline.ObjectSync(
       name = "events_t",
       read = s => Tables.eventsWithNanos(s, "/root/testdata/sf0.001")
@@ -60,13 +60,12 @@ class CursorStoreSpec extends AnyFunSuite {
         .select("event_id", "ts_us", "user_id", "event_type", "value"),
       pk = "event_id", cursorField = "ts_us")
     val spark = SparkSpec.session
-    val start = 0L
-    val (n1, next1) = Pipeline.incrementalSync(spark, sync,
-      st.get(sync.name).getOrElse(start), 500)((_, _) => ())
-    next1.foreach(st.put(sync.name, _))
-    assert(n1 == 1000 && st.get(sync.name).nonEmpty)
-    val (n2, next2) = Pipeline.incrementalSync(spark, sync,
-      st.get(sync.name).get, 500)((_, _) => fail("no new data expected"))
-    assert(n2 == 0 && next2.isEmpty)
+    val cursors = new JdbcCursorStore(url, "cursor_state")
+    def written = JdbcExec.readTable(spark, url, "events_t").count()
+    val next1 = Pipeline.incrementalSync(spark, url, sync, "cursor_state", 500)
+    assert(written == 1000 && cursors.get(sync.name).contains(next1))
+    val next2 = Pipeline.incrementalSync(spark, url, sync, "cursor_state", 500)
+    assert(next2 == next1 && cursors.get(sync.name).contains(next1))
+    assert(written == 1000)
   }
 }

@@ -139,15 +139,17 @@ class Dsv2SourceSpec extends SparkSpec {
     val sync = Pipeline.ObjectSync("events_t",
       s => s.read.format("graft-soql").option("object", "events_api").load(),
       pk = "event_id", cursorField = "ts_us")
-    Dsv2SourceSpec.seen.clear()
-    val written = Pipeline.fullSync(spark, sync, 200) { (sql, batch) =>
-      assert(sql.contains("ON CONFLICT (\"event_id\") DO UPDATE"))
-      batch.foreach(r => Dsv2SourceSpec.seen.add(r.head.asInstanceOf[Long]))
-    }
-    assert(written == 1000)
-    import scala.jdk.CollectionConverters._
-    assert(Dsv2SourceSpec.seen.asScala.map(_.toLong).toSet ==
+    val url = s"jdbc:derby:memory:dsv2sync${System.nanoTime};create=true"
+    assert(Pipeline.fullSync(spark, url, sync, 200) == 1000)
+    assert(graft.sources.JdbcExec.readTable(spark, url, "events_t")
+      .select("event_id").collect().map(_.getLong(0)).toSet ==
       eventsDf.select("event_id").collect().map(_.getLong(0)).toSet)
+    RecordingJdbc.register()
+    val pg = s"jdbc:postgresql://fake/dsv2sync${System.nanoTime}"
+    Pipeline.fullSync(spark, pg, sync, 200)
+    assert(RecordingJdbc.db(pg).seq.exists(e =>
+      e.contains("executeBatch: INSERT INTO \"events_t\"") &&
+        e.contains("ON CONFLICT (\"event_id\") DO UPDATE")))
   }
 
   test("incremental pull through the source pushes the cursor bound " +
@@ -163,9 +165,8 @@ class Dsv2SourceSpec extends SparkSpec {
 }
 
 object Dsv2SourceSpec {
-  // static so the executor-side sink closure (same JVM in local mode)
+  // static so the executor-side closure (same JVM in local mode)
   // mutates THIS queue, not a serialized copy
-  val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
   val streamSeen =
     new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
 }

@@ -8,7 +8,8 @@ import graft.operators.LlmOps
   * (same [[LlmOps.substringPairs]] path on identical inputs); (2) the
   * steady-state plan never scans the corpus; (3) a second session
   * resolves the store with zero build jobs (the lmArtifactPrefix
-  * contract).
+  * contract); (4) a `substringK` retune in the same session serves
+  * the store built for the new k, never the old one.
   */
 class StoredSubstringSpec extends SparkSpec {
 
@@ -48,5 +49,28 @@ class StoredSubstringSpec extends SparkSpec {
         s"second-session store resolution ran ${jobs.get()} jobs")
       assert(s2.table(s"${p}_win").count() > 0)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a substringK retune in one session reads the store of the new k " +
+    "(stored == direct at k=8, then at k=4)") {
+    val key = "spark.graft.dedup.substringK"
+    def pairs(entry: String) =
+      SparkEntry.queries(entry)(spark, sfDir).collect().toSeq
+    val old = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "8")
+      val direct8 = pairs("j_dedup_substring")
+      assert(pairs("j_dedup_substring_stored") == direct8)
+      spark.conf.set(key, "4")
+      val direct4 = pairs("j_dedup_substring")
+      assert(direct4 != direct8, "k=4 and k=8 agree on the fixture — vacuous test")
+      val stored4 = pairs("j_dedup_substring_stored")
+      if (stored4 != direct4)
+        fail(s"after the retune the store served ${stored4.size} pairs, " +
+          s"the direct derivation ${direct4.size}")
+    } finally {
+      old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      Caches.release(spark)
+    }
   }
 }

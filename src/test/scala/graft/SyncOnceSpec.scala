@@ -9,7 +9,8 @@ import graft.sources.{JdbcCursorStore, JdbcExec}
 /** The fused write of [[JdbcExec.syncOnce]]: after the pin, ONE Spark
   * action upserts each partition's live rows and deletes its tombstoned
   * keys in one transaction, and tallies the row count and the max
-  * cursor; the cursor commits last, on its own connection.
+  * cursor; the cursor commits last, on its own connection. Latest-wins
+  * picks the same survivor whatever the input order.
   */
 class SyncOnceSpec extends SparkSpec {
   import spark.implicits._
@@ -211,5 +212,24 @@ class SyncOnceSpec extends SparkSpec {
       assert(jobs.get() >= 1 && jobs.get() <= 3,
         s"one syncOnce submitted ${jobs.get()} Spark jobs")
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("rows equal in (pk, cursor, flag) with different payloads land " +
+    "the same survivor in either input order") {
+    val rows: Seq[Ev] = Seq(
+      (1L, "payload_a", 100L, Some(false)), (1L, "payload_b", 100L, Some(false)))
+    def survivor(in: Seq[Ev]): Seq[String] = {
+      val url = s"jdbc:derby:memory:ftie${System.nanoTime};create=true"
+      createTarget(url, "ft_tgt")
+      withConf("spark.sql.shuffle.partitions", "1") {
+        JdbcExec.syncOnce(spark, url, "ft_tgt", Seq("id"), "ft_state", "ft",
+          _ => in.toDF("id", "name", "cur", "is_deleted").coalesce(1),
+          "cur", "is_deleted")
+      }
+      JdbcExec.readTable(spark, url, "ft_tgt").collect().map(_.getString(1)).toSeq
+    }
+    val fwd = survivor(rows)
+    val rev = survivor(rows.reverse)
+    assert(fwd.size == 1 && fwd == rev, s"survivor depends on input order: $fwd vs $rev")
   }
 }
