@@ -64,7 +64,7 @@ package graft
   * watermark-clamp discipline (never arm a timeout at or below the
   * current watermark; resolve already-expired horizons in the data
   * path) — see [[graft.streaming.AsofStream.step]] for the canonical
-  * shape shared by the fMGWS and transformWithState ports.
+  * shape every [[graft.streaming.StepProcessor]] operator follows.
   *
   * ==Where the compare happens==
   * [[graft.Verify]] dumps each entry's result as parquet plus

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions.lit
   *    intervals merge, so an event at exactly `last + gap` still
   *    EXTENDS the session; the cut fires only at `gap > GapUs`.
   *    Members: `k_window_session` (+ its DuckDB twin and the
-  *    [[graft.streaming.Sessionize]] batch/streaming/TWS folds).
+  *    [[graft.streaming.Sessionize]] batch fold and streaming step).
   *  - '''cut-at->=-gap''' (`strict = true`) — an event at exactly
   *    `last + gap` STARTS a new session. Members: `e_funnel_sessions`
   *    (+ its DuckDB twin) and the [[graft.streaming.FunnelStream]]

@@ -275,7 +275,7 @@ final case class SoqlScan(obj: String, required: StructType,
     * `WHERE cursor > start AND cursor <= end` (end = the endpoint's
     * MAX(cursor) at planning time) through the same paged readers, so
     * batch and streaming share one extraction path and the checkpoint
-    * carries exactly the CursorStore contract. */
+    * carries exactly the [[graft.sources.JdbcCursorStore]] contract. */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new SoqlMicroBatchStream(obj, required, pushed.toSeq,
       cursorField.getOrElse(throw new IllegalArgumentException(

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** One side-tagged event of the as-of pair: `isLeft` = purchase (the
   * probe side), else click (the reference side). */
@@ -29,10 +29,10 @@ object AsofState {
 
 /** §2.K streaming twin of `c_join_asof_forward` (r12, VERDICT r11
   * item 6): the forward as-of join with tolerance as bounded per-user
-  * state over `flatMapGroupsWithState` — exactly what the batch
-  * entry's scaladoc promised the tolerance was FOR ("it is what
-  * bounds each side's retained state when the same join runs under
-  * watermarks").
+  * state (`transformWithState` in [[asofStreaming]]) — exactly what
+  * the batch entry's scaladoc promised the tolerance was FOR ("it is
+  * what bounds each side's retained state when the same join runs
+  * under watermarks").
   *
   * Semantics (AsofStreamSpec pins batch parity row-for-row): for each
   * purchase, the same user's EARLIEST click STRICTLY AFTER it within
@@ -44,9 +44,9 @@ object AsofState {
   *
   * Watermark-clamp discipline (the r11 bug class, ROUND11.md §8):
   * purchases already beyond their horizon at arrival resolve in the
-  * DATA path of the same invocation, and the event-time timeout is
-  * set only at a surviving horizon, which is provably > the current
-  * watermark — no stale-timestamp crash under arbitrary watermark
+  * DATA path of the same invocation, and the event-time timer is
+  * set only at a surviving horizon, which is strictly later than the
+  * current watermark — no stale timer under arbitrary watermark
   * jumps (the randomized property in PropertySpec drives exactly
   * those schedules).
   *
@@ -78,18 +78,15 @@ object AsofStream {
     * band closed (strictly > any admissible in-band click's ms). */
   private def horizonMs(p: (Long, Long)): Long = (p._2 + TolUs) / 1000 + 1
 
-  /** The PURE streaming fold step, shared verbatim by the
-    * `flatMapGroupsWithState` twin below and the `transformWithState`
-    * port ([[AsofStreamTws]], r13) — one implementation, so the two
-    * state APIs cannot drift on semantics: merge arrivals into the
-    * buffered state (distinct by id — replays must not
-    * double-buffer), resolve the purchases whose band the watermark
-    * has closed (including ones ALREADY beyond horizon at arrival —
-    * the r11 clamp), prune clicks no live or future-admissible
-    * purchase can need. Returns (emitted rows, surviving state or
-    * None, wake-at ms — provably > the watermark when defined). */
-  private[streaming] def step(uid: Long, st: AsofState,
-                              evs: Seq[AsofEvent], wmUs: Long)
+  /** The PURE streaming step: merge arrivals into the buffered state
+    * (distinct by id — replays must not double-buffer), resolve the
+    * purchases whose band the watermark has closed (including ones
+    * ALREADY beyond horizon at arrival — the r11 clamp), prune clicks
+    * no live or future-admissible purchase can need. Returns (emitted rows, surviving state or
+    * None, wake-at ms — strictly later than the watermark when
+    * defined). */
+  private[graft] def step(uid: Long, st: AsofState,
+                          evs: Seq[AsofEvent], wmUs: Long)
       : (Seq[AsofMatch], Option[AsofState], Option[Long]) = {
     val ps = (st.purchases ++
       evs.filter(_.isLeft).map(e => (e.event_id, e.ts_us)))
@@ -115,58 +112,50 @@ object AsofStream {
     }
   }
 
-  def process(flushAtEnd: Boolean)(
-      uid: Long, events: Iterator[AsofEvent],
-      state: GroupState[AsofState]): Iterator[AsofMatch] = {
-    val evs = events.toSeq
-    val st = state.getOption.getOrElse(AsofState(Nil, Nil))
-    if (flushAtEnd) {
-      // batch mode: every event is on the table at iterator exhaustion
-      val ps = (st.purchases ++
-        evs.filter(_.isLeft).map(e => (e.event_id, e.ts_us))).distinct
-      val cs = (st.clicks ++
-        evs.filterNot(_.isLeft).map(e => (e.event_id, e.ts_us))).distinct
-      state.remove()
-      ps.sortBy(p => (p._2, p._1)).map(p => resolve(uid, p, cs)).iterator
-    } else {
-      // data and timeout invocations share this path
-      val (out, next, wake) =
-        step(uid, st, evs, state.getCurrentWatermarkMs() * 1000)
-      next match {
-        case None => state.remove()
-        case Some(s2) =>
-          state.update(s2)
-          state.setTimeoutTimestamp(wake.get)
-      }
-      out.iterator
-    }
+  /** The batch fold of one user's events: every purchase resolved
+    * against every click of the group. */
+  private[graft] def batchFold(uid: Long, events: Iterator[AsofEvent])
+      : Iterator[AsofMatch] = {
+    val (ps, cs) = events.toSeq.partition(_.isLeft)
+    val clicks = cs.map(e => (e.event_id, e.ts_us)).distinct.toList
+    ps.map(e => (e.event_id, e.ts_us)).distinct
+      .sortBy(p => (p._2, p._1)).iterator.map(resolve(uid, _, clicks))
   }
 
-  /** Batch as-of through the state API (one call per group, fully
-    * flushed) — AsofStreamSpec proves it equals the
-    * `c_join_asof_forward` windowed plan row-for-row. */
+  /** Batch as-of: one [[batchFold]] per user — AsofStreamSpec proves
+    * it equals the `c_join_asof_forward` windowed plan row-for-row. */
   def asofBatch(ds: Dataset[AsofEvent]): Dataset[AsofMatch] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        process(flushAtEnd = true))
+    ds.groupByKey(_.user_id).flatMapGroups(batchFold)
   }
 
   /** Streaming as-of over watermarked (user_id, event_id, ts, isLeft)
-    * rows. */
+    * rows, through `transformWithState` (needs the RocksDB state-store
+    * provider). */
   def asofStreaming(
       ds: Dataset[(Long, Long, java.sql.Timestamp, Boolean)])
       : Dataset[AsofMatch] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[(Long, Long, java.sql.Timestamp, Boolean)],
-         state: GroupState[AsofState]) =>
-          process(flushAtEnd = false)(uid,
-            it.map { case (_, id, ts, left) =>
-              AsofEvent(uid, id, ts.getTime * 1000, left) },
-            state)
-      }
+      .transformWithState(new AsofProcessor, TimeMode.EventTime(),
+        OutputMode.Append())
   }
+}
+
+/** [[AsofStream.step]] under [[StepProcessor]]. */
+private[graft] class AsofProcessor
+    extends StepProcessor[(Long, Long, java.sql.Timestamp, Boolean),
+      AsofState, AsofMatch] {
+  override protected def stateName: String = "asof"
+  override protected def stateEncoder: Encoder[AsofState] =
+    Encoders.product[AsofState]
+  override protected def emptyState: AsofState = AsofState(Nil, Nil)
+  override protected def step(
+      uid: Long, st: AsofState,
+      rows: Seq[(Long, Long, java.sql.Timestamp, Boolean)], wmUs: Long)
+      : (Seq[AsofMatch], Option[AsofState], Option[Long]) =
+    AsofStream.step(uid, st,
+      rows.map { case (_, id, ts, left) =>
+        AsofEvent(uid, id, ts.getTime * 1000, left) },
+      wmUs)
 }

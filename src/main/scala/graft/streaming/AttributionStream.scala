@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 case class TouchEvent(user_id: Long, ts_us: Long, event_id: Long,
                       event_type: String, value: Double)
@@ -11,9 +11,9 @@ case class AttributedPurchase(user_id: Long, event_id: Long,
 case class TouchState(touchType: String, tsUs: Long)
 
 /** §2.K streaming twin of `e_attribution_last_touch` (r10): per-user
-  * last-touch state over `flatMapGroupsWithState` — each purchase is
-  * credited, at arrival, to the most recent view/click within the
-  * 7-day lookback, else 'direct'.
+  * last-touch state (`transformWithState` in [[attributionStreaming]])
+  * — each purchase is credited, at arrival, to the most recent
+  * view/click within the 7-day lookback, else 'direct'.
   *
   * Equivalence to the batch window plan (AttributionStreamSpec pins it
   * on the fixture): events fold in (ts, event_id) order; the state's
@@ -23,7 +23,7 @@ case class TouchState(touchType: String, tsUs: Long)
   * state exactly when it would become the window's last non-null.
   *
   * Scale notes: ONE fixed-size record per active user; the event-time
-  * timeout at touch + 7 days evicts state that could never attribute
+  * timer at touch + 7 days evicts state that could never attribute
   * again (after the lookback an attribution is 'direct' with or
   * without the record), so state size tracks 7-day-active users, not
   * history. Purchases emit immediately — no watermark wait — because
@@ -39,8 +39,8 @@ object AttributionStream {
     if (s.tsUs >= 0 && ts - s.tsUs <= LookbackUs) s.touchType else "direct"
 
   /** Ordered fold of one batch of events against the running touch
-    * state — the shared kernel of the batch path, the fMGWS streaming
-    * path, and the TWS port. */
+    * state — the shared kernel of the batch fold and the streaming
+    * step. */
   private def foldEvents(uid: Long, cur0: TouchState,
                          evs: Seq[TouchEvent])
       : (TouchState, Seq[AttributedPurchase]) = {
@@ -58,22 +58,17 @@ object AttributionStream {
     (cur, out.result())
   }
 
-  def process(uid: Long, events: Iterator[TouchEvent],
-              state: GroupState[TouchState]): Iterator[AttributedPurchase] = {
-    val (cur, out) = foldEvents(uid,
-      state.getOption.getOrElse(TouchState("", -1L)), events.toSeq)
-    if (state.hasTimedOut) state.remove()
-    else if (cur.tsUs >= 0) state.update(cur)
-    out.iterator
-  }
+  /** The batch fold of one user's events: [[foldEvents]] from no
+    * touch. */
+  private[graft] def batchFold(uid: Long, events: Iterator[TouchEvent])
+      : Iterator[AttributedPurchase] =
+    foldEvents(uid, TouchState("", -1L), events.toSeq)._2.iterator
 
-  /** The PURE streaming fold step, shared by the fMGWS twin and the
-    * `transformWithState` port ([[AttributionStreamTws]], r13) — one
-    * implementation, so the two state APIs cannot drift on semantics.
-    * State whose lookback horizon the watermark has passed is dropped
-    * (it could only ever yield 'direct', which is also what NO state
-    * yields — the r11 clamp); otherwise the wake at touch + lookback
-    * is provably > the watermark. */
+  /** The PURE streaming step. State whose lookback horizon is at or
+    * behind the watermark is dropped (it could only ever yield
+    * 'direct', which is also what NO state yields — the r11 clamp; a
+    * timer there would be in the past); otherwise the wake at
+    * touch + lookback is strictly later than the watermark. */
   private[streaming] def step(uid: Long, st: TouchState,
                               arrived: Seq[TouchEvent], wmUs: Long)
       : (Seq[AttributedPurchase], Option[TouchState], Option[Long]) = {
@@ -86,55 +81,43 @@ object AttributionStream {
     }
   }
 
-  /** Batch attribution through the state API (one call per group) —
+  /** Batch attribution: one [[batchFold]] per user —
     * AttributionStreamSpec proves it equals the windowed batch
     * per-purchase assignment row-for-row. */
   def attributionBatch(ds: Dataset[TouchEvent])
       : Dataset[AttributedPurchase] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        process)
-  }
-
-  /** Streaming process: touch state persists with an event-time
-    * timeout at touch + lookback (stale state can only ever yield
-    * 'direct', which is also what NO state yields). A touch whose
-    * lookback horizon is already at-or-behind the watermark is removed
-    * outright — Spark rejects timeout timestamps ≤ the current
-    * watermark, and such state is semantically dead anyway (any future
-    * purchase would attribute 'direct' with or without it). */
-  def processStreaming(uid: Long, events: Iterator[TouchEvent],
-                       state: GroupState[TouchState])
-      : Iterator[AttributedPurchase] = {
-    val st = state.getOption.getOrElse(TouchState("", -1L))
-    val (out, next, wake) = step(uid, st, events.toSeq,
-      state.getCurrentWatermarkMs() * 1000)
-    next match {
-      case None => state.remove()
-      case Some(s2) =>
-        state.update(s2)
-        state.setTimeoutTimestamp(wake.get)
-    }
-    out.iterator
+    ds.groupByKey(_.user_id).flatMapGroups(batchFold)
   }
 
   /** Streaming attribution over watermarked
-    * (user_id, ts, event_id, event_type, value) rows. */
+    * (user_id, ts, event_id, event_type, value) rows, through
+    * `transformWithState` (needs the RocksDB state-store provider). */
   def attributionStreaming(
       ds: Dataset[(Long, java.sql.Timestamp, Long, String, Double)])
       : Dataset[AttributedPurchase] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long,
-         it: Iterator[(Long, java.sql.Timestamp, Long, String, Double)],
-         state: GroupState[TouchState]) =>
-          processStreaming(uid,
-            it.map { case (_, ts, eid, t, v) =>
-              TouchEvent(uid, ts.getTime * 1000, eid, t, v)
-            }, state)
-      }
+      .transformWithState(new AttributionProcessor, TimeMode.EventTime(),
+        OutputMode.Append())
   }
+}
+
+/** [[AttributionStream.step]] under [[StepProcessor]]. */
+private[graft] class AttributionProcessor
+    extends StepProcessor[(Long, java.sql.Timestamp, Long, String, Double),
+      TouchState, AttributedPurchase] {
+  override protected def stateName: String = "touch"
+  override protected def stateEncoder: Encoder[TouchState] =
+    Encoders.product[TouchState]
+  override protected def emptyState: TouchState = TouchState("", -1L)
+  override protected def step(
+      uid: Long, st: TouchState,
+      rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)],
+      wmUs: Long)
+      : (Seq[AttributedPurchase], Option[TouchState], Option[Long]) =
+    AttributionStream.step(uid, st,
+      rows.map { case (_, ts, eid, t, v) =>
+        TouchEvent(uid, ts.getTime * 1000, eid, t, v) },
+      wmUs)
 }

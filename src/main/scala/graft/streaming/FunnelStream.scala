@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 case class FunnelEvent(user_id: Long, ts_us: Long, event_id: Long,
                        event_type: String)
@@ -26,10 +26,11 @@ case class FunnelBufState(start: Long, last: Long, n: Long,
 
 /** §2.K streaming twin of `e_funnel_sessions` (r10): the per-session
   * ordered funnel view → first click AFTER the view → first purchase
-  * AFTER the click as an explicit per-user state machine over
-  * `flatMapGroupsWithState` — the MATCH_RECOGNIZE-shaped op a
-  * streaming engine runs with bounded state where the batch form uses
-  * session windows + conditional mins.
+  * AFTER the click as an explicit per-user state machine — the
+  * MATCH_RECOGNIZE-shaped op a streaming engine runs with bounded
+  * state where the batch form uses session windows + conditional
+  * mins. [[funnelBatch]] is a plain group fold; [[funnelStreaming]]
+  * runs the same machine under `transformWithState`.
   *
   * Equivalence to the batch plan (FunnelStreamSpec pins it on the
   * fixture): events fold in (ts, event_id) order; the first view IS
@@ -43,10 +44,6 @@ case class FunnelBufState(start: Long, last: Long, n: Long,
   * store shards by user_id — no corpus-sized state at any scale.
   */
 object FunnelStream {
-  /** Alias of [[graft.SessionBounds.GapUs]]; this family cuts STRICT
-    * (at >= gap) — see SessionBounds for the two-family table. */
-  val GapUs: Long = graft.SessionBounds.GapUs
-
   private def stageOf(s: FunnelState): Int =
     if (s.pTs >= 0) 3 else if (s.cTs >= 0) 2 else if (s.vTs >= 0) 1 else 0
 
@@ -67,10 +64,12 @@ object FunnelStream {
   private def fresh(ts: Long): FunnelState =
     FunnelState(ts, ts, 0, -1L, -1L, -1L)
 
-  def process(flushAtEnd: Boolean)(
-      uid: Long, events: Iterator[FunnelEvent],
-      state: GroupState[FunnelState]): Iterator[FunnelSession] = {
-    var cur = state.getOption
+  /** The batch fold of one user's events in (ts, event_id) order,
+    * the trailing session flushed. This family cuts STRICT (at >=
+    * gap) — see [[graft.SessionBounds]] for the two-family table. */
+  private[graft] def batchFold(uid: Long, events: Iterator[FunnelEvent])
+      : Iterator[FunnelSession] = {
+    var cur: Option[FunnelState] = None
     val out = Seq.newBuilder[FunnelSession]
     events.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
       cur match {
@@ -84,54 +83,28 @@ object FunnelStream {
           cur = Some(fold(fresh(e.ts_us), e))
       }
     }
-    if (state.hasTimedOut || flushAtEnd) {
-      cur.foreach(s => out += emit(uid, s))
-      state.remove()
-    } else {
-      cur.foreach(state.update)
-    }
+    cur.foreach(s => out += emit(uid, s))
     out.result().iterator
   }
 
-  /** Batch funnel through the state API (one call per group, trailing
-    * session flushed) — FunnelStreamSpec proves it equals the
-    * `e_funnel_sessions` windowed plan row-for-row. */
+  /** Batch funnel: one [[batchFold]] per user — FunnelStreamSpec
+    * proves it equals the `e_funnel_sessions` windowed plan
+    * row-for-row. */
   def funnelBatch(ds: Dataset[FunnelEvent]): Dataset[FunnelSession] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        process(flushAtEnd = true))
+    ds.groupByKey(_.user_id).flatMapGroups(batchFold)
   }
 
-  /** Streaming process, r12 rewrite — buffer-until-watermark + ordered
-    * replay, the [[Sessionize.processStreaming]] design and rationale
-    * (the r11 single-record fold corrupted under admissible
-    * out-of-order arrival; the watermark-fuzz property found it).
-    * Events freeze into the stage machine only once the watermark
-    * proves them final, so the frozen fold is exactly the batch fold
-    * of a final prefix; sessions emit when frozen-closed or when the
-    * watermark clears the open session's gap. */
-  def processStreaming(uid: Long, events: Iterator[FunnelEvent],
-                       state: GroupState[FunnelBufState])
-      : Iterator[FunnelSession] = {
-    val st = state.getOption
-      .getOrElse(FunnelBufState(-1L, 0L, 0L, -1L, -1L, -1L, Nil, Nil, Nil))
-    val (out, next, wake) = step(uid, st, events.toSeq,
-      state.getCurrentWatermarkMs() * 1000)
-    next match {
-      case None => state.remove()
-      case Some(s2) =>
-        state.update(s2)
-        state.setTimeoutTimestamp(wake.get)
-    }
-    out.iterator
-  }
-
-  /** The PURE streaming fold step, shared verbatim by the fMGWS twin
-    * above and the `transformWithState` port ([[FunnelStreamTws]],
-    * r13) — one implementation, so the two state APIs cannot drift on
-    * semantics. Returns (emitted sessions, surviving state or None,
-    * wake-at ms — provably > the watermark when defined). */
+  /** The PURE streaming step — buffer-until-watermark + ordered
+    * replay, the [[Sessionize.step]] design and rationale (the r11
+    * single-record fold corrupted under admissible out-of-order
+    * arrival; the watermark-fuzz property found it). Events freeze
+    * into the stage machine only once the watermark proves them
+    * final, so the frozen fold is exactly the batch fold of a final
+    * prefix; sessions emit when frozen-closed or when the watermark
+    * clears the open session's gap. Returns (emitted sessions,
+    * surviving state or None, wake-at ms — strictly later than the
+    * watermark when defined). */
   private[streaming] def step(uid: Long, st: FunnelBufState,
                               arrived: Seq[FunnelEvent], wmUs: Long)
       : (Seq[FunnelSession], Option[FunnelBufState], Option[Long]) = {
@@ -165,29 +138,43 @@ object FunnelStream {
       val next = FunnelBufState(c.start, c.last, c.n, c.vTs, c.cTs,
         c.pTs, rest.map(_.ts_us), rest.map(_.event_id),
         rest.map(_.event_type))
-      val horizonUs = (cur.map(_.last + GapUs).toSeq ++
-        rest.headOption.map(_.ts_us + GapUs)).min
+      val gap = graft.SessionBounds.GapUs
+      val horizonUs = (cur.map(_.last + gap).toSeq ++
+        rest.headOption.map(_.ts_us + gap)).min
       (out.result(), Some(next), Some(horizonUs / 1000 + 1))
     }
   }
 
   /** Streaming funnel over (user_id, ts, event_id, event_type) rows
-    * whose `ts` is already watermarked; the watermarked column flows
-    * into the stateful operator (conversion happens inside the group
-    * function, the [[Sessionize.sessionsStreaming]] discipline). */
+    * whose `ts` is already watermarked, through `transformWithState`
+    * (needs the RocksDB state-store provider); the watermarked column
+    * flows into the stateful operator (the
+    * [[Sessionize.sessionsStreaming]] discipline). */
   def funnelStreaming(
       ds: Dataset[(Long, java.sql.Timestamp, Long, String)])
       : Dataset[FunnelSession] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[(Long, java.sql.Timestamp, Long, String)],
-         state: GroupState[FunnelBufState]) =>
-          processStreaming(uid,
-            it.map { case (_, ts, eid, t) =>
-              FunnelEvent(uid, ts.getTime * 1000, eid, t)
-            }, state)
-      }
+      .transformWithState(new FunnelProcessor, TimeMode.EventTime(),
+        OutputMode.Append())
   }
+}
+
+/** [[FunnelStream.step]] under [[StepProcessor]]. */
+private[graft] class FunnelProcessor
+    extends StepProcessor[(Long, java.sql.Timestamp, Long, String),
+      FunnelBufState, FunnelSession] {
+  override protected def stateName: String = "funnel"
+  override protected def stateEncoder: Encoder[FunnelBufState] =
+    Encoders.product[FunnelBufState]
+  override protected def emptyState: FunnelBufState =
+    FunnelBufState(-1L, 0L, 0L, -1L, -1L, -1L, Nil, Nil, Nil)
+  override protected def step(
+      uid: Long, st: FunnelBufState,
+      rows: Seq[(Long, java.sql.Timestamp, Long, String)], wmUs: Long)
+      : (Seq[FunnelSession], Option[FunnelBufState], Option[Long]) =
+    FunnelStream.step(uid, st,
+      rows.map { case (_, ts, eid, t) =>
+        FunnelEvent(uid, ts.getTime * 1000, eid, t) },
+      wmUs)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 case class DayEvent(user_id: Long, ts_us: Long)
 case class Island(user_id: Long, island_start: Long, island_end: Long,
@@ -22,8 +22,8 @@ object IslandState {
 
 /** §2.K streaming twin of `e_window_gap_islands` (r11): maximal runs
   * of consecutive active days maintained as per-user interval-set
-  * state over `flatMapGroupsWithState`, instead of the batch
-  * row_number-difference window.
+  * state (`transformWithState` in [[islandsStreaming]]), instead of
+  * the batch row_number-difference window.
   *
   * Equivalence to the batch plan (GapIslandsStreamSpec pins it): an
   * island is fully determined by the SET of active days, and
@@ -38,7 +38,7 @@ object IslandState {
   * (8,8) in append mode could never be retracted).
   *
   * Scale notes: state is ≤ (watermark-delay-in-days + 1) intervals of
-  * two longs per active user; the event-time timeout at the OLDEST
+  * two longs per active user; the event-time timer at the OLDEST
   * unproven horizon bounds retention, and the state store shards by
   * user_id. Days beyond the watermark are dropped by the operator's
   * late-row filter — standard append-mode semantics.
@@ -67,35 +67,26 @@ object GapIslandsStream {
   private def horizonMs(iv: (Long, Long)): Long =
     (iv._2 + 2) * (DayUs / 1000)
 
-  def process(flushAtEnd: Boolean)(
-      uid: Long, events: Iterator[DayEvent],
-      state: GroupState[IslandState]): Iterator[Island] = {
-    val days = events.map(_.ts_us / DayUs).toSeq
-    val merged = mergeDays(
-      state.getOption.map(_.intervals).getOrElse(Nil), days)
-    val out = Seq.newBuilder[Island]
-    if (flushAtEnd) {
-      // batch mode: everything is final at iterator exhaustion
-      merged.foreach(iv => out += isl(uid, iv))
-      state.remove()
-    } else {
-      // data and timeout invocations share this path: emit what the
-      // watermark has proven maximal, keep the rest
-      val wm = state.getCurrentWatermarkMs()
-      val (proven, live) = merged.partition(horizonMs(_) <= wm)
-      proven.foreach(iv => out += isl(uid, iv))
-      if (live.isEmpty) state.remove()
-      else state.update(IslandState.of(live))
-    }
-    out.result().iterator
+  /** The batch fold of one user's events: every island of the day
+    * set, all final at the end of the group. */
+  private[graft] def batchFold(uid: Long, events: Iterator[DayEvent])
+      : Iterator[Island] =
+    mergeDays(Nil, events.map(_.ts_us / DayUs).toSeq)
+      .iterator.map(isl(uid, _))
+
+  /** Batch islands: one [[batchFold]] per user — GapIslandsStreamSpec
+    * proves it equals the `e_window_gap_islands` windowed plan
+    * row-for-row. */
+  def islandsBatch(ds: Dataset[DayEvent]): Dataset[Island] = {
+    import ds.sparkSession.implicits._
+    ds.groupByKey(_.user_id).flatMapGroups(batchFold)
   }
 
-  /** The PURE streaming fold step, shared by the fMGWS twin and the
-    * `transformWithState` port ([[GapIslandsStreamTws]], r13) — one
-    * implementation, so the two state APIs cannot drift on semantics.
-    * Watermark in µs (the [[StepProcessor]] convention); returns
-    * (emitted islands, surviving state or None, wake-at ms — the
-    * oldest unproven horizon, > the watermark by construction of the
+  /** The PURE streaming step: emit the islands the watermark has
+    * proven maximal, keep the rest, and wake at the oldest surviving
+    * horizon. Watermark in µs (the [[StepProcessor]] convention);
+    * returns (emitted islands, surviving state or None, wake-at ms —
+    * strictly later than the watermark by construction of the
     * partition). */
   private[streaming] def step(uid: Long, st: IslandState,
                               arrived: Seq[DayEvent], wmUs: Long)
@@ -108,46 +99,28 @@ object GapIslandsStream {
     else (out, Some(IslandState.of(live)), Some(live.map(horizonMs).min))
   }
 
-  /** Batch islands through the state API (one call per group, all
-    * intervals flushed) — GapIslandsStreamSpec proves it equals the
-    * `e_window_gap_islands` windowed plan row-for-row. */
-  def islandsBatch(ds: Dataset[DayEvent]): Dataset[Island] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        process(flushAtEnd = true))
-  }
-
-  /** Streaming process: emit the islands the watermark has proven
-    * maximal, keep the rest, and wake again at the oldest surviving
-    * horizon (always > watermark by construction of the partition, so
-    * the timeout is never in the past). */
-  def processStreaming(uid: Long, events: Iterator[DayEvent],
-                       state: GroupState[IslandState]): Iterator[Island] = {
-    val st = state.getOption.getOrElse(IslandState(Nil))
-    val (out, next, wake) = step(uid, st, events.toSeq,
-      state.getCurrentWatermarkMs() * 1000)
-    next match {
-      case None => state.remove()
-      case Some(s2) =>
-        state.update(s2)
-        state.setTimeoutTimestamp(wake.get)
-    }
-    out.iterator
-  }
-
-  /** Streaming islands over watermarked (user_id, ts) rows. */
+  /** Streaming islands over watermarked (user_id, ts) rows, through
+    * `transformWithState` (needs the RocksDB state-store provider). */
   def islandsStreaming(ds: Dataset[(Long, java.sql.Timestamp)])
       : Dataset[Island] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[IslandState]) =>
-          processStreaming(uid,
-            it.map { case (_, ts) => DayEvent(uid, ts.getTime * 1000) },
-            state)
-      }
+      .transformWithState(new IslandProcessor, TimeMode.EventTime(),
+        OutputMode.Append())
   }
+}
+
+/** [[GapIslandsStream.step]] under [[StepProcessor]]. */
+private[graft] class IslandProcessor
+    extends StepProcessor[(Long, java.sql.Timestamp), IslandState, Island] {
+  override protected def stateName: String = "islands"
+  override protected def stateEncoder: Encoder[IslandState] =
+    Encoders.product[IslandState]
+  override protected def emptyState: IslandState = IslandState(Nil)
+  override protected def step(
+      uid: Long, st: IslandState,
+      rows: Seq[(Long, java.sql.Timestamp)], wmUs: Long)
+      : (Seq[Island], Option[IslandState], Option[Long]) =
+    GapIslandsStream.step(uid, st,
+      rows.map(r => DayEvent(uid, r._2.getTime * 1000)), wmUs)
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 case class WeekEvent(user_id: Long, ts_us: Long)
 /** One increment (+1) or retraction (−1) of a cohort-table cell. */
@@ -11,10 +11,11 @@ case class CohortDelta(cohort_week: Long, week_offset: Long, delta: Long)
 case class RetentionState(cohortWk: Long, weeks: List[Long])
 
 /** §2.K streaming twin of `e_retention_cohorts` (r11): the cohort
-  * retention table maintained as an incremental per-user fold over
-  * `flatMapGroupsWithState`, emitting CELL DELTAS that aggregate to
-  * exactly the batch table — the classic "changelog of an aggregate"
-  * streaming shape, where the batch form is a distinct + two joins.
+  * retention table maintained as an incremental per-user fold
+  * (`transformWithState` in [[deltasStreaming]]), emitting CELL
+  * DELTAS that aggregate to exactly the batch table — the classic
+  * "changelog of an aggregate" streaming shape, where the batch form
+  * is a distinct + two joins.
   *
   * Per user the state is (cohort week = min week ever seen, set of
   * active weeks). A new (user, week) pair emits +1 for cell
@@ -32,15 +33,15 @@ case class RetentionState(cohortWk: Long, weeks: List[Long])
   * bound is the report horizon: `maxOffset` (r12, ADVICE r11) caps
   * `weeks` at the max offset the table serves, after which new weeks
   * can't change any served cell — fixed-size state per user, proven
-  * rebase-safe in [[process]]. The delta stream is tiny: at most one
+  * rebase-safe in [[step]]. The delta stream is tiny: at most one
   * row per NEW (user, week) pair, so downstream aggregation state is
   * cohort×offset-sized.
   */
 object RetentionStream {
   val WeekUs: Long = 604800000000L
 
-  /** Per-user fold. `maxOffset` is the report horizon the scaladoc
-    * documents (ADVICE r11 made it real): weeks beyond
+  /** The PURE per-user fold step. `maxOffset` is the report horizon
+    * the scaladoc documents (ADVICE r11 made it real): weeks beyond
     * cohort + maxOffset can never change a served cell, so they are
     * neither emitted nor kept in state — state is bounded at
     * maxOffset + 1 weeks per user. The cap is rebase-safe: a rebase
@@ -48,28 +49,15 @@ object RetentionStream {
     * once beyond the horizon stays beyond it forever (it is retracted
     * at rebase time and dropped from state, exactly cancelling its
     * earlier +1). Long.MaxValue = uncapped (the spec-parity default:
-    * the batch entry serves every offset). */
-  def process(uid: Long, events: Iterator[WeekEvent],
-              state: GroupState[RetentionState],
-              maxOffset: Long = Long.MaxValue): Iterator[CohortDelta] = {
-    val st = state.getOption.getOrElse(RetentionState(Long.MaxValue, Nil))
-    val (out, next, _) = step(uid, st, events.toSeq, 0L, maxOffset)
-    // NoTimeout twin: state is never removed, only grown/rebased
-    next.filter(_ != st).foreach(state.update)
-    out.iterator
-  }
-
-  /** The PURE fold step, shared by the fMGWS twin and the
-    * `transformWithState` port ([[RetentionStreamTws]], r13) — one
-    * implementation, so the two state APIs cannot drift on semantics.
+    * the batch entry serves every offset).
+    *
     * The watermark is UNUSED and the wake always None: a user's cohort
-    * must survive arbitrary idle gaps, so this twin never arms a timer
-    * — the state bound comes from `maxOffset` (the report horizon),
-    * not from eviction. Empty state is the (Long.MaxValue, Nil)
-    * sentinel. */
-  private[streaming] def step(uid: Long, st: RetentionState,
-                              arrived: Seq[WeekEvent], wmUs: Long,
-                              maxOffset: Long = Long.MaxValue)
+    * must survive arbitrary idle gaps, so this step never arms a timer
+    * — the state bound comes from `maxOffset`, not from eviction.
+    * Empty state is the (Long.MaxValue, Nil) sentinel. */
+  private[graft] def step(uid: Long, st: RetentionState,
+                          arrived: Seq[WeekEvent], wmUs: Long,
+                          maxOffset: Long = Long.MaxValue)
       : (Seq[CohortDelta], Option[RetentionState], Option[Long]) = {
     val empty = st.cohortWk == Long.MaxValue && st.weeks.isEmpty
     val keep = if (empty) None else Some(st)
@@ -107,36 +95,34 @@ object RetentionStream {
       None)
   }
 
-  /** Batch fold through the state API — RetentionStreamSpec proves
-    * [[cohortTable]] over these deltas equals the
+  /** The batch fold of one user's events: [[step]] from empty state. */
+  private[graft] def batchFold(uid: Long, events: Iterator[WeekEvent],
+                               maxOffset: Long): Iterator[CohortDelta] =
+    step(uid, RetentionState(Long.MaxValue, Nil), events.toSeq, 0L,
+      maxOffset)._1.iterator
+
+  /** Batch deltas: one [[batchFold]] per user — RetentionStreamSpec
+    * proves [[cohortTable]] over these deltas equals the
     * `e_retention_cohorts` plan row-for-row. */
   def deltasBatch(ds: Dataset[WeekEvent],
                   maxOffset: Long = Long.MaxValue): Dataset[CohortDelta] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[WeekEvent],
-         state: GroupState[RetentionState]) =>
-          process(uid, it, state, maxOffset)
-      }
+      .flatMapGroups((uid, it) => batchFold(uid, it, maxOffset))
   }
 
-  /** Streaming fold over watermarked (user_id, ts) rows. NoTimeout by
-    * design — a user's cohort must survive arbitrary idle gaps; the
-    * state BOUND comes from `maxOffset` (the report horizon), not from
-    * eviction. */
+  /** Streaming deltas over watermarked (user_id, ts) rows, through
+    * `transformWithState` (needs the RocksDB state-store provider).
+    * No timer by design — a user's cohort must survive arbitrary idle
+    * gaps; the state BOUND comes from `maxOffset` (the report
+    * horizon), not from eviction. */
   def deltasStreaming(ds: Dataset[(Long, java.sql.Timestamp)],
                       maxOffset: Long = Long.MaxValue)
       : Dataset[CohortDelta] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[RetentionState]) =>
-          process(uid,
-            it.map { case (_, ts) => WeekEvent(uid, ts.getTime * 1000) },
-            state, maxOffset)
-      }
+      .transformWithState(new RetentionProcessor(maxOffset),
+        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Deltas → the `e_retention_cohorts` output schema. Cells whose
@@ -158,4 +144,23 @@ object RetentionStream {
         expr("n_active * 10000 div cohort_size").as("retention_bp"))
       .orderBy("cohort_week", "week_offset")
   }
+}
+
+/** [[RetentionStream.step]] under [[StepProcessor]]; never arms a
+  * timer. */
+private[graft] class RetentionProcessor(maxOffset: Long)
+    extends StepProcessor[(Long, java.sql.Timestamp), RetentionState,
+      CohortDelta] {
+  override protected def stateName: String = "retention"
+  override protected def stateEncoder: Encoder[RetentionState] =
+    Encoders.product[RetentionState]
+  override protected def emptyState: RetentionState =
+    RetentionState(Long.MaxValue, Nil)
+  override protected def step(
+      uid: Long, st: RetentionState,
+      rows: Seq[(Long, java.sql.Timestamp)], wmUs: Long)
+      : (Seq[CohortDelta], Option[RetentionState], Option[Long]) =
+    RetentionStream.step(uid, st,
+      rows.map { case (_, ts) => WeekEvent(uid, ts.getTime * 1000) },
+      wmUs, maxOffset)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 case class SessionEvent(user_id: Long, ts_us: Long)
 case class Session(user_id: Long, first_us: Long, last_us: Long, n: Long)
@@ -15,36 +15,33 @@ case class SessionState(first_us: Long, last_us: Long, n: Long)
 case class SessionBufState(first_us: Long, last_us: Long, n: Long,
                            raw: Seq[Long])
 
-/** §2.K `k_stateful_sessionize` — explicit per-key session state machine
-  * via `flatMapGroupsWithState`, the one op needing the state API
-  * (everything else in StreamingOps is expressible as windowed aggs).
+/** §2.K `k_stateful_sessionize` — an explicit per-key session state
+  * machine, the one op needing the state API (everything else in
+  * StreamingOps is expressible as windowed aggs).
   *
-  * The same function body serves batch (single invocation per group,
-  * state starts empty and the trailing session is flushed on iterator
-  * exhaustion via the timeout path being irrelevant) and streaming
-  * (micro-batches carry state forward; ProcessingTimeTimeout flushes
-  * idle sessions).
+  * [[sessionsBatch]] is a plain group fold (the trailing session
+  * flushed at the end of each group); [[sessionsStreaming]] runs the
+  * same machine under `transformWithState`, buffering events until
+  * the watermark proves them final (see [[step]]).
   *
-  * Scale notes: state is one (first, last, n) triple per active user —
-  * the 30-min gap bounds retention; at 100 TB the state store shards by
-  * user_id across executors and RocksDB-backed state keeps memory flat.
+  * Scale notes: state is one (first, last, n) triple per active user
+  * plus the not-yet-final raw buffer — the 30-min gap bounds
+  * retention; the state store shards by user_id across executors and
+  * RocksDB-backed state keeps memory flat.
   */
 object Sessionize {
-  /** Alias of [[graft.SessionBounds.GapUs]] (kept for call-site
-    * stability; the predicate itself lives in SessionBounds). */
-  val GapUs: Long = graft.SessionBounds.GapUs
-
-  def process(flushAtEnd: Boolean)(
-      uid: Long, events: Iterator[SessionEvent],
-      state: GroupState[SessionState]): Iterator[Session] = {
-    var cur = state.getOption
+  /** The batch fold of one user's events: sessions in ts order, the
+    * trailing one flushed. */
+  private[graft] def batchFold(uid: Long, events: Iterator[SessionEvent])
+      : Iterator[Session] = {
+    var cur: Option[SessionState] = None
     val out = Seq.newBuilder[Session]
     events.toSeq.sortBy(_.ts_us).foreach { e =>
       cur match {
         // merge-on-touch (r16): an event at exactly last+gap still
         // extends the session — native session_window's convention.
         // The predicate is shared repo-wide: graft.SessionBounds
-        // (strict = false here and in the streaming fold below).
+        // (strict = false here and in the streaming step below).
         case Some(s) if !graft.SessionBounds.cuts(s.last_us, e.ts_us,
             strict = false) =>
           cur = Some(SessionState(s.first_us, e.ts_us, s.n + 1))
@@ -55,62 +52,37 @@ object Sessionize {
           cur = Some(SessionState(e.ts_us, e.ts_us, 1))
       }
     }
-    if (state.hasTimedOut || flushAtEnd) {
-      cur.foreach(s => out += Session(uid, s.first_us, s.last_us, s.n))
-      state.remove()
-    } else {
-      cur.foreach(state.update)
-    }
+    cur.foreach(s => out += Session(uid, s.first_us, s.last_us, s.n))
     out.result().iterator
   }
 
-  /** Batch sessionization through the state API (one call per group,
-    * trailing session flushed). */
+  /** Batch sessionization: one [[batchFold]] per user. */
   def sessionsBatch(ds: Dataset[SessionEvent]): Dataset[Session] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        process(flushAtEnd = true))
+    ds.groupByKey(_.user_id).flatMapGroups(batchFold)
   }
 
-  /** Streaming process, r12 rewrite (buffer-until-watermark + ordered
+  /** The PURE streaming step (r12 buffer-until-watermark + ordered
     * replay): the r11 single-triple fold mishandled ADMISSIBLE
     * out-of-order arrival — a cross-batch event earlier than the open
     * session's last MOVED `last_us` backwards (corrupting the span),
     * and an admissible event more than a gap BELOW the open session's
     * first needed a second pending session the state could not
-    * represent (both found by the r12 watermark-fuzz property). The
-    * exact design: buffer raw events, and on each invocation FREEZE
-    * the ones the watermark has made final — fold them, in ts order,
-    * through the batch machine. Every event at-or-ahead of the
-    * watermark is still raw, so the frozen fold is exactly the batch
-    * fold of a final prefix; sessions emit when frozen-closed (a later
-    * frozen event opened the next session) or when the watermark
-    * clears the open session's gap. The timeout wakes at the earliest
-    * instant anything could close; a too-early wake just re-arms.
+    * represent (both found by the watermark-fuzz property). The exact
+    * design: buffer raw events, and on each invocation FREEZE the ones
+    * the watermark has made final — fold them, in ts order, through
+    * the batch machine. Every event at-or-ahead of the watermark is
+    * still raw, so the frozen fold is exactly the batch fold of a
+    * final prefix; sessions emit when frozen-closed (a later frozen
+    * event opened the next session) or when the watermark clears the
+    * open session's gap. The wake is the earliest instant anything
+    * could close; a too-early wake just re-arms.
     *
     * The cross-invocation order invariant that makes the replay exact:
     * every raw event is ≥ the admission-time watermark ≥ every earlier
-    * freeze point > the frozen session's last event. */
-  def processStreaming(uid: Long, events: Iterator[SessionEvent],
-                       state: GroupState[SessionBufState]): Iterator[Session] = {
-    val st = state.getOption.getOrElse(SessionBufState(-1L, 0L, 0L, Nil))
-    val (out, next, wake) = step(uid, st, events.map(_.ts_us).toSeq,
-      state.getCurrentWatermarkMs() * 1000)
-    next match {
-      case None => state.remove()
-      case Some(s2) =>
-        state.update(s2)
-        state.setTimeoutTimestamp(wake.get)
-    }
-    out.iterator
-  }
-
-  /** The PURE streaming fold step, shared verbatim by the fMGWS twin
-    * above and the `transformWithState` port ([[SessionizeTws]],
-    * r13) — one implementation, so the two state APIs cannot drift on
-    * semantics. Returns (emitted sessions, surviving state or None,
-    * wake-at ms — provably > the watermark when defined). */
+    * freeze point > the frozen session's last event. Returns (emitted
+    * sessions, surviving state or None, wake-at ms — strictly later
+    * than the watermark when defined). */
   private[streaming] def step(uid: Long, st: SessionBufState,
                               arrivedUs: Seq[Long], wmUs: Long)
       : (Seq[Session], Option[SessionBufState], Option[Long]) = {
@@ -152,27 +124,39 @@ object Sessionize {
       // earliest instant anything can close; both candidates are at
       // or ahead of the watermark (open session: wm ≤ last+gap; raw:
       // ts ≥ wm) and the +1 ms below keeps the wake strictly ahead
-      val horizonUs = (cur.map(_.last_us + GapUs).toSeq ++
-        rest.headOption.map(_ + GapUs)).min
+      val gap = graft.SessionBounds.GapUs
+      val horizonUs = (cur.map(_.last_us + gap).toSeq ++
+        rest.headOption.map(_ + gap)).min
       (out.result(), Some(next), Some(horizonUs / 1000 + 1))
     }
   }
 
   /** Streaming sessionization over (user_id, ts) rows whose `ts` is
-    * already watermarked; timeouts flush idle sessions. The watermarked
-    * column must flow INTO the stateful operator (mapping it away first
-    * voids the watermark), so conversion happens inside the group
-    * function. */
+    * already watermarked, through `transformWithState` (needs the
+    * RocksDB state-store provider); the watermark flushes idle
+    * sessions. The watermarked column must flow INTO the stateful
+    * operator (mapping it away first voids the watermark), so
+    * conversion happens inside the processor. */
   def sessionsStreaming(ds: Dataset[(Long, java.sql.Timestamp)]): Dataset[Session] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[SessionBufState]) =>
-          processStreaming(uid,
-            it.map { case (_, ts) => SessionEvent(uid, ts.getTime * 1000) },
-            state)
-      }
+      .transformWithState(new SessionProcessor, TimeMode.EventTime(),
+        OutputMode.Append())
   }
+}
+
+/** [[Sessionize.step]] under [[StepProcessor]]. */
+private[graft] class SessionProcessor
+    extends StepProcessor[(Long, java.sql.Timestamp), SessionBufState,
+      Session] {
+  override protected def stateName: String = "session"
+  override protected def stateEncoder: Encoder[SessionBufState] =
+    Encoders.product[SessionBufState]
+  override protected def emptyState: SessionBufState =
+    SessionBufState(-1L, 0L, 0L, Nil)
+  override protected def step(
+      uid: Long, st: SessionBufState,
+      rows: Seq[(Long, java.sql.Timestamp)], wmUs: Long)
+      : (Seq[Session], Option[SessionBufState], Option[Long]) =
+    Sessionize.step(uid, st, rows.map(_._2.getTime * 1000), wmUs)
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
 case class DedupEvent(event_id: Long, user_id: Long, value: Double)
 
 /** Streaming exactly-once dedup via Spark 4's `transformWithState` —
-  * the modern arbitrary-state API (StatefulProcessor + typed state
-  * variables over the RocksDB store), demonstrated alongside the
-  * classic `flatMapGroupsWithState` (streaming/Sessionize.scala).
+  * the package's one state API (StatefulProcessor + typed state
+  * variables over the RocksDB store; the event-time operators share
+  * it through [[StepProcessor]]).
   *
   * Per event_id key, a ValueState[Boolean] records "seen"; only the
   * first arrival is emitted, so replays and at-least-once upstreams

@@ -3,52 +3,44 @@ package graft.streaming
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-/** The shared `flatMapGroupsWithState` → `transformWithState`
-  * bookkeeping (r13, VERDICT item 5 widened): every fMGWS twin in this
-  * package is already factored into a PURE step function
-  * `(key, state, events, watermark) → (emits, state', wake)`, so the
-  * port to Spark 4's StatefulProcessor API is the same four-line
-  * mapping each time — this base class holds it ONCE:
+/** The one stateful streaming engine of this package: every stateful
+  * operator (sessionize, funnel, retention, attribution, z-score,
+  * gap-islands, as-of) runs `transformWithState` over a subclass of
+  * this processor, and its public `*Streaming` entry point needs the
+  * RocksDB state-store provider
+  * (`spark.sql.streaming.stateStore.providerClass`).
   *
-  *  - the GroupState value      → a named `ValueState[S]`
-  *  - `setTimeoutTimestamp(at)` → `registerTimer(at)` with
-  *    delete-then-register bookkeeping (fMGWS keeps ONE armed timeout
-  *    per key and every set replaces it; TWS timers accumulate, so the
-  *    port maintains the one-armed-wake invariant itself —
-  *    `listTimers` is authoritative, no shadow state)
-  *  - `hasTimedOut` invocations → `handleExpiredTimer`
-  *  - `getCurrentWatermarkMs`   → `timerValues.getCurrentWatermarkInMs`
+  * Each operator's semantics live in ONE pure step function
+  * `(key, state, events, watermark) → (emits, state', wake)`; this
+  * class holds the state-API bookkeeping once. The state is a named
+  * `ValueState[S]`, and the key keeps at most ONE armed timer: a new
+  * wake deletes the old timer before registering (TWS timers
+  * accumulate until deleted; `listTimers` is authoritative, no shadow
+  * state). An expired timer re-enters the same step with no rows.
+  * Concrete processors supply only the state name, encoder, empty
+  * value, and the delegation to their operator's step.
   *
-  * Concrete processors ([[AsofProcessor]], [[SessionProcessor]],
-  * [[FunnelProcessor]]) supply only the state name, encoder, empty
-  * value, and a delegation to their twin's step — semantics stay in
-  * exactly one place per operator, so the two state-API paths cannot
-  * drift. WatermarkFuzzSpec drives the real processor classes through
-  * an in-memory StatefulProcessorHandle over the same arbitrary-order
-  * schedules as the fMGWS twins; TwsPortsSpec runs both REAL engines
-  * (RocksDB provider) on identical micro-batch schedules.
+  * The step contract (checked by WatermarkFuzzSpec's simulated
+  * handle, which rejects a timer at or below the watermark): a defined
+  * `wake` implies a defined `state'` and is strictly later than the
+  * current watermark — so a surviving key has exactly one live timer
+  * (or none, for retention, whose state must survive arbitrary idle
+  * gaps) and a cleared key has none.
   *
-  * The step contract this relies on (proven per twin by the fuzz
-  * property): a defined `wake` implies a defined `state'` and is
-  * provably later than the current watermark — so a surviving key has
-  * exactly one live timer (or none, for the NoTimeout twins such as
-  * retention whose state must survive arbitrary idle gaps) and a
-  * cleared key has none.
-  *
-  * ONE measured engine difference the port does NOT hide (pinned by
-  * TwsPortsSpec's boundary test, r13): the TWS late-row filter is
-  * STRICT — a row whose event time EQUALS the current watermark is
-  * dropped, where fMGWS admits it (even event-time 0 against the
-  * initial watermark 0). Spark's own engines differ at equality;
-  * rows strictly inside the watermark behave identically on both.
+  * The late-row rule: a row is admitted only if its event time is
+  * STRICTLY later than the current watermark; a row whose event time
+  * EQUALS the watermark is dropped (even event-time 0 against the
+  * initial watermark 0). TwsPortsSpec's late-row test pins it. Each
+  * operator's `*Batch` fold over the admitted rows is the parity
+  * reference for its streaming output.
   */
 abstract class StepProcessor[I, S, O] extends StatefulProcessor[Long, I, O] {
 
   protected def stateName: String
   protected def stateEncoder: Encoder[S]
   protected def emptyState: S
-  /** The twin's pure step, watermark in event-time MICROSECONDS (the
-    * package convention); returned wake instant in milliseconds. */
+  /** The operator's pure step, watermark in event-time MICROSECONDS
+    * (the package convention); returned wake instant in milliseconds. */
   protected def step(key: Long, st: S, rows: Seq[I], wmUs: Long)
       : (Seq[O], Option[S], Option[Long])
 
@@ -73,7 +65,7 @@ abstract class StepProcessor[I, S, O] extends StatefulProcessor[Long, I, O] {
               armed.foreach(getHandle.deleteTimer)
               getHandle.registerTimer(at)
             }
-          case None => // surviving state with no wake (NoTimeout twins)
+          case None => // surviving state with no wake (retention)
             armed.foreach(getHandle.deleteTimer)
         }
     }

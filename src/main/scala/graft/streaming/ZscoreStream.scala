@@ -2,21 +2,21 @@ package graft.streaming
 
 import java.math.{BigDecimal => JBD, RoundingMode}
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 case class ValueEvent(user_id: Long, ts_us: Long, event_id: Long,
                       value: Double)
 case class AnomalyHit(event_id: Long, user_id: Long, value: Double,
                       z: Double)
 /** Ring of the user's most recent ≤20 values, newest last, plus the
-  * last event time (drives the idle-eviction timeout). */
+  * last event time (drives the idle-eviction timer). */
 case class ZscoreState(window: List[Double], lastUs: Long)
 
 /** §2.K streaming twin of `e_anomaly_zscore` (r10): each arriving
   * event scored against the mean/stddev of that user's previous ≤20
-  * values — per-user bounded ring-buffer state over
-  * `flatMapGroupsWithState`.
+  * values — per-user bounded ring-buffer state (`transformWithState`
+  * in [[zscoreStreaming]]).
   *
   * Parity with the batch window plan is EXACT, not approximate
   * (ZscoreStreamSpec pins set equality including the z values): the
@@ -28,7 +28,7 @@ case class ZscoreState(window: List[Double], lastUs: Long)
   * batch result at the last ulp.
   *
   * Scale notes: state is ≤20 doubles + a timestamp per ACTIVE user
-  * (the 30-day idle timeout evicts dormant users — after eviction the
+  * (the 30-day idle timer evicts dormant users — after eviction the
   * ring refills exactly as a fresh user's would, matching the batch
   * semantics for any user whose history fits the watermark horizon).
   * The state store shards by user_id; no corpus-sized state anywhere.
@@ -58,7 +58,7 @@ object ZscoreStream {
   }
 
   /** Ordered fold of one batch against the ring — the shared kernel
-    * of the batch path, the fMGWS streaming path, and the TWS port. */
+    * of the batch fold and the streaming step. */
   private def foldEvents(uid: Long, cur0: ZscoreState,
                          evs: Seq[ValueEvent])
       : (ZscoreState, Seq[AnomalyHit]) = {
@@ -74,49 +74,24 @@ object ZscoreStream {
     (cur, out.result())
   }
 
-  def process(uid: Long, events: Iterator[ValueEvent],
-              state: GroupState[ZscoreState]): Iterator[AnomalyHit] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val (cur, out) = foldEvents(uid,
-      state.getOption.getOrElse(ZscoreState(Nil, 0L)), events.toSeq)
-    state.update(cur)
-    out.iterator
-  }
+  /** The batch fold of one user's events: [[foldEvents]] from an
+    * empty ring. */
+  private[graft] def batchFold(uid: Long, events: Iterator[ValueEvent])
+      : Iterator[AnomalyHit] =
+    foldEvents(uid, ZscoreState(Nil, 0L), events.toSeq)._2.iterator
 
-  /** Batch scoring through the state API — ZscoreStreamSpec proves it
-    * equals the `e_anomaly_zscore` windowed plan exactly. */
+  /** Batch scoring: one [[batchFold]] per user — ZscoreStreamSpec
+    * proves it equals the `e_anomaly_zscore` windowed plan exactly. */
   def zscoreBatch(ds: Dataset[ValueEvent]): Dataset[AnomalyHit] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        process)
+    ds.groupByKey(_.user_id).flatMapGroups(batchFold)
   }
 
-  /** Streaming process: the batch fold plus idle-state eviction. */
-  def processStreaming(uid: Long, events: Iterator[ValueEvent],
-                       state: GroupState[ZscoreState])
-      : Iterator[AnomalyHit] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val st = state.getOption.getOrElse(ZscoreState(Nil, 0L))
-    val (out, next, wake) = step(uid, st, events.toSeq,
-      state.getCurrentWatermarkMs() * 1000)
-    next match {
-      case None => state.remove()
-      case Some(s2) =>
-        state.update(s2)
-        state.setTimeoutTimestamp(wake.get)
-    }
-    out.iterator
-  }
-
-  /** The PURE streaming fold step, shared by the fMGWS twin and the
-    * `transformWithState` port ([[ZscoreStreamTws]], r13) — one
-    * implementation, so the two state APIs cannot drift on semantics.
-    * Idle-eviction clamp (r11, the AttributionStream lesson): a ring
-    * whose idle horizon is already behind the watermark IS
-    * idle-expired — dropped now, exactly what the timeout would have
-    * done; otherwise the wake at last + idle-timeout is provably > the
-    * watermark. */
+  /** The PURE streaming step. Idle-eviction clamp (r11, the
+    * AttributionStream lesson): a ring whose idle horizon is at or
+    * behind the watermark IS idle-expired — dropped now, exactly what
+    * the timer would have done; otherwise the wake at
+    * last + idle-timeout is strictly later than the watermark. */
   private[streaming] def step(uid: Long, st: ZscoreState,
                               arrived: Seq[ValueEvent], wmUs: Long)
       : (Seq[AnomalyHit], Option[ZscoreState], Option[Long]) = {
@@ -129,20 +104,33 @@ object ZscoreStream {
     }
   }
 
-  /** Streaming scoring with idle-state eviction. */
+  /** Streaming anomaly scoring over watermarked (user_id, ts,
+    * event_id, value) rows with idle-state eviction, through
+    * `transformWithState` (needs the RocksDB state-store provider). */
   def zscoreStreaming(
       ds: Dataset[(Long, java.sql.Timestamp, Long, Double)])
       : Dataset[AnomalyHit] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[(Long, java.sql.Timestamp, Long, Double)],
-         state: GroupState[ZscoreState]) =>
-          processStreaming(uid,
-            it.map { case (_, ts, eid, v) =>
-              ValueEvent(uid, ts.getTime * 1000, eid, v)
-            }, state)
-      }
+      .transformWithState(new ZscoreProcessor, TimeMode.EventTime(),
+        OutputMode.Append())
   }
+}
+
+/** [[ZscoreStream.step]] under [[StepProcessor]]. */
+private[graft] class ZscoreProcessor
+    extends StepProcessor[(Long, java.sql.Timestamp, Long, Double),
+      ZscoreState, AnomalyHit] {
+  override protected def stateName: String = "zscore"
+  override protected def stateEncoder: Encoder[ZscoreState] =
+    Encoders.product[ZscoreState]
+  override protected def emptyState: ZscoreState = ZscoreState(Nil, 0L)
+  override protected def step(
+      uid: Long, st: ZscoreState,
+      rows: Seq[(Long, java.sql.Timestamp, Long, Double)], wmUs: Long)
+      : (Seq[AnomalyHit], Option[ZscoreState], Option[Long]) =
+    ZscoreStream.step(uid, st,
+      rows.map { case (_, ts, eid, v) =>
+        ValueEvent(uid, ts.getTime * 1000, eid, v) },
+      wmUs)
 }

@@ -43,135 +43,123 @@ class AsofStreamSpec extends SparkSpec {
 
   test("streamed as-of: cross-micro-batch carry, watermark flush of " +
     "the unmatched case, and in-band click selection") {
-    implicit val ctx = spark.sqlContext
-    def ts(hour: Long) = new Timestamp(hour * 3600000L)
-    val input = MemoryStream[AsEv]
-    val out = AsofStream.asofStreaming(
-      input.toDF()
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), col("event_id"), col("ts"), col("isLeft"))
-        .as[(Long, Long, Timestamp, Boolean)])
-    val q = out.writeStream
-      .format("memory").queryName("asof_stream_test")
-      .outputMode("append")
-      .start()
-    try {
-      // batch 1: a purchase at h10 — pending, nothing emitted
-      input.addData(AsEv(1, 100, ts(10), isLeft = true))
-      q.processAllAvailable()
-      assert(spark.table("asof_stream_test").count() == 0,
-        "purchase resolved before its band closed")
-      // batch 2: clicks at h11 (in band) and h13 (out of band), and a
-      // second purchase at h13 — carried purchase must match h11 later
-      input.addData(AsEv(1, 200, ts(11), isLeft = false),
-        AsEv(1, 201, ts(13), isLeft = false),
-        AsEv(1, 101, ts(13), isLeft = true))
-      q.processAllAvailable()
-      // batch 3: another user pushes the watermark past h15+2 —
-      // both purchases resolve via timeout
-      input.addData(AsEv(2, 900, ts(40), isLeft = false))
-      q.processAllAvailable()
-      input.addData(AsEv(2, 901, ts(41), isLeft = false))
-      q.processAllAvailable()
-      assert(q.exception.isEmpty, q.exception)
-    } finally q.stop()
-    val rows = spark.table("asof_stream_test")
-      .filter(col("user_id") === 1)
-      .as[(Long, Long, Long, Option[Long], Option[Long])]
-      .collect().toSet
-    assert(rows == Set(
-      (100L, 1L, 10L * hourUs, Some(200L), Some(11L * hourUs)),
-      (101L, 1L, 13L * hourUs, None, None)),
-      s"unexpected resolutions: $rows")
+    withRocksDb {
+      implicit val ctx = spark.sqlContext
+      def ts(hour: Long) = new Timestamp(hour * 3600000L)
+      val input = MemoryStream[AsEv]
+      val out = AsofStream.asofStreaming(
+        input.toDF()
+          .withWatermark("ts", "0 seconds")
+          .select(col("user_id"), col("event_id"), col("ts"), col("isLeft"))
+          .as[(Long, Long, Timestamp, Boolean)])
+      val q = out.writeStream
+        .format("memory").queryName("asof_stream_test")
+        .outputMode("append")
+        .start()
+      try {
+        // batch 1: a purchase at h10 — pending, nothing emitted
+        input.addData(AsEv(1, 100, ts(10), isLeft = true))
+        q.processAllAvailable()
+        assert(spark.table("asof_stream_test").count() == 0,
+          "purchase resolved before its band closed")
+        // batch 2: clicks at h11 (in band) and h13 (out of band), and a
+        // second purchase at h13 — carried purchase must match h11 later
+        input.addData(AsEv(1, 200, ts(11), isLeft = false),
+          AsEv(1, 201, ts(13), isLeft = false),
+          AsEv(1, 101, ts(13), isLeft = true))
+        q.processAllAvailable()
+        // batch 3: another user pushes the watermark past h15+2 —
+        // both purchases resolve via timeout
+        input.addData(AsEv(2, 900, ts(40), isLeft = false))
+        q.processAllAvailable()
+        input.addData(AsEv(2, 901, ts(41), isLeft = false))
+        q.processAllAvailable()
+        assert(q.exception.isEmpty, q.exception)
+      } finally q.stop()
+      val rows = spark.table("asof_stream_test")
+        .filter(col("user_id") === 1)
+        .as[(Long, Long, Long, Option[Long], Option[Long])]
+        .collect().toSet
+      assert(rows == Set(
+        (100L, 1L, 10L * hourUs, Some(200L), Some(11L * hourUs)),
+        (101L, 1L, 13L * hourUs, None, None)),
+        s"unexpected resolutions: $rows")
+    }
   }
 
   test("a watermark jump past a pending purchase's whole band " +
     "resolves it in the DATA path instead of crashing on a stale " +
     "timeout (r11 clamp class)") {
-    implicit val ctx = spark.sqlContext
-    def ts(hour: Long) = new Timestamp(hour * 3600000L)
-    val input = MemoryStream[AsEv]
-    val out = AsofStream.asofStreaming(
-      input.toDF()
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), col("event_id"), col("ts"), col("isLeft"))
-        .as[(Long, Long, Timestamp, Boolean)])
-    val q = out.writeStream
-      .format("memory").queryName("asof_stream_clamp_test")
-      .outputMode("append")
-      .start()
-    try {
-      // batch 1: user 1's purchase at h85 goes pending (timeout set at
-      // its h87 horizon) while user 2's click at h300 drives the NEXT
-      // watermark to h300 — a jump far beyond the pending horizon
-      input.addData(AsEv(1, 100, ts(85), isLeft = true),
-        AsEv(2, 900, ts(300), isLeft = false))
-      q.processAllAvailable()
-      // (the purchase may already have resolved here: the engine runs
-      // a no-data batch after the jump, firing the h87 timeout — both
-      // orders must yield the same final rows)
-      // batch 2: user 1 gets a DATA invocation (click at h310, far
-      // out of band) against whatever state the jump left behind
-      input.addData(AsEv(1, 200, ts(310), isLeft = false))
-      q.processAllAvailable()
-      // push the watermark once more so the lone h310 click buffer
-      // self-cleans through its own timeout
-      input.addData(AsEv(2, 901, ts(400), isLeft = false))
-      q.processAllAvailable()
-      assert(q.exception.isEmpty,
-        s"stale-horizon purchase crashed the query: ${q.exception}")
-    } finally q.stop()
-    val rows = spark.table("asof_stream_clamp_test")
-      .filter(col("user_id") === 1)
-      .as[(Long, Long, Long, Option[Long], Option[Long])]
-      .collect().toSet
-    assert(rows == Set((100L, 1L, 85L * hourUs, None, None)),
-      s"stale-horizon purchase mis-resolved: $rows")
+    withRocksDb {
+      implicit val ctx = spark.sqlContext
+      def ts(hour: Long) = new Timestamp(hour * 3600000L)
+      val input = MemoryStream[AsEv]
+      val out = AsofStream.asofStreaming(
+        input.toDF()
+          .withWatermark("ts", "0 seconds")
+          .select(col("user_id"), col("event_id"), col("ts"), col("isLeft"))
+          .as[(Long, Long, Timestamp, Boolean)])
+      val q = out.writeStream
+        .format("memory").queryName("asof_stream_clamp_test")
+        .outputMode("append")
+        .start()
+      try {
+        // batch 1: user 1's purchase at h85 goes pending (timeout set at
+        // its h87 horizon) while user 2's click at h300 drives the NEXT
+        // watermark to h300 — a jump far beyond the pending horizon
+        input.addData(AsEv(1, 100, ts(85), isLeft = true),
+          AsEv(2, 900, ts(300), isLeft = false))
+        q.processAllAvailable()
+        // (the purchase may already have resolved here: the engine runs
+        // a no-data batch after the jump, firing the h87 timeout — both
+        // orders must yield the same final rows)
+        // batch 2: user 1 gets a DATA invocation (click at h310, far
+        // out of band) against whatever state the jump left behind
+        input.addData(AsEv(1, 200, ts(310), isLeft = false))
+        q.processAllAvailable()
+        // push the watermark once more so the lone h310 click buffer
+        // self-cleans through its own timeout
+        input.addData(AsEv(2, 901, ts(400), isLeft = false))
+        q.processAllAvailable()
+        assert(q.exception.isEmpty,
+          s"stale-horizon purchase crashed the query: ${q.exception}")
+      } finally q.stop()
+      val rows = spark.table("asof_stream_clamp_test")
+        .filter(col("user_id") === 1)
+        .as[(Long, Long, Long, Option[Long], Option[Long])]
+        .collect().toSet
+      assert(rows == Set((100L, 1L, 85L * hourUs, None, None)),
+        s"stale-horizon purchase mis-resolved: $rows")
+    }
   }
 
   test("DATA-path clamp, unit-level: a data invocation with the stored " +
     "horizon far below the watermark resolves the purchase and never " +
     "re-arms a stale timeout") {
-    // GroupState that replicates Spark's timeout validation — the
-    // exact check the r11 bug class tripped
-    class WmGroupState[S](init: Option[S], wmMs: Long)
-        extends TestGroupState[S](init) {
-      var lastTimeout: Option[Long] = None
-      override def getCurrentWatermarkMs(): Long = wmMs
-      override def setTimeoutTimestamp(t: Long): Unit = {
-        require(t > wmMs,
-          s"timeout $t is not later than watermark $wmMs")
-        lastTimeout = Some(t)
-      }
-    }
     val pend = graft.streaming.AsofState(Seq(100L, 85L * hourUs), Nil)
-    val wmMs = 300L * 3600000L
-    val st = new WmGroupState[graft.streaming.AsofState](Some(pend), wmMs)
-    val out = AsofStream.process(flushAtEnd = false)(1L,
-      Iterator(AsofEvent(1L, 200L, 310L * hourUs, isLeft = false)), st)
-      .toList
-    assert(out == List(graft.streaming.AsofMatch(
+    val wmUs = 300L * hourUs
+    val (out, next, wake) = AsofStream.step(1L, pend,
+      Seq(AsofEvent(1L, 200L, 310L * hourUs, isLeft = false)), wmUs)
+    assert(out == Seq(graft.streaming.AsofMatch(
       100L, 1L, 85L * hourUs, None, None)), out)
     // surviving state: only the future click, waking at its own ts
-    assert(st.current.exists(s =>
-      s.purchases.isEmpty && s.clicks == List((200L, 310L * hourUs))), st.current)
-    assert(st.lastTimeout.exists(_ > wmMs), st.lastTimeout)
+    assert(next.exists(s =>
+      s.purchases.isEmpty && s.clicks == List((200L, 310L * hourUs))), next)
+    assert(wake.exists(_ > wmUs / 1000), wake)
   }
 
-  test("transformWithState port (r13): identical rows to the fMGWS " +
-    "twin on the same micro-batch schedule, both real engines, " +
-    "including the carry, flush, and clamp legs") {
-    // tws requires the RocksDB state store provider
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+  test("transformWithState as-of equals asofBatch over the admitted " +
+    "rows on one micro-batch schedule, including the carry, flush, " +
+    "and clamp legs") {
+    withRocksDb {
       implicit val ctx = spark.sqlContext
       def ts(hour: Long) = new Timestamp(hour * 3600000L)
       // one schedule exercising all three proven behaviors: the
       // cross-batch carry + in-band selection (user 1), the
       // watermark-jump clamp + lone-click self-clean (user 3), and
-      // the watermark-driving side (user 2)
+      // the watermark-driving side (user 2). Every row is strictly
+      // later than the watermark at its arrival (delay 0), so every
+      // row is admitted.
       val batches: Seq[Seq[AsEv]] = Seq(
         Seq(AsEv(1, 100, ts(10), isLeft = true)),
         Seq(AsEv(1, 200, ts(11), isLeft = false),
@@ -182,41 +170,32 @@ class AsofStreamSpec extends SparkSpec {
           AsEv(2, 901, ts(300), isLeft = false)),
         Seq(AsEv(3, 400, ts(310), isLeft = false)),
         Seq(AsEv(2, 902, ts(400), isLeft = false)))
-      def drive(name: String,
-                mk: org.apache.spark.sql.Dataset[(Long, Long, Timestamp, Boolean)] =>
-                  org.apache.spark.sql.Dataset[graft.streaming.AsofMatch])
-          : Set[(Long, Long, Long, Option[Long], Option[Long])] = {
-        val input = MemoryStream[AsEv]
-        val q = mk(input.toDF()
-            .withWatermark("ts", "0 seconds")
-            .select(col("user_id"), col("event_id"), col("ts"), col("isLeft"))
-            .as[(Long, Long, Timestamp, Boolean)])
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        try {
-          batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-          assert(q.exception.isEmpty, s"$name crashed: ${q.exception}")
-        } finally q.stop()
-        spark.table(name)
-          .as[(Long, Long, Long, Option[Long], Option[Long])]
-          .collect().toSet
-      }
-      val tws = drive("asof_tws_r13", graft.streaming.AsofStreamTws.asofStreaming)
-      val fm = drive("asof_fmgws_r13", AsofStream.asofStreaming)
-      assert(tws == fm, s"API ports diverged:\n tws $tws\n fm  $fm")
+      val input = MemoryStream[AsEv]
+      val q = AsofStream.asofStreaming(input.toDF()
+          .withWatermark("ts", "0 seconds")
+          .select(col("user_id"), col("event_id"), col("ts"), col("isLeft"))
+          .as[(Long, Long, Timestamp, Boolean)])
+        .writeStream.format("memory").queryName("asof_tws")
+        .outputMode("append").start()
+      try {
+        batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+        assert(q.exception.isEmpty, s"asof_tws crashed: ${q.exception}")
+      } finally q.stop()
+      val tws = spark.table("asof_tws")
+        .as[(Long, Long, Long, Option[Long], Option[Long])]
+        .collect().toSet
+      val ref = AsofStream.asofBatch(batches.flatten.map(e =>
+          AsofEvent(e.user_id, e.event_id, e.ts.getTime * 1000, e.isLeft))
+        .toDS())
+        .as[(Long, Long, Long, Option[Long], Option[Long])]
+        .collect().toSet
+      assert(tws == ref, s"engine diverged from the batch fold:\n tws $tws\n ref $ref")
       // and both match the known resolutions of the proven legs
       val u13 = tws.filter(r => r._2 == 1L || r._2 == 3L)
       assert(u13 == Set(
         (100L, 1L, 10L * hourUs, Some(200L), Some(11L * hourUs)),
         (101L, 1L, 13L * hourUs, None, None),
         (300L, 3L, 85L * hourUs, None, None)), s"unexpected: $u13")
-    } finally {
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

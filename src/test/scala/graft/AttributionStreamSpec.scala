@@ -58,73 +58,77 @@ class AttributionStreamSpec extends SparkSpec {
 
   test("streamed attribution carries the touch across micro-batches " +
     "and expires the 7-day lookback") {
-    implicit val ctx = spark.sqlContext
-    def ts(s: String) = Timestamp.valueOf(s)
-    val input = MemoryStream[TEv]
-    val out = AttributionStream.attributionStreaming(
-      input.toDF()
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"), col("value"))
-        .as[(Long, Timestamp, Long, String, Double)])
-    val q = out.writeStream
-      .format("memory").queryName("attrib_stream_test")
-      .outputMode("append")
-      .start()
-    try {
-      // batch 1: user 1 clicks — no purchase yet
-      input.addData(TEv(1, ts("2024-01-01 10:00:00"), 1, "click", 0.0))
-      q.processAllAvailable()
-      // batch 2: purchase in a LATER micro-batch — only carried state
-      // can credit the click
-      input.addData(TEv(1, ts("2024-01-01 11:00:00"), 2, "purchase", 5.0))
-      q.processAllAvailable()
-      // batch 3: a purchase 8 days after the touch is outside the
-      // lookback → direct
-      input.addData(TEv(1, ts("2024-01-09 12:00:00"), 3, "purchase", 7.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("attrib_stream_test")
-      .select("user_id", "event_id", "channel", "value")
-      .as[(Long, Long, String, Double)].collect().toSet
-    assert(rows.contains((1L, 2L, "click", 5.0)), rows)
-    assert(rows.contains((1L, 3L, "direct", 7.0)), rows)
+    withRocksDb {
+      implicit val ctx = spark.sqlContext
+      def ts(s: String) = Timestamp.valueOf(s)
+      val input = MemoryStream[TEv]
+      val out = AttributionStream.attributionStreaming(
+        input.toDF()
+          .withWatermark("ts", "0 seconds")
+          .select(col("user_id"), col("ts"), col("event_id"),
+            col("event_type"), col("value"))
+          .as[(Long, Timestamp, Long, String, Double)])
+      val q = out.writeStream
+        .format("memory").queryName("attrib_stream_test")
+        .outputMode("append")
+        .start()
+      try {
+        // batch 1: user 1 clicks — no purchase yet
+        input.addData(TEv(1, ts("2024-01-01 10:00:00"), 1, "click", 0.0))
+        q.processAllAvailable()
+        // batch 2: purchase in a LATER micro-batch — only carried state
+        // can credit the click
+        input.addData(TEv(1, ts("2024-01-01 11:00:00"), 2, "purchase", 5.0))
+        q.processAllAvailable()
+        // batch 3: a purchase 8 days after the touch is outside the
+        // lookback → direct
+        input.addData(TEv(1, ts("2024-01-09 12:00:00"), 3, "purchase", 7.0))
+        q.processAllAvailable()
+      } finally q.stop()
+      val rows = spark.table("attrib_stream_test")
+        .select("user_id", "event_id", "channel", "value")
+        .as[(Long, Long, String, Double)].collect().toSet
+      assert(rows.contains((1L, 2L, "click", 5.0)), rows)
+      assert(rows.contains((1L, 3L, "direct", 7.0)), rows)
+    }
   }
 
   test("an event arriving after the watermark crossed the touch's " +
     "lookback horizon removes the dead state instead of setting an " +
     "in-the-past timeout") {
-    // Regression: setTimeoutTimestamp(touch + lookback) with the
-    // horizon already ≤ watermark throws in Spark and kills the query.
-    implicit val ctx = spark.sqlContext
-    def ts(s: String) = Timestamp.valueOf(s)
-    val input = MemoryStream[TEv]
-    val out = AttributionStream.attributionStreaming(
-      input.toDF()
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"), col("value"))
-        .as[(Long, Timestamp, Long, String, Double)])
-    val q = out.writeStream
-      .format("memory").queryName("attrib_stale_touch_test")
-      .outputMode("append")
-      .start()
-    try {
-      // user 1 touches, then user 2 pushes the watermark 19 days past
-      // user 1's lookback horizon while user 1's state still exists
-      input.addData(TEv(1, ts("2024-01-01 10:00:00"), 1, "click", 0.0))
-      q.processAllAvailable()
-      input.addData(TEv(2, ts("2024-01-20 00:00:00"), 2, "click", 0.0))
-      q.processAllAvailable()
-      // user 1's group now runs the data path with watermark (01-20)
-      // already past its horizon (01-08) — must not throw
-      input.addData(TEv(1, ts("2024-01-21 00:00:00"), 3, "purchase", 9.0))
-      q.processAllAvailable()
-      assert(q.exception.isEmpty, q.exception)
-    } finally q.stop()
-    val rows = spark.table("attrib_stale_touch_test")
-      .select("user_id", "event_id", "channel", "value")
-      .as[(Long, Long, String, Double)].collect().toSet
-    assert(rows.contains((1L, 3L, "direct", 9.0)), rows)
+    withRocksDb {
+      // Regression: setTimeoutTimestamp(touch + lookback) with the
+      // horizon already ≤ watermark throws in Spark and kills the query.
+      implicit val ctx = spark.sqlContext
+      def ts(s: String) = Timestamp.valueOf(s)
+      val input = MemoryStream[TEv]
+      val out = AttributionStream.attributionStreaming(
+        input.toDF()
+          .withWatermark("ts", "0 seconds")
+          .select(col("user_id"), col("ts"), col("event_id"),
+            col("event_type"), col("value"))
+          .as[(Long, Timestamp, Long, String, Double)])
+      val q = out.writeStream
+        .format("memory").queryName("attrib_stale_touch_test")
+        .outputMode("append")
+        .start()
+      try {
+        // user 1 touches, then user 2 pushes the watermark 19 days past
+        // user 1's lookback horizon while user 1's state still exists
+        input.addData(TEv(1, ts("2024-01-01 10:00:00"), 1, "click", 0.0))
+        q.processAllAvailable()
+        input.addData(TEv(2, ts("2024-01-20 00:00:00"), 2, "click", 0.0))
+        q.processAllAvailable()
+        // user 1's group now runs the data path with watermark (01-20)
+        // already past its horizon (01-08) — must not throw
+        input.addData(TEv(1, ts("2024-01-21 00:00:00"), 3, "purchase", 9.0))
+        q.processAllAvailable()
+        assert(q.exception.isEmpty, q.exception)
+      } finally q.stop()
+      val rows = spark.table("attrib_stale_touch_test")
+        .select("user_id", "event_id", "channel", "value")
+        .as[(Long, Long, String, Double)].collect().toSet
+      assert(rows.contains((1L, 3L, "direct", 9.0)), rows)
+    }
   }
 }

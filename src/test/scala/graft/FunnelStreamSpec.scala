@@ -39,44 +39,46 @@ class FunnelStreamSpec extends SparkSpec {
 
   test("streamed funnel carries stage state across micro-batches and " +
     "flushes on the watermark") {
-    implicit val ctx = spark.sqlContext
-    def ts(s: String) = Timestamp.valueOf(s)
-    val input = MemoryStream[FEv]
-    val out = FunnelStream.funnelStreaming(
-      input.toDF()
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .as[(Long, Timestamp, Long, String)])
-    val q = out.writeStream
-      .format("memory").queryName("funnel_stream_test")
-      .outputMode("append")
-      .start()
-    try {
-      // batch 1: user 1 views; user 9 keeps the watermark low
-      input.addData(
-        FEv(1, ts("2024-01-01 10:00:00"), 1, "view"),
-        FEv(9, ts("2024-01-01 10:00:00"), 2, "view"))
-      q.processAllAvailable()
-      // batch 2: the click and purchase arrive in a LATER micro-batch
-      // of the same session — only carried state can complete stage 3
-      input.addData(
-        FEv(1, ts("2024-01-01 10:05:00"), 3, "click"),
-        FEv(1, ts("2024-01-01 10:10:00"), 4, "purchase"))
-      q.processAllAvailable()
-      // batch 3: watermark jumps past user 1's session close (10:40)
-      input.addData(FEv(9, ts("2024-01-01 12:00:00"), 5, "view"))
-      q.processAllAvailable()
-      // batch 4: one more trigger so the timeout fires post-watermark
-      input.addData(FEv(9, ts("2024-01-01 12:30:00"), 6, "view"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("funnel_stream_test")
-      .select("user_id", "session_start", "n_events", "funnel_stage")
-      .as[(Long, Long, Long, Int)].collect().toSet
-    val expect = (1L, ts("2024-01-01 10:00:00").getTime * 1000L, 3L, 3)
-    assert(rows.contains(expect),
-      s"user 1's completed cross-batch funnel not emitted: $rows")
+    withRocksDb {
+      implicit val ctx = spark.sqlContext
+      def ts(s: String) = Timestamp.valueOf(s)
+      val input = MemoryStream[FEv]
+      val out = FunnelStream.funnelStreaming(
+        input.toDF()
+          .withWatermark("ts", "0 seconds")
+          .select(col("user_id"), col("ts"), col("event_id"),
+            col("event_type"))
+          .as[(Long, Timestamp, Long, String)])
+      val q = out.writeStream
+        .format("memory").queryName("funnel_stream_test")
+        .outputMode("append")
+        .start()
+      try {
+        // batch 1: user 1 views; user 9 keeps the watermark low
+        input.addData(
+          FEv(1, ts("2024-01-01 10:00:00"), 1, "view"),
+          FEv(9, ts("2024-01-01 10:00:00"), 2, "view"))
+        q.processAllAvailable()
+        // batch 2: the click and purchase arrive in a LATER micro-batch
+        // of the same session — only carried state can complete stage 3
+        input.addData(
+          FEv(1, ts("2024-01-01 10:05:00"), 3, "click"),
+          FEv(1, ts("2024-01-01 10:10:00"), 4, "purchase"))
+        q.processAllAvailable()
+        // batch 3: watermark jumps past user 1's session close (10:40)
+        input.addData(FEv(9, ts("2024-01-01 12:00:00"), 5, "view"))
+        q.processAllAvailable()
+        // batch 4: one more trigger so the timeout fires post-watermark
+        input.addData(FEv(9, ts("2024-01-01 12:30:00"), 6, "view"))
+        q.processAllAvailable()
+      } finally q.stop()
+      val rows = spark.table("funnel_stream_test")
+        .select("user_id", "session_start", "n_events", "funnel_stage")
+        .as[(Long, Long, Long, Int)].collect().toSet
+      val expect = (1L, ts("2024-01-01 10:00:00").getTime * 1000L, 3L, 3)
+      assert(rows.contains(expect),
+        s"user 1's completed cross-batch funnel not emitted: $rows")
+    }
   }
 
   test("out-of-order and gap-cut semantics match the batch funnel on " +

@@ -329,20 +329,20 @@ class PropertySpec extends SparkSpec {
 
   test("retention deltas converge to the reference cohort table under " +
     "random arrival orders (rebase retractions cancel exactly)") {
-    import graft.streaming.{CohortDelta, RetentionStream, WeekEvent}
+    import graft.streaming.{CohortDelta, RetentionState, RetentionStream, WeekEvent}
     val wk = RetentionStream.WeekUs
     val evGen = Gen.nonEmptyListOf(Gen.zip(
       Gen.chooseNum(1L, 4L), Gen.chooseNum(0L, 9L)))
     samples(evGen, 8).foreach { evs =>
-      // fold one event per state call, in generated (arbitrary) order
+      // fold one event per step, in generated (arbitrary) order
       var deltas = Vector.empty[CohortDelta]
-      val states = scala.collection.mutable.Map
-        .empty[Long, graft.streaming.RetentionState]
+      val states = scala.collection.mutable.Map.empty[Long, RetentionState]
       evs.foreach { case (u, w) =>
-        val st = new TestGroupState(states.get(u))
-        deltas ++= RetentionStream.process(u,
-          Iterator.single(WeekEvent(u, w * wk + 5L)), st)
-        st.current.foreach(states(u) = _)
+        val (out, next, _) = RetentionStream.step(u,
+          states.getOrElse(u, RetentionState(Long.MaxValue, Nil)),
+          Seq(WeekEvent(u, w * wk + 5L)), 0L)
+        deltas ++= out
+        next.foreach(states(u) = _)
       }
       val got = deltas.groupBy(d => (d.cohort_week, d.week_offset))
         .view.mapValues(_.map(_.delta).sum).toMap.filter(_._2 > 0)

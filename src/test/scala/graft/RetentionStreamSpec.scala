@@ -4,31 +4,9 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.{RetentionStream, WeekEvent}
+import graft.streaming.{RetentionState, RetentionStream, WeekEvent}
 
 case class RtEv(user_id: Long, ts: Timestamp)
-
-/** Minimal in-memory GroupState for driving a state function directly
-  * (no timeout semantics — the tests that need timeouts use a real
-  * MemoryStream query instead). */
-class TestGroupState[S](init: Option[S])
-    extends org.apache.spark.sql.streaming.GroupState[S] {
-  var current: Option[S] = init
-  override def exists: Boolean = current.isDefined
-  override def get: S = current.get
-  override def getOption: Option[S] = current
-  override def update(s: S): Unit = { current = Some(s) }
-  override def remove(): Unit = { current = None }
-  override def hasTimedOut: Boolean = false
-  override def setTimeoutDuration(d: Long): Unit = ()
-  override def setTimeoutDuration(d: String): Unit = ()
-  override def setTimeoutTimestamp(t: Long): Unit = ()
-  override def setTimeoutTimestamp(t: Long, add: String): Unit = ()
-  override def setTimeoutTimestamp(t: java.sql.Date): Unit = ()
-  override def setTimeoutTimestamp(t: java.sql.Date, add: String): Unit = ()
-  override def getCurrentWatermarkMs(): Long = 0L
-  override def getCurrentProcessingTimeMs(): Long = 0L
-}
 
 /** The streaming retention twin (§2.K, r11): the per-user cohort fold
   * emits cell deltas whose aggregation must equal
@@ -63,17 +41,17 @@ class RetentionStreamSpec extends SparkSpec {
       .map { case (u, w) => WeekEvent(u, w * wk + 1000L) }
     val shuffled = Seq((1L, 5L), (1L, 6L), (2L, 6L), (1L, 3L), (2L, 5L))
       .map { case (u, w) => WeekEvent(u, w * wk + 1000L) }
-    // fold the shuffled arrival one event per state call, like a
-    // stream of single-event micro-batches
+    // fold the shuffled arrival one event per step, like a stream of
+    // single-event micro-batches
     val perBatch = shuffled.grouped(1).toSeq
     var deltas = Vector.empty[graft.streaming.CohortDelta]
-    val states = scala.collection.mutable.Map
-      .empty[Long, graft.streaming.RetentionState]
+    val states = scala.collection.mutable.Map.empty[Long, RetentionState]
     perBatch.foreach { evs =>
       evs.groupBy(_.user_id).foreach { case (uid, es) =>
-        val st = new TestGroupState(states.get(uid))
-        deltas ++= RetentionStream.process(uid, es.iterator, st)
-        st.current match {
+        val (out, next, _) = RetentionStream.step(uid,
+          states.getOrElse(uid, RetentionState(Long.MaxValue, Nil)), es, 0L)
+        deltas ++= out
+        next match {
           case Some(s) => states(uid) = s
           case None => states.remove(uid)
         }
@@ -93,36 +71,38 @@ class RetentionStreamSpec extends SparkSpec {
 
   test("streamed deltas aggregate to the batch table across " +
     "micro-batches (memory stream)") {
-    implicit val ctx = spark.sqlContext
-    val wk = RetentionStream.WeekUs / 1000 // ms
-    def ts(week: Int) = new Timestamp(week * wk + 1L)
-    val input = MemoryStream[RtEv]
-    val out = RetentionStream.deltasStreaming(
-      input.toDF()
-        .withWatermark("ts", "30 days")
-        .select(col("user_id"), col("ts"))
-        .as[(Long, Timestamp)])
-    val q = out.writeStream
-      .format("memory").queryName("retention_stream_test")
-      .outputMode("append")
-      .start()
-    try {
-      input.addData(RtEv(1, ts(5)), RtEv(2, ts(5)))
-      q.processAllAvailable()
-      input.addData(RtEv(1, ts(6)))
-      q.processAllAvailable()
-      // late event inside the 30-day watermark reveals user 1's true
-      // cohort (week 3) — the rebase must retract the week-5 cells
-      input.addData(RtEv(1, ts(3)))
-      q.processAllAvailable()
-      assert(q.exception.isEmpty, q.exception)
-    } finally q.stop()
-    val got = table(spark.table("retention_stream_test"))
-    assert(got.contains((3L, 0L, 1L, 1L, 10000L)), got)
-    assert(got.contains((3L, 2L, 1L, 1L, 10000L)), got)
-    assert(got.contains((3L, 3L, 1L, 1L, 10000L)), got)
-    assert(got.contains((5L, 0L, 1L, 1L, 10000L)), got)
-    assert(!got.exists { case (cw, k, _, _, _) => cw == 5L && k > 0 }, got)
+    withRocksDb {
+      implicit val ctx = spark.sqlContext
+      val wk = RetentionStream.WeekUs / 1000 // ms
+      def ts(week: Int) = new Timestamp(week * wk + 1L)
+      val input = MemoryStream[RtEv]
+      val out = RetentionStream.deltasStreaming(
+        input.toDF()
+          .withWatermark("ts", "30 days")
+          .select(col("user_id"), col("ts"))
+          .as[(Long, Timestamp)])
+      val q = out.writeStream
+        .format("memory").queryName("retention_stream_test")
+        .outputMode("append")
+        .start()
+      try {
+        input.addData(RtEv(1, ts(5)), RtEv(2, ts(5)))
+        q.processAllAvailable()
+        input.addData(RtEv(1, ts(6)))
+        q.processAllAvailable()
+        // late event inside the 30-day watermark reveals user 1's true
+        // cohort (week 3) — the rebase must retract the week-5 cells
+        input.addData(RtEv(1, ts(3)))
+        q.processAllAvailable()
+        assert(q.exception.isEmpty, q.exception)
+      } finally q.stop()
+      val got = table(spark.table("retention_stream_test"))
+      assert(got.contains((3L, 0L, 1L, 1L, 10000L)), got)
+      assert(got.contains((3L, 2L, 1L, 1L, 10000L)), got)
+      assert(got.contains((3L, 3L, 1L, 1L, 10000L)), got)
+      assert(got.contains((5L, 0L, 1L, 1L, 10000L)), got)
+      assert(!got.exists { case (cw, k, _, _, _) => cw == 5L && k > 0 }, got)
+    }
   }
 
   test("maxOffset horizon (r12, ADVICE r11): capped deltas equal the " +
@@ -136,13 +116,14 @@ class RetentionStreamSpec extends SparkSpec {
       (2L, 5L))
       .map { case (u, w) => WeekEvent(u, w * wk + 1000L) }
     var deltas = Vector.empty[graft.streaming.CohortDelta]
-    val states = scala.collection.mutable.Map
-      .empty[Long, graft.streaming.RetentionState]
+    val states = scala.collection.mutable.Map.empty[Long, RetentionState]
     shuffled.grouped(1).foreach { evs =>
       evs.groupBy(_.user_id).foreach { case (uid, es) =>
-        val st = new TestGroupState(states.get(uid))
-        deltas ++= RetentionStream.process(uid, es.iterator, st, cap)
-        st.current.foreach(states(uid) = _)
+        val (out, next, _) = RetentionStream.step(uid,
+          states.getOrElse(uid, RetentionState(Long.MaxValue, Nil)), es, 0L,
+          cap)
+        deltas ++= out
+        next.foreach(states(uid) = _)
       }
     }
     // state bound: never more than cap + 1 weeks per user

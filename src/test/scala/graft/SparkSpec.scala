@@ -12,6 +12,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** Runs `body` under the RocksDB state-store provider, which
+    * `transformWithState` needs, then restores the previous one. */
+  def withRocksDb[A](body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   override def afterAll(): Unit = () // shared session — never stop it
 }
 

@@ -11,9 +11,8 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
 
 /** §2.K streaming deliverables: the batch-twin expressions run
   * unchanged under MemoryStream (tumbling equivalence), watermarks drop
-  * late data (k_late_data_policy), and the flatMapGroupsWithState
-  * session machine agrees with session_window
-  * (k_stateful_sessionize).
+  * late data (k_late_data_policy), and the session machine agrees with
+  * session_window (k_stateful_sessionize).
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -160,48 +159,46 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming sessionize flushes a session when the watermark passes it") {
-    implicit val ctx = spark.sqlContext
-    def ts(s: String) = Timestamp.valueOf(s)
-    val input = MemoryStream[Ev]
-    val sessions = graft.streaming.Sessionize.sessionsStreaming(
-      input.toDF()
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), col("ts"))
-        .as[(Long, Timestamp)])
-    val q = sessions.writeStream
-      .format("memory").queryName("sessionize_stream_test")
-      .outputMode("append")
-      .start()
-    // batch 1: user 1 has a 2-event session; user 2 keeps watermark low
-    input.addData(
-      Ev(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
-      Ev(2, ts("2024-01-01 10:10:00"), 1, "click", 1.0),
-      Ev(3, ts("2024-01-01 10:20:00"), 2, "view", 1.0))
-    q.processAllAvailable()
-    // batch 2: watermark jumps past user 1's session close (10:40)
-    input.addData(Ev(4, ts("2024-01-01 12:00:00"), 2, "view", 1.0))
-    q.processAllAvailable()
-    // batch 3: one more trigger so the timeout fires post-watermark
-    input.addData(Ev(5, ts("2024-01-01 12:30:00"), 2, "view", 1.0))
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("sessionize_stream_test")
-      .select("user_id", "first_us", "last_us", "n")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val expectUser1 = (1L,
-      ts("2024-01-01 10:00:00").getTime * 1000L,
-      ts("2024-01-01 10:10:00").getTime * 1000L, 2L)
-    assert(out.contains(expectUser1),
-      s"user 1's closed session not emitted: $out")
+    withRocksDb {
+      implicit val ctx = spark.sqlContext
+      def ts(s: String) = Timestamp.valueOf(s)
+      val input = MemoryStream[Ev]
+      val sessions = graft.streaming.Sessionize.sessionsStreaming(
+        input.toDF()
+          .withWatermark("ts", "0 seconds")
+          .select(col("user_id"), col("ts"))
+          .as[(Long, Timestamp)])
+      val q = sessions.writeStream
+        .format("memory").queryName("sessionize_stream_test")
+        .outputMode("append")
+        .start()
+      // batch 1: user 1 has a 2-event session; user 2 keeps watermark low
+      input.addData(
+        Ev(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
+        Ev(2, ts("2024-01-01 10:10:00"), 1, "click", 1.0),
+        Ev(3, ts("2024-01-01 10:20:00"), 2, "view", 1.0))
+      q.processAllAvailable()
+      // batch 2: watermark jumps past user 1's session close (10:40)
+      input.addData(Ev(4, ts("2024-01-01 12:00:00"), 2, "view", 1.0))
+      q.processAllAvailable()
+      // batch 3: one more trigger so the timeout fires post-watermark
+      input.addData(Ev(5, ts("2024-01-01 12:30:00"), 2, "view", 1.0))
+      q.processAllAvailable()
+      q.stop()
+      val out = spark.table("sessionize_stream_test")
+        .select("user_id", "first_us", "last_us", "n")
+        .as[(Long, Long, Long, Long)].collect().toSet
+      val expectUser1 = (1L,
+        ts("2024-01-01 10:00:00").getTime * 1000L,
+        ts("2024-01-01 10:10:00").getTime * 1000L, 2L)
+      assert(out.contains(expectUser1),
+        s"user 1's closed session not emitted: $out")
+    }
   }
 
   test("transformWithState dedup emits each event_id exactly once " +
     "across micro-batches (Spark 4 StatefulProcessor API)") {
-    // tws requires the RocksDB state store provider
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val ctx = spark.sqlContext
       val input = MemoryStream[DedupEvent]
       val q = StatefulDedup.dedup(input.toDS())
@@ -221,13 +218,6 @@ class StreamingSpec extends SparkSpec {
         s"got ${out.toSeq}")
       // in-batch duplicate of id 2 resolved by (user_id, value) order
       assert(out.find(_.event_id == 2L).get.user_id == 5L)
-    } finally {
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -235,7 +225,7 @@ class StreamingSpec extends SparkSpec {
     "EXACTLY prev+gap merges on both the stateful machine and native " +
     "session_window; gap+1µs splits") {
     import org.apache.spark.sql.functions.{window => _, _}
-    val g = Sessionize.GapUs
+    val g = SessionBounds.GapUs
     val t0 = 1704888000000000L // 2024-01-10T12:00:00Z in µs
     // chain: t0, t0+g (touching → merges), then +g−1µs (merges),
     // then +g+1µs (splits); second user is a lone event
@@ -262,7 +252,7 @@ class StreamingSpec extends SparkSpec {
     assert(native == expected, native)
   }
 
-  test("flatMapGroupsWithState sessionize equals session_window batch") {
+  test("batch sessionize fold equals session_window batch") {
     val evs = Tables.eventsWithNanos(spark, sfDir)
       .withColumn("ts_us", expr("ts_ns div 1000"))
       .select(col("user_id"), col("ts_us")).as[SessionEvent]

@@ -3,13 +3,12 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming._
 
 /** r13: restart-from-checkpoint proof for the `transformWithState`
-  * ports — the production property the ports exist for. A query is
+  * operators — the production property the state store exists for. A query is
   * stopped MID-STREAM (open per-key state and an armed event-time
   * timer in the RocksDB store) and a new query resumes from the same
   * checkpoint: the carried state must fold the post-restart batches,
@@ -29,19 +28,7 @@ class TwsRestartSpec extends SparkSpec {
   private val minMs = 60000L
   private val minUs = 60000000L
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Run `batches` through the sessionize TWS port into a parquet
+  /** Run `batches` through the sessionize TWS entry point into a parquet
     * sink, stopping and restarting the query after `stopAfter`
     * batches (0 = never stop). Returns the sink rows. */
   private def runWithRestart(batches: Seq[Seq[(Long, Timestamp)]],
@@ -51,7 +38,7 @@ class TwsRestartSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp)]
     def start() =
-      SessionizeTws.sessionsStreaming(
+      Sessionize.sessionsStreaming(
           input.toDS().toDF("user_id", "ts")
             .withWatermark("ts", "10 minutes")
             .as[(Long, Timestamp)])
@@ -113,7 +100,7 @@ class TwsRestartSpec extends SparkSpec {
       implicit val ctx = spark.sqlContext
       val input = MemoryStream[(Long, Timestamp)]
       def start() =
-        SessionizeTws.sessionsStreaming(
+        Sessionize.sessionsStreaming(
             input.toDS().toDF("user_id", "ts")
               .withWatermark("ts", "10 minutes")
               .as[(Long, Timestamp)])

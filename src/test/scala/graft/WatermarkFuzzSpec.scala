@@ -6,97 +6,40 @@ import org.scalacheck.rng.Seed
 import graft.streaming._
 
 /** r12 (VERDICT r11 item 4): randomized watermark-jump /
-  * arrival-order property over EVERY stateful streaming twin. The r11
-  * watermark-clamp bug class (AttributionStream crash; the same
+  * arrival-order property over EVERY stateful streaming operator. The
+  * r11 watermark-clamp bug class (AttributionStream crash; the same
   * latent defect in Sessionize/FunnelStream/ZscoreStream; gap-islands
   * late-day splitting) was found by review, not tests — this harness
-  * pins it so the next stateful twin cannot reintroduce it.
+  * pins it so the next stateful operator cannot reintroduce it.
   *
-  * The simulator replicates the THREE Spark behaviors the class
-  * depends on, without a streaming query per schedule (pure Scala —
-  * thousands of schedules per second):
+  * The real processor classes run through an in-memory
+  * StatefulProcessorHandle, without a streaming query per schedule
+  * (pure Scala — thousands of schedules per second). The simulator
+  * replicates the `transformWithState` behaviors the class depends on:
   *  - late rows are filtered against the PREVIOUS batch's watermark,
-  *  - `getCurrentWatermarkMs` returns the CURRENT batch's watermark
-  *    (so admitted rows can sit below it — the r11 discrepancy),
-  *  - `setTimeoutTimestamp` REJECTS instants ≤ the current watermark
-  *    (the crash), and armed timeouts fire once the watermark passes
-  *    them, as empty-data `hasTimedOut` invocations.
+  *    strictly (the [[StepProcessor]] late-row rule),
+  *  - the processor sees the CURRENT batch's watermark (so admitted
+  *    rows can sit below it — the r11 discrepancy),
+  *  - `registerTimer` REJECTS instants at or below the current
+  *    watermark (the step contract: a wake is strictly later than the
+  *    watermark), and timers fire once the watermark passes them.
   *
-  * Property per twin: NO schedule crashes, and after a final flush
-  * the emitted rows equal the twin's batch fold over exactly the
-  * ADMITTED events (for the inherently arrival-order-dependent twins
-  * — attribution's emit-on-arrival, z-score's ring — parity is
-  * asserted on in-order schedules and no-crash on arbitrary ones,
+  * Property per operator: NO schedule crashes, and after a final flush
+  * the emitted rows equal the operator's batch fold over exactly the
+  * ADMITTED events (for the inherently arrival-order-dependent
+  * operators — attribution's emit-on-arrival, z-score's ring — parity
+  * is asserted on in-order schedules and no-crash on arbitrary ones,
   * their documented envelopes).
+  *
+  * Each property runs twice over the same schedules: the plain-named
+  * test drives ONE processor instance for every key through a handle
+  * whose state and timers are scoped to the current grouping key (as
+  * the engine runs a partition — a processor that kept per-key data
+  * in instance fields would leak it across keys), and the `<Op>Tws`
+  * test drives one processor instance per key (state isolated by
+  * construction).
   */
 class WatermarkFuzzSpec extends org.scalatest.funsuite.AnyFunSuite {
-
-  /** GroupState with Spark's watermark/timeout contract. */
-  class SimGroupState[S](var wmMs: Long) extends TestGroupState[S](None) {
-    var armedMs: Option[Long] = None
-    var timedOut: Boolean = false
-    override def hasTimedOut: Boolean = timedOut
-    override def getCurrentWatermarkMs(): Long = wmMs
-    override def setTimeoutTimestamp(t: Long): Unit = {
-      require(t > wmMs,
-        s"timeout $t must be later than the watermark $wmMs " +
-          "(Spark would fail the query here)")
-      armedMs = Some(t)
-    }
-    override def remove(): Unit = { super.remove(); armedMs = None }
-  }
-
-  /** Drive one schedule through a streaming state function. `batches`
-    * carries (key, eventTimeMs, payload) rows; the watermark after
-    * batch N is max event time through batch N minus `delayMs`.
-    * Returns (outputs, admitted events). Throws = property failure. */
-  def run[E, S, O](batches: Seq[Seq[E]], tsMs: E => Long, keyOf: E => Long,
-                   delayMs: Long,
-                   fn: (Long, Iterator[E], org.apache.spark.sql.streaming.GroupState[S]) => Iterator[O])
-      : (Seq[O], Seq[E]) = {
-    val states = scala.collection.mutable.Map.empty[Long, SimGroupState[S]]
-    val out = Seq.newBuilder[O]
-    val admitted = Seq.newBuilder[E]
-    var filterWm = 0L // previous batch's watermark
-    var wm = 0L
-    var maxTs = Long.MinValue
-    def invoke(key: Long, evs: Seq[E], timedOut: Boolean): Unit = {
-      val st = states.getOrElseUpdate(key, new SimGroupState[S](wm))
-      st.wmMs = wm
-      st.timedOut = timedOut
-      if (timedOut) st.armedMs = None
-      out ++= fn(key, evs.iterator, st)
-      st.timedOut = false
-      if (st.current.isEmpty && st.armedMs.isEmpty) states.remove(key)
-    }
-    def fireTimeouts(skip: Set[Long]): Unit =
-      states.toSeq.collect {
-        case (k, st) if !skip(k) && st.armedMs.exists(_ <= wm) => k
-      }.sorted.foreach(k => invoke(k, Nil, timedOut = true))
-    batches.foreach { batch =>
-      val live = batch.filter(e => tsMs(e) >= filterWm)
-      admitted ++= live
-      live.foreach(e => maxTs = maxTs max tsMs(e))
-      val keysWithData = live.map(keyOf).distinct
-      keysWithData.foreach(k => invoke(k, live.filter(keyOf(_) == k),
-        timedOut = false))
-      fireTimeouts(skip = keysWithData.toSet)
-      filterWm = wm
-      if (maxTs != Long.MinValue) wm = wm max (maxTs - delayMs)
-    }
-    // final flush: run the watermark far past everything and drain
-    // (a timeout invocation may legitimately re-arm — e.g. a raw
-    // buffer waking early — so iterate to quiescence, bounded)
-    wm = (if (maxTs == Long.MinValue) 0L else maxTs) + delayMs +
-      365L * 86400000L
-    var rounds = 0
-    while (states.values.exists(_.armedMs.exists(_ <= wm)) && rounds < 64) {
-      fireTimeouts(skip = Set.empty)
-      rounds += 1
-    }
-    assert(rounds < 64, "timeout drain did not quiesce")
-    (out.result(), admitted.result())
-  }
 
   // seed base overridable for fresh-seed fuzz passes (r19, the
   // PropertySpec knob): -Dgraft.fuzz.seedBase=<n> shifts this base too
@@ -139,111 +82,40 @@ class WatermarkFuzzSpec extends org.scalatest.funsuite.AnyFunSuite {
     Sched(batches, delay, inOrder)
   }
 
-  private def flushAll[E, S, O](events: Seq[E], keyOf: E => Long,
-      fn: (Long, Iterator[E], org.apache.spark.sql.streaming.GroupState[S]) => Iterator[O]): Seq[O] =
+  /** The batch fold of `events`, one key at a time. */
+  private def flushAll[E, O](events: Seq[E], keyOf: E => Long,
+                             fold: (Long, Iterator[E]) => Iterator[O]): Seq[O] =
     events.map(keyOf).distinct.sorted.flatMap { k =>
-      fn(k, events.filter(keyOf(_) == k).iterator, new TestGroupState[S](None))
+      fold(k, events.filter(keyOf(_) == k).iterator)
     }
 
-  test("Sessionize: arbitrary admissible schedules — no crash, exact " +
-    "batch parity over the admitted events (250 schedules)") {
-    samples(schedGen(inOrder = false), 250).foreach { sc =>
-      val (got, adm) = run[(Long, Long, Long, String), SessionBufState, Session](
-        sc.batches, _._2, _._1, sc.delayMs,
-        (k, it, st) => Sessionize.processStreaming(k,
-          it.map(e => SessionEvent(e._1, e._2 * 1000)), st))
-      val ref = flushAll[(Long, Long, Long, String), SessionState, Session](
-        adm, _._1,
-        (k, it, st) => Sessionize.process(flushAtEnd = true)(k,
-          it.map(e => SessionEvent(e._1, e._2 * 1000)), st))
-      assert(got.sortBy(s => (s.user_id, s.first_us, s.last_us)) ==
-        ref.sortBy(s => (s.user_id, s.first_us, s.last_us)),
-        s"schedule $sc:\n got $got\n ref $ref")
-    }
-  }
-
-  test("FunnelStream: arbitrary admissible schedules — no crash, " +
-    "exact batch parity over the admitted events (250 schedules)") {
-    samples(schedGen(inOrder = false), 250).foreach { sc =>
-      val (got, adm) = run[(Long, Long, Long, String), FunnelBufState, FunnelSession](
-        sc.batches, _._2, _._1, sc.delayMs,
-        (k, it, st) => FunnelStream.processStreaming(k,
-          it.map(e => FunnelEvent(e._1, e._2 * 1000, e._3, e._4)), st))
-      val ref = flushAll[(Long, Long, Long, String), FunnelState, FunnelSession](
-        adm, _._1,
-        (k, it, st) => FunnelStream.process(flushAtEnd = true)(k,
-          it.map(e => FunnelEvent(e._1, e._2 * 1000, e._3, e._4)), st))
-      assert(got.sortBy(s => (s.user_id, s.session_start, s.n_events)) ==
-        ref.sortBy(s => (s.user_id, s.session_start, s.n_events)),
-        s"schedule $sc:\n got $got\n ref $ref")
-    }
-  }
-
-  test("GapIslandsStream: arbitrary admissible schedules — no crash, " +
-    "exact batch parity over the admitted events (250 schedules)") {
-    // minute offsets reinterpreted as DAY offsets (the island unit)
-    samples(schedGen(inOrder = false), 250).foreach { sc =>
-      val (got, adm) = run[(Long, Long, Long, String), IslandState, Island](
-        sc.batches.map(_.map(e => e.copy(_2 = e._2 / minMs * 86400000L))),
-        _._2, _._1, sc.delayMs * 1440,
-        (k, it, st) => GapIslandsStream.processStreaming(k,
-          it.map(e => DayEvent(e._1, e._2 * 1000)), st))
-      val ref = flushAll[(Long, Long, Long, String), IslandState, Island](
-        adm, _._1,
-        (k, it, st) => GapIslandsStream.process(flushAtEnd = true)(k,
-          it.map(e => DayEvent(e._1, e._2 * 1000)), st))
-      assert(got.sortBy(i => (i.user_id, i.island_start)) ==
-        ref.sortBy(i => (i.user_id, i.island_start)),
-        s"schedule $sc:\n got $got\n ref $ref")
-    }
-  }
-
-  test("AsofStream: arbitrary admissible schedules — no crash, exact " +
-    "batch parity over the admitted events (250 schedules)") {
-    samples(schedGen(inOrder = false), 250).foreach { sc =>
-      def toEv(e: (Long, Long, Long, String)) =
-        AsofEvent(e._1, e._3, e._2 * 1000, isLeft = e._4 == "purchase")
-      val (got, adm) = run[(Long, Long, Long, String), AsofState, AsofMatch](
-        sc.batches, _._2, _._1, sc.delayMs,
-        (k, it, st) => AsofStream.process(flushAtEnd = false)(k,
-          it.map(toEv), st))
-      val ref = flushAll[(Long, Long, Long, String), AsofState, AsofMatch](
-        adm, _._1,
-        (k, it, st) => AsofStream.process(flushAtEnd = true)(k,
-          it.map(toEv), st))
-      assert(got.sortBy(m => (m.user_id, m.p_id)) ==
-        ref.sortBy(m => (m.user_id, m.p_id)),
-        s"schedule $sc:\n got $got\n ref $ref")
-    }
-  }
-
-  // ---- transformWithState simulation (r13, VERDICT item 5) ----
-  // The REAL AsofProcessor driven through an in-memory
+  // ---- transformWithState simulation ----
+  // The REAL processors driven through an in-memory
   // StatefulProcessorHandle that replicates the TWS contract: named
-  // ValueState per key, timers that accumulate until deleted, expired
-  // timers firing as handleExpiredTimer once the watermark passes,
-  // late rows filtered against the previous batch's watermark.
-
-  private class SimValueState[T]
-      extends org.apache.spark.sql.streaming.ValueState[T] {
-    private var v: Option[T] = None
-    override def exists(): Boolean = v.isDefined
-    override def get(): T = v.getOrElse(null.asInstanceOf[T])
-    override def update(s: T): Unit = v = Some(s)
-    override def clear(): Unit = v = None
-  }
+  // ValueState and timers scoped to the current grouping key, timers
+  // that accumulate until deleted, expired timers firing as
+  // handleExpiredTimer once the watermark passes, late rows filtered
+  // against the previous batch's watermark.
 
   private class SimHandle
       extends org.apache.spark.sql.streaming.StatefulProcessorHandle {
     import org.apache.spark.sql.Encoder
     import org.apache.spark.sql.streaming.{ListState, MapState, QueryInfo, TTLConfig, ValueState}
-    val timers = scala.collection.mutable.SortedSet.empty[Long]
-    private val states =
-      scala.collection.mutable.Map.empty[String, SimValueState[_]]
+    var key = 0L  // the grouping key of the current invocation
+    var wmMs = 0L // the watermark of the current invocation
+    private val values = scala.collection.mutable.Map.empty[(String, Long), Any]
+    private val timers =
+      scala.collection.mutable.Map.empty[Long, scala.collection.mutable.SortedSet[Long]]
+    def timersOf(k: Long): scala.collection.mutable.SortedSet[Long] =
+      timers.getOrElseUpdate(k, scala.collection.mutable.SortedSet.empty[Long])
     override def getValueState[T](name: String, enc: Encoder[T],
                                   ttl: TTLConfig): ValueState[T] =
-      states.getOrElseUpdate(name, new SimValueState[T])
-        .asInstanceOf[ValueState[T]]
+      new ValueState[T] {
+        override def exists(): Boolean = values.contains((name, key))
+        override def get(): T = values.getOrElse((name, key), null).asInstanceOf[T]
+        override def update(s: T): Unit = values((name, key)) = s
+        override def clear(): Unit = { values.remove((name, key)); () }
+      }
     override def getValueState[T](name: String, ttl: TTLConfig)(
         implicit enc: Encoder[T]): ValueState[T] =
       getValueState(name, enc, ttl)
@@ -261,10 +133,16 @@ class WatermarkFuzzSpec extends org.scalatest.funsuite.AnyFunSuite {
       throw new UnsupportedOperationException("sim: ValueState only")
     override def getQueryInfo(): QueryInfo =
       throw new UnsupportedOperationException("sim")
-    override def registerTimer(t: Long): Unit = timers += t
-    override def deleteTimer(t: Long): Unit = timers -= t
-    override def listTimers(): Iterator[Long] = timers.toSeq.iterator
-    override def deleteIfExists(name: String): Unit = states.remove(name)
+    override def registerTimer(t: Long): Unit = {
+      require(t > wmMs,
+        s"timer $t must be later than the watermark $wmMs " +
+          "(a wake the engine could never fire)")
+      timersOf(key) += t
+    }
+    override def deleteTimer(t: Long): Unit = timersOf(key) -= t
+    override def listTimers(): Iterator[Long] = timersOf(key).toSeq.iterator
+    override def deleteIfExists(name: String): Unit =
+      values.keys.filter(_._1 == name).toSeq.foreach(values.remove)
   }
 
   private def timerValues(wmMs: Long) =
@@ -273,26 +151,33 @@ class WatermarkFuzzSpec extends org.scalatest.funsuite.AnyFunSuite {
       override def getCurrentWatermarkInMs(): Long = wmMs
     }
 
-  /** Drive one schedule through real StatefulProcessor instances (one
-    * per key, each with its own SimHandle — state and timers are keyed
-    * in the real engine too). Mirrors [[run]]'s watermark discipline.
-    * Generic over the processor (r13: asof, sessionize, funnel ports
-    * all ride the same driver). */
+  /** Drive one schedule through real StatefulProcessor instances:
+    * with `shared`, one instance and one handle serve every key (the
+    * handle scopes state and timers to the current key, as the engine
+    * does); without it, each key gets its own instance and handle.
+    * `batches` carries (key, eventTimeMs, id, type) rows; the
+    * watermark after batch N is max event time through batch N minus
+    * `delayMs`. Returns (outputs, admitted events). Throws = property
+    * failure. */
   private def runTws[I, O](batches: Seq[Seq[(Long, Long, Long, String)]],
                            delayMs: Long,
                            mkProc: () => org.apache.spark.sql.streaming.StatefulProcessor[Long, I, O],
-                           toInput: ((Long, Long, Long, String)) => I)
+                           toInput: ((Long, Long, Long, String)) => I,
+                           shared: Boolean = false)
       : (Seq[O], Seq[(Long, Long, Long, String)]) = {
     import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode}
-    val procs = scala.collection.mutable
-      .Map.empty[Long, (StatefulProcessor[Long, I, O], SimHandle)]
-    def procFor(k: Long) = procs.getOrElseUpdate(k, {
+    def open() = {
       val p = mkProc()
       val h = new SimHandle
       p.setHandle(h)
       p.init(OutputMode.Append(), TimeMode.EventTime())
       (p, h)
-    })
+    }
+    lazy val one = open()
+    val procs = scala.collection.mutable
+      .Map.empty[Long, (StatefulProcessor[Long, I, O], SimHandle)]
+    def procFor(k: Long) =
+      procs.getOrElseUpdate(k, if (shared) one else open())
     val out = Seq.newBuilder[O]
     val admitted = Seq.newBuilder[(Long, Long, Long, String)]
     var filterWm = 0L
@@ -300,8 +185,10 @@ class WatermarkFuzzSpec extends org.scalatest.funsuite.AnyFunSuite {
     var maxTs = Long.MinValue
     def fireExpired(): Unit =
       procs.toSeq.sortBy(_._1).foreach { case (k, (p, h)) =>
-        h.timers.toSeq.filter(_ <= wm).foreach { t =>
+        h.key = k
+        h.timersOf(k).toSeq.filter(_ <= wm).foreach { t =>
           h.deleteTimer(t) // the engine removes a timer once it fires
+          h.wmMs = wm
           out ++= p.handleExpiredTimer(k, timerValues(wm),
             new org.apache.spark.sql.streaming.ExpiredTimerInfo {
               override def getExpiryTimeInMs(): Long = t
@@ -309,15 +196,16 @@ class WatermarkFuzzSpec extends org.scalatest.funsuite.AnyFunSuite {
         }
       }
     batches.foreach { batch =>
-      // the REAL TWS engine's late filter is STRICT (a row with
-      // ts == watermark is dropped — even ts 0 against the initial
-      // watermark 0 — where fMGWS admits it; pinned by TwsPortsSpec's
-      // boundary test), so the sim is strict too
+      // the late-row rule is STRICT (a row with ts == watermark is
+      // dropped — even ts 0 against the initial watermark 0; pinned by
+      // TwsPortsSpec's late-row test), so the sim is strict too
       val live = batch.filter(_._2 > filterWm)
       admitted ++= live
       live.foreach(e => maxTs = maxTs max e._2)
       live.map(_._1).distinct.foreach { k =>
-        val (p, _) = procFor(k)
+        val (p, h) = procFor(k)
+        h.key = k
+        h.wmMs = wm
         out ++= p.handleInputRows(k,
           live.filter(_._1 == k).map(toInput).iterator, timerValues(wm))
       }
@@ -327,8 +215,9 @@ class WatermarkFuzzSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
     wm = (if (maxTs == Long.MinValue) 0L else maxTs) + delayMs +
       365L * 86400000L
+    def due = procs.exists { case (k, (_, h)) => h.timersOf(k).exists(_ <= wm) }
     var rounds = 0
-    while (procs.values.exists(_._2.timers.exists(_ <= wm)) && rounds < 64) {
+    while (due && rounds < 64) {
       fireExpired()
       rounds += 1
     }
@@ -336,192 +225,100 @@ class WatermarkFuzzSpec extends org.scalatest.funsuite.AnyFunSuite {
     (out.result(), admitted.result())
   }
 
-  test("AsofStreamTws (transformWithState): the same 250 arbitrary " +
-    "schedules as the fMGWS twin — no crash, exact batch parity") {
-    samples(schedGen(inOrder = false), 250).foreach { sc =>
-      def toEv(e: (Long, Long, Long, String)) =
-        AsofEvent(e._1, e._3, e._2 * 1000, isLeft = e._4 == "purchase")
-      val (got, adm) = runTws[(Long, Long, java.sql.Timestamp, Boolean), AsofMatch](
-        sc.batches, sc.delayMs, () => new AsofProcessor,
-        e => (e._1, e._3, new java.sql.Timestamp(e._2), e._4 == "purchase"))
-      val ref = flushAll[(Long, Long, Long, String), AsofState, AsofMatch](
-        adm, _._1,
-        (k, it, st) => AsofStream.process(flushAtEnd = true)(k,
-          it.map(toEv), st))
-      assert(got.sortBy(m => (m.user_id, m.p_id)) ==
-        ref.sortBy(m => (m.user_id, m.p_id)),
-        s"schedule $sc:\n got $got\n ref $ref")
-    }
-  }
-
-  test("SessionizeTws (transformWithState): the same 250 arbitrary " +
-    "schedules as the fMGWS twin — no crash, exact batch parity") {
+  private def sessionizeParity(shared: Boolean): Unit =
     samples(schedGen(inOrder = false), 250).foreach { sc =>
       val (got, adm) = runTws[(Long, java.sql.Timestamp), Session](
         sc.batches, sc.delayMs, () => new SessionProcessor,
-        e => (e._1, new java.sql.Timestamp(e._2)))
-      val ref = flushAll[(Long, Long, Long, String), SessionState, Session](
-        adm, _._1,
-        (k, it, st) => Sessionize.process(flushAtEnd = true)(k,
-          it.map(e => SessionEvent(e._1, e._2 * 1000)), st))
+        e => (e._1, new java.sql.Timestamp(e._2)), shared)
+      val ref = flushAll[(Long, Long, Long, String), Session](adm, _._1,
+        (k, it) => Sessionize.batchFold(k,
+          it.map(e => SessionEvent(e._1, e._2 * 1000))))
       assert(got.sortBy(s => (s.user_id, s.first_us, s.last_us)) ==
         ref.sortBy(s => (s.user_id, s.first_us, s.last_us)),
         s"schedule $sc:\n got $got\n ref $ref")
     }
-  }
 
-  test("GapIslandsStreamTws (transformWithState): the same 250 " +
-    "arbitrary schedules as the fMGWS twin — no crash, exact batch " +
-    "parity") {
+  private def funnelParity(shared: Boolean): Unit =
+    samples(schedGen(inOrder = false), 250).foreach { sc =>
+      val (got, adm) = runTws[(Long, java.sql.Timestamp, Long, String), FunnelSession](
+        sc.batches, sc.delayMs, () => new FunnelProcessor,
+        e => (e._1, new java.sql.Timestamp(e._2), e._3, e._4), shared)
+      val ref = flushAll[(Long, Long, Long, String), FunnelSession](adm, _._1,
+        (k, it) => FunnelStream.batchFold(k,
+          it.map(e => FunnelEvent(e._1, e._2 * 1000, e._3, e._4))))
+      assert(got.sortBy(s => (s.user_id, s.session_start, s.n_events)) ==
+        ref.sortBy(s => (s.user_id, s.session_start, s.n_events)),
+        s"schedule $sc:\n got $got\n ref $ref")
+    }
+
+  private def islandsParity(shared: Boolean): Unit =
     // minute offsets reinterpreted as DAY offsets (the island unit)
     samples(schedGen(inOrder = false), 250).foreach { sc =>
       val batches = sc.batches.map(_.map(e =>
         e.copy(_2 = e._2 / minMs * 86400000L)))
       val (got, adm) = runTws[(Long, java.sql.Timestamp), Island](
         batches, sc.delayMs * 1440, () => new IslandProcessor,
-        e => (e._1, new java.sql.Timestamp(e._2)))
-      val ref = flushAll[(Long, Long, Long, String), IslandState, Island](
-        adm, _._1,
-        (k, it, st) => GapIslandsStream.process(flushAtEnd = true)(k,
-          it.map(e => DayEvent(e._1, e._2 * 1000)), st))
+        e => (e._1, new java.sql.Timestamp(e._2)), shared)
+      val ref = flushAll[(Long, Long, Long, String), Island](adm, _._1,
+        (k, it) => GapIslandsStream.batchFold(k,
+          it.map(e => DayEvent(e._1, e._2 * 1000))))
       assert(got.sortBy(i => (i.user_id, i.island_start)) ==
         ref.sortBy(i => (i.user_id, i.island_start)),
         s"schedule $sc:\n got $got\n ref $ref")
     }
-  }
 
-  test("FunnelStreamTws (transformWithState): the same 250 arbitrary " +
-    "schedules as the fMGWS twin — no crash, exact batch parity") {
+  private def asofParity(shared: Boolean): Unit =
     samples(schedGen(inOrder = false), 250).foreach { sc =>
-      val (got, adm) = runTws[(Long, java.sql.Timestamp, Long, String), FunnelSession](
-        sc.batches, sc.delayMs, () => new FunnelProcessor,
-        e => (e._1, new java.sql.Timestamp(e._2), e._3, e._4))
-      val ref = flushAll[(Long, Long, Long, String), FunnelState, FunnelSession](
-        adm, _._1,
-        (k, it, st) => FunnelStream.process(flushAtEnd = true)(k,
-          it.map(e => FunnelEvent(e._1, e._2 * 1000, e._3, e._4)), st))
-      assert(got.sortBy(s => (s.user_id, s.session_start, s.n_events)) ==
-        ref.sortBy(s => (s.user_id, s.session_start, s.n_events)),
+      val (got, adm) = runTws[(Long, Long, java.sql.Timestamp, Boolean), AsofMatch](
+        sc.batches, sc.delayMs, () => new AsofProcessor,
+        e => (e._1, e._3, new java.sql.Timestamp(e._2), e._4 == "purchase"),
+        shared)
+      val ref = flushAll[(Long, Long, Long, String), AsofMatch](adm, _._1,
+        (k, it) => AsofStream.batchFold(k, it.map(e =>
+          AsofEvent(e._1, e._3, e._2 * 1000, isLeft = e._4 == "purchase"))))
+      assert(got.sortBy(m => (m.user_id, m.p_id)) ==
+        ref.sortBy(m => (m.user_id, m.p_id)),
         s"schedule $sc:\n got $got\n ref $ref")
     }
-  }
 
-  test("RetentionStreamTws (transformWithState): the same 250 " +
-    "arbitrary schedules as the fMGWS twin under the STRONG property " +
-    "— the aggregated cohort table converges to the batch fold") {
-    def cells(ds: Seq[CohortDelta]): Map[(Long, Long), Long] =
-      ds.groupBy(d => (d.cohort_week, d.week_offset))
-        .view.mapValues(_.map(_.delta).sum).filter(_._2 > 0).toMap
-    // minute offsets reinterpreted as DAY offsets (the cohort unit)
-    def toEv(e: (Long, Long, Long, String)) =
-      WeekEvent(e._1, e._2 / minMs * 86400000000L)
-    samples(schedGen(inOrder = false), 250).foreach { sc =>
-      val batches = sc.batches.map(_.map(e =>
-        e.copy(_2 = e._2 / minMs * 86400000L)))
-      val (got, adm) = runTws[(Long, java.sql.Timestamp), CohortDelta](
-        batches, sc.delayMs * 1440, () => new RetentionProcessor,
-        e => (e._1, new java.sql.Timestamp(e._2)))
-      val ref = flushAll[(Long, Long, Long, String), RetentionState, CohortDelta](
-        adm, _._1,
-        (k, it, st) => RetentionStream.process(k,
-          it.map(e => WeekEvent(e._1, e._2 * 1000)), st))
-      assert(cells(got) == cells(ref), s"schedule $sc:\n got $got\n ref $ref")
-    }
-  }
-
-  test("AttributionStreamTws (transformWithState): no crash on " +
-    "arbitrary schedules; exact parity with the batch fold on " +
-    "in-order schedules (125 + 125 — the fMGWS twin's envelope)") {
+  private def attributionParity(shared: Boolean): Unit = {
     def toEv(e: (Long, Long, Long, String)) =
       TouchEvent(e._1, e._2 * 1000, e._3, e._4, 1.5)
     def toIn(e: (Long, Long, Long, String)) =
       (e._1, new java.sql.Timestamp(e._2), e._3, e._4, 1.5)
     samples(schedGen(inOrder = false), 125).foreach { sc =>
       runTws[(Long, java.sql.Timestamp, Long, String, Double), AttributedPurchase](
-        sc.batches, sc.delayMs, () => new AttributionProcessor, toIn)
+        sc.batches, sc.delayMs, () => new AttributionProcessor, toIn, shared)
       // no-crash is the assertion
     }
     samples(schedGen(inOrder = true), 125).foreach { sc =>
       val (got, adm) = runTws[(Long, java.sql.Timestamp, Long, String, Double), AttributedPurchase](
-        sc.batches, sc.delayMs, () => new AttributionProcessor, toIn)
-      val ref = flushAll[(Long, Long, Long, String), TouchState, AttributedPurchase](
-        adm, _._1,
-        (k, it, st) => AttributionStream.process(k, it.map(toEv), st))
+        sc.batches, sc.delayMs, () => new AttributionProcessor, toIn, shared)
+      val ref = flushAll[(Long, Long, Long, String), AttributedPurchase](
+        adm, _._1, (k, it) => AttributionStream.batchFold(k, it.map(toEv)))
       assert(got.sortBy(p => (p.user_id, p.event_id)) ==
         ref.sortBy(p => (p.user_id, p.event_id)),
         s"schedule $sc:\n got $got\n ref $ref")
     }
   }
 
-  test("ZscoreStreamTws (transformWithState): no crash on arbitrary " +
-    "schedules; exact parity with the batch fold on in-order " +
-    "schedules (125 + 125 — the fMGWS twin's envelope)") {
-    def valueOf(id: Long): Double =
-      (id % 7L).toDouble + (if (id % 11 == 0) 50.0 else 0.0)
-    def toEv(e: (Long, Long, Long, String)) =
-      ValueEvent(e._1, e._2 * 1000, e._3, valueOf(e._3))
-    def toIn(e: (Long, Long, Long, String)) =
-      (e._1, new java.sql.Timestamp(e._2), e._3, valueOf(e._3))
-    samples(schedGen(inOrder = false), 125).foreach { sc =>
-      runTws[(Long, java.sql.Timestamp, Long, Double), AnomalyHit](
-        sc.batches, sc.delayMs, () => new ZscoreProcessor, toIn)
-      // no-crash is the assertion
-    }
-    samples(schedGen(inOrder = true), 125).foreach { sc =>
-      val (got, adm) = runTws[(Long, java.sql.Timestamp, Long, Double), AnomalyHit](
-        sc.batches, sc.delayMs, () => new ZscoreProcessor, toIn)
-      val ref = flushAll[(Long, Long, Long, String), ZscoreState, AnomalyHit](
-        adm, _._1,
-        (k, it, st) => ZscoreStream.process(k, it.map(toEv), st))
-      assert(got.sortBy(h => (h.user_id, h.event_id)) ==
-        ref.sortBy(h => (h.user_id, h.event_id)),
-        s"schedule $sc:\n got $got\n ref $ref")
-    }
-  }
-
-  test("AttributionStream: no crash on arbitrary schedules; parity " +
-    "with the batch fold on in-order schedules (125 + 125)") {
-    def toEv(e: (Long, Long, Long, String)) =
-      TouchEvent(e._1, e._2 * 1000, e._3, e._4, 1.5)
-    samples(schedGen(inOrder = false), 125).foreach { sc =>
-      run[(Long, Long, Long, String), TouchState, AttributedPurchase](
-        sc.batches, _._2, _._1, sc.delayMs,
-        (k, it, st) => AttributionStream.processStreaming(k,
-          it.map(toEv), st)) // no-crash is the assertion
-    }
-    samples(schedGen(inOrder = true), 125).foreach { sc =>
-      val (got, adm) = run[(Long, Long, Long, String), TouchState, AttributedPurchase](
-        sc.batches, _._2, _._1, sc.delayMs,
-        (k, it, st) => AttributionStream.processStreaming(k,
-          it.map(toEv), st))
-      val ref = flushAll[(Long, Long, Long, String), TouchState, AttributedPurchase](
-        adm, _._1,
-        (k, it, st) => AttributionStream.process(k, it.map(toEv), st))
-      assert(got.sortBy(p => (p.user_id, p.event_id)) ==
-        ref.sortBy(p => (p.user_id, p.event_id)),
-        s"schedule $sc:\n got $got\n ref $ref")
-    }
-  }
-
-  test("RetentionStream: arbitrary admissible schedules — the " +
-    "aggregated cohort table converges to the batch fold (250 " +
-    "schedules; the rebase retractions make even out-of-order " +
-    "arrival exact, so retention takes the STRONG property)") {
+  private def retentionParity(shared: Boolean): Unit = {
     def cells(ds: Seq[CohortDelta]): Map[(Long, Long), Long] =
       ds.groupBy(d => (d.cohort_week, d.week_offset))
         .view.mapValues(_.map(_.delta).sum).filter(_._2 > 0).toMap
     // reinterpret the generator's minute offsets as DAYS so schedules
     // actually cross week boundaries (0..42 weeks)
-    def toEv(e: (Long, Long, Long, String)) =
-      WeekEvent(e._1, e._2 / minMs * 86400000000L)
     var sawRebase = false
     samples(schedGen(inOrder = false), 250).foreach { sc =>
-      val (got, adm) = run[(Long, Long, Long, String), RetentionState, CohortDelta](
-        sc.batches, _._2, _._1, sc.delayMs,
-        (k, it, st) => RetentionStream.process(k, it.map(toEv), st))
-      val ref = flushAll[(Long, Long, Long, String), RetentionState, CohortDelta](
-        adm, _._1,
-        (k, it, st) => RetentionStream.process(k, it.map(toEv), st))
+      val batches = sc.batches.map(_.map(e =>
+        e.copy(_2 = e._2 / minMs * 86400000L)))
+      val (got, adm) = runTws[(Long, java.sql.Timestamp), CohortDelta](
+        batches, sc.delayMs * 1440,
+        () => new RetentionProcessor(Long.MaxValue),
+        e => (e._1, new java.sql.Timestamp(e._2)), shared)
+      val ref = flushAll[(Long, Long, Long, String), CohortDelta](adm, _._1,
+        (k, it) => RetentionStream.batchFold(k,
+          it.map(e => WeekEvent(e._1, e._2 * 1000)), Long.MaxValue))
       assert(cells(got) == cells(ref), s"schedule $sc:\n got $got\n ref $ref")
       sawRebase ||= got.exists(_.delta < 0)
     }
@@ -529,67 +326,169 @@ class WatermarkFuzzSpec extends org.scalatest.funsuite.AnyFunSuite {
       "generators too weak for the property to mean anything")
   }
 
+  private def zscoreParity(shared: Boolean): Unit = {
+    def valueOf(id: Long): Double = // occasional outliers
+      (id % 7L).toDouble + (if (id % 11 == 0) 50.0 else 0.0)
+    def toEv(e: (Long, Long, Long, String)) =
+      ValueEvent(e._1, e._2 * 1000, e._3, valueOf(e._3))
+    def toIn(e: (Long, Long, Long, String)) =
+      (e._1, new java.sql.Timestamp(e._2), e._3, valueOf(e._3))
+    samples(schedGen(inOrder = false), 125).foreach { sc =>
+      runTws[(Long, java.sql.Timestamp, Long, Double), AnomalyHit](
+        sc.batches, sc.delayMs, () => new ZscoreProcessor, toIn, shared)
+      // no-crash is the assertion
+    }
+    samples(schedGen(inOrder = true), 125).foreach { sc =>
+      val (got, adm) = runTws[(Long, java.sql.Timestamp, Long, Double), AnomalyHit](
+        sc.batches, sc.delayMs, () => new ZscoreProcessor, toIn, shared)
+      val ref = flushAll[(Long, Long, Long, String), AnomalyHit](
+        adm, _._1, (k, it) => ZscoreStream.batchFold(k, it.map(toEv)))
+      assert(got.sortBy(h => (h.user_id, h.event_id)) ==
+        ref.sortBy(h => (h.user_id, h.event_id)),
+        s"schedule $sc:\n got $got\n ref $ref")
+    }
+  }
+
+  // one processor instance for every key
+  test("Sessionize: arbitrary admissible schedules — no crash, exact " +
+    "batch parity over the admitted events (250 schedules)") {
+    sessionizeParity(shared = true)
+  }
+
+  test("FunnelStream: arbitrary admissible schedules — no crash, " +
+    "exact batch parity over the admitted events (250 schedules)") {
+    funnelParity(shared = true)
+  }
+
+  test("GapIslandsStream: arbitrary admissible schedules — no crash, " +
+    "exact batch parity over the admitted events (250 schedules)") {
+    islandsParity(shared = true)
+  }
+
+  test("AsofStream: arbitrary admissible schedules — no crash, exact " +
+    "batch parity over the admitted events (250 schedules)") {
+    asofParity(shared = true)
+  }
+
+  test("AttributionStream: no crash on arbitrary schedules; parity " +
+    "with the batch fold on in-order schedules (125 + 125)") {
+    attributionParity(shared = true)
+  }
+
+  test("RetentionStream: arbitrary admissible schedules — the " +
+    "aggregated cohort table converges to the batch fold (250 " +
+    "schedules; the rebase retractions make even out-of-order " +
+    "arrival exact, so retention takes the STRONG property)") {
+    retentionParity(shared = true)
+  }
+
+  test("ZscoreStream: no crash on arbitrary schedules; parity with " +
+    "the batch fold on in-order schedules (125 + 125)") {
+    zscoreParity(shared = true)
+  }
+
+  // one processor instance per key. The names date from when a second
+  // streaming engine existed; the reference is each operator's
+  // batchFold over the admitted events.
+  test("AsofStreamTws (transformWithState): the same 250 arbitrary " +
+    "schedules as the fMGWS twin — no crash, exact batch parity") {
+    asofParity(shared = false)
+  }
+
+  test("SessionizeTws (transformWithState): the same 250 arbitrary " +
+    "schedules as the fMGWS twin — no crash, exact batch parity") {
+    sessionizeParity(shared = false)
+  }
+
+  test("GapIslandsStreamTws (transformWithState): the same 250 " +
+    "arbitrary schedules as the fMGWS twin — no crash, exact batch " +
+    "parity") {
+    islandsParity(shared = false)
+  }
+
+  test("FunnelStreamTws (transformWithState): the same 250 arbitrary " +
+    "schedules as the fMGWS twin — no crash, exact batch parity") {
+    funnelParity(shared = false)
+  }
+
+  test("RetentionStreamTws (transformWithState): the same 250 " +
+    "arbitrary schedules as the fMGWS twin under the STRONG property " +
+    "— the aggregated cohort table converges to the batch fold") {
+    retentionParity(shared = false)
+  }
+
+  test("AttributionStreamTws (transformWithState): no crash on " +
+    "arbitrary schedules; exact parity with the batch fold on " +
+    "in-order schedules (125 + 125 — the fMGWS twin's envelope)") {
+    attributionParity(shared = false)
+  }
+
+  test("ZscoreStreamTws (transformWithState): no crash on arbitrary " +
+    "schedules; exact parity with the batch fold on in-order " +
+    "schedules (125 + 125 — the fMGWS twin's envelope)") {
+    zscoreParity(shared = false)
+  }
+
   test("harness teeth: the r11 single-triple sessionize fold FAILS " +
     "this property — the generators are strong enough to catch the " +
     "bug class they exist for") {
-    import org.apache.spark.sql.streaming.GroupState
-    // the pre-r12 implementation, verbatim: fold straight into the
-    // single (first, last, n) triple, clamp-emit on stale horizon
-    def oldProcess(uid: Long, events: Iterator[SessionEvent],
-                   state: GroupState[SessionState]): Iterator[Session] = {
-      val out = Sessionize.process(flushAtEnd = false)(uid, events, state)
-      state.getOption match {
-        case Some(s) =>
-          val horizonMs = s.last_us / 1000 + Sessionize.GapUs / 1000
-          if (horizonMs <= state.getCurrentWatermarkMs()) {
-            state.remove()
-            out ++ Iterator.single(Session(uid, s.first_us, s.last_us, s.n))
-          } else { state.setTimeoutTimestamp(horizonMs); out }
-        case None => out
+    import org.apache.spark.sql.{Encoder, Encoders}
+    // the pre-r12 implementation as a step: fold arrivals straight
+    // into the single (first, last, n) triple, clamp-emit on a stale
+    // horizon, else wake at last + gap
+    class R11SessionProcessor
+        extends StepProcessor[(Long, java.sql.Timestamp), SessionState,
+          Session] {
+      override protected def stateName: String = "r11"
+      override protected def stateEncoder: Encoder[SessionState] =
+        Encoders.product[SessionState]
+      override protected def emptyState: SessionState =
+        SessionState(-1L, 0L, 0L)
+      override protected def step(
+          uid: Long, st: SessionState,
+          rows: Seq[(Long, java.sql.Timestamp)], wmUs: Long)
+          : (Seq[Session], Option[SessionState], Option[Long]) = {
+        var cur = if (st.n > 0) Some(st) else None
+        val out = Seq.newBuilder[Session]
+        rows.map(_._2.getTime * 1000).sorted.foreach { ts =>
+          cur match {
+            case Some(s) if !SessionBounds.cuts(s.last_us, ts,
+                strict = false) =>
+              cur = Some(SessionState(s.first_us, ts, s.n + 1))
+            case Some(s) =>
+              out += Session(uid, s.first_us, s.last_us, s.n)
+              cur = Some(SessionState(ts, ts, 1))
+            case None => cur = Some(SessionState(ts, ts, 1))
+          }
+        }
+        cur match {
+          case Some(s) =>
+            val horizonMs = s.last_us / 1000 + SessionBounds.GapUs / 1000
+            if (horizonMs <= wmUs / 1000) {
+              out += Session(uid, s.first_us, s.last_us, s.n)
+              (out.result(), None, None)
+            } else (out.result(), Some(s), Some(horizonMs))
+          case None => (out.result(), None, None)
+        }
       }
     }
     val diverging = samples(schedGen(inOrder = false), 250).count { sc =>
       try {
-        val (got, adm) = run[(Long, Long, Long, String), SessionState, Session](
-          sc.batches, _._2, _._1, sc.delayMs,
-          (k, it, st) => oldProcess(k,
-            it.map(e => SessionEvent(e._1, e._2 * 1000)), st))
-        val ref = flushAll[(Long, Long, Long, String), SessionState, Session](
-          adm, _._1,
-          (k, it, st) => Sessionize.process(flushAtEnd = true)(k,
-            it.map(e => SessionEvent(e._1, e._2 * 1000)), st))
+        val (got, adm) = runTws[(Long, java.sql.Timestamp), Session](
+          sc.batches, sc.delayMs, () => new R11SessionProcessor,
+          e => (e._1, new java.sql.Timestamp(e._2)))
+        val ref = flushAll[(Long, Long, Long, String), Session](adm, _._1,
+          (k, it) => Sessionize.batchFold(k,
+            it.map(e => SessionEvent(e._1, e._2 * 1000))))
         got.sortBy(s => (s.user_id, s.first_us, s.last_us)) !=
           ref.sortBy(s => (s.user_id, s.first_us, s.last_us))
       } catch {
-        case _: IllegalArgumentException => true // stale-timeout crash
+        case _: IllegalArgumentException => true // stale-timer crash
         case _: AssertionError => true
       }
     }
     assert(diverging > 0,
       "the fuzz generators no longer distinguish the r11 fold — " +
         "they have lost the out-of-order/jump coverage this suite exists for")
-  }
-
-  test("ZscoreStream: no crash on arbitrary schedules; parity with " +
-    "the batch fold on in-order schedules (125 + 125)") {
-    def toEv(e: (Long, Long, Long, String)) =
-      ValueEvent(e._1, e._2 * 1000, e._3, (e._3 % 7L).toDouble +
-        (if (e._3 % 11 == 0) 50.0 else 0.0)) // occasional outliers
-    samples(schedGen(inOrder = false), 125).foreach { sc =>
-      run[(Long, Long, Long, String), ZscoreState, AnomalyHit](
-        sc.batches, _._2, _._1, sc.delayMs,
-        (k, it, st) => ZscoreStream.processStreaming(k, it.map(toEv), st))
-    }
-    samples(schedGen(inOrder = true), 125).foreach { sc =>
-      val (got, adm) = run[(Long, Long, Long, String), ZscoreState, AnomalyHit](
-        sc.batches, _._2, _._1, sc.delayMs,
-        (k, it, st) => ZscoreStream.processStreaming(k, it.map(toEv), st))
-      val ref = flushAll[(Long, Long, Long, String), ZscoreState, AnomalyHit](
-        adm, _._1,
-        (k, it, st) => ZscoreStream.process(k, it.map(toEv), st))
-      assert(got.sortBy(h => (h.user_id, h.event_id)) ==
-        ref.sortBy(h => (h.user_id, h.event_id)),
-        s"schedule $sc:\n got $got\n ref $ref")
-    }
   }
 }

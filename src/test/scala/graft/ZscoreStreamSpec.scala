@@ -34,30 +34,32 @@ class ZscoreStreamSpec extends SparkSpec {
   }
 
   test("streamed z-score carries the ring across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    def ts(n: Int) = new Timestamp(1700000000000L + n * 60000L)
-    val input = MemoryStream[ZEv]
-    val out = ZscoreStream.zscoreStreaming(
-      input.toDF()
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .as[(Long, Timestamp, Long, Double)])
-    val q = out.writeStream
-      .format("memory").queryName("zscore_stream_test")
-      .outputMode("append")
-      .start()
-    try {
-      // batch 1: 12 calm values — fills the ring past MinSamples
-      input.addData((1 to 12).map(i =>
-        ZEv(1, ts(i), i, 10.0 + (i % 3))): _*)
-      q.processAllAvailable()
-      // batch 2: a spike — only carried ring state can flag it
-      input.addData(ZEv(1, ts(13), 13, 500.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("zscore_stream_test")
-      .select("event_id").as[Long].collect().toSet
-    assert(rows.contains(13L),
-      s"cross-batch spike not flagged: $rows")
+    withRocksDb {
+      implicit val ctx = spark.sqlContext
+      def ts(n: Int) = new Timestamp(1700000000000L + n * 60000L)
+      val input = MemoryStream[ZEv]
+      val out = ZscoreStream.zscoreStreaming(
+        input.toDF()
+          .withWatermark("ts", "0 seconds")
+          .select(col("user_id"), col("ts"), col("event_id"), col("value"))
+          .as[(Long, Timestamp, Long, Double)])
+      val q = out.writeStream
+        .format("memory").queryName("zscore_stream_test")
+        .outputMode("append")
+        .start()
+      try {
+        // batch 1: 12 calm values — fills the ring past MinSamples
+        input.addData((1 to 12).map(i =>
+          ZEv(1, ts(i), i, 10.0 + (i % 3))): _*)
+        q.processAllAvailable()
+        // batch 2: a spike — only carried ring state can flag it
+        input.addData(ZEv(1, ts(13), 13, 500.0))
+        q.processAllAvailable()
+      } finally q.stop()
+      val rows = spark.table("zscore_stream_test")
+        .select("event_id").as[Long].collect().toSet
+      assert(rows.contains(13L),
+        s"cross-batch spike not flagged: $rows")
+    }
   }
 }
