@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.storage.StorageLevel
 
 /** Eager materialize-and-pin strategy knob (r16, VERDICT r15 ask 4).
@@ -14,7 +15,10 @@ import org.apache.spark.storage.StorageLevel
   * [[graft.sources.JdbcExec.syncOnce]], which every cursor-driven
   * sync runs (the rows written, the rows counted and the cursor taken
   * must come from the same rows even if the source mutates; syncOnce
-  * reads its pin in ONE action, but a retried shuffle map task or a
+  * pins with [[pinCounted]], whose row count picks its load: up to
+  * `batchSize` rows are ONE write task, no exchange, whose transaction
+  * also commits the cursor; a larger pull is a parallel write behind
+  * the latest-wins exchange, where a retried shuffle map task or a
   * re-planned AQE stage would re-read an unpinned live source), the iterative min-label CC in LlmOps
   * (per-round label frames — exactly the superstep state a cluster job
   * reliable-checkpoints every N rounds), DedupArtifacts.append and the
@@ -68,6 +72,19 @@ object Pin {
     case other =>
       sys.error(s"$ModeKey: unknown mode '$other' " +
         "(expected local | reliable | persist)")
+  }
+
+  /** [[pin]], also returning how many rows the pin materialized. An
+    * accumulator bumped by a filter on top of `df` counts them inside
+    * the pin's own job — no second action. Spark merges accumulator
+    * updates from successful tasks only. The count picks
+    * [[graft.sources.JdbcExec.syncOnce]]'s load path, never what it
+    * writes. */
+  def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val rows = df.sparkSession.sparkContext.longAccumulator
+    val tick = udf(() => { rows.add(1); true }).asNondeterministic()
+    val pinned = pin(df.filter(tick()))
+    (pinned, rows.sum)
   }
 
   /** End-of-scope release of a [[pin]] result — pass the EXACT frame

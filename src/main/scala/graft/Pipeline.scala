@@ -13,15 +13,20 @@ import graft.sources.{IncrementalSource, JdbcExec}
   * creates (and drift-ALTERs) its target from the typed source schema,
   * then runs [[JdbcExec.load]] — one latest-wins window and ONE Spark
   * action whose partitions each upsert their live rows and delete their
-  * tombstoned keys in one transaction. The cursor-driven entries go
-  * through [[JdbcExec.syncOnce]], which pins the pull, reads the stored
-  * cursor first and commits the new one last. The statement dialect
-  * follows the url ([[graft.sources.UpsertDialect]]).
+  * tombstoned keys in one transaction; every write is guarded by the
+  * cursor column, so an older version never overwrites a newer one. The
+  * cursor-driven entries go through [[JdbcExec.syncOnce]], which pins
+  * the pull and reads the stored cursor first; a pull of at most
+  * `batchSize` rows is one write task whose transaction also commits
+  * the new cursor, a larger one commits it last on its own connection.
+  * The statement dialect follows the url ([[graft.sources.UpsertDialect]]).
   *
-  * Scale notes: the pipeline never collects; the one shuffle is the
-  * latest-wins window, which also hash-partitions the writes by PK, so
-  * MERGE contention stays partition-local. Cursor state is one scalar
-  * per object, in the target database.
+  * Scale notes: the pipeline never collects. A load has one shuffle,
+  * the latest-wins window's, which also hash-partitions the writes by
+  * PK, so MERGE contention stays partition-local; the exception is a
+  * cursor-driven pull that fits one batch, which one task loads with no
+  * shuffle. Cursor state is one scalar per object, in the target
+  * database.
   */
 object Pipeline {
 
@@ -110,8 +115,13 @@ object Pipeline {
     * batch and streaming share one code path (Spark's unified model).
     * The checkpoint carries the source offsets — the cursor role the
     * state table plays for batch syncs. Keyed upserts and deletes are
-    * idempotent, so micro-batch replays after a failure converge
-    * (effectively exactly-once in the target). */
+    * idempotent, so a replay of the same micro-batch after a failure
+    * converges (effectively exactly-once in the target for replays).
+    * Across micro-batches the writes are cursor-guarded, so a late file
+    * of older versions neither overwrites nor deletes newer rows; the
+    * residual is a key deleted by an earlier micro-batch, which an older
+    * live version in a later one inserts again (the target keeps no
+    * tombstones). */
   def streamingSync(spark: SparkSession, url: String, sync: ObjectSync,
                     sourceDir: String, schema: StructType,
                     checkpoint: String, batchSize: Int): StreamingQuery =
@@ -137,8 +147,9 @@ object Pipeline {
     *  - normalize: the target-type cast map ([[normalize]]), applied
     *    AFTER the pushable filter so the cast never blocks pushdown;
     *  - sink + cursor: [[graft.sources.JdbcExec.syncOnce]] — snapshot
-    *    pinning, latest-wins dedupe, keyed MERGE/DELETE partitions,
-    *    cursor-last commit with idempotent replay;
+    *    pinning, latest-wins dedupe, keyed cursor-guarded MERGE/DELETE,
+    *    and the cursor in the load transaction for a pull of at most
+    *    `batchSize` rows, committed last after the loads otherwise;
     *  - DDL: the target table is created (and drift-ALTERed) from the
     *    DESCRIBED schema — schema changes at the source flow into the
     *    target on the next sync, the reference's describe-driven DDL.

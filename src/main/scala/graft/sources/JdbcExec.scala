@@ -81,15 +81,19 @@ object DerbySql {
       s"(${schema.fieldNames.map(q).mkString(", ")}) " +
       s"VALUES (${schema.fieldNames.map(_ => "?").mkString(", ")})"
 
-  /** Keyed MERGE from the session staging table — the upsert. */
+  /** Keyed MERGE from the session staging table — the upsert. A
+    * matched row is updated only when its stored `cursor` is null or
+    * not newer than the staged one (the guard [[JdbcUpsertSink.upsertSql]]
+    * renders for PostgreSQL). */
   def mergeSql(table: String, stage: String, schema: StructType,
-               pk: Seq[String]): String = {
+               pk: Seq[String], cursor: String): String = {
     val cols = schema.fieldNames.toSeq
     val nonPk = cols.filterNot(pk.contains)
     val on = pk.map(c => s"t.${q(c)} = s.${q(c)}").mkString(" AND ")
     val matched =
       if (nonPk.isEmpty) ""
-      else " WHEN MATCHED THEN UPDATE SET " +
+      else s" WHEN MATCHED AND (t.${q(cursor)} IS NULL OR " +
+        s"t.${q(cursor)} <= s.${q(cursor)}) THEN UPDATE SET " +
         nonPk.map(c => s"${q(c)} = s.${q(c)}").mkString(", ")
     s"MERGE INTO ${q(table)} t USING SESSION.${q(stage)} s ON $on" +
       matched +
@@ -97,9 +101,10 @@ object DerbySql {
       s" VALUES (${cols.map(c => s"s.${q(c)}").mkString(", ")})"
   }
 
-  /** Keyed tombstone delete — same text as the PG dialect. */
-  def deleteSql(table: String, pk: Seq[String]): String =
-    JdbcUpsertSink.deleteSql(table, pk)
+  /** Keyed, cursor-guarded tombstone delete — same text as the PG
+    * dialect. */
+  def deleteSql(table: String, pk: Seq[String], cursor: String): String =
+    JdbcUpsertSink.deleteSql(table, pk, cursor)
 }
 
 /** Pluggable statement dialect for the EXECUTED load path (r15,
@@ -119,11 +124,12 @@ trait UpsertDialect extends Serializable {
   def createTableSql(table: String, schema: StructType,
                      pk: Seq[String]): String
   def addColumnSql(table: String, f: StructField): String
-  def deleteSql(table: String, pk: Seq[String]): String
-  /** One keyed upsert batch on the caller's connection/transaction —
-    * does NOT commit (the caller owns atomicity). */
+  def deleteSql(table: String, pk: Seq[String], cursor: String): String
+  /** One keyed upsert batch on the caller's connection/transaction,
+    * guarded by the `cursor` column — does NOT commit (the caller owns
+    * atomicity). */
   def loadBatch(conn: Connection, table: String, schema: StructType,
-                pk: Seq[String], rows: Iterator[Row],
+                pk: Seq[String], cursor: String, rows: Iterator[Row],
                 batchSize: Int): Unit
 }
 
@@ -137,17 +143,17 @@ object DerbyDialect extends UpsertDialect {
   def addColumnSql(table: String, f: StructField): String =
     s"""ALTER TABLE "$table" ADD COLUMN "${f.name}" """ +
       DerbySql.derbyType(f.dataType)
-  def deleteSql(table: String, pk: Seq[String]): String =
-    DerbySql.deleteSql(table, pk)
+  def deleteSql(table: String, pk: Seq[String], cursor: String): String =
+    DerbySql.deleteSql(table, pk, cursor)
   def loadBatch(conn: Connection, table: String, schema: StructType,
-                pk: Seq[String], rows: Iterator[Row],
+                pk: Seq[String], cursor: String, rows: Iterator[Row],
                 batchSize: Int): Unit = {
     val stage = s"stg_$table"
     val st = conn.createStatement()
     try {
       st.execute(DerbySql.declareStageSql(stage, schema))
       JdbcExec.stageRows(conn, stage, schema, rows, batchSize)
-      st.execute(DerbySql.mergeSql(table, stage, schema, pk))
+      st.execute(DerbySql.mergeSql(table, stage, schema, pk, cursor))
       st.execute(s"""DELETE FROM SESSION."$stage"""")
     } finally st.close()
   }
@@ -163,13 +169,13 @@ object PgDialect extends UpsertDialect {
     JdbcUpsertSink.createTableSql(table, schema, pk)
   def addColumnSql(table: String, f: StructField): String =
     JdbcUpsertSink.addColumnsSql(table, Seq(f)).head
-  def deleteSql(table: String, pk: Seq[String]): String =
-    JdbcUpsertSink.deleteSql(table, pk)
+  def deleteSql(table: String, pk: Seq[String], cursor: String): String =
+    JdbcUpsertSink.deleteSql(table, pk, cursor)
   def loadBatch(conn: Connection, table: String, schema: StructType,
-                pk: Seq[String], rows: Iterator[Row],
+                pk: Seq[String], cursor: String, rows: Iterator[Row],
                 batchSize: Int): Unit = {
     val ps = conn.prepareStatement(
-      JdbcUpsertSink.upsertSql(table, schema, pk))
+      JdbcUpsertSink.upsertSql(table, schema, pk, cursor))
     val types = schema.fields.map(_.dataType)
     try rows.grouped(batchSize).foreach { chunk =>
       chunk.foreach { r =>
@@ -248,11 +254,20 @@ object PgDialect extends UpsertDialect {
   *  - every write is IDEMPOTENT (keyed MERGE / keyed DELETE), so
   *    replaying a committed partition converges — this is what makes
   *    the multi-partition load safe without a global transaction;
-  *  - the CURSOR advance is the last write, committed on its own
-  *    connection after every partition has committed
-  *    ([[JdbcCursorStore.putInTxn]]): a crash between the loads and the
-  *    cursor commit re-pulls one batch into the idempotent MERGE —
-  *    never loses data, never double-applies it.
+  *  - every write is CURSOR-GUARDED: an upsert overwrites, and a
+  *    tombstone deletes, only a stored row whose cursor is null or not
+  *    newer than its own, so a later load of older versions never rolls
+  *    the target back. The target keeps no tombstones, so an older live
+  *    version of a key deleted by an earlier load is inserted again;
+  *  - a SMALL pull (at most `batchSize` rows, see [[syncOnce]]) is ONE
+  *    atomic transaction: its single write task upserts, deletes and
+  *    advances the cursor ([[JdbcCursorStore.putInTxn]]) before its one
+  *    commit, so the rows and the cursor land together or not at all;
+  *  - a LARGER pull is idempotent loads, then the cursor: the advance is
+  *    the last write, committed on its own connection after every
+  *    partition has committed. A crash between the loads and the cursor
+  *    commit re-pulls one batch into the idempotent MERGE — never loses
+  *    data, never double-applies it.
   */
 object JdbcExec {
 
@@ -359,68 +374,48 @@ object JdbcExec {
     } finally ps.close()
   }
 
-  /** The one per-partition write routine behind [[writeUpsert]],
-    * [[writeDeletes]] and [[load]]: on ONE connection and in ONE
-    * transaction, stream the partition's `live` rows through the url's
-    * dialect (staged MERGE on Derby, batched ON CONFLICT on
-    * PostgreSQL), then DELETE its tombstoned keys, then commit; any
-    * failure rolls both back. `deadKeys` (pk values in `pk` order) is
-    * read only after `live` is drained, so a caller may fill it while
-    * `live` streams. A partition with nothing to write opens no
-    * connection. */
+  /** The one per-partition write routine behind [[load]]: on ONE
+    * connection and in ONE transaction, stream the partition's `live`
+    * rows through the url's dialect (staged MERGE on Derby, batched ON
+    * CONFLICT on PostgreSQL), then DELETE its tombstoned keys, then run
+    * `beforeCommit` on the same connection, then commit; any failure
+    * rolls all of it back. Every write is guarded by the `cursor`
+    * column. A `dead` row holds a tombstone's pk values in `pk` order,
+    * then its cursor; `dead` is read only after `live` is drained, so a
+    * caller may fill it while `live` streams. A partition with nothing
+    * to write opens no connection. */
   private final case class PartitionWrite(url: String, table: String,
                                           schema: StructType, pk: Seq[String],
-                                          batchSize: Int) {
+                                          cursor: String, batchSize: Int) {
     private val dialect = dialectFor(url)
-    private val deleteSql = dialect.deleteSql(table, pk)
-    private val keyTypes = pk.map(k => schema(k).dataType).toArray
+    private val deleteSql = dialect.deleteSql(table, pk, cursor)
+    private val deadTypes = (pk :+ cursor).map(schema(_).dataType).toArray
 
-    def apply(live: Iterator[Row], deadKeys: () => Iterator[Row]): Unit =
-      if (live.hasNext || deadKeys().hasNext) withConnection(url) { conn =>
+    def apply(live: Iterator[Row], dead: () => Iterator[Row],
+              beforeCommit: Connection => Unit): Unit =
+      if (live.hasNext || dead().hasNext) withConnection(url) { conn =>
         conn.setAutoCommit(false)
         try {
           if (live.hasNext)
-            dialect.loadBatch(conn, table, schema, pk, live, batchSize)
-          val keys = deadKeys()
+            dialect.loadBatch(conn, table, schema, pk, cursor, live, batchSize)
+          val keys = dead()
           if (keys.hasNext) {
             val ps = conn.prepareStatement(deleteSql)
             try keys.grouped(batchSize).foreach { chunk =>
               chunk.foreach { r =>
                 var i = 0
-                while (i < keyTypes.length) {
-                  bindValue(ps, i + 1, r.get(i), keyTypes(i)); i += 1
+                while (i < deadTypes.length) {
+                  bindValue(ps, i + 1, r.get(i), deadTypes(i)); i += 1
                 }
                 ps.addBatch()
               }
               ps.executeBatch()
             } finally ps.close()
           }
+          beforeCommit(conn)
           conn.commit()
         } catch { case e: Throwable => conn.rollback(); throw e }
       }
-  }
-
-  /** Distributed executed upsert: each partition runs ONE atomic
-    * load+commit transaction ([[PartitionWrite]]). Input must be
-    * PK-unique (dedupe latest-wins upstream); repartition by PK hash
-    * upstream to avoid cross-partition lock contention. */
-  def writeUpsert(df: DataFrame, url: String, table: String,
-                  pk: Seq[String], batchSize: Int = 1000): Unit = {
-    val write = PartitionWrite(url, table, df.schema, pk, batchSize)
-    df.foreachPartition { rows: Iterator[Row] =>
-      write(rows, () => Iterator.empty)
-    }
-  }
-
-  /** Distributed tombstone delete — keyed, hence replay-idempotent;
-    * same per-partition single-transaction routine. */
-  def writeDeletes(df: DataFrame, url: String, table: String,
-                   pk: Seq[String], batchSize: Int = 1000): Unit = {
-    val keyed = df.select(pk.map(org.apache.spark.sql.functions.col): _*)
-    val write = PartitionWrite(url, table, keyed.schema, pk, batchSize)
-    keyed.foreachPartition { rows: Iterator[Row] =>
-      write(Iterator.empty, () => rows)
-    }
   }
 
   /** Read-back for assertions and incremental consumers. */
@@ -470,6 +465,13 @@ object JdbcExec {
     * the window and its exchange has hash-partitioned them by PK, so a
     * key's upsert and delete never span partitions.
     *
+    * With `commitCursor = Some((store, obj))` the batch is first
+    * coalesced to ONE partition, so the window plans no exchange, and
+    * that partition's transaction also writes the largest non-null
+    * cursor it saw as `obj`'s cursor in `store` (none if every cursor
+    * was null) — rows and cursor commit together ([[syncOnce]]'s small
+    * pull).
+    *
     * Latest-wins is the one rule all syncs share: per key the row with
     * the largest cursor; on a cursor tie a tombstone beats a live row;
     * on a tie in both, the larger xxhash64 over the non-key columns (as
@@ -480,7 +482,8 @@ object JdbcExec {
   private[graft] def load(spark: SparkSession, url: String, table: String,
                           pk: Seq[String], batch: DataFrame,
                           cursorField: String, deletedField: Option[String],
-                          batchSize: Int): Loaded = {
+                          batchSize: Int,
+                          commitCursor: Option[(JdbcCursorStore, String)] = None): Loaded = {
     import org.apache.spark.sql.functions._
     require(batch.schema(cursorField).dataType == LongType,
       s"$cursorField must be a bigint cursor, not ${batch.schema(cursorField).dataType}")
@@ -490,47 +493,69 @@ object JdbcExec {
       .partitionBy(pk.map(col): _*)
       .orderBy((col(cursorField).desc +: deletedField.map(col(_).desc).toSeq
         :+ tiebreak.desc): _*)
-    val latest = batch
+    val latest = (if (commitCursor.isDefined) batch.coalesce(1) else batch)
       .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
       .drop("_rn")
     val schema = latest.schema
     val cursorAt = schema.fieldIndex(cursorField)
     val deletedAt = deletedField.map(schema.fieldIndex)
     val keyAt = pk.map(schema.fieldIndex)
-    val write = PartitionWrite(url, table, schema, pk, batchSize)
+    val write = PartitionWrite(url, table, schema, pk, cursorField, batchSize)
     val tally = new SyncTally
     spark.sparkContext.register(tally)
     latest.foreachPartition { rows: Iterator[Row] =>
-      val deadKeys = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val dead = scala.collection.mutable.ArrayBuffer.empty[Row]
       val live = rows.filter { r =>
-        tally.add(r.get(cursorAt).asInstanceOf[java.lang.Long])
+        val cursor = r.get(cursorAt).asInstanceOf[java.lang.Long]
+        tally.add(cursor)
         val isLive = deletedAt match {
           case None => true
           case Some(i) if r.isNullAt(i) => false
           case Some(i) if r.getBoolean(i) =>
-            deadKeys += Row.fromSeq(keyAt.map(r.get)); false
+            dead += Row.fromSeq(keyAt.map(r.get) :+ cursor); false
           case _ => true
         }
         if (isLive) tally.addLive()
         isLive
       }
-      write(live, () => deadKeys.iterator)
+      // a task's copy of the tally holds this partition's rows only
+      write(live, () => dead.iterator, conn =>
+        for ((store, obj) <- commitCursor; c <- tally.value.maxCursor)
+          store.putInTxn(conn, obj, c))
     }
     tally.value
   }
 
   /** One incremental sync pass — the reference's extract→load loop
     * shape run end-to-end in the target database: read the stored
-    * cursor, pull rows strictly past it, run the [[load]] step, then
+    * cursor, pull rows strictly past it, run the [[load]] step, and
     * commit the new cursor. `deletedField` may be null for an object
     * without a soft-delete flag (every row is then live).
     *
-    * The cursor advances LAST, in its own transaction, and deliberately
-    * after (not atomically with) the distributed loads: correctness
-    * rests on the keyed writes being idempotent, so a crash anywhere
-    * before the cursor commit replays at most one pull into convergent
-    * MERGEs/DELETEs. A pull whose cursor values are all null fails
-    * loudly after its loads and commits no cursor (never a sentinel).
+    * How the cursor commits depends on the pull's row count, which the
+    * pin job counts as it materializes the pull ([[graft.Pin.pinCounted]]):
+    *  - `rows <= batchSize`: the pull loads as ONE partition. Its
+    *    latest-wins window needs no exchange (no shuffle-map job, no
+    *    adaptive re-plan), and the one write task's transaction
+    *    upserts, deletes and advances the cursor before its single
+    *    commit: the sync is atomic. `batchSize` is the threshold
+    *    because such a pull is one JDBC batch per statement on one
+    *    connection; splitting it over parallel writers buys no
+    *    throughput and costs an exchange, tasks, connections and
+    *    commits. One task measured faster at every pull from 500 to
+    *    20,000 rows into embedded Derby (SCALE.md, "single-task
+    *    load"), so the threshold errs towards the parallel path, which
+    *    a larger pull into a server that runs writers in parallel
+    *    needs;
+    *  - a larger pull keeps the parallel load — the window's hash
+    *    exchange and one transaction per partition — and the cursor
+    *    advances LAST, in its own transaction after every partition
+    *    committed. Correctness then rests on the keyed writes being
+    *    idempotent, so a crash before the cursor commit replays at most
+    *    one pull into convergent MERGEs/DELETEs.
+    *
+    * A pull whose cursor values are all null fails loudly after its
+    * loads and commits no cursor (never a sentinel).
     *
     * The pulled batch is EAGERLY pinned (localCheckpoint:
     * materialize now + cut lineage) even though only one action reads
@@ -550,16 +575,18 @@ object JdbcExec {
     // spark.graft.pin.mode picks the pin (r16): `reliable` checkpoints
     // to a DFS dir so the snapshot survives executor loss mid-sync —
     // A/B numbers in SCALE.md §r16.2
-    val batch = graft.Pin.pin(pull(last))
+    val (batch, pulled) = graft.Pin.pinCounted(pull(last))
     try {
+      val oneTask = pulled <= batchSize
       val loaded = load(spark, url, table, pk, batch, cursorField,
-        Option(deletedField), batchSize)
+        Option(deletedField), batchSize,
+        if (oneTask) Some((cursors, obj)) else None)
       if (loaded.rows == 0) last
       else {
         val newCursor = loaded.maxCursor.getOrElse(throw new IllegalStateException(
           s"$obj: $cursorField is null on every pulled row; " +
             "the cursor cannot advance"))
-        withConnection(url) { conn =>
+        if (!oneTask) withConnection(url) { conn =>
           conn.setAutoCommit(false)
           try { cursors.putInTxn(conn, obj, newCursor); conn.commit() }
           catch { case e: Throwable => conn.rollback(); throw e }
@@ -571,11 +598,12 @@ object JdbcExec {
 }
 
 /** Cursor state table IN the target database — the reference keeps its
-  * last-modstamp sync state next to the data. [[JdbcExec.syncOnce]]
-  * commits the advance on its own connection after the loads;
-  * [[putInTxn]] takes the caller's connection, so a caller may also
-  * pair an advance with a load in one transaction. */
-final class JdbcCursorStore(url: String, table: String) {
+  * last-modstamp sync state next to the data. [[putInTxn]] takes the
+  * caller's connection: [[JdbcExec.syncOnce]] writes a small pull's
+  * advance inside its one write task's load transaction (the store is
+  * shipped to that task), and a larger pull's on its own connection
+  * after the loads. */
+final class JdbcCursorStore(url: String, table: String) extends Serializable {
   private val schema = StructType(Seq(
     StructField("obj", StringType, nullable = false),
     StructField("cursor_val", LongType)))

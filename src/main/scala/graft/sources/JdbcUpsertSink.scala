@@ -60,7 +60,10 @@ object JdbcUpsertSink {
         s"${q(f.name)} ${pgType(f.dataType)}")
 
   /** Parameterized INSERT … ON CONFLICT (pk) DO UPDATE — the MERGE
-    * statement executed per row batch.
+    * statement executed per row batch. The update is cursor-guarded: a
+    * conflicting row is overwritten only when the stored `cursor` is
+    * null or not newer than the incoming one, so a load of older
+    * versions never rolls a row back.
     *
     * `conflictWhere` renders a PARTIAL-INDEX conflict target —
     * `ON CONFLICT (cols) WHERE pred DO …` — for targets whose unique
@@ -71,12 +74,14 @@ object JdbcUpsertSink {
     * the RENDERING — that the predicate lands between the column list
     * and DO, unquoted — not live PG's index-inference acceptance. */
   def upsertSql(table: String, schema: StructType, pk: Seq[String],
-                conflictWhere: Option[String] = None): String = {
+                cursor: String, conflictWhere: Option[String] = None): String = {
     val cols = schema.fieldNames.toSeq
     val nonPk = cols.filterNot(pk.contains)
+    val stored = s"${q(table)}.${q(cursor)}"
     val updates =
       if (nonPk.isEmpty) "NOTHING"
-      else "UPDATE SET " + nonPk.map(c => s"${q(c)} = EXCLUDED.${q(c)}").mkString(", ")
+      else "UPDATE SET " + nonPk.map(c => s"${q(c)} = EXCLUDED.${q(c)}").mkString(", ") +
+        s" WHERE $stored IS NULL OR $stored <= EXCLUDED.${q(cursor)}"
     val target = s"(${pk.map(q).mkString(", ")})" +
       conflictWhere.map(p => s" WHERE $p").getOrElse("")
     s"INSERT INTO ${q(table)} (${cols.map(q).mkString(", ")}) " +
@@ -126,8 +131,11 @@ object JdbcUpsertSink {
     } + "\""
 
   /** Parameterized DELETE by primary key — tombstone propagation for
-    * the source's soft deletes (queryAll … IsDeleted = true). */
-  def deleteSql(table: String, pk: Seq[String]): String =
+    * the source's soft deletes (queryAll … IsDeleted = true). Guarded
+    * like the upsert: the tombstone's cursor is bound after its key, and
+    * a row stored at a newer cursor survives. */
+  def deleteSql(table: String, pk: Seq[String], cursor: String): String =
     s"DELETE FROM ${q(table)} WHERE " +
-      pk.map(c => s"${q(c)} = ?").mkString(" AND ")
+      pk.map(c => s"${q(c)} = ?").mkString(" AND ") +
+      s" AND (${q(cursor)} IS NULL OR ${q(cursor)} <= ?)"
 }

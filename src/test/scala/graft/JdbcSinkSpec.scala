@@ -38,20 +38,27 @@ class JdbcSinkSpec extends SparkSpec {
 
   test("upsertSql emits INSERT ... ON CONFLICT DO UPDATE") {
     val sql = JdbcUpsertSink.upsertSql("account",
-      StructType(schema.take(3)), pk = Seq("id"))
+      StructType(schema.take(3)), pk = Seq("id"), cursor = "modstamp")
     assert(sql ==
       """INSERT INTO "account" ("id", "amount", "modstamp") VALUES (?, ?, ?) """ +
       """ON CONFLICT ("id") DO UPDATE SET "amount" = EXCLUDED."amount", """ +
-      """"modstamp" = EXCLUDED."modstamp"""")
+      """"modstamp" = EXCLUDED."modstamp" """ +
+      """WHERE "account"."modstamp" IS NULL OR "account"."modstamp" <= EXCLUDED."modstamp"""")
+    // the tombstone DELETE carries the same guard, the cursor bound last
+    assert(JdbcUpsertSink.deleteSql("account", Seq("id"), "modstamp") ==
+      """DELETE FROM "account" WHERE "id" = ? """ +
+      """AND ("modstamp" IS NULL OR "modstamp" <= ?)""")
   }
 
-  test("writeUpsert streams every row through executor-side batches") {
+  test("load streams every row through executor-side batches") {
     import graft.sources.{JdbcExec, PgDialect}
-    val df = (1 to 107).map(i => (i.toLong, s"name$i")).toDF("id", "name")
+    val df = (1 to 107).map(i => (i.toLong, s"name$i", 1L)).toDF("id", "name", "cur")
       .repartition(4)
+    def load(url: String): Unit =
+      JdbcExec.load(spark, url, "t", Seq("id"), df, "cur", None, batchSize = 25)
     val url = s"jdbc:derby:memory:sinkbatches${System.nanoTime};create=true"
     JdbcExec.withConnection(url)(JdbcExec.ensureTable(_, "t", df.schema, Seq("id")))
-    JdbcExec.writeUpsert(df, url, "t", Seq("id"), batchSize = 25)
+    load(url)
     assert(JdbcExec.readTable(spark, url, "t").select("id").collect()
       .map(_.getLong(0)).sorted.toSeq == (1L to 107L))
     // the statement text and the batch sizes, on the PostgreSQL dialect
@@ -59,7 +66,7 @@ class JdbcSinkSpec extends SparkSpec {
     val pg = s"jdbc:postgresql://fake/sinkbatches${System.nanoTime}"
     JdbcExec.withConnection(pg)(
       JdbcExec.ensureTable(_, "t", df.schema, Seq("id"), PgDialect))
-    JdbcExec.writeUpsert(df, pg, "t", Seq("id"), batchSize = 25)
+    load(pg)
     val ev = RecordingJdbc.db(pg).seq
     assert(ev.filter(_.contains(" executeBatch: "))
       .forall(_.contains("executeBatch: INSERT INTO \"t\"")), ev)
@@ -137,56 +144,70 @@ class DerbySinkSpec extends SparkSpec {
     JdbcExec.readTable(spark, url, "account_tgt")
       .orderBy("id").collect().toSeq
 
+  /** `df` written through the sync load step, `ver` its bigint cursor
+    * and `del` (when present) its tombstone flag. */
+  private def load(df: org.apache.spark.sql.DataFrame, table: String,
+                   batchSize: Int): Unit =
+    JdbcExec.load(spark, url, table, Seq("id"), df, "ver",
+      Some("del").filter(df.columns.contains), batchSize)
+
   private def expect(df: org.apache.spark.sql.DataFrame) =
     df.orderBy("id").collect().toSeq
 
   test("executed cycle: create, bulk load, upsert, delete, idempotent re-run") {
+    // `ver` is the load step's bigint cursor
+    def versioned(ids: Range, tag: String, ver: Int) =
+      mkRows(ids, tag, ver).withColumn("ver", lit(ver.toLong))
+    val tgtSchema = versioned(1 to 1, "n", 1).schema
     JdbcExec.withConnection(url) { conn =>
-      JdbcExec.ensureTable(conn, "account_tgt", schema, pk = Seq("id"))
+      JdbcExec.ensureTable(conn, "account_tgt", tgtSchema, pk = Seq("id"))
       assert(JdbcExec.tableExists(conn, "account_tgt"))
-      JdbcExec.ensureTable(conn, "account_tgt", schema, pk = Seq("id")) // no-op
+      JdbcExec.ensureTable(conn, "account_tgt", tgtSchema, pk = Seq("id")) // no-op
     }
 
-    // 1) bulk load 1..100 across 4 partitions (4 concurrent MERGEs)
-    val v1 = mkRows(1 to 100, "n", ver = 1).repartition(4)
-    JdbcExec.writeUpsert(v1, url, "account_tgt", Seq("id"), batchSize = 17)
+    // 1) bulk load 1..100 across the window's 4 shuffle partitions (4
+    //    concurrent MERGEs)
+    val v1 = versioned(1 to 100, "n", ver = 1).repartition(4)
+    load(v1, "account_tgt", batchSize = 17)
     assert(readBack() == expect(v1))
 
     // 2) upsert: 40 updated rows (51..90, new values) + 20 inserts
-    val v2 = mkRows(51 to 90, "upd", ver = 2)
-      .unionByName(mkRows(101 to 120, "new", ver = 2)).repartition(3)
-    JdbcExec.writeUpsert(v2, url, "account_tgt", Seq("id"), batchSize = 17)
+    val v2 = versioned(51 to 90, "upd", ver = 2)
+      .unionByName(versioned(101 to 120, "new", ver = 2)).repartition(3)
+    load(v2, "account_tgt", batchSize = 17)
     val afterUpsert = expect(
-      mkRows(1 to 50, "n", 1).unionByName(mkRows(51 to 90, "upd", 2))
-        .unionByName(mkRows(91 to 100, "n", 1))
-        .unionByName(mkRows(101 to 120, "new", 2)))
+      versioned(1 to 50, "n", 1).unionByName(versioned(51 to 90, "upd", 2))
+        .unionByName(versioned(91 to 100, "n", 1))
+        .unionByName(versioned(101 to 120, "new", 2)))
     assert(readBack() == afterUpsert)
 
     // 3) soft-delete propagation: tombstone ids 10..19 → real DELETEs
     val dead = (10L to 19L).toDF("id")
-    JdbcExec.writeDeletes(dead, url, "account_tgt", Seq("id"), batchSize = 3)
+      .withColumn("ver", lit(2L)).withColumn("del", lit(true))
+    load(dead, "account_tgt", batchSize = 3)
     val afterDelete = afterUpsert.filterNot(r => (10L to 19L).contains(r.getLong(0)))
     assert(readBack() == afterDelete)
 
     // 4) idempotent re-run: replaying the same upsert + deletes is a no-op
-    JdbcExec.writeUpsert(v2, url, "account_tgt", Seq("id"), batchSize = 17)
-    JdbcExec.writeDeletes(dead, url, "account_tgt", Seq("id"), batchSize = 3)
+    load(v2, "account_tgt", batchSize = 17)
+    load(dead, "account_tgt", batchSize = 3)
     assert(readBack() == afterDelete)
   }
 
   test("schema drift: ensureColumns ALTERs only the missing fields") {
-    val drifted = schema.add(StructField("new_field__c", DoubleType))
+    val base = schema.add(StructField("ver", LongType))
+    val drifted = base.add(StructField("new_field__c", DoubleType))
     JdbcExec.withConnection(url) { conn =>
-      JdbcExec.ensureTable(conn, "drift_tgt", schema, pk = Seq("id"))
+      JdbcExec.ensureTable(conn, "drift_tgt", base, pk = Seq("id"))
       JdbcExec.ensureColumns(conn, "drift_tgt", drifted)
       JdbcExec.ensureColumns(conn, "drift_tgt", drifted) // idempotent
     }
     val row = Seq((1L, "a", BigDecimal("1.00"),
-      Timestamp.valueOf("2026-01-01 00:00:00"), true, 0.5, 9.75))
-      .toDF("id", "name", "amount", "modstamp", "active", "score",
+      Timestamp.valueOf("2026-01-01 00:00:00"), true, 0.5, 1L, 9.75))
+      .toDF("id", "name", "amount", "modstamp", "active", "score", "ver",
         "new_field__c")
       .withColumn("amount", col("amount").cast(DecimalType(18, 2)))
-    JdbcExec.writeUpsert(row, url, "drift_tgt", Seq("id"), batchSize = 10)
+    load(row, "drift_tgt", batchSize = 10)
     val got = JdbcExec.readTable(spark, url, "drift_tgt").collect()
     assert(got.length == 1 && got.head.getAs[Double]("new_field__c") == 9.75)
   }
@@ -200,7 +221,7 @@ class DerbySinkSpec extends SparkSpec {
       // crash sim: load a batch + advance the cursor, then ROLLBACK —
       // neither the rows nor the cursor may survive
       conn.setAutoCommit(false)
-      DerbyDialect.loadBatch(conn, "txn_tgt", schema, Seq("id"),
+      DerbyDialect.loadBatch(conn, "txn_tgt", schema, Seq("id"), "modstamp",
         mkRows(1 to 5, "x", 1).collect().iterator, batchSize = 2)
       cursors.putInTxn(conn, "account", 500L)
       conn.rollback()
@@ -210,7 +231,7 @@ class DerbySinkSpec extends SparkSpec {
     // the committed path: one transaction carries load + cursor
     JdbcExec.withConnection(url) { conn =>
       conn.setAutoCommit(false)
-      DerbyDialect.loadBatch(conn, "txn_tgt", schema, Seq("id"),
+      DerbyDialect.loadBatch(conn, "txn_tgt", schema, Seq("id"), "modstamp",
         mkRows(1 to 5, "x", 1).collect().iterator, batchSize = 2)
       cursors.putInTxn(conn, "account", 500L)
       conn.commit()
@@ -257,16 +278,17 @@ class DerbySinkSpec extends SparkSpec {
     // write path must go through ps.setNull(i, <sql type>). Exercise a
     // null in every non-PK type the schema carries, both on insert and
     // on a MERGE-update that overwrites a non-null with a null.
+    val vschema = schema.add(StructField("ver", LongType))
     JdbcExec.withConnection(url) { conn =>
-      JdbcExec.ensureTable(conn, "null_tgt", schema, pk = Seq("id"))
+      JdbcExec.ensureTable(conn, "null_tgt", vschema, pk = Seq("id"))
     }
     val rows = Seq(
-      Row(1L, null, null, null, null, null),
+      Row(1L, null, null, null, null, null, 1L),
       Row(2L, "full", new java.math.BigDecimal("2.25"),
-        Timestamp.valueOf("2026-01-01 00:01:00"), true, 3.5))
+        Timestamp.valueOf("2026-01-01 00:01:00"), true, 3.5, 1L))
     val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 2), schema)
-    JdbcExec.writeUpsert(df, url, "null_tgt", Seq("id"), batchSize = 1)
+      spark.sparkContext.parallelize(rows, 2), vschema)
+    load(df, "null_tgt", batchSize = 1)
     val got = JdbcExec.readTable(spark, url, "null_tgt").orderBy("id").collect()
     assert(got.length == 2)
     assert((1 to 5).forall(got(0).isNullAt))
@@ -275,8 +297,8 @@ class DerbySinkSpec extends SparkSpec {
     val upd = spark.createDataFrame(
       spark.sparkContext.parallelize(
         Seq(Row(2L, null, new java.math.BigDecimal("9.00"),
-          Timestamp.valueOf("2026-01-01 00:02:00"), false, null)), 1), schema)
-    JdbcExec.writeUpsert(upd, url, "null_tgt", Seq("id"), batchSize = 5)
+          Timestamp.valueOf("2026-01-01 00:02:00"), false, null, 2L)), 1), vschema)
+    load(upd, "null_tgt", batchSize = 5)
     val after = JdbcExec.readTable(spark, url, "null_tgt").orderBy("id").collect()
     assert(after(1).isNullAt(1) && after(1).isNullAt(5))
     assert(after(1).getAs[java.math.BigDecimal]("amount")
@@ -291,16 +313,17 @@ class DerbySinkSpec extends SparkSpec {
     // residual to the array/jsonb binds Derby cannot express.
     val bschema = StructType(Seq(
       StructField("id", LongType, nullable = false),
-      StructField("blob", BinaryType)))
+      StructField("blob", BinaryType),
+      StructField("ver", LongType)))
     JdbcExec.withConnection(url) { conn =>
       JdbcExec.ensureTable(conn, "bin_tgt", bschema, pk = Seq("id"))
     }
     val rows = Seq(
-      Row(1L, Array[Byte](1, 2, -1, 0, 127, -128)),
-      Row(2L, null))
+      Row(1L, Array[Byte](1, 2, -1, 0, 127, -128), 1L),
+      Row(2L, null, 1L))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), bschema)
-    JdbcExec.writeUpsert(df, url, "bin_tgt", Seq("id"), batchSize = 1)
+    load(df, "bin_tgt", batchSize = 1)
     val got = JdbcExec.readTable(spark, url, "bin_tgt").orderBy("id").collect()
     assert(got.length == 2)
     assert(got(0).getAs[Array[Byte]]("blob").toSeq ==
@@ -309,8 +332,8 @@ class DerbySinkSpec extends SparkSpec {
     // MERGE-update: non-null -> null and null -> non-null
     val upd = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(
-        Row(1L, null), Row(2L, Array[Byte](42))), 1), bschema)
-    JdbcExec.writeUpsert(upd, url, "bin_tgt", Seq("id"), batchSize = 5)
+        Row(1L, null, 2L), Row(2L, Array[Byte](42), 2L)), 1), bschema)
+    load(upd, "bin_tgt", batchSize = 5)
     val after = JdbcExec.readTable(spark, url, "bin_tgt").orderBy("id").collect()
     assert(after(0).isNullAt(1))
     assert(after(1).getAs[Array[Byte]]("blob").toSeq == Seq[Byte](42))
@@ -321,10 +344,12 @@ class DerbySinkSpec extends SparkSpec {
       pk = Seq("id"))
     assert(ddl == """CREATE TABLE "t" ("id" BIGINT NOT NULL, """ +
       """"name" VARCHAR(32672), "amount" DECIMAL(18,2), PRIMARY KEY ("id"))""")
+    // any column renders as the guard; the load step passes its cursor
     val merge = DerbySql.mergeSql("t", "stg_t", StructType(schema.take(3)),
-      pk = Seq("id"))
+      pk = Seq("id"), cursor = "amount")
     assert(merge == """MERGE INTO "t" t USING SESSION."stg_t" s """ +
-      """ON t."id" = s."id" WHEN MATCHED THEN UPDATE SET """ +
+      """ON t."id" = s."id" WHEN MATCHED AND (t."amount" IS NULL OR """ +
+      """t."amount" <= s."amount") THEN UPDATE SET """ +
       """"name" = s."name", "amount" = s."amount" """ +
       """WHEN NOT MATCHED THEN INSERT ("id", "name", "amount") """ +
       """VALUES (s."id", s."name", s."amount")""")

@@ -52,11 +52,13 @@ class PgDialectSpec extends SparkSpec {
       (3L, "c", 130L, true))    // tombstone: DELETE route
       .toDF("id", "name", "cur", "is_deleted").coalesce(1)
     // one shuffle partition: the tombstone shares its partition, and so
-    // its transaction, with the live rows
+    // its transaction, with the live rows. The 4-row pull is larger than
+    // batchSize = 2, so it takes the parallel load with the cursor last
+    // (a pull within one batch is the next test)
     val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "1")
     val c = try JdbcExec.syncOnce(spark, url, "acct_tgt", Seq("id"),
-      "pg_state", "acct", _ => batch, "cur", "is_deleted", batchSize = 10)
+      "pg_state", "acct", _ => batch, "cur", "is_deleted", batchSize = 2)
     finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
     assert(c == 130L)
 
@@ -70,6 +72,14 @@ class PgDialectSpec extends SparkSpec {
       fail(s"no upsert prepared: $ev"))
     assert(upsertSql.contains("ON CONFLICT (\"id\") DO UPDATE SET"),
       upsertSql)
+    // both writes are cursor-guarded: an older version never overwrites,
+    // and an older tombstone never deletes, a newer stored row
+    assert(upsertSql.endsWith("WHERE \"acct_tgt\".\"cur\" IS NULL OR " +
+      "\"acct_tgt\".\"cur\" <= EXCLUDED.\"cur\""), upsertSql)
+    val deleteSql = ev.find(_.contains("prepare: DELETE FROM \"acct_tgt\""))
+      .getOrElse(fail(s"no delete prepared: $ev"))
+    assert(deleteSql.endsWith("WHERE \"id\" = ? AND " +
+      "(\"cur\" IS NULL OR \"cur\" <= ?)"), deleteSql)
     // --- order: upsert batch executes BEFORE the tombstone delete,
     // which executes BEFORE the cursor advance ---
     val iUp = firstIdx(e => e.contains("executeBatch: INSERT INTO \"acct_tgt\""))
@@ -83,8 +93,9 @@ class PgDialectSpec extends SparkSpec {
     assert(upBinds.exists(_.endsWith("(2,b2,120,false)")), upBinds)
     assert(!upBinds.exists(_.contains("(2,b,110")), s"latest-wins lost: $upBinds")
     assert(!upBinds.exists(_.contains("(3,")), s"tombstone upserted: $upBinds")
+    // the tombstone binds its key, then its cursor
     val delBinds = ev.filter(_.contains("bind[DELETE FROM \"acct_tgt\""))
-    assert(delBinds.map(_.takeRight(3)) == Seq("(3)"), delBinds)
+    assert(delBinds.map(_.takeRight(7)) == Seq("(3,130)"), delBinds)
     // --- transaction boundaries: the upsert's connection runs
     // setAutoCommit(false) ... executeBatch ... commit ... close, with
     // no foreign statements interleaved on that connection ---
@@ -117,7 +128,7 @@ class PgDialectSpec extends SparkSpec {
     db.cursors.put("acct", Long.MinValue)
     val before = db.seq.size
     val c2 = JdbcExec.syncOnce(spark, url, "acct_tgt", Seq("id"),
-      "pg_state", "acct", _ => batch, "cur", "is_deleted", batchSize = 10)
+      "pg_state", "acct", _ => batch, "cur", "is_deleted", batchSize = 2)
     assert(c2 == 130L && db.cursors.get("acct") == 130L)
     val replay = db.seq.drop(before)
     assert(replay.exists(_.contains("executeBatch: INSERT INTO \"acct_tgt\"")))
@@ -125,6 +136,65 @@ class PgDialectSpec extends SparkSpec {
     // replay UPDATEs the existing cursor row instead of re-inserting
     assert(replay.exists(_.contains("executeUpdate[UPDATE \"pg_state\"")))
     assert(!replay.exists(_.contains("executeUpdate[INSERT INTO \"pg_state\"")))
+  }
+
+  test("a pull within one batch is ONE transaction: upsert -> tombstone " +
+    "DELETE -> cursor -> commit on one connection") {
+    RecordingJdbc.register()
+    val url = s"jdbc:postgresql://fake/pgone${System.nanoTime}"
+    val db = RecordingJdbc.db(url)
+    import spark.implicits._
+    JdbcExec.withConnection(url) { conn =>
+      JdbcExec.ensureTable(conn, "one_tgt", schema, Seq("id"),
+        JdbcExec.dialectFor(url))
+    }
+    val batch = Seq(
+      (1L, "a", 100L, false),
+      (2L, "b", 110L, false),
+      (2L, "b2", 120L, false),
+      (3L, "c", 130L, true))
+      .toDF("id", "name", "cur", "is_deleted")
+    // 4 rows <= batchSize = 10: one write task
+    def sync(): Long = JdbcExec.syncOnce(spark, url, "one_tgt", Seq("id"),
+      "one_state", "one", _ => batch, "cur", "is_deleted", batchSize = 10)
+    assert(sync() == 130L && db.cursors.get("one") == 130L)
+    val ev = db.seq
+    val iUp = ev.indexWhere(_.contains("executeBatch: INSERT INTO \"one_tgt\""))
+    assert(iUp >= 0, ev)
+    val loadConn = ev(iUp).split(" ")(0)
+    val onLoad = ev.filter(_.startsWith(s"$loadConn "))
+    // the cursor UPDATE (no row yet) and INSERT run on the load
+    // connection, after the tombstone DELETE and before its one commit
+    val order = Seq[String => Boolean](
+      _.contains("executeBatch: INSERT INTO \"one_tgt\""),
+      _.contains("executeBatch: DELETE FROM \"one_tgt\""),
+      _.contains("executeUpdate[UPDATE \"one_state\""),
+      _.contains("executeUpdate[INSERT INTO \"one_state\""),
+      _ == s"$loadConn commit").map(p => onLoad.indexWhere(p))
+    assert(order.forall(_ >= 0) && order == order.sorted, onLoad.mkString("\n"))
+    assert(onLoad.exists(_.endsWith("setAutoCommit(false)")), onLoad)
+    // the sync commits once, and no other connection writes the cursor
+    assert(ev.count(_.endsWith(" commit")) == 1, ev.mkString("\n"))
+    assert(ev.filter(e => e.contains("executeUpdate[") && e.contains("one_state"))
+      .forall(_.startsWith(s"$loadConn ")), ev.mkString("\n"))
+    // the same latest-wins binds as the parallel load, and the cursor
+    val upBinds = ev.filter(_.contains("bind[INSERT INTO \"one_tgt\""))
+    assert(upBinds.map(_.split("\\] ").last).sorted ==
+      Seq("(1,a,100,false)", "(2,b2,120,false)"), upBinds)
+    assert(ev.filter(_.contains("bind[DELETE FROM \"one_tgt\""))
+      .map(_.takeRight(7)) == Seq("(3,130)"))
+    assert(onLoad.exists(_.endsWith("executeUpdate[INSERT INTO \"one_state\" " +
+      "(\"obj\", \"cursor_val\") VALUES (?, ?)] (one,130)")), onLoad)
+
+    // replay from the pre-round cursor: the same one transaction, now
+    // UPDATEing the stored cursor row
+    db.cursors.put("one", Long.MinValue)
+    val before = db.seq.size
+    assert(sync() == 130L && db.cursors.get("one") == 130L)
+    val replay = db.seq.drop(before)
+    assert(replay.count(_.endsWith(" commit")) == 1, replay)
+    assert(replay.exists(_.contains("executeUpdate[UPDATE \"one_state\"")))
+    assert(!replay.exists(_.contains("executeUpdate[INSERT INTO \"one_state\"")))
   }
 
   test("PG type edges (r17, VERDICT r16 item 7): bytea/array/jsonb " +
@@ -141,7 +211,8 @@ class PgDialectSpec extends SparkSpec {
       StructField("obj", StructType(Seq(
         StructField("name", StringType), StructField("n", LongType)))),
       StructField("objs", ArrayType(StructType(Seq(
-        StructField("name", StringType), StructField("n", LongType)))))))
+        StructField("name", StringType), StructField("n", LongType))))),
+      StructField("cur", LongType)))
     // DDL leg: the §1.1 PG type map renders the edge types
     JdbcExec.withConnection(url) { conn =>
       JdbcExec.ensureTable(conn, "wide_tgt", wide, Seq("id"),
@@ -162,10 +233,10 @@ class PgDialectSpec extends SparkSpec {
     import org.apache.spark.sql.Row
     val rows = Seq(
       Row(1L, Array[Byte](1, 2, -1), Seq("a", "b"), Seq(1.5),
-        Map("k" -> "v", "a" -> "b"), Row("x", 2L), Seq(Row("y", 3L))),
-      Row(2L, null, null, null, null, null, null))
+        Map("k" -> "v", "a" -> "b"), Row("x", 2L), Seq(Row("y", 3L)), 7L),
+      Row(2L, null, null, null, null, null, null, null))
     JdbcExec.withConnection(url) { conn =>
-      PgDialect.loadBatch(conn, "wide_tgt", wide, Seq("id"),
+      PgDialect.loadBatch(conn, "wide_tgt", wide, Seq("id"), "cur",
         rows.iterator, batchSize = 10)
     }
     val binds = db.seq.filter(_.contains("bind[INSERT INTO \"wide_tgt\""))
@@ -194,12 +265,12 @@ class PgDialectSpec extends SparkSpec {
   test("partial-index conflict target renders between the column " +
     "list and DO (ON CONFLICT (cols) WHERE pred DO UPDATE)") {
     import graft.sources.JdbcUpsertSink
-    val sql = JdbcUpsertSink.upsertSql("soft_tgt", schema, Seq("id"),
+    val sql = JdbcUpsertSink.upsertSql("soft_tgt", schema, Seq("id"), "cur",
       conflictWhere = Some("NOT is_deleted"))
     assert(sql.contains(
       "ON CONFLICT (\"id\") WHERE NOT is_deleted DO UPDATE SET"), sql)
     // the default remains the plain unique-index target
-    val plain = JdbcUpsertSink.upsertSql("soft_tgt", schema, Seq("id"))
+    val plain = JdbcUpsertSink.upsertSql("soft_tgt", schema, Seq("id"), "cur")
     assert(plain.contains("ON CONFLICT (\"id\") DO UPDATE SET"), plain)
   }
 

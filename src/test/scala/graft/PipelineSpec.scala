@@ -200,6 +200,42 @@ class PipelineSpec extends SparkSpec {
       Map(1L -> "a", 3L -> "c"))
   }
 
+  test("a late micro-batch of older versions neither overwrites nor " +
+    "deletes newer target rows; a deleted key comes back (known residual)") {
+    import spark.implicits._
+    val srcDir = Files.createTempDirectory("graft-stream-ooo-src").toString
+    def land(rows: (Long, Long, String, Boolean)*): Unit =
+      rows.toDF("id", "cur", "payload", "is_del")
+        .write.mode("append").parquet(srcDir)
+    val schema = Seq((0L, 0L, "", false)).toDF("id", "cur", "payload", "is_del").schema
+    val sync = Pipeline.ObjectSync("t_ooo", _ => spark.emptyDataFrame,
+      pk = "id", cursorField = "cur", deleteField = Some("is_del"))
+    val url = derby()
+    land((1L, 20L, "new", false), (2L, 30L, "live", false),
+      (3L, 35L, "live35", false))
+    val q = Pipeline.streamingSync(spark, url, sync, srcDir, schema,
+      Files.createTempDirectory("graft-stream-ooo-ckpt").toString, 10)
+    try {
+      q.processAllAvailable()
+      land((3L, 40L, "gone", true))
+      q.processAllAvailable()
+      assert(ids(url, "t_ooo", "id") == Seq(1L, 2L))
+      // the late file: only versions older than the target's
+      land((1L, 10L, "old", false), (2L, 25L, "dead", true),
+        (3L, 30L, "live30", false))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = JdbcExec.readTable(spark, url, "t_ooo").collect()
+      .map(r => r.getLong(0) -> (r.getString(2), r.getLong(1))).toMap
+    assert(got.get(1L).contains(("new", 20L)),
+      s"an older version overwrote a newer row: ${got.get(1L)}")
+    assert(got.get(2L).contains(("live", 30L)),
+      s"an older tombstone deleted a newer row: ${got.get(2L)}")
+    // known residual: the target keeps no tombstones, so the older live
+    // version of key 3, deleted at cursor 40, is inserted again
+    assert(got.get(3L).contains(("live30", 30L)), got)
+  }
+
   test("full sync with a soft-delete flag routes dead pks to DELETEs " +
     "and keeps the flag column in the target") {
     val data = Seq(

@@ -5,17 +5,20 @@ import graft.sources.{JdbcCursorStore, JdbcExec}
 
 /** Failure injection on the sync lifecycle (r16, VERDICT r15 ask 5):
   * the exactly-once ladder JdbcExec's scaladoc claims — partition
-  * writes atomic, every write keyed-idempotent, cursor advance LAST —
-  * is only proven if the failure branches actually execute. Three
-  * branches, each asserting the two convergence invariants:
+  * writes atomic, every write keyed-idempotent, and the cursor advance
+  * LAST for a pull larger than one batch, inside the one load
+  * transaction for a smaller one — is only proven if the failure
+  * branches actually execute. Four branches, each asserting the two
+  * convergence invariants:
   *
   *   1. the cursor NEVER advances past a failed batch, and
   *   2. a replay (same pull, fault gone) converges to the state a
   *      clean one-shot sync would have produced.
   *
-  * Branch 1–2 crash mid-sequence at exact statements via
+  * Branches 1–3 crash mid-sequence at exact statements via
   * [[RecordingJdbc]]'s one-shot injection (upsert batch / cursor
-  * advance); branch 3 is a REAL constraint violation raised by
+  * advance after the loads / cursor advance inside the load
+  * transaction); branch 4 is a REAL constraint violation raised by
   * embedded Derby's MERGE, with the corrected re-pull compared
   * against a clean one-shot sync on a fresh database. Under local[*]
   * a task failure is fatal (no retry), so the injected executor-side
@@ -99,8 +102,11 @@ class SyncFailureSpec extends SparkSpec {
     }
     val batch = Seq((1L, "a", 100L, false), (2L, "b", 110L, false))
       .toDF("id", "name", "cur", "is_deleted").coalesce(1)
+    // the 2-row pull is larger than batchSize = 1, so it takes the
+    // parallel load with the cursor last (a pull within one batch is the
+    // next test)
     def sync(): Long = JdbcExec.syncOnce(spark, url, "fi2_tgt", Seq("id"),
-      "fi2_state", "fi2", _ => batch, "cur", "is_deleted", batchSize = 10)
+      "fi2_state", "fi2", _ => batch, "cur", "is_deleted", batchSize = 1)
 
     // first sync on an empty state table: putInTxn's UPDATE matches 0
     // rows, then the INSERT fires — arm the crash on that INSERT, i.e.
@@ -135,6 +141,58 @@ class SyncFailureSpec extends SparkSpec {
     assert(binds.exists(_.endsWith("(1,a,100,false)")) &&
       binds.exists(_.endsWith("(2,b,110,false)")),
       s"replay did not re-apply the committed-but-uncursored loads: $binds")
+  }
+
+  test("crash ON the cursor advance of a pull within one batch: the " +
+    "cursor shares the load transaction, so the rows roll back too; " +
+    "replay lands rows and cursor in one commit") {
+    RecordingJdbc.register()
+    val url = s"jdbc:postgresql://fake/fi3${System.nanoTime}"
+    val db = RecordingJdbc.db(url)
+    import spark.implicits._
+    JdbcExec.withConnection(url) { conn =>
+      JdbcExec.ensureTable(conn, "fi3_tgt", schema, Seq("id"),
+        JdbcExec.dialectFor(url))
+    }
+    val batch = Seq((1L, "a", 100L, false), (2L, "b", 110L, false))
+      .toDF("id", "name", "cur", "is_deleted")
+    // 2 rows <= batchSize = 10: one write task
+    def sync(): Long = JdbcExec.syncOnce(spark, url, "fi3_tgt", Seq("id"),
+      "fi3_state", "fi3", _ => batch, "cur", "is_deleted", batchSize = 10)
+
+    db.failOnce = Some("INSERT INTO \"fi3_state\"")
+    intercept[Exception](sync())
+    val ev1 = db.seq
+    val iFail = ev1.indexWhere(_.contains("FAIL-INJECTED"))
+    assert(iFail >= 0, s"injection never fired: $ev1")
+    // the cursor write failed on the load connection, after its upsert,
+    // and that one transaction rolled back without a commit
+    val failConn = ev1(iFail).split(" ")(0)
+    val onConn = ev1.filter(_.startsWith(s"$failConn "))
+    val iUp = onConn.indexWhere(_.contains("executeBatch: INSERT INTO \"fi3_tgt\""))
+    val iRoll = onConn.indexWhere(_.endsWith("rollback"))
+    val iFailOn = onConn.indexWhere(_.contains("FAIL-INJECTED"))
+    assert(iUp >= 0 && iUp < iFailOn && iFailOn < iRoll, onConn.mkString("\n"))
+    assert(!ev1.exists(_.endsWith(" commit")),
+      s"a commit escaped the failed sync:\n${ev1.mkString("\n")}")
+    assert(!db.cursors.containsKey("fi3"))
+
+    // replay: the held cursor re-pulls the same rows; upserts and cursor
+    // land in one transaction with one commit
+    val before = db.seq.size
+    assert(sync() == 110L)
+    assert(db.cursors.get("fi3") == 110L)
+    val replay = db.seq.drop(before)
+    val binds = replay.filter(_.contains("bind[INSERT INTO \"fi3_tgt\""))
+    assert(binds.exists(_.endsWith("(1,a,100,false)")) &&
+      binds.exists(_.endsWith("(2,b,110,false)")), binds)
+    val loadConn = replay.find(_.contains("executeBatch: INSERT INTO \"fi3_tgt\""))
+      .get.split(" ")(0)
+    val onLoad = replay.filter(_.startsWith(s"$loadConn "))
+    val iCur = onLoad.indexWhere(_.contains("executeUpdate[INSERT INTO \"fi3_state\""))
+    val iCommit = onLoad.indexWhere(_ == s"$loadConn commit")
+    assert(iCur >= 0 && iCur < iCommit, onLoad.mkString("\n"))
+    assert(replay.count(_.endsWith(" commit")) == 1, replay.mkString("\n"))
   }
 
   test("REAL constraint violation (Derby CHECK rejects the MERGE): " +

@@ -9,8 +9,10 @@ import graft.sources.{JdbcCursorStore, JdbcExec}
 /** The fused write of [[JdbcExec.syncOnce]]: after the pin, ONE Spark
   * action upserts each partition's live rows and deletes its tombstoned
   * keys in one transaction, and tallies the row count and the max
-  * cursor; the cursor commits last, on its own connection. Latest-wins
-  * picks the same survivor whatever the input order.
+  * cursor. A pull larger than `batchSize` commits the cursor last, on
+  * its own connection; a pull within one batch is one write task whose
+  * transaction also commits the cursor. Latest-wins picks the same
+  * survivor whatever the input order.
   */
 class SyncOnceSpec extends SparkSpec {
   import spark.implicits._
@@ -95,10 +97,12 @@ class SyncOnceSpec extends SparkSpec {
       (2L, "b", 110L, false),
       (3L, "c", 120L, true))
       .toDF("id", "name", "cur", "is_deleted").coalesce(1)
-    // one shuffle partition: all three keys share one write transaction
+    // one shuffle partition: all three keys share one write transaction.
+    // The 3-row pull is larger than batchSize = 2, so it takes the
+    // parallel load with the cursor last (its one-task twin follows)
     def sync(): Long = withConf("spark.sql.shuffle.partitions", "1") {
       JdbcExec.syncOnce(spark, url, "fd_tgt", Seq("id"), "fd_state", "fd",
-        _ => batch, "cur", "is_deleted", batchSize = 10)
+        _ => batch, "cur", "is_deleted", batchSize = 2)
     }
 
     db.failOnce = Some("DELETE FROM \"fd_tgt\"")
@@ -130,8 +134,9 @@ class SyncOnceSpec extends SparkSpec {
     val upsert = "INSERT INTO \"fd_tgt\""
     assert(binds(replay, upsert) == binds(ev1, upsert) &&
       binds(replay, upsert).size == 2, replay)
-    assert(binds(replay, "DELETE FROM \"fd_tgt\"").map(_.takeRight(3)) ==
-      Seq("(3)"), replay)
+    // the tombstone binds its key, then its cursor
+    assert(binds(replay, "DELETE FROM \"fd_tgt\"").map(_.takeRight(7)) ==
+      Seq("(3,120)"), replay)
     // and it all lands as one committed transaction
     val loadConn = replay.find(_.contains(s"executeBatch: $upsert")).get.split(" ")(0)
     val onLoad = replay.filter(_.startsWith(s"$loadConn "))
@@ -139,6 +144,41 @@ class SyncOnceSpec extends SparkSpec {
       _.contains("executeBatch: DELETE FROM"), _ == s"$loadConn commit")
       .map(p => onLoad.indexWhere(p))
     assert(order.forall(_ >= 0) && order == order.sorted, onLoad)
+  }
+
+  test("a fault before the commit of a pull within one batch leaves both " +
+    "the rows and the cursor unwritten; a replay converges") {
+    val url = s"jdbc:derby:memory:fone${System.nanoTime};create=true"
+    createTarget(url, "fo_tgt")
+    def sync(events: Seq[Ev]): Long = JdbcExec.syncOnce(spark, url, "fo_tgt",
+      Seq("id"), "fo_state", "fo",
+      past => events.toDF("id", "name", "cur", "is_deleted").filter($"cur" > past),
+      "cur", "is_deleted")
+    def target: Map[Long, (String, Long)] =
+      JdbcExec.readTable(spark, url, "fo_tgt").collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    val cursors = new JdbcCursorStore(url, "fo_state")
+    val seed = Seq[Ev]((3L, "c0", 50L, Some(false)))
+    assert(sync(seed) == 50L && target == Map(3L -> (("c0", 50L))))
+    // the state table refuses a cursor of 100 or more: the cursor UPDATE,
+    // the last statement before the commit, fails inside the write task
+    def constraint(sql: String): Unit = JdbcExec.withConnection(url) { conn =>
+      val st = conn.createStatement()
+      try st.execute(s"""ALTER TABLE "fo_state" $sql""") finally st.close()
+    }
+    constraint("""ADD CONSTRAINT fo_cap CHECK ("cursor_val" < 100)""")
+    val delta = seed ++ Seq[Ev](
+      (1L, "a", 100L, Some(false)), (2L, "b", 110L, Some(false)),
+      (3L, "c", 120L, Some(true)))
+    intercept[Exception](sync(delta))
+    // the upserts of 1 and 2 and the DELETE of 3 rolled back with it
+    assert(target == Map(3L -> (("c0", 50L))))
+    assert(cursors.get("fo").contains(50L))
+    // the fault gone, the held cursor re-pulls the same rows
+    constraint("DROP CONSTRAINT fo_cap")
+    assert(sync(delta) == 120L)
+    assert(cursors.get("fo").contains(120L))
+    assert(target == Map(1L -> (("a", 100L)), 2L -> (("b", 110L))))
   }
 
   test("an empty pull opens no write connection and writes no cursor") {
@@ -182,7 +222,7 @@ class SyncOnceSpec extends SparkSpec {
   }
 
   test("one non-empty syncOnce in the default pin mode submits at most " +
-    "3 Spark jobs") {
+    "2 Spark jobs") {
     assert(Pin.mode(spark) == "local")
     val url = s"jdbc:derby:memory:fjobs${System.nanoTime};create=true"
     createTarget(url, "fj_tgt")
@@ -209,7 +249,9 @@ class SyncOnceSpec extends SparkSpec {
       finally sc.clearJobGroup()
       org.apache.spark.GraftTestBus.waitUntilEmpty(sc)
       assert(c == 130L)
-      assert(jobs.get() >= 1 && jobs.get() <= 3,
+      // the pin and the one write task's job: a 4-row pull plans no
+      // exchange, so no shuffle-map job
+      assert(jobs.get() >= 1 && jobs.get() <= 2,
         s"one syncOnce submitted ${jobs.get()} Spark jobs")
     } finally sc.removeSparkListener(listener)
   }
