@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Routed-mode recall quantifier (r18, VERDICT r17 item 5): the
   * BruteGuard `spark.graft.brute.route=true` escape substitutes the
@@ -19,14 +18,8 @@ import org.apache.spark.sql.SparkSession
 object BruteRecall {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32,
+      conf = Map("spark.sql.adaptive.enabled" -> "false"))
     for (d <- dirs) {
       println(s"--- $d ---")
       def pairs(name: String, exact: Boolean): Set[(Long, Long)] = {

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.udf
-import org.apache.spark.storage.StorageLevel
 
 /** Eager materialize-and-pin strategy knob (r16, VERDICT r15 ask 4).
   *
@@ -40,12 +39,8 @@ import org.apache.spark.storage.StorageLevel
   *    at DFS in production). Survives executor loss; costs a full
   *    write + read of the frame through the checkpoint store. The
   *    100 TB posture for pins that later stages resume from.
-  *  - `persist`: `persist(MEMORY_AND_DISK)` + a materializing count.
-  *    NOT a true snapshot — blocks are evictable and the recompute
-  *    path re-reads the (possibly mutated) source, exactly the
-  *    r14→r15 syncOnce hazard — offered for the A/B harness
-  *    ([[PinScale]]) and for sources known immutable (parquet
-  *    fixtures), where it skips the block copy localCheckpoint pays.
+  *
+  * Both are true snapshots: no recompute path re-reads the source.
   *
   * Measured A/B + the 100 TB recommendation: SCALE.md §r16.2.
   */
@@ -65,13 +60,8 @@ object Pin {
         sc.setCheckpointDir(df.sparkSession.conf.get(DirKey,
           s"/tmp/graft_pin_${sc.applicationId}"))
       df.checkpoint(eager = true)
-    case "persist" =>
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize now; evictable — see the mode caveat
-      p
     case other =>
-      sys.error(s"$ModeKey: unknown mode '$other' " +
-        "(expected local | reliable | persist)")
+      sys.error(s"$ModeKey: unknown mode '$other' (expected local | reliable)")
   }
 
   /** [[pin]], also returning how many rows the pin materialized. An
@@ -89,21 +79,14 @@ object Pin {
 
   /** End-of-scope release of a [[pin]] result — pass the EXACT frame
     * `pin` returned, not one derived from it (a derived frame is a
-    * silent no-op for checkpoint modes; see GraftPlanBridge.unpin).
-    * After unpinning a
-    * checkpointed frame is unreadable (lineage was cut); a persisted
-    * frame merely drops back to lazy recompute; a reliable-checkpoint
+    * silent no-op; see GraftPlanBridge.unpin). After unpinning, the
+    * frame is unreadable (lineage was cut); a reliable-checkpoint
     * frame also has its checkpoint files deleted (a standing job pins
     * per pass — leaving each pass's full frame copy in the pin dir
     * until application exit would grow it without bound).
     *
-    * Dispatch is on the frame's own state, NOT the current value of
-    * [[ModeKey]]: a persist-pinned frame is registered in the SQL
-    * CacheManager (storageLevel != NONE), checkpoint-pinned frames are
-    * not — so flipping the knob between pin and unpin (across a
-    * micro-batch, or by A/B harness code like [[PinScale]]) cannot
-    * route a frame to the wrong release path and leak its storage. */
-  def unpin(df: DataFrame): Unit =
-    if (df.storageLevel != StorageLevel.NONE) df.unpersist(blocking = false)
-    else org.apache.spark.sql.GraftPlanBridge.unpin(df)
+    * Release reads the frame's own plan, NOT the current value of
+    * [[ModeKey]], so flipping the knob between pin and unpin (across a
+    * micro-batch) cannot leak the pin's storage. */
+  def unpin(df: DataFrame): Unit = org.apache.spark.sql.GraftPlanBridge.unpin(df)
 }

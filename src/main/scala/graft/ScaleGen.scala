@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up generator for local scaling experiments:
@@ -26,13 +25,7 @@ object ScaleGen {
     // 9·10⁸ + ε, inside a k·10⁸ shift); shiftScale=10 lifts every
     // shift one decade above the first-generation ranges.
     val shiftScale = args.lift(3).map(_.toLong).getOrElse(1L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32, shuffle = Some(32))
     val docs = Tables.documents(spark, src)
     val bigDocs = (0 until factor).map { k =>
       val text =

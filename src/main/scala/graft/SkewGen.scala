@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skewed-key synthetic for the per-key window growth probe (r17,
@@ -29,12 +28,7 @@ object SkewGen {
       case "events" => ("user_id", "event_id")
       case other => sys.error(s"SkewGen: unknown table '$other'")
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32, shuffle = Some(32))
     spark.read.parquet(s"$in/$table.parquet")
       .withColumn(key,
         when(pmod(xxhash64(col(unique)), lit(hotDenom)) === 0,

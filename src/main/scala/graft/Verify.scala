@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,15 +8,9 @@ object Verify {
     // optional extra args = subset of query names (local iteration only;
     // the driver always passes exactly sfDir + outDir)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the suite's default shape (shuffle = min(cpus, 8)), so the plans
+    // checked here are the plans Bench times
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // oracle-pinned-tunable guard flag — see OracleKit.HarnessKey
     spark.conf.set(OracleKit.HarnessKey, "true")
     new java.io.File(outDir).mkdirs()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Near-dup-dominated corpus generator (r14, VERDICT asks 4+5): the
@@ -43,13 +42,7 @@ object ZipfGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/sf1z")
     val dVariants = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32, shuffle = Some(32))
 
     // ---- documents: D distinct variants × Zipf near-dup copies ----
     val docs = Tables.documents(spark, src)

@@ -266,34 +266,6 @@ object AnnOps {
       .select("vec_id", "nn_id", "approx")
   }
 
-  /** Per-cell candidate-volume histogram for the IVF family (r19,
-    * VERDICT r18 item 6 — the TfidfProbe treatment): (cell, n_probes,
-    * n_cands) over the dup-collapsed reps, from which
-    * Σ probes·cands IS the exact candidate-pair row count of
-    * j_ann_ivf_kmeans / j_ann_ivf_pq (keepSelf pairing) — measured
-    * without materializing a single pair, so the curve is computable
-    * at fixtures where the full run is scratch-bound. The ranking
-    * exchange is kept SKINNY (vec_id, cell_id, cdot — arrays projected
-    * away before the window), unlike the entries' own ranked frame
-    * which must carry the vectors onward. */
-  private[graft] def ivfCandidateHistogram(s: SparkSession,
-                                           d: String): DataFrame = {
-    import s.implicits._
-    graft.functions.VectorExprs.register(s)
-    val u = unit(s, d)
-    val cents = kmeansCentroids(u, k = 16, iters = 5, maxSample = 256)
-      .toSeq.toDF("cell_id", "cu")
-    val (repU, _) = dupGroups(u.select(col("vec_id"), col("u")))
-    val ranked = repU.join(broadcast(cents))
-      .withColumn("cdot", expr("graft_dot(u, cu)"))
-      .select(col("vec_id"), col("cell_id"), col("cdot"))
-      .withColumn("rn", row_number().over(Window.partitionBy("vec_id")
-        .orderBy(desc("cdot"), asc("cell_id"))))
-    ranked.groupBy("cell_id").agg(
-      sum(when(col("rn") <= 8, 1L).otherwise(0L)).as("n_probes"),
-      sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_cands"))
-  }
-
   /** Top-3 neighbors per vector from a (vec_id, nn_id, cos) pair set.
     * r20: a bounded graft_topk aggregate instead of the row_number
     * window (guide §2.3, the d_agg_topk_partial shape): the exchange

@@ -129,19 +129,7 @@ object CorpusPipeline {
     // is the spark.graft.pin.mode knob (r16, VERDICT r15 ask 4):
     // executor-local by default, reliable-dir checkpoint for pins
     // that must survive executor loss — A/B numbers in SCALE.md §r16.2.
-    // opt-in stage attribution for the profiling harness (ProfileAudit):
-    // pins are EAGER, so timing each pin call IS the stage cost
-    val prof = java.lang.Boolean.getBoolean("graft.profile.stages")
-    var stageNo = 0
-    def pin(df: DataFrame): DataFrame =
-      if (!prof) graft.Pin.pin(df)
-      else {
-        stageNo += 1
-        val t0 = System.nanoTime()
-        val r = graft.Pin.pin(df)
-        println(f"PROF stage$stageNo pin ${(System.nanoTime - t0) / 1e9}%.2f s")
-        r
-      }
+    import graft.Pin.pin
 
     // 1. quality gate — heuristic or bigram-LM, see [[qualityStage]]
     val effGate = gate.getOrElse(

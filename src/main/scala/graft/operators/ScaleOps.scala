@@ -50,7 +50,7 @@ object ScaleOps {
     * construction is lazy: no driver action runs until the composed
     * query executes (the old `.head` form ran a full build-side job at
     * DataFrame-construction time and embedded the megabyte sketch as a
-    * plan literal, which PlanDump had to elide).
+    * plan literal, which the plan dump had to elide).
     *
     * At 100 TB this is the hand-rolled form of Spark's runtime bloom
     * filter (`spark.sql.optimizer.runtime.bloomFilter.enabled`), for

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * heavier whale shape breaking the carry algebra) trips here instead
   * of surfacing as a bench surprise:
   *  1. value parity: each entry equals its join+top-1 reference on the
-  *     whale fixture (the HashQ parity pin, in-suite);
+  *     whale fixture (the `Bench hash` parity pin, in-suite);
   *  2. volume bound: the entry's total shuffle WRITE records stay
   *     O(n) — a generous 8·n ceiling, where the whale's pair count
   *     (what the join form would shuffle through its window) is ~100×

@@ -22,7 +22,7 @@ class PinSpec extends SparkSpec {
     val src = (1L to 1000L).toDF("id")
       .withColumn("v", col("id") * 3 % 17)
     val expect = src.orderBy("id").collect().toSeq
-    for (m <- Seq("local", "reliable", "persist")) withMode(m) {
+    for (m <- Seq("local", "reliable")) withMode(m) {
       val pinned = Pin.pin(src)
       assert(pinned.orderBy("id").collect().toSeq == expect, s"mode=$m")
       Pin.unpin(pinned)
@@ -88,19 +88,13 @@ class PinSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.storage.StorageLevel
     val src = (1L to 200L).toDF("id")
-    // persist-pinned, knob flipped to local before release
-    val p = withMode("persist")(Pin.pin(src))
-    assert(p.storageLevel != StorageLevel.NONE)
-    withMode("local")(Pin.unpin(p))
-    assert(p.storageLevel == StorageLevel.NONE,
-      "persist-pinned frame left in the cache after a flipped unpin")
-    // local-checkpoint-pinned, knob flipped to persist before release
+    // local-checkpoint-pinned, knob flipped to reliable before release
     val l = withMode("local")(Pin.pin(src))
     val rdd = l.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }.head
     assert(rdd.getStorageLevel != StorageLevel.NONE)
-    withMode("persist")(Pin.unpin(l))
+    withMode("reliable")(Pin.unpin(l))
     assert(rdd.getStorageLevel == StorageLevel.NONE,
       "localCheckpoint blocks leaked after a flipped unpin")
   }
@@ -132,7 +126,6 @@ class PinSpec extends SparkSpec {
     assert(ref._1 == 130L &&
       ref._2 == Seq((1L, "a", 100L), (2L, "b2", 120L)))
     assert(run("reliable") == ref)
-    assert(run("persist") == ref)
   }
 
   test("the iterative min-label CC (per-round pinned labels) is " +

@@ -28,14 +28,16 @@ object RecordingJdbc {
     // identifiers (answers ensureColumns' metadata probe)
     val columns =
       new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+    // committed cursor values; a connection with autocommit off
+    // buffers its cursor writes (see Txn) until commit
     val cursors = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     // failure injection (r16, VERDICT r15 ask 5): ONE-SHOT — the first
-    // executeBatch/executeUpdate whose SQL contains the substring logs
-    // a FAIL-INJECTED event, clears the trigger, and throws
-    // SQLException, so a spec can crash the sync mid-sequence at an
-    // exact statement and then replay with the fault gone. Volatile is
-    // enough: executor tasks share this JVM under local[*], and the
-    // specs arm it before the job starts.
+    // executeBatch/executeUpdate whose SQL contains the substring, or
+    // the first commit when it is "COMMIT", logs a FAIL-INJECTED event,
+    // clears the trigger, and throws SQLException, so a spec can crash
+    // the sync mid-sequence at an exact statement and then replay with
+    // the fault gone. Volatile is enough: executor tasks share this JVM
+    // under local[*], and the specs arm it before the job starts.
     @volatile var failOnce: Option[String] = None
     private[RecordingJdbc] def maybeFail(cid: Int, op: String,
                                          sql: String): Unit =
@@ -114,6 +116,24 @@ object RecordingJdbc {
 
   private val quoted = "\"([^\"]+)\"".r
 
+  /** One connection's transaction state. With autocommit on a cursor
+    * write lands in [[Db.cursors]] at once; with it off the write is
+    * buffered, visible to this connection only, applied on commit and
+    * dropped on rollback, on close, or when the commit itself fails. */
+  private final class Txn(d: Db) {
+    var autoCommit = true
+    private val pending = scala.collection.mutable.Map.empty[String, Long]
+    def get(obj: String): Option[Long] =
+      pending.get(obj).orElse(Option(d.cursors.get(obj)))
+    def put(obj: String, v: Long): Unit =
+      if (autoCommit) d.cursors.put(obj, v) else pending(obj) = v
+    def commit(): Unit = {
+      pending.foreach { case (k, v) => d.cursors.put(k, v) }
+      pending.clear()
+    }
+    def discard(): Unit = pending.clear()
+  }
+
   private def statement(d: Db, cid: Int): Statement =
     proxy(classOf[Statement]) {
       case ("execute", a) =>
@@ -131,7 +151,8 @@ object RecordingJdbc {
       case ("close", _) => null
     }
 
-  private def prepared(d: Db, cid: Int, sql: String): PreparedStatement = {
+  private def prepared(d: Db, cid: Int, tx: Txn,
+                       sql: String): PreparedStatement = {
     val params = new java.util.TreeMap[Int, AnyRef]()
     def render(v: AnyRef): String = v match {
       // byte[] binds render as hex so the recorded row is stable and
@@ -171,12 +192,11 @@ object RecordingJdbc {
           if (sql.startsWith("UPDATE")) {
             // cursor UPDATE: (v, obj)
             val obj = String.valueOf(vals(1))
-            if (d.cursors.containsKey(obj)) {
-              d.cursors.put(obj, vals(0).toString.toLong); 1
+            if (tx.get(obj).isDefined) {
+              tx.put(obj, vals(0).toString.toLong); 1
             } else 0
           } else { // cursor INSERT: (obj, v)
-            d.cursors.put(String.valueOf(vals(0)),
-              vals(1).toString.toLong); 1
+            tx.put(String.valueOf(vals(0)), vals(1).toString.toLong); 1
           }
         params.clear()
         java.lang.Integer.valueOf(n)
@@ -185,7 +205,7 @@ object RecordingJdbc {
         // the only modeled query is the cursor SELECT: (obj)
         val obj = String.valueOf(params.values.toArray.apply(0))
         params.clear()
-        Option(d.cursors.get(obj)) match {
+        tx.get(obj) match {
           case Some(v) => resultSet(Seq(Seq(java.lang.Long.valueOf(v))))
           case None => resultSet(Nil)
         }
@@ -209,15 +229,24 @@ object RecordingJdbc {
 
   private def connection(d: Db): Connection = {
     val cid = d.nextConnId()
+    val tx = new Txn(d)
     proxy(classOf[Connection]) {
       case ("setAutoCommit", a) =>
-        d.log(s"c$cid setAutoCommit(${a(0)})"); null
-      case ("commit", _) => d.log(s"c$cid commit"); null
-      case ("rollback", _) => d.log(s"c$cid rollback"); null
-      case ("close", _) => d.log(s"c$cid close"); null
+        d.log(s"c$cid setAutoCommit(${a(0)})")
+        val on = a(0).asInstanceOf[java.lang.Boolean].booleanValue
+        // JDBC: switching autocommit on commits the open transaction
+        if (on && !tx.autoCommit) tx.commit()
+        tx.autoCommit = on; null
+      case ("commit", _) =>
+        // a failed commit aborts the transaction, as on PostgreSQL
+        try d.maybeFail(cid, "commit", "COMMIT")
+        catch { case e: java.sql.SQLException => tx.discard(); throw e }
+        tx.commit(); d.log(s"c$cid commit"); null
+      case ("rollback", _) => tx.discard(); d.log(s"c$cid rollback"); null
+      case ("close", _) => tx.discard(); d.log(s"c$cid close"); null
       case ("createStatement", _) => statement(d, cid)
       case ("prepareStatement", a) =>
-        prepared(d, cid, a(0).asInstanceOf[String])
+        prepared(d, cid, tx, a(0).asInstanceOf[String])
       case ("getMetaData", _) => metadata(d)
       case ("isClosed", _) => java.lang.Boolean.FALSE
       // the pgjdbc array-bind protocol: the dialect passes the PG

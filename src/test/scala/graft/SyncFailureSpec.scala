@@ -8,19 +8,20 @@ import graft.sources.{JdbcCursorStore, JdbcExec}
   * writes atomic, every write keyed-idempotent, and the cursor advance
   * LAST for a pull larger than one batch, inside the one load
   * transaction for a smaller one — is only proven if the failure
-  * branches actually execute. Four branches, each asserting the two
+  * branches actually execute. Five branches, each asserting the two
   * convergence invariants:
   *
   *   1. the cursor NEVER advances past a failed batch, and
   *   2. a replay (same pull, fault gone) converges to the state a
   *      clean one-shot sync would have produced.
   *
-  * Branches 1–3 crash mid-sequence at exact statements via
+  * Branches 1–4 crash mid-sequence at exact points via
   * [[RecordingJdbc]]'s one-shot injection (upsert batch / cursor
   * advance after the loads / cursor advance inside the load
-  * transaction); branch 4 is a REAL constraint violation raised by
-  * embedded Derby's MERGE, with the corrected re-pull compared
-  * against a clean one-shot sync on a fresh database. Under local[*]
+  * transaction / that transaction's commit); branch 5 is a REAL
+  * constraint violation raised by embedded Derby's MERGE, with the
+  * corrected re-pull compared against a clean one-shot sync on a
+  * fresh database. Under local[*]
   * a task failure is fatal (no retry), so the injected executor-side
   * SQLException surfaces as the job failure a driver crash-replay
   * loop would observe.
@@ -193,6 +194,61 @@ class SyncFailureSpec extends SparkSpec {
     val iCommit = onLoad.indexWhere(_ == s"$loadConn commit")
     assert(iCur >= 0 && iCur < iCommit, onLoad.mkString("\n"))
     assert(replay.count(_.endsWith(" commit")) == 1, replay.mkString("\n"))
+  }
+
+  test("crash AT the commit of a pull within one batch: the cursor " +
+    "written in that transaction is not recorded; replay lands rows " +
+    "and cursor in one commit") {
+    RecordingJdbc.register()
+    val url = s"jdbc:postgresql://fake/fi4${System.nanoTime}"
+    val db = RecordingJdbc.db(url)
+    import spark.implicits._
+    JdbcExec.withConnection(url) { conn =>
+      JdbcExec.ensureTable(conn, "fi4_tgt", schema, Seq("id"),
+        JdbcExec.dialectFor(url))
+    }
+    var source = Seq((1L, "a", 100L, false), (2L, "b", 110L, false))
+      .toDF("id", "name", "cur", "is_deleted")
+    // 2 rows per pull <= batchSize = 10: one write task
+    def sync(): Long = JdbcExec.syncOnce(spark, url, "fi4_tgt", Seq("id"),
+      "fi4_state", "fi4", past => source.filter($"cur" > past), "cur",
+      "is_deleted", batchSize = 10)
+    assert(sync() == 110L)
+    assert(db.cursors.get("fi4") == 110L)
+
+    // the next pull's one transaction writes rows and cursor, then its
+    // commit fails
+    source = source.union(Seq((3L, "c", 120L, false), (1L, "a2", 130L, false))
+      .toDF("id", "name", "cur", "is_deleted"))
+    db.failOnce = Some("COMMIT")
+    val before = db.seq.size
+    intercept[Exception](sync())
+    val ev = db.seq.drop(before)
+    val iFail = ev.indexWhere(_.contains("FAIL-INJECTED commit"))
+    assert(iFail >= 0, s"injection never fired: ${ev.mkString("\n")}")
+    val failConn = ev(iFail).split(" ")(0)
+    val onConn = ev.filter(_.startsWith(s"$failConn "))
+    val iCur = onConn.indexWhere(_.contains("executeUpdate[UPDATE \"fi4_state\""))
+    assert(iCur >= 0 && iCur < onConn.indexWhere(_.contains("FAIL-INJECTED")),
+      onConn.mkString("\n"))
+    assert(!ev.exists(_.endsWith(" commit")), ev.mkString("\n"))
+    assert(db.cursors.get("fi4") == 110L,
+      "a cursor written inside a failed commit was recorded")
+
+    // replay: the held cursor re-pulls the same rows; upserts and cursor
+    // land in one transaction with one commit
+    val mark = db.seq.size
+    assert(sync() == 130L)
+    assert(db.cursors.get("fi4") == 130L)
+    val replay = db.seq.drop(mark)
+    val binds = replay.filter(_.contains("bind[INSERT INTO \"fi4_tgt\""))
+    assert(binds.exists(_.endsWith("(3,c,120,false)")) &&
+      binds.exists(_.endsWith("(1,a2,130,false)")), binds)
+    val commits = replay.filter(_.endsWith(" commit"))
+    assert(commits.size == 1, replay.mkString("\n"))
+    val loadConn = commits.head.split(" ")(0)
+    assert(replay.exists(e => e.startsWith(s"$loadConn ") &&
+      e.contains("executeUpdate[UPDATE \"fi4_state\"")), replay.mkString("\n"))
   }
 
   test("REAL constraint violation (Derby CHECK rejects the MERGE): " +
