@@ -79,6 +79,16 @@ def check_fingerprint(sfdir, outdir):
     return ok
 
 
+def duck_mem():
+    """DuckDB's memory cap: $DUCK_MEM if set, else about 60% of the
+    machine's MemTotal, so the cap never exceeds the machine."""
+    if "DUCK_MEM" in os.environ:
+        return os.environ["DUCK_MEM"]
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    return "%dMB" % (kb * 6 // 10 // 1024)
+
+
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
@@ -89,8 +99,7 @@ def main():
     # tripping the OOM killer (r15: the sf1z pipeline-audit twins
     # materialize corpus-sized CTE chains; unbounded, the process
     # ballooned past free RAM and died with no diagnostic)
-    con.execute("SET memory_limit='%s'"
-                % os.environ.get("DUCK_MEM", "48GB"))
+    con.execute("SET memory_limit='%s'" % duck_mem())
     os.makedirs("/tmp/duck_spill", exist_ok=True)
     con.execute("SET temp_directory='/tmp/duck_spill'")
     for t in TABLES:

@@ -15,18 +15,20 @@ import graft.sources.{IncrementalSource, JdbcExec}
   * action whose partitions each upsert their live rows and delete their
   * tombstoned keys in one transaction; every write is guarded by the
   * cursor column, so an older version never overwrites a newer one. The
-  * cursor-driven entries go through [[JdbcExec.syncOnce]], which pins
-  * the pull and reads the stored cursor first; a pull of at most
-  * `batchSize` rows is one write task whose transaction also commits
-  * the new cursor, a larger one commits it last on its own connection.
+  * cursor-driven entries go through [[JdbcExec.syncOnce]], which reads
+  * the stored cursor first; a pull of at most `batchSize` rows is one
+  * Spark job of one task that reads it straight from the source and
+  * whose transaction also commits the new cursor, a larger one is
+  * pinned, loaded in parallel, and commits the cursor last on its own
+  * connection.
   * The statement dialect follows the url ([[graft.sources.UpsertDialect]]).
   *
   * Scale notes: the pipeline never collects. A load has one shuffle,
   * the latest-wins window's, which also hash-partitions the writes by
   * PK, so MERGE contention stays partition-local; the exception is a
   * cursor-driven pull that fits one batch, which one task loads with no
-  * shuffle. Cursor state is one scalar per object, in the target
-  * database.
+  * shuffle and no pin. Cursor state is one scalar per object, in the
+  * target database.
   */
 object Pipeline {
 
@@ -84,9 +86,10 @@ object Pipeline {
 
   /** Incremental sync: rows with cursor strictly past the cursor stored
     * for `sync.name` in `stateTable`, loaded and then committed as the
-    * new cursor — deletes advance it like any other change. The pull is
-    * pinned once, so the rows written and the cursor taken come from
-    * one snapshot even under a live source. Returns the new cursor (the
+    * new cursor — deletes advance it like any other change. The rows
+    * written and the cursor taken come from one read even under a live
+    * source: a pull within one batch is read once by the task that
+    * writes it, a larger one is pinned. Returns the new cursor (the
     * stored one if nothing was pulled). */
   def incrementalSync(spark: SparkSession, url: String, sync: ObjectSync,
                       stateTable: String, batchSize: Int): Long = {
@@ -146,10 +149,11 @@ object Pipeline {
     *    the remote API;
     *  - normalize: the target-type cast map ([[normalize]]), applied
     *    AFTER the pushable filter so the cast never blocks pushdown;
-    *  - sink + cursor: [[graft.sources.JdbcExec.syncOnce]] — snapshot
-    *    pinning, latest-wins dedupe, keyed cursor-guarded MERGE/DELETE,
-    *    and the cursor in the load transaction for a pull of at most
-    *    `batchSize` rows, committed last after the loads otherwise;
+    *  - sink + cursor: [[graft.sources.JdbcExec.syncOnce]] — latest-wins
+    *    dedupe, keyed cursor-guarded MERGE/DELETE, and, for a pull of
+    *    at most `batchSize` rows, one task that reads it and commits
+    *    the cursor in its load transaction; a larger pull is pinned,
+    *    and its cursor committed last after the loads;
     *  - DDL: the target table is created (and drift-ALTERed) from the
     *    DESCRIBED schema — schema changes at the source flow into the
     *    target on the next sync, the reference's describe-driven DDL.

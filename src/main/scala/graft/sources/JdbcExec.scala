@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.AccumulatorV2
 
@@ -260,14 +260,16 @@ object PgDialect extends UpsertDialect {
   *    the target back. The target keeps no tombstones, so an older live
   *    version of a key deleted by an earlier load is inserted again;
   *  - a SMALL pull (at most `batchSize` rows, see [[syncOnce]]) is ONE
-  *    atomic transaction: its single write task upserts, deletes and
-  *    advances the cursor ([[JdbcCursorStore.putInTxn]]) before its one
-  *    commit, so the rows and the cursor land together or not at all;
-  *  - a LARGER pull is idempotent loads, then the cursor: the advance is
-  *    the last write, committed on its own connection after every
-  *    partition has committed. A crash between the loads and the cursor
-  *    commit re-pulls one batch into the idempotent MERGE — never loses
-  *    data, never double-applies it.
+  *    Spark task and ONE atomic transaction: the task reads the pull
+  *    once, straight from the source, and upserts, deletes and advances
+  *    the cursor ([[JdbcCursorStore.putInTxn]]) before its one commit,
+  *    so the rows and the cursor land together or not at all, and a
+  *    retried task reads the pull again inside a new transaction;
+  *  - a LARGER pull is pinned, then idempotent loads, then the cursor:
+  *    the advance is the last write, committed on its own connection
+  *    after every partition has committed. A crash between the loads
+  *    and the cursor commit re-pulls one batch into the idempotent
+  *    MERGE — never loses data, never double-applies it.
   */
 object JdbcExec {
 
@@ -465,20 +467,19 @@ object JdbcExec {
     * the window and its exchange has hash-partitioned them by PK, so a
     * key's upsert and delete never span partitions.
     *
-    * With `commitCursor = Some((store, obj))` the batch is first
-    * coalesced to ONE partition, so the window plans no exchange, and
-    * that partition's transaction also writes the largest non-null
-    * cursor it saw as `obj`'s cursor in `store` (none if every cursor
-    * was null) — rows and cursor commit together ([[syncOnce]]'s small
-    * pull).
-    *
     * Latest-wins is the one rule all syncs share: per key the row with
     * the largest cursor; on a cursor tie a tombstone beats a live row;
     * on a tie in both, the larger xxhash64 over the non-key columns (as
     * strings), so the survivor never depends on input order. Without a
     * `deletedField` every row is live; a row whose flag is null takes
     * neither route. The flag column is written like any other column.
-    * The cursor must be a bigint column. */
+    * The cursor must be a bigint column.
+    *
+    * With `commitCursor = Some((store, obj))` the `batch` is one
+    * partition ([[loadInOneTask]]'s), so the window plans no exchange,
+    * and that partition's transaction also writes the largest non-null
+    * cursor it saw as `obj`'s cursor in `store` (none if every cursor
+    * was null) — rows and cursor commit together. */
   private[graft] def load(spark: SparkSession, url: String, table: String,
                           pk: Seq[String], batch: DataFrame,
                           cursorField: String, deletedField: Option[String],
@@ -493,9 +494,8 @@ object JdbcExec {
       .partitionBy(pk.map(col): _*)
       .orderBy((col(cursorField).desc +: deletedField.map(col(_).desc).toSeq
         :+ tiebreak.desc): _*)
-    val latest = (if (commitCursor.isDefined) batch.coalesce(1) else batch)
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-      .drop("_rn")
+    val latest = batch.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1).drop("_rn")
     val schema = latest.schema
     val cursorAt = schema.fieldIndex(cursorField)
     val deletedAt = deletedField.map(schema.fieldIndex)
@@ -526,74 +526,105 @@ object JdbcExec {
     tally.value
   }
 
+  /** [[syncOnce]]'s first attempt at a pull, with no pin: ONE task reads
+    * the pull through `coalesce(1)`, buffering at most `batchSize + 1`
+    * rows. If it sees more than `batchSize` rows it writes nothing,
+    * opens no connection and flags the overflow, and the result is
+    * None. Otherwise the same task runs the [[load]] step with the
+    * cursor in its one transaction. The rows written, the rows counted
+    * and the cursor come from one read of the source, so the pull needs
+    * no snapshot; a retried task reads it again inside a new
+    * transaction. */
+  private def loadInOneTask(spark: SparkSession, url: String, table: String,
+                            pk: Seq[String], pull: DataFrame,
+                            cursorField: String, deletedField: Option[String],
+                            batchSize: Int, cursors: JdbcCursorStore,
+                            obj: String): Option[Loaded] = {
+    val overflow = spark.sparkContext.longAccumulator
+    // Not `pull.limit(batchSize + 1)`: every limit plan names its
+    // generated counter from a global sequence (`_limit_counter_<n>`),
+    // so each sync would generate, and Janino compile, new classes.
+    val bounded = pull.coalesce(1).mapPartitions { rows: Iterator[Row] =>
+      val head = rows.take(batchSize + 1).toArray
+      if (head.length > batchSize) { overflow.add(1); Iterator.empty }
+      else head.iterator
+    }(Encoders.row(pull.schema))
+    val loaded = load(spark, url, table, pk, bounded, cursorField,
+      deletedField, batchSize, Some((cursors, obj)))
+    if (overflow.sum == 0) Some(loaded) else None
+  }
+
   /** One incremental sync pass — the reference's extract→load loop
     * shape run end-to-end in the target database: read the stored
     * cursor, pull rows strictly past it, run the [[load]] step, and
     * commit the new cursor. `deletedField` may be null for an object
     * without a soft-delete flag (every row is then live).
     *
-    * How the cursor commits depends on the pull's row count, which the
-    * pin job counts as it materializes the pull ([[graft.Pin.pinCounted]]):
-    *  - `rows <= batchSize`: the pull loads as ONE partition. Its
-    *    latest-wins window needs no exchange (no shuffle-map job, no
-    *    adaptive re-plan), and the one write task's transaction
-    *    upserts, deletes and advances the cursor before its single
-    *    commit: the sync is atomic. `batchSize` is the threshold
-    *    because such a pull is one JDBC batch per statement on one
-    *    connection; splitting it over parallel writers buys no
-    *    throughput and costs an exchange, tasks, connections and
-    *    commits. One task measured faster at every pull from 500 to
-    *    20,000 rows into embedded Derby (SCALE.md, "single-task
-    *    load"), so the threshold errs towards the parallel path, which
-    *    a larger pull into a server that runs writers in parallel
-    *    needs;
-    *  - a larger pull keeps the parallel load — the window's hash
-    *    exchange and one transaction per partition — and the cursor
-    *    advances LAST, in its own transaction after every partition
-    *    committed. Correctness then rests on the keyed writes being
-    *    idempotent, so a crash before the cursor commit replays at most
-    *    one pull into convergent MERGEs/DELETEs.
+    * How the cursor commits depends on the pull's row count:
+    *  - `rows <= batchSize`: the pull loads in ONE task, straight from
+    *    the source ([[loadInOneTask]]). One Spark job, one stage, one
+    *    task: its latest-wins window needs no exchange (no shuffle-map
+    *    job, no adaptive re-plan), and its transaction upserts, deletes
+    *    and advances the cursor before its single commit: the sync is
+    *    atomic. `batchSize` is the threshold because such a pull is one
+    *    JDBC batch per statement on one connection; splitting it over
+    *    parallel writers buys no throughput and costs an exchange,
+    *    tasks, connections and commits. One task measured faster at
+    *    every pull from 500 to 20,000 rows into embedded Derby
+    *    (SCALE.md, "single-task load"), so the threshold errs towards
+    *    the parallel path, which a larger pull into a server that runs
+    *    writers in parallel needs;
+    *  - a larger pull overflows that attempt after `batchSize + 1` rows,
+    *    with nothing written. It is pulled again and EAGERLY pinned
+    *    ([[graft.Pin.pin]]: materialize now + cut lineage), then takes
+    *    the parallel load — the window's hash exchange and one
+    *    transaction per partition — and the cursor advances LAST, in
+    *    its own transaction after every partition committed.
+    *    Correctness then rests on the keyed writes being idempotent, so
+    *    a crash before the cursor commit replays at most one pull into
+    *    convergent MERGEs/DELETEs. The pin is needed there even though
+    *    only one action reads the pull: a retried shuffle map task or a
+    *    re-planned AQE stage would otherwise re-read a live source, and
+    *    the rows written, the rows counted and the cursor taken could
+    *    then disagree — rows the cursor has passed would be skipped for
+    *    good (ADVICE r13; r14→r15: persist() was lazy AND evictable, so
+    *    it was no snapshot either).
     *
     * A pull whose cursor values are all null fails loudly after its
-    * loads and commits no cursor (never a sentinel).
-    *
-    * The pulled batch is EAGERLY pinned (localCheckpoint:
-    * materialize now + cut lineage) even though only one action reads
-    * it: a retried shuffle map task or a re-planned AQE stage would
-    * otherwise re-read a live source, and the rows written, the rows
-    * counted and the cursor taken could then disagree — rows the cursor
-    * has passed would be skipped for good (ADVICE r13; r14→r15:
-    * persist() was lazy AND evictable, so it was no snapshot either).
-    * Returns the new cursor (the old one if the pull was empty; an
-    * empty pull writes nothing and opens no write connection). */
+    * loads and commits no cursor (never a sentinel). Returns the new
+    * cursor (the old one if the pull was empty; an empty pull writes
+    * nothing and opens no write connection). */
   def syncOnce(spark: SparkSession, url: String, table: String,
                pk: Seq[String], stateTable: String, obj: String,
                pull: Long => DataFrame, cursorField: String,
                deletedField: String, batchSize: Int = 1000): Long = {
     val cursors = new JdbcCursorStore(url, stateTable)
     val last = cursors.initAndGet(obj).getOrElse(Long.MinValue)
-    // spark.graft.pin.mode picks the pin (r16): `reliable` checkpoints
-    // to a DFS dir so the snapshot survives executor loss mid-sync —
-    // A/B numbers in SCALE.md §r16.2
-    val (batch, pulled) = graft.Pin.pinCounted(pull(last))
-    try {
-      val oneTask = pulled <= batchSize
-      val loaded = load(spark, url, table, pk, batch, cursorField,
-        Option(deletedField), batchSize,
-        if (oneTask) Some((cursors, obj)) else None)
-      if (loaded.rows == 0) last
-      else {
-        val newCursor = loaded.maxCursor.getOrElse(throw new IllegalStateException(
-          s"$obj: $cursorField is null on every pulled row; " +
-            "the cursor cannot advance"))
-        if (!oneTask) withConnection(url) { conn =>
-          conn.setAutoCommit(false)
-          try { cursors.putInTxn(conn, obj, newCursor); conn.commit() }
-          catch { case e: Throwable => conn.rollback(); throw e }
-        }
-        newCursor
-      }
-    } finally graft.Pin.unpin(batch)
+    val deleted = Option(deletedField)
+    def advance(loaded: Loaded): Option[Long] =
+      if (loaded.rows == 0) None
+      else Some(loaded.maxCursor.getOrElse(throw new IllegalStateException(
+        s"$obj: $cursorField is null on every pulled row; " +
+          "the cursor cannot advance")))
+    loadInOneTask(spark, url, table, pk, pull(last), cursorField, deleted,
+      batchSize, cursors, obj) match {
+      case Some(loaded) => advance(loaded).getOrElse(last)
+      case None =>
+        // spark.graft.pin.mode picks the pin (r16): `reliable` checkpoints
+        // to a DFS dir so the snapshot survives executor loss mid-sync —
+        // A/B numbers in SCALE.md §r16.2
+        val batch = graft.Pin.pin(pull(last))
+        try {
+          val next = advance(load(spark, url, table, pk, batch, cursorField,
+            deleted, batchSize))
+          next.foreach(c => withConnection(url) { conn =>
+            conn.setAutoCommit(false)
+            try { cursors.putInTxn(conn, obj, c); conn.commit() }
+            catch { case e: Throwable => conn.rollback(); throw e }
+          })
+          next.getOrElse(last)
+        } finally graft.Pin.unpin(batch)
+    }
   }
 }
 

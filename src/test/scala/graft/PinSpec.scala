@@ -115,8 +115,10 @@ class PinSpec extends SparkSpec {
         JdbcExec.ensureTable(conn, "p_tgt", schema, Seq("id"),
           JdbcExec.dialectFor(url))
       }
+      // 4 rows > batchSize = 2: the pull overflows one batch, so it is
+      // pinned and loaded in parallel (a pull within one batch has no pin)
       val c = JdbcExec.syncOnce(spark, url, "p_tgt", Seq("id"), "p_state",
-        "p", _ => batch, "cur", "is_deleted", batchSize = 10)
+        "p", _ => batch, "cur", "is_deleted", batchSize = 2)
       assert(new JdbcCursorStore(url, "p_state").get("p").contains(c))
       (c, JdbcExec.readTable(spark, url, "p_tgt").collect().toSeq
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))

@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.{JdbcCursorStore, JdbcExec}
 
-/** The fused write of [[JdbcExec.syncOnce]]: after the pin, ONE Spark
-  * action upserts each partition's live rows and deletes its tombstoned
-  * keys in one transaction, and tallies the row count and the max
-  * cursor. A pull larger than `batchSize` commits the cursor last, on
-  * its own connection; a pull within one batch is one write task whose
-  * transaction also commits the cursor. Latest-wins picks the same
-  * survivor whatever the input order.
+/** The fused write of [[JdbcExec.syncOnce]]: ONE Spark action upserts
+  * each partition's live rows and deletes its tombstoned keys in one
+  * transaction, and tallies the row count and the max cursor. A pull
+  * within one batch is one task, straight from the source, whose
+  * transaction also commits the cursor; a pull larger than `batchSize`
+  * overflows that task with nothing written, is pinned and loaded in
+  * parallel, and commits the cursor last, on its own connection.
+  * Latest-wins picks the same survivor whatever the input order.
   */
 class SyncOnceSpec extends SparkSpec {
   import spark.implicits._
@@ -221,9 +222,8 @@ class SyncOnceSpec extends SparkSpec {
     assert(new JdbcCursorStore(url, "fn_state").get("fn").isEmpty)
   }
 
-  test("one non-empty syncOnce in the default pin mode submits at most " +
-    "2 Spark jobs") {
-    assert(Pin.mode(spark) == "local")
+  test("one syncOnce of a non-empty pull within one batch submits " +
+    "exactly 1 Spark job") {
     val url = s"jdbc:derby:memory:fjobs${System.nanoTime};create=true"
     createTarget(url, "fj_tgt")
     val batch = Seq(
@@ -249,11 +249,128 @@ class SyncOnceSpec extends SparkSpec {
       finally sc.clearJobGroup()
       org.apache.spark.GraftTestBus.waitUntilEmpty(sc)
       assert(c == 130L)
-      // the pin and the one write task's job: a 4-row pull plans no
+      // the one write task's job: no pin job, and a 4-row pull plans no
       // exchange, so no shuffle-map job
-      assert(jobs.get() >= 1 && jobs.get() <= 2,
-        s"one syncOnce submitted ${jobs.get()} Spark jobs")
+      assert(jobs.get() == 1, s"one syncOnce submitted ${jobs.get()} Spark jobs")
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("pulls of exactly batchSize and of batchSize + 1 rows both land " +
+    "the latest-wins model") {
+    val url = s"jdbc:derby:memory:fbound${System.nanoTime};create=true"
+    createTarget(url, "fb_tgt")
+    val batchSize = 6
+    // 6 rows over 4 keys: an update of 1, a tombstone of 3, a null flag
+    val within: Seq[Ev] = Seq(
+      (1L, "a", 10L, Some(false)), (2L, "b", 11L, Some(false)),
+      (1L, "a2", 12L, Some(false)), (3L, "c", 13L, Some(false)),
+      (3L, "c", 14L, Some(true)), (4L, "d", 15L, None))
+    // 7 rows: updates of 1 and 2, a re-creation of 3, a tombstone of 4,
+    // and inserts of 5 (twice) and 6
+    val over: Seq[Ev] = Seq(
+      (2L, "b2", 20L, Some(false)), (3L, "c2", 21L, Some(false)),
+      (5L, "e", 22L, Some(false)), (1L, "a3", 16L, Some(false)),
+      (5L, "e2", 23L, Some(false)), (4L, "d2", 24L, Some(true)),
+      (6L, "f", 25L, Some(false)))
+    assert(within.size == batchSize && over.size == batchSize + 1)
+    var source = within
+    def sync(): Long = JdbcExec.syncOnce(spark, url, "fb_tgt", Seq("id"),
+      "fb_state", "fb",
+      past => source.toDF("id", "name", "cur", "is_deleted").filter($"cur" > past),
+      "cur", "is_deleted", batchSize = batchSize)
+    def target: Map[Long, (String, Long)] =
+      JdbcExec.readTable(spark, url, "fb_tgt").collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    assert(sync() == 15L)
+    assert(target == Map(1L -> (("a2", 12L)), 2L -> (("b", 11L))))
+    source = within ++ over
+    assert(sync() == 25L)
+    assert(new JdbcCursorStore(url, "fb_state").get("fb").contains(25L))
+    assert(target == Map(1L -> (("a3", 16L)), 2L -> (("b2", 20L)),
+      3L -> (("c2", 21L)), 5L -> (("e2", 23L)), 6L -> (("f", 25L))))
+  }
+
+  test("a pull within one batch commits once, on its load connection; " +
+    "a larger one writes nothing in its one-task attempt and commits " +
+    "its cursor last, on its own connection") {
+    RecordingJdbc.register()
+    val url = s"jdbc:postgresql://fake/fov${System.nanoTime}"
+    val db = RecordingJdbc.db(url)
+    createTarget(url, "fv_tgt")
+    var source: Seq[Ev] = Seq((1L, "a", 100L, Some(false)), (2L, "b", 110L, Some(false)))
+    def sync(): Long = withConf("spark.sql.shuffle.partitions", "1") {
+      JdbcExec.syncOnce(spark, url, "fv_tgt", Seq("id"), "fv_state", "fv",
+        past => source.toDF("id", "name", "cur", "is_deleted").filter($"cur" > past),
+        "cur", "is_deleted", batchSize = 2)
+    }
+    def conns(ev: Seq[String]): Seq[String] = ev.map(_.split(" ")(0)).distinct
+    def writers(ev: Seq[String]): Seq[String] =
+      ev.filter(_.endsWith(" setAutoCommit(false)")).map(_.split(" ")(0))
+
+    val before1 = db.seq.size
+    assert(sync() == 110L && db.cursors.get("fv") == 110L)
+    val ev1 = db.seq.drop(before1)
+    // the cursor read, then one write connection whose one commit
+    // carries the rows and the cursor
+    assert(conns(ev1).size == 2 && writers(ev1).size == 1, ev1.mkString("\n"))
+    val load1 = writers(ev1).head
+    assert(ev1.filter(_.endsWith(" commit")) == Seq(s"$load1 commit"), ev1.mkString("\n"))
+    val on1 = ev1.filter(_.startsWith(s"$load1 "))
+    assert(on1.indexWhere(_.contains("executeBatch: INSERT INTO \"fv_tgt\"")) <
+      on1.indexWhere(_.contains("executeUpdate[INSERT INTO \"fv_state\"")), on1)
+
+    // 3 rows past the cursor > batchSize = 2
+    source = source ++ Seq[Ev]((3L, "c", 120L, Some(false)),
+      (1L, "a2", 130L, Some(false)), (2L, "b", 140L, Some(true)))
+    val before2 = db.seq.size
+    assert(sync() == 140L && db.cursors.get("fv") == 140L)
+    val ev2 = db.seq.drop(before2)
+    // the cursor read, the one partition's load, the cursor: the
+    // overflowing attempt opened no connection
+    assert(conns(ev2).size == 3, ev2.mkString("\n"))
+    val Seq(load2, cur2) = writers(ev2)
+    assert(ev2.filter(_.endsWith(" commit")) == Seq(s"$load2 commit", s"$cur2 commit"),
+      ev2.mkString("\n"))
+    assert(!ev2.exists(e => e.startsWith(s"$load2 ") && e.contains("fv_state")),
+      ev2.mkString("\n"))
+    val onCur = ev2.filter(_.startsWith(s"$cur2 "))
+    assert(onCur.exists(_.contains("executeUpdate[UPDATE \"fv_state\"")) &&
+      !onCur.exists(_.contains("fv_tgt")), onCur)
+    // every upsert and delete of the pull was bound once, on the load
+    assert(ev2.filter(_.contains("bind[INSERT INTO \"fv_tgt\"")).map(_.split("\\] ").last)
+      .sorted == Seq("(1,a2,130,false)", "(3,c,120,false)"), ev2.mkString("\n"))
+    assert(ev2.filter(_.contains("bind[DELETE FROM \"fv_tgt\"")).map(_.takeRight(7)) ==
+      Seq("(2,140)"), ev2.mkString("\n"))
+  }
+
+  test("the one-task attempt reads at most batchSize + 1 rows of a pull " +
+    "that overflows it") {
+    val url = s"jdbc:derby:memory:fread${System.nanoTime};create=true"
+    createTarget(url, "fr_tgt")
+    val batchSize = 5
+    val total = 10 * batchSize
+    val drawn = spark.sparkContext.longAccumulator("rows drawn")
+    def source = spark.sparkContext.parallelize(Seq(0), 1)
+      .flatMap(_ => (1L to total.toLong).iterator.map { i => drawn.add(1); i })
+      .toDF("id")
+      .withColumn("name", concat(lit("v"), $"id".cast(StringType)))
+      .withColumn("cur", $"id")
+      .withColumn("is_deleted", lit(false))
+    // rows drawn so far, read at each pull: the one-task attempt's draw
+    // is complete before the fallback pulls again
+    val drawnAtPull = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def sync(): Long = JdbcExec.syncOnce(spark, url, "fr_tgt", Seq("id"),
+      "fr_state", "fr", past => {
+        drawnAtPull += drawn.sum
+        source.filter($"cur" > past)
+      }, "cur", "is_deleted", batchSize = batchSize)
+    assert(sync() == total.toLong)
+    // two pulls: the bounded attempt, then the pinned one
+    val Seq(atFirst, atSecond) = drawnAtPull.toSeq
+    assert(atFirst == 0L)
+    assert(atSecond <= batchSize + 1,
+      s"the one-task attempt drew $atSecond rows, more than ${batchSize + 1}")
+    assert(JdbcExec.readTable(spark, url, "fr_tgt").count() == total)
   }
 
   test("rows equal in (pk, cursor, flag) with different payloads land " +
