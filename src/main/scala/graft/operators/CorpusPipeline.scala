@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Par, Tables}
+import graft.{Par, StoredArtifact, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -220,71 +220,49 @@ object CorpusPipeline {
             lmPrefix: Option[String] = None): DataFrame =
     ledgerOf(StageNames, docs0 +: stages(s, docs0, gate, lmPrefix))
 
-  /** Once-per-(session, sfDir) build of the incremental pipeline's
-    * standing artifacts: the dedup store ([[LlmOps.storedArtifactPrefix]]
-    * — postings/sizes/df of the 80% base split) plus the two tiny
-    * stage tables a delta run needs so it never scans base text —
-    * `<prefix>_langprof` (the standing corpus's per-language token
-    * profile) and `<prefix>_benchsh` (the fixed benchmark-shingle
-    * registry, the 5 lowest doc_ids). PipelineIncSpec pins the resulting plan
-    * property: every `documents` access in the delta run is the delta
-    * split. */
-  /** Once-per-(session, sfDir) build of the pipeline's bigram-LM
-    * artifact: train on the 80% id-bucket split of the corpus (the
-    * exact train set the inline gate uses), persist the two
-    * vocabulary-sized count tables `<prefix>_uni(cur, uc)` /
-    * `<prefix>_big(prev, cur, bc)`, and score EVERY corpus doc into
-    * `<prefix>_scores(doc_id, lm_score)` — per-doc perplexity as
-    * corpus-snapshot metadata (the CCNet shape), so audits and gates
-    * read a catalog leaf instead of re-training/re-scoring.
-    * Deliberately DECOUPLED from [[incrementalPrefix]] — reading the
-    * LM must not trigger the (much heavier) dedup-store build. */
-  private val lmPrefixes =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
+  /** The pipeline's bigram-LM artifact: train on the 80% id-bucket
+    * split of the corpus (the exact train set the inline gate uses),
+    * persist the two vocabulary-sized count tables
+    * `<prefix>_uni(cur, uc)` / `<prefix>_big(prev, cur, bc)`, and score
+    * EVERY corpus doc into `<prefix>_scores(doc_id, lm_score)` —
+    * per-doc perplexity as corpus-snapshot metadata (the CCNet shape),
+    * so audits and gates read a catalog leaf instead of
+    * re-training/re-scoring. A later session finds the tables and skips
+    * the train entirely ([[StoredArtifact.Catalog]]; LmArtifactSpec
+    * asserts the re-entry runs ZERO jobs). Deliberately DECOUPLED from
+    * [[incrementalPrefix]] — reading the LM must not trigger the (much
+    * heavier) dedup-store build. */
   private[graft] def lmArtifactPrefix(s: SparkSession, d: String): String =
-    lmPrefixes.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      // corpus-fingerprinted (r19, ADVICE r18 item 2): the sanitized
-      // dir alone collides across corpora and regenerations
-      val prefix = "graft_lm_" + DedupArtifacts.corpusSlug(s, d,
-        Seq("documents"))
-      // A LATER SESSION finds the catalog tables and skips the train
-      // entirely (the trainedBpeMerges / centroid-classifier contract,
-      // r18): the artifact is corpus-snapshot metadata, rebuilt on
-      // index cadence — never implicitly. LmArtifactSpec asserts the
-      // re-entry runs ZERO jobs. (In-process memo above covers repeat
-      // calls inside one session.)
-      val have = Seq("_uni", "_big", "_scores")
-        .forall(sfx => s.catalog.tableExists(prefix + sfx))
-      if (!have) {
-        val txt = Par.spread(Tables.documents(s, d))
-          .select(col("doc_id"), col("text"))
-        val (uni, big) = TextOps.bigramLmTrain(
-          txt.filter(TextOps.splitBucket(col("doc_id")) < 80))
-        DedupArtifacts.reset(s, s"${prefix}_uni")
-        graft.Caches.persisted(uni)
-          .write.format("parquet").saveAsTable(s"${prefix}_uni")
-        DedupArtifacts.reset(s, s"${prefix}_big")
-        graft.Caches.persisted(big)
-          .write.format("parquet").saveAsTable(s"${prefix}_big")
-        DedupArtifacts.reset(s, s"${prefix}_scores")
-        TextOps.bigramLmScoreWith(uni, big, txt)
-          .write.format("parquet").saveAsTable(s"${prefix}_scores")
-      }
-      prefix
-    })
+    StoredArtifact(s, d, "lm", Seq("documents"),
+        tables = Seq("_uni", "_big", "_scores")) { prefix =>
+      val txt = Par.spread(Tables.documents(s, d))
+        .select(col("doc_id"), col("text"))
+      val (uni, big) = TextOps.bigramLmTrain(
+        txt.filter(TextOps.splitBucket(col("doc_id")) < 80))
+      graft.Caches.persisted(uni)
+        .write.format("parquet").saveAsTable(s"${prefix}_uni")
+      graft.Caches.persisted(big)
+        .write.format("parquet").saveAsTable(s"${prefix}_big")
+      TextOps.bigramLmScoreWith(uni, big, txt)
+        .write.format("parquet").saveAsTable(s"${prefix}_scores")
+    }
 
-  private val incPrefixes =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
+  /** The incremental pipeline's standing artifacts: the dedup store
+    * ([[LlmOps.storedArtifactPrefix]] — postings/sizes/df of the 80%
+    * base split) plus the two tiny stage tables a delta run needs so it
+    * never scans base text — `<prefix>_langprof` (the standing corpus's
+    * per-language token profile) and `<prefix>_benchsh` (the fixed
+    * benchmark-shingle registry, the 5 lowest doc_ids). Rewritten per
+    * session with the store ([[StoredArtifact.PerSession]]).
+    * PipelineIncSpec pins the resulting plan property: every
+    * `documents` access in the delta run is the delta split. */
   private[graft] def incrementalPrefix(s: SparkSession, d: String): String =
-    incPrefixes.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
+    LlmOps.incStore(s, d, Seq("_langprof", "_benchsh")) { _ =>
       val prefix = LlmOps.storedArtifactPrefix(s, d)
       val docs = LlmOps.dedupDocs(s, d)
       val base = docs.filter(TextOps.splitBucket(col("doc_id")) < 80)
       writeAuxTables(s, docs, base, prefix)
-      prefix
-    })
+    }
 
   /** The two tiny stage tables next to a dedup artifact store:
     * `<prefix>_langprof` from the standing corpus, `<prefix>_benchsh`
@@ -394,35 +372,24 @@ object CorpusPipeline {
   val IncStageNames: Seq[String] =
     Seq("quality", "langid", "dedup_incremental", "decontaminate")
 
-  /** Once-per-(session, corpus, gate) STORED audit ledger (r18,
-    * VERDICT r17 item 1): the run ledger is corpus-SNAPSHOT metadata —
-    * a production pipeline writes it once when the corpus is indexed
-    * and every audit consumer reads the table; only a new snapshot
-    * re-runs the stages. The prior per-call form re-pinned all five
-    * stage frames on EVERY audit (each pin is a fresh RDD leaf, so no
-    * plan-cache reuse is possible across calls — measured 4.36 s/call
-    * at sf0.1, the suite's slowest floor, with the stage work
-    * re-executed each time). Same contract as [[lmArtifactPrefix]] /
-    * BPE merges / the centroid classifier: a later session finds the
-    * catalog table and skips the build entirely (AuditArtifactSpec
-    * asserts zero jobs on re-entry); values are the exact [[audit]]
-    * output, so the oracle hash cannot move. */
-  private val auditTables =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]()
-
+  /** STORED audit ledger per quality gate (r18, VERDICT r17 item 1):
+    * the run ledger is corpus-SNAPSHOT metadata — a production pipeline
+    * writes it once when the corpus is indexed and every audit consumer
+    * reads the table; only a new snapshot re-runs the stages. The prior
+    * per-call form re-pinned all five stage frames on EVERY audit (each
+    * pin is a fresh RDD leaf, so no plan-cache reuse is possible across
+    * calls — measured 4.36 s/call at sf0.1, the suite's slowest floor).
+    * A later session finds the table and skips the build
+    * ([[StoredArtifact.Catalog]]; AuditArtifactSpec asserts zero jobs on
+    * re-entry); values are the exact [[audit]] output, so the oracle
+    * hash cannot move. Knob: the gate. */
   private[graft] def auditLedgerTable(s: SparkSession, d: String,
                                       gate: String): String =
-    auditTables.computeIfAbsent((ScaleOps.sessionId(s), d, gate), { _ =>
-      val table = "graft_audit_" +
-        DedupArtifacts.corpusSlug(s, d, Seq("documents")) + s"_$gate"
-      if (!s.catalog.tableExists(table)) {
-        val led = audit(s, Par.spread(Tables.documents(s, d)), Some(gate),
-          if (gate == "lm") Some(lmArtifactPrefix(s, d)) else None)
-        DedupArtifacts.reset(s, table)
-        led.write.format("parquet").saveAsTable(table)
-      }
-      table
-    })
+    StoredArtifact(s, d, "audit", Seq("documents"), Seq(gate)) { table =>
+      audit(s, Par.spread(Tables.documents(s, d)), Some(gate),
+        if (gate == "lm") Some(lmArtifactPrefix(s, d)) else None)
+        .write.format("parquet").saveAsTable(table)
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "j_pipeline_audit" -> { (s, d) =>

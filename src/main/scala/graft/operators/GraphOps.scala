@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Caches, Tables}
+import graft.{Caches, StoredArtifact, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,7 +50,7 @@ object GraphOps {
     e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  /** Once-per-(session, corpus) BUCKETED (src, dst, outdeg) edge store
+  /** BUCKETED (src, dst, outdeg) edge store
     * (r19, VERDICT r18 item 4): the c_join_bucketed discipline applied
     * to the graph family. The in-flight form rebuilt + repartitioned
     * the edge frame per session and leaned on the persisted frame's
@@ -60,19 +60,13 @@ object GraphOps {
     * STRUCTURALLY (GraphOpsSpec pins the plan), every degree
     * aggregation collapses onto the bucket key, and a later SESSION
     * IN THE SAME JVM pays a metadata probe instead of the
-    * distinct+join+shuffle (tableExists re-entry; r20 doc fix per the
-    * r19 audit — the catalog is in-memory and session-scoped, so a
-    * fresh JVM rebuilds the store; cross-RUN amortization needs an
-    * external metastore). Values are the exact in-flight
-    * (src, dst, outdeg) rows, so the oracle hashes cannot move. At
-    * 100 TB this is the standing edge table a graph pipeline
-    * maintains anyway — write-once shuffle, amortized over every
-    * superstep of every query.
-    * r20 (ADVICE r19 item 4): keyed by (weak session id, corpus) —
-    * the ScaleOps.sessionId convention — so the memo never strongly
-    * retains a SparkSession for the JVM lifetime. */
-  private val edgeStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+    * distinct+join+shuffle ([[StoredArtifact.Catalog]]; a fresh JVM
+    * rebuilds the store, cross-RUN amortization needs an external
+    * metastore). Values are the exact in-flight (src, dst, outdeg)
+    * rows, so the oracle hashes cannot move. At 100 TB this is the
+    * standing edge table a graph pipeline maintains anyway —
+    * write-once shuffle, amortized over every superstep of every
+    * query. */
 
   /** Edge-store bucket count (r20, VERDICT r19 item 5): DATA-derived,
     * not core-derived. The graph family's bucket-local consumers are
@@ -97,34 +91,32 @@ object GraphOps {
         math.max(8, math.min(65536, (bytes / (128L << 20)).toInt))
       }
 
-  private[graft] def edgeStoreTable(s: SparkSession, d: String): String =
-    edgeStores.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      val table = "graft_edges_" +
-        DedupArtifacts.corpusSlug(s, d, Seq("lineitem"))
-      if (!s.catalog.tableExists(table)) {
+  /** The resolved edge store: its table, and its node count once
+    * PageRank has counted it (r19 opt round: re-counting launched one
+    * extra driver job on every invocation). The store is immutable
+    * under its name, so the count can never go stale. */
+  private final class EdgeStore(val table: String) {
+    @volatile private var nodes = -1L
+    def nodeCount(edgesDeg: DataFrame): Long = {
+      if (nodes < 0)
+        nodes = edgesDeg.agg(countDistinct(col("src"))).head.getLong(0)
+      nodes
+    }
+  }
+
+  private def edgeStore(s: SparkSession, d: String): EdgeStore =
+    StoredArtifact.resolve(s, d, "edges", Seq("lineitem"))(
+      build = { table =>
         val e = edges(s, d)
         val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-        DedupArtifacts.reset(s, table)
         graft.sources.Layout.writeBucketed(e.join(deg, "src"), table,
           "src", edgeBuckets(s, d))
-      }
-      table
-    })
+        new EdgeStore(table)
+      },
+      reuse = new EdgeStore(_))
 
-  /** Node count of the stored edge graph, memoized per
-    * (session, corpus) next to the edge store itself (r19 opt round —
-    * the Tables.rowCount convention: a metadata-sized scalar of a
-    * write-once session artifact; re-counting it launched one extra
-    * driver job on every invocation). The store is immutable for the
-    * session, so the memo can never go stale. */
-  private val nodeCounts =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
-
-  private def nodeCount(s: SparkSession, d: String,
-                        edgesDeg: DataFrame): Long =
-    nodeCounts.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      edgesDeg.agg(countDistinct(col("src"))).head.getLong(0)
-    })
+  private[graft] def edgeStoreTable(s: SparkSession, d: String): String =
+    edgeStore(s, d).table
 
   /** Five exact fixed-point PageRank iterations (damping 0.85) over
     * the symmetric edge set; all-integer arithmetic, see scaladoc.
@@ -148,8 +140,9 @@ object GraphOps {
     // PRESERVES the bucket-derived partitioning, so the pin costs one
     // materialization and removes four parquet decodes (released by
     // the harness's Caches.release)
-    val edgesDeg = Caches.persisted(s.table(edgeStoreTable(s, d)))
-    val n = nodeCount(s, d, edgesDeg)
+    val store = edgeStore(s, d)
+    val edgesDeg = Caches.persisted(s.table(store.table))
+    val n = store.nodeCount(edgesDeg)
     val base = 150000000000L / n // 0.15 damping share per node
     // node set = distinct src (symmetrized edges: every node appears
     // as a src) — a bucket-local distinct over the store

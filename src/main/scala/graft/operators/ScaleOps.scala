@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, Tables}
+import graft.{Det, StoredArtifact, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,70 +72,34 @@ object ScaleOps {
       xxhash64(col(probeKey))))
   }
 
-  /** Once-per-(session, sfDir) bucketed catalog twins of orders and
-    * lineitem for `c_join_bucketed` — both bucketed (and bucket-sorted)
-    * on the join key with the SAME bucket count
-    * ([[LlmOps.storeBuckets]]: conf override or one bucket per core —
-    * the r7 IncScale lesson; a fixed 8 under-parallelizes every later
-    * read on a large box), so the join and the downstream key-grouped
-    * aggregation plan with ZERO Exchange: the write-side shuffle
-    * happened once at bucket time and every subsequent join/agg on the
-    * key reuses it (the DedupArtifacts / AnnIndex store discipline
-    * applied to the plain TPC-H fact join).
-    *
-    * Memo mechanics (ADVICE r13): keyed by (session id, sfDir) — a
-    * string pair, so no SparkSession instance is pinned for the JVM
-    * lifetime — and the table build runs under the memo instance's own
-    * lazy-init lock, never the map's bin lock. The builder closure is
-    * dropped after the build so the captured session is released. The
-    * session id is a UUID issued per live session object through a
-    * WeakHashMap (r15, ADVICE r14: `System.identityHashCode` can
-    * collide between two live sessions, or be REUSED after GC by a
-    * session with a different `spark.graft.store.buckets` — a
-    * colliding session silently skipped its build and read
-    * mis-bucketed tables); weak keys keep the no-JVM-lifetime-pin
-    * property. */
-  private final class StoreMemo(b: () => (String, String)) {
-    @volatile private var builder: () => (String, String) = b
-    lazy val names: (String, String) = {
-      val n = builder(); builder = null; n
-    }
-  }
-
-  private val sessionIds =
-    new java.util.WeakHashMap[SparkSession, String]()
-
-  private[graft] def sessionId(s: SparkSession): String =
-    sessionIds.synchronized {
-      sessionIds.computeIfAbsent(
-        s, _ => java.util.UUID.randomUUID().toString)
-    }
-
-  private val bucketedJoinStores =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), StoreMemo]()
-
+  /** Bucketed catalog twins of orders and lineitem for
+    * `c_join_bucketed` — both bucketed (and bucket-sorted) on the join
+    * key with the SAME bucket count ([[LlmOps.storeBuckets]]: conf
+    * override or one bucket per core — the r7 IncScale lesson; a fixed
+    * 8 under-parallelizes every later read on a large box), so the join
+    * and the downstream key-grouped aggregation plan with ZERO
+    * Exchange: the write-side shuffle happened once at bucket time and
+    * every subsequent join/agg on the key reuses it (the DedupArtifacts
+    * / AnnIndex store discipline applied to the plain TPC-H fact join).
+    * Their value is the layout, which the session's bucket count
+    * shapes, so each session rewrites them on first resolution
+    * ([[StoredArtifact.PerSession]]). */
   private[graft] def bucketedJoinStore(s: SparkSession,
-                                       d: String): (String, String) =
-    bucketedJoinStores.computeIfAbsent(
-      (sessionId(s), d), { _ =>
-      new StoreMemo(() => {
-        val slug = DedupArtifacts.corpusSlug(s, d,
-          Seq("orders", "lineitem"))
-        val to = s"graft_bkt_orders_$slug"
-        val tl = s"graft_bkt_lineitem_$slug"
-        val n = LlmOps.storeBuckets(s)
-        DedupArtifacts.reset(s, to)
-        DedupArtifacts.reset(s, tl)
-        graft.sources.Layout.writeBucketed(
-          Tables.orders(s, d).select("o_orderkey", "o_totalprice"),
-          to, "o_orderkey", nBuckets = n)
-        graft.sources.Layout.writeBucketed(
-          Tables.lineitem(s, d)
-            .select("l_orderkey", "l_quantity", "l_extendedprice"),
-          tl, "l_orderkey", nBuckets = n)
-        (to, tl)
-      })
-    }).names
+                                       d: String): (String, String) = {
+    val p = StoredArtifact(s, d, "bkt", Seq("orders", "lineitem"),
+        tables = Seq("_orders", "_lineitem"),
+        reentry = StoredArtifact.PerSession) { prefix =>
+      val n = LlmOps.storeBuckets(s)
+      graft.sources.Layout.writeBucketed(
+        Tables.orders(s, d).select("o_orderkey", "o_totalprice"),
+        s"${prefix}_orders", "o_orderkey", nBuckets = n)
+      graft.sources.Layout.writeBucketed(
+        Tables.lineitem(s, d)
+          .select("l_orderkey", "l_quantity", "l_extendedprice"),
+        s"${prefix}_lineitem", "l_orderkey", nBuckets = n)
+    }
+    (s"${p}_orders", s"${p}_lineitem")
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Bucketed co-located fact join (§2 r13): orders ⋈ lineitem on the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{StoredArtifact, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -246,107 +246,77 @@ object Scans {
     }
   )
 
-  /** Once-per-(session, sfDir) build of the corrupt-JSONL fixture
-    * (ADVICE r7): the previous fixed /tmp path was re-written on EVERY
-    * query build (overwrite + coalesce(1)), so two concurrent sessions
-    * over the same fixture dir — or a rebuild racing a prior, still
-    * unexecuted DataFrame over the same files — could read a
-    * half-overwritten directory. The path now carries a per-session
-    * token (no cross-session collision) and the write is memoized per
-    * (session, sfDir) (no rebuild race within a session), the same
-    * amortization [[graft.operators.LlmOps.storedArtifactPrefix]] uses
-    * for the dedup artifacts. */
-  // once-per-(session, sfDir) Hive-partitioned documents layout for
-  // a_partitioned_prune — the write is the one-time table layout, the
-  // query is the pruned read
-  private val partitionedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  // The five layouts below are scratch directories
+  // (StoredArtifact.Scratch): `/tmp/graft_<kind>_<app id>_<corpus slug>`,
+  // rewritten on the first resolution in every session. The app id
+  // keeps two JVMs on one fixture (Verify next to a Bench run) out of
+  // each other's directory: a rewrite must never race another
+  // process's reader, and compact's rename/recover protocol is
+  // single-writer.
+  private def scratch(s: SparkSession, d: String, kind: String,
+                      input: String)(write: String => Unit): String =
+    StoredArtifact(s, d, kind, Seq(input),
+      reentry = StoredArtifact.Scratch)(write)
 
+  // Hive-partitioned documents layout for a_partitioned_prune — the
+  // write is the one-time table layout, the query is the pruned read
   private def partitionedDocs(s: SparkSession, d: String): String =
-    partitionedLayouts.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      val out = s"/tmp/graft_part_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+    scratch(s, d, "part", "documents") { out =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("lang"))
-        .write.mode("overwrite").partitionBy("lang").parquet(out)
-      out
-    })
+        .write.partitionBy("lang").parquet(out)
+    }
 
-  // once-per-(session, sfDir) two-generation snapshot layout for
-  // a_source_schema_merge: snap=1 predates the `source` column,
-  // snap=2 carries it (ids offset so the generations are disjoint)
-  private val snapshotRoots =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
+  // two-generation snapshot layout for a_source_schema_merge: snap=1
+  // predates the `source` column, snap=2 carries it (ids offset so the
+  // generations are disjoint)
   private def snapshotLayouts(s: SparkSession, d: String): String =
-    snapshotRoots.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      val out = s"/tmp/graft_snap_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+    scratch(s, d, "snap", "documents") { out =>
       val docs = Tables.documents(s, d)
       docs.select(col("doc_id"), col("lang"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$out/snap=1")
+        .write.parquet(s"$out/snap=1")
       docs.select((col("doc_id") + 1000000L).as("doc_id"), col("lang"),
           col("n_chars"), col("source"))
-        .write.mode("overwrite").parquet(s"$out/snap=2")
-      out
-    })
+        .write.parquet(s"$out/snap=2")
+    }
 
-  // once-per-(session, sfDir) z-ordered lineitem layout for
-  // a_layout_zorder_read: the write is the one-time clustering pass
-  // (one approxQuantile pass + ONE range exchange on the z-value —
-  // never a global sort), the query is the two-dimensional pruned read
-  private val zorderedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
+  // z-ordered lineitem layout for a_layout_zorder_read: the write is
+  // the one-time clustering pass (one approxQuantile pass + ONE range
+  // exchange on the z-value — never a global sort), the query is the
+  // two-dimensional pruned read
   private def zorderedLineitem(s: SparkSession, d: String): String =
-    zorderedLayouts.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      // appId in the path: two JVMs (driver Verify + a profiling run)
-      // must never share a layout dir — compact's rename/recover
-      // protocol is single-writer
-      val out = s"/tmp/graft_zord_${s.sparkContext.applicationId}_" +
-        d.replaceAll("[^a-zA-Z0-9]", "_")
+    scratch(s, d, "zord", "lineitem") { out =>
       graft.sources.Layout.writeZOrdered(
         Tables.lineitem(s, d).select("l_orderkey", "l_returnflag",
           "l_quantity", "l_extendedprice"),
         out, "l_quantity", "l_extendedprice", nFiles = 8)
-      out
-    })
+    }
 
-  // once-per-(session, sfDir) fragment-then-compact orders layout for
-  // a_layout_compact_read: 64 tiny files written first (the
-  // incremental-sink debris), Layout.compact rewrites them at
-  // rows/4 rows per file (~4 files, range-clustered) through the
-  // crash-safe double-rename
-  private val compactedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
+  // fragment-then-compact orders layout for a_layout_compact_read: 64
+  // tiny files written first (the incremental-sink debris),
+  // Layout.compact rewrites them at rows/4 rows per file (~4 files,
+  // range-clustered) through the crash-safe double-rename
   private def compactedOrders(s: SparkSession, d: String): String =
-    compactedLayouts.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      val out = s"/tmp/graft_cmpct_${s.sparkContext.applicationId}_" +
-        d.replaceAll("[^a-zA-Z0-9]", "_")
+    scratch(s, d, "cmpct", "orders") { out =>
       val o = Tables.orders(s, d)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
-      o.repartition(64).write.mode("overwrite").parquet(out)
+      o.repartition(64).write.parquet(out)
       val target = math.max(1L, o.count() / 4)
       graft.sources.Layout.compact(s, out, "o_orderkey", target)
-      out
-    })
+    }
 
-  private val corruptFixtures =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
+  // the fixture as JSON lines with every 7th line truncated mid-JSON,
+  // for a_source_jsonl_corrupt
   private def corruptFixture(s: SparkSession, d: String): String =
-    corruptFixtures.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      val path = "/tmp/graft_jsonl_corrupt_" +
-        java.util.UUID.randomUUID().toString.take(8) + "_" +
-        d.replaceAll("[^a-zA-Z0-9]+", "_")
+    scratch(s, d, "jsonl_corrupt", "documents") { path =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           to_json(struct(col("doc_id"), col("n_chars"))).as("line"))
         .select(when(col("doc_id") % 7 === 0,
             expr("substring(line, 1, length(line) - 5)"))
           .otherwise(col("line")).as("value"))
-        .coalesce(1).write.mode("overwrite").text(path)
-      path
-    })
+        .coalesce(1).write.text(path)
+    }
 
   /** TPC-H Q3 shape in the portable ANSI subset: decimal-cast sum for
     * cross-engine determinism, TIMESTAMP literals, total-order tail.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, Par, Tables}
+import graft.{Det, Par, StoredArtifact, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -247,6 +247,9 @@ object TextOps {
         col("dist"))
   }
 
+  private[graft] def bpeTable(s: SparkSession, d: String): String =
+    StoredArtifact.name(s, d, "bpe", Seq("documents"))
+
   /** Once-per-corpus BPE merge-table training for
     * `j_text_bpe_tokenize`: one distributed word-frequency aggregation,
     * then a bounded driver-side merge loop over the top-512 words
@@ -255,28 +258,15 @@ object TextOps {
     * flops). Top-V selection is deterministic (freq desc, word asc), so
     * the learned table is identical across runs and partitionings.
     *
-    * The learned table is a STORED artifact like the dedup/ANN stores
-    * (`graft_bpe_<dir>(rank, lhs, rhs)`): a tokenizer is trained once
+    * The learned table is a STORED artifact
+    * (`graft_bpe_<slug>(rank, lhs, rhs)`): a tokenizer is trained once
     * per corpus and applied by every batch and session after that — a
-    * later session finds the table and skips the train entirely.
-    * In-process memoization sits on top for repeat calls. */
-  private val bpeMerges =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  // corpus-fingerprinted name (r19, ADVICE r18): see
-  // DedupArtifacts.corpusSlug — sanitized-dir collisions and in-place
-  // fixture regeneration can no longer serve a stale merge table
-  private[graft] def bpeTable(s: SparkSession, d: String): String =
-    "graft_bpe_" + DedupArtifacts.corpusSlug(s, d, Seq("documents"))
-
+    * later session finds the table and skips the train
+    * ([[StoredArtifact.Catalog]]). The resolved value is the encoded
+    * merge string, so a repeat call runs no Spark job. */
   private[graft] def trainedBpeMerges(s: SparkSession, d: String): String =
-    bpeMerges.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      val table = bpeTable(s, d)
-      if (s.catalog.tableExists(table)) {
-        graft.functions.Bpe.encodeMerges(
-          s.table(table).orderBy("rank").collect()
-            .map(r => (r.getString(1), r.getString(2))).toSeq)
-      } else {
+    StoredArtifact.resolve(s, d, "bpe", Seq("documents"))(
+      build = { table =>
         val wordFreq = Tables.documents(s, d)
           .select(explode(filter(split(lower(col("text")),
             graft.functions.Bpe.SplitRegex), w => length(w) > 0)).as("word"))
@@ -285,45 +275,35 @@ object TextOps {
           .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
         val merges = graft.functions.Bpe.train(wordFreq, nMerges = 200)
         import s.implicits._
-        DedupArtifacts.reset(s, table)
         merges.zipWithIndex
           .map { case ((a, b), i) => (i, a, b) }
           .toDF("rank", "lhs", "rhs")
           .write.format("parquet").saveAsTable(table)
         graft.functions.Bpe.encodeMerges(merges)
-      }
-    })
+      },
+      reuse = table => graft.functions.Bpe.encodeMerges(
+        s.table(table).orderBy("rank").collect()
+          .map(r => (r.getString(1), r.getString(2))).toSeq))
 
-  /** Once-per-(session, corpus) STORED Cavnar–Trenkle rank profile
-    * (r19, VERDICT r18 item 3): the langs×40-row chargram profile is
-    * corpus-snapshot metadata exactly like the bigram LM and the BPE
-    * merge table — SURVEY §R has called it "a stored-artifact
-    * candidate" since the entry landed, and the sf100z decade measured
-    * the per-invocation train (one corpus-proportional trigram
+  /** STORED Cavnar–Trenkle rank profile (r19, VERDICT r18 item 3): the
+    * langs×40-row chargram profile is corpus-snapshot metadata exactly
+    * like the bigram LM and the BPE merge table, and the sf100z decade
+    * measured the per-invocation train (one corpus-proportional trigram
     * explode + count) dominating the 190 s cold floor. Stored, the
     * steady-state entry broadcasts a langs×40-row catalog leaf and
     * only the SCORE split crosses an exchange. Values are the exact
     * [[chargramProfile]] output over the standing 80% split, so the
-    * oracle hash cannot move; a later session finds the table
-    * (fingerprinted name — [[DedupArtifacts.corpusSlug]]) and runs
-    * ZERO training jobs (ChargramArtifactSpec pins stored==direct and
-    * the zero-job re-entry). */
-  private val chargramTables =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
+    * oracle hash cannot move; a later session finds the table and runs
+    * ZERO training jobs ([[StoredArtifact.Catalog]];
+    * ChargramArtifactSpec pins stored==direct and the zero-job
+    * re-entry). */
   private[graft] def chargramProfileTable(s: SparkSession, d: String): String =
-    chargramTables.computeIfAbsent((ScaleOps.sessionId(s), d), { _ =>
-      val table = "graft_chargram_" +
-        DedupArtifacts.corpusSlug(s, d, Seq("documents"))
-      if (!s.catalog.tableExists(table)) {
-        val docs = graft.Par.spread(
-          Tables.documents(s, d).select("doc_id", "lang", "text"))
-        DedupArtifacts.reset(s, table)
-        chargramProfile(docs.filter(splitBucket(col("doc_id")) < 80), 40)
-          .write.format("parquet").saveAsTable(table)
-      }
-      table
-    })
+    StoredArtifact(s, d, "chargram", Seq("documents")) { table =>
+      val docs = graft.Par.spread(
+        Tables.documents(s, d).select("doc_id", "lang", "text"))
+      chargramProfile(docs.filter(splitBucket(col("doc_id")) < 80), 40)
+        .write.format("parquet").saveAsTable(table)
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Real BPE tokenization (VERDICT r5 ask #5, replacing the

@@ -12,6 +12,22 @@ import org.scalatest.funsuite.AnyFunSuite
 class EntryPointSpec extends AnyFunSuite {
   test("the classes declaring public static void main(String[]) are " +
     "exactly the six entry points") {
+    val loader = getClass.getClassLoader
+    val mains = EntryPointSpec.mainClasses.filter { n =>
+      Class.forName(n, false, loader).getDeclaredMethods.exists { m =>
+        m.getName == "main" && Modifier.isStatic(m.getModifiers) &&
+        Modifier.isPublic(m.getModifiers) && m.getReturnType == Void.TYPE &&
+        m.getParameterTypes.sameElements(Seq(classOf[Array[String]]))
+      }
+    }.toSet
+    assert(mains == Set("graft.Bench", "graft.Verify", "graft.ScaleGen",
+      "graft.ZipfGen", "graft.SkewGen", "graft.BruteRecall"))
+  }
+}
+
+object EntryPointSpec {
+  /** The binary names of every compiled class of the program. */
+  def mainClasses: List[String] = {
     val root = Paths.get(Bench.getClass.getProtectionDomain.getCodeSource
       .getLocation.toURI)
     assert(Files.isDirectory(root), s"main classes are not a directory: $root")
@@ -21,15 +37,6 @@ class EntryPointSpec extends AnyFunSuite {
       finally walk.close()
     def name(p: Path): String =
       root.relativize(p).toString.stripSuffix(".class").replace('/', '.')
-    val loader = getClass.getClassLoader
-    val mains = classes.map(name).filter { n =>
-      Class.forName(n, false, loader).getDeclaredMethods.exists { m =>
-        m.getName == "main" && Modifier.isStatic(m.getModifiers) &&
-        Modifier.isPublic(m.getModifiers) && m.getReturnType == Void.TYPE &&
-        m.getParameterTypes.sameElements(Seq(classOf[Array[String]]))
-      }
-    }.toSet
-    assert(mains == Set("graft.Bench", "graft.Verify", "graft.ScaleGen",
-      "graft.ZipfGen", "graft.SkewGen", "graft.BruteRecall"))
+    classes.map(name)
   }
 }
