@@ -11,10 +11,11 @@ import graft.sources.{IncrementalSource, JdbcExec}
   * a JDBC target, plus the describe-driven V2 syncs over the
   * `graft-soql` source. There is one lifecycle: every entry point
   * creates (and drift-ALTERs) its target from the typed source schema,
-  * then runs [[JdbcExec.load]] — one latest-wins window and ONE Spark
-  * action whose partitions each upsert their live rows and delete their
-  * tombstoned keys in one transaction; every write is guarded by the
-  * cursor column, so an older version never overwrites a newer one. The
+  * then runs [[JdbcExec.load]] — ONE Spark action whose partitions
+  * each keep the latest-wins row of every key, then upsert their live
+  * rows and delete their tombstoned keys in one transaction; every
+  * write is guarded by the cursor column, so an older version never
+  * overwrites a newer one. The
   * cursor-driven entries go through [[JdbcExec.syncOnce]], which reads
   * the stored cursor first; a pull of at most `batchSize` rows is one
   * Spark job of one task that reads it straight from the source and
@@ -23,9 +24,10 @@ import graft.sources.{IncrementalSource, JdbcExec}
   * connection.
   * The statement dialect follows the url ([[graft.sources.UpsertDialect]]).
   *
-  * Scale notes: the pipeline never collects. A load has one shuffle,
-  * the latest-wins window's, which also hash-partitions the writes by
-  * PK, so MERGE contention stays partition-local; the exception is a
+  * Scale notes: the pipeline never collects. A load has one shuffle, a
+  * hash partitioning by PK followed by a sort within each partition, so
+  * a key's versions are one run in one write task and MERGE contention
+  * stays partition-local; the exception is a
   * cursor-driven pull that fits one batch, which one task loads with no
   * shuffle and no pin. Cursor state is one scalar per object, in the
   * target database.

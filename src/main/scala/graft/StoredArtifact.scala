@@ -50,10 +50,11 @@ object StoredArtifact {
     * them, and layouts whose value is their file layout. */
   case object PerSession extends Reentry
 
-  /** A directory `/tmp/<name>` whose first knob is the application
-    * id, so two JVMs on one corpus never rewrite each other's files;
-    * rewritten on the first resolution in every session. The resolved
-    * value is the path. */
+  /** A directory `/tmp/<name>` whose first knobs are the application
+    * id and the session's id, so two JVMs, or two sessions of one JVM,
+    * on one corpus never rewrite each other's files; written on the
+    * first resolution in every session. The resolved value is the
+    * path. */
   case object Scratch extends Reentry
 
   private final class Memo(b: () => Any) {
@@ -101,8 +102,8 @@ object StoredArtifact {
                  build: String => A, reuse: String => A): A = {
     val base = reentry match {
       case Scratch =>
-        "/tmp/" + name(s, d, kind, inputs,
-          s.sparkContext.applicationId +: knobs)
+        "/tmp/" + name(s, d, kind, inputs, Seq(s.sparkContext.applicationId,
+          sessionId(s).take(8)) ++ knobs)
       case _ => name(s, d, kind, inputs, knobs)
     }
     val owned = tables.map(base + _)

@@ -95,9 +95,9 @@ object Scans {
     // Doubles survive because Spark writes the shortest decimal repr,
     // which parses back to the identical bits.
     "a_source_csv_roundtrip" -> { (s, d) =>
-      val out = s"/tmp/graft_csv_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      Tables.customer(s, d).write.mode("overwrite")
-        .option("header", "true").csv(out)
+      val out = scratch(s, d, "csv", "customer") { out =>
+        Tables.customer(s, d).write.option("header", "true").csv(out)
+      }
       s.read.schema(Tables.schemas("customer"))
         .option("header", "true").csv(out)
         .orderBy("c_custkey")
@@ -145,8 +145,9 @@ object Scans {
     // proves the reader/writer agree on schema and values). Covers the
     // second columnar format a lake migration meets.
     "a_source_orc_roundtrip" -> { (s, d) =>
-      val out = s"/tmp/graft_orc_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      Tables.supplier(s, d).write.mode("overwrite").orc(out)
+      val out = scratch(s, d, "orc", "supplier") { out =>
+        Tables.supplier(s, d).write.orc(out)
+      }
       s.read.schema(Tables.schemas("supplier")).orc(out)
         .orderBy("s_suppkey")
     },
@@ -246,12 +247,13 @@ object Scans {
     }
   )
 
-  // The five layouts below are scratch directories
-  // (StoredArtifact.Scratch): `/tmp/graft_<kind>_<app id>_<corpus slug>`,
-  // rewritten on the first resolution in every session. The app id
-  // keeps two JVMs on one fixture (Verify next to a Bench run) out of
-  // each other's directory: a rewrite must never race another
-  // process's reader, and compact's rename/recover protocol is
+  // The two round-trip copies above and the five layouts below are
+  // scratch directories (StoredArtifact.Scratch):
+  // `/tmp/graft_<kind>_<app id>_<session id>_<corpus slug>`, written on
+  // the first resolution in every session. The two ids keep two JVMs
+  // on one fixture (Verify next to a Bench run), or two sessions of
+  // one JVM, out of each other's directory: a rewrite must never race
+  // another reader, and compact's rename/recover protocol is
   // single-writer.
   private def scratch(s: SparkSession, d: String, kind: String,
                       input: String)(write: String => Unit): String =

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.AccumulatorV2
 
@@ -29,9 +29,9 @@ import org.apache.spark.util.AccumulatorV2
   *
   * MERGE contract: the staged batch must be PK-UNIQUE — ANSI MERGE
   * raises a duplicate-key error if two source rows hit the same
-  * target key (probed; Derby error 23505). The load step
-  * ([[JdbcExec.load]]) dedupes latest-wins per key before the
-  * write, exactly like the `i_upsert_latest_wins` operator.
+  * target key (probed; Derby error 23505). The load step keeps one
+  * latest-wins row per key inside each write task, before the write
+  * ([[JdbcExec.load]]), like the `i_upsert_latest_wins` operator.
   */
 object DerbySql {
 
@@ -247,6 +247,10 @@ object PgDialect extends UpsertDialect {
   * ([[JdbcExec.syncOnce]]).
   *
   * Exactly-once ladder, smallest honest claim first:
+  *  - every partition write is PK-UNIQUE and DETERMINISTIC: all
+  *    versions of a key reach one write task, which keeps the key's
+  *    latest-wins row (one comparator, `LoadStep`) whatever the input
+  *    order, so a retried task writes the same rows;
   *  - every partition write is ATOMIC (stage + MERGE + keyed DELETE +
   *    commit is one transaction; a task failure before commit leaves
   *    the target untouched — upserts and deletes alike — and Spark's
@@ -382,10 +386,11 @@ object JdbcExec {
     * CONFLICT on PostgreSQL), then DELETE its tombstoned keys, then run
     * `beforeCommit` on the same connection, then commit; any failure
     * rolls all of it back. Every write is guarded by the `cursor`
-    * column. A `dead` row holds a tombstone's pk values in `pk` order,
-    * then its cursor; `dead` is read only after `live` is drained, so a
-    * caller may fill it while `live` streams. A partition with nothing
-    * to write opens no connection. */
+    * column. A `live` row may carry more columns after `schema`'s; they
+    * are not written. A `dead` row holds a tombstone's pk values in `pk`
+    * order, then its cursor; `dead` is read only after `live` is
+    * drained, so a caller may fill it while `live` streams. A partition
+    * with nothing to write opens no connection. */
   private final case class PartitionWrite(url: String, table: String,
                                           schema: StructType, pk: Seq[String],
                                           cursor: String, batchSize: Int) {
@@ -460,98 +465,184 @@ object JdbcExec {
     def value: Loaded = Loaded(rows, live, if (seen) Some(max) else None)
   }
 
-  /** The load step of every sync path: latest-wins per key, then ONE
-    * Spark action in which each partition MERGEs its live rows and
-    * DELETEs its tombstoned keys in one transaction ([[PartitionWrite]]),
-    * while a [[SyncTally]] counts what it wrote. Keys are PK-unique after
-    * the window and its exchange has hash-partitioned them by PK, so a
-    * key's upsert and delete never span partitions.
+  /** The latest-wins tiebreak column [[load]] and [[loadInOneTask]]
+    * project onto a batch; a batch may not carry a column of this name. */
+  private[graft] val TiebreakColumn = "_graft_latest_wins_tiebreak"
+
+  /** A primary key compared by content, the way Spark groups keys: a
+    * binary value by its bytes (an `Array[Byte]` compares by reference
+    * in a `Seq`), and a floating-point -0.0 as 0.0. */
+  private final class Key(r: Row, at: Array[Int]) {
+    private val vals: Array[AnyRef] = at.map(i => r.get(i) match {
+      case d: Double if d == 0.0 => Double.box(0.0)
+      case f: Float if f == 0.0f => Float.box(0.0f)
+      case v => v.asInstanceOf[AnyRef]
+    })
+    override def hashCode: Int = java.util.Arrays.deepHashCode(vals)
+    override def equals(o: Any): Boolean =
+      o.isInstanceOf[Key] && java.util.Arrays.deepEquals(vals, o.asInstanceOf[Key].vals)
+  }
+
+  /** The load step of one batch, shipped to its write tasks: the one
+    * latest-wins comparator and the one write body of both load paths.
     *
-    * Latest-wins is the one rule all syncs share: per key the row with
-    * the largest cursor; on a cursor tie a tombstone beats a live row;
-    * on a tie in both, the larger xxhash64 over the non-key columns (as
-    * strings), so the survivor never depends on input order. Without a
-    * `deletedField` every row is live; a row whose flag is null takes
-    * neither route. The flag column is written like any other column.
-    * The cursor must be a bigint column.
+    * Latest-wins is the one rule all syncs share, per key: the larger
+    * cursor, a null cursor losing; then the flag, true > false > null
+    * (on a cursor tie a tombstone beats a live row); then the larger
+    * xxhash64 over the non-key columns as strings ([[TiebreakColumn]],
+    * computed in the plan), so the survivor never depends on input
+    * order.
     *
-    * With `commitCursor = Some((store, obj))` the `batch` is one
-    * partition ([[loadInOneTask]]'s), so the window plans no exchange,
-    * and that partition's transaction also writes the largest non-null
-    * cursor it saw as `obj`'s cursor in `store` (none if every cursor
-    * was null) — rows and cursor commit together. */
-  private[graft] def load(spark: SparkSession, url: String, table: String,
-                          pk: Seq[String], batch: DataFrame,
-                          cursorField: String, deletedField: Option[String],
-                          batchSize: Int,
-                          commitCursor: Option[(JdbcCursorStore, String)] = None): Loaded = {
-    import org.apache.spark.sql.functions._
-    require(batch.schema(cursorField).dataType == LongType,
-      s"$cursorField must be a bigint cursor, not ${batch.schema(cursorField).dataType}")
-    val tiebreak = xxhash64(
-      batch.columns.filterNot(pk.contains).map(col(_).cast(StringType)).toSeq: _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pk.map(col): _*)
-      .orderBy((col(cursorField).desc +: deletedField.map(col(_).desc).toSeq
-        :+ tiebreak.desc): _*)
-    val latest = batch.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-    val schema = latest.schema
-    val cursorAt = schema.fieldIndex(cursorField)
-    val deletedAt = deletedField.map(schema.fieldIndex)
-    val keyAt = pk.map(schema.fieldIndex)
-    val write = PartitionWrite(url, table, schema, pk, cursorField, batchSize)
+    * [[write]] splits the survivors into live rows and tombstoned keys,
+    * counts them in a [[SyncTally]], and hands them to [[PartitionWrite]].
+    * Without a `deletedField` every row is live; a row whose flag is
+    * null takes neither route. The flag column is written like any
+    * other column; the tiebreak is not written. */
+  private final class LoadStep(url: String, table: String, pk: Seq[String],
+                               cursorField: String, deletedField: Option[String],
+                               batchSize: Int, ranked: StructType)
+      extends Serializable {
     val tally = new SyncTally
-    spark.sparkContext.register(tally)
-    latest.foreachPartition { rows: Iterator[Row] =>
+    private val schema = StructType(ranked.fields.init)
+    private val cursorAt = ranked.fieldIndex(cursorField)
+    private val deletedAt = deletedField.map(ranked.fieldIndex)
+    private val tiebreakAt = ranked.fieldIndex(TiebreakColumn)
+    private val keyAt = pk.map(ranked.fieldIndex).toArray
+    private val partitionWrite =
+      PartitionWrite(url, table, schema, pk, cursorField, batchSize)
+
+    private def flagRank(r: Row): Int = deletedAt match {
+      case Some(i) if !r.isNullAt(i) => if (r.getBoolean(i)) 2 else 1
+      case _ => 0
+    }
+
+    /** The latest-wins comparator: does `a` beat `b` for their key? */
+    private def beats(a: Row, b: Row): Boolean = {
+      val byCursor =
+        if (a.isNullAt(cursorAt)) { if (b.isNullAt(cursorAt)) 0 else -1 }
+        else if (b.isNullAt(cursorAt)) 1
+        else java.lang.Long.compare(a.getLong(cursorAt), b.getLong(cursorAt))
+      val byFlag = if (byCursor != 0) byCursor
+                   else Integer.compare(flagRank(a), flagRank(b))
+      if (byFlag != 0) byFlag > 0
+      else a.getLong(tiebreakAt) > b.getLong(tiebreakAt)
+    }
+
+    /** The winner of each run of equal keys in key-sorted `rows`. */
+    def bestOfRuns(rows: Iterator[Row]): Iterator[Row] = new Iterator[Row] {
+      private val in = rows.buffered
+      def hasNext: Boolean = in.hasNext
+      def next(): Row = {
+        var best = in.next()
+        val key = new Key(best, keyAt)
+        while (in.hasNext && new Key(in.head, keyAt) == key) {
+          val r = in.next()
+          if (beats(r, best)) best = r
+        }
+        best
+      }
+    }
+
+    /** The winner of each key among `rows`, in any order. */
+    def bestPerKey(rows: Array[Row]): Iterator[Row] = {
+      val best = new java.util.HashMap[Key, Row]()
+      rows.foreach(r => best.merge(new Key(r, keyAt), r,
+        (old, cand) => if (beats(cand, old)) cand else old))
+      import scala.jdk.CollectionConverters._
+      best.values.iterator.asScala
+    }
+
+    def write(latest: Iterator[Row], beforeCommit: Connection => Unit): Unit = {
       val dead = scala.collection.mutable.ArrayBuffer.empty[Row]
-      val live = rows.filter { r =>
+      val live = latest.filter { r =>
         val cursor = r.get(cursorAt).asInstanceOf[java.lang.Long]
         tally.add(cursor)
         val isLive = deletedAt match {
           case None => true
           case Some(i) if r.isNullAt(i) => false
           case Some(i) if r.getBoolean(i) =>
-            dead += Row.fromSeq(keyAt.map(r.get) :+ cursor); false
+            dead += Row.fromSeq(keyAt.toSeq.map(r.get) :+ cursor); false
           case _ => true
         }
         if (isLive) tally.addLive()
         isLive
       }
-      // a task's copy of the tally holds this partition's rows only
-      write(live, () => dead.iterator, conn =>
-        for ((store, obj) <- commitCursor; c <- tally.value.maxCursor)
-          store.putInTxn(conn, obj, c))
+      // a live row keeps its tiebreak, last: PartitionWrite skips it
+      partitionWrite(live, () => dead.iterator, beforeCommit)
     }
-    tally.value
+  }
+
+  /** `batch` with its [[TiebreakColumn]] last, and its [[LoadStep]]
+    * (whose tally is registered). The cursor must be a bigint column. */
+  private def prepare(spark: SparkSession, url: String, table: String,
+                      pk: Seq[String], batch: DataFrame, cursorField: String,
+                      deletedField: Option[String],
+                      batchSize: Int): (DataFrame, LoadStep) = {
+    import org.apache.spark.sql.functions._
+    require(batch.schema(cursorField).dataType == LongType,
+      s"$cursorField must be a bigint cursor, not ${batch.schema(cursorField).dataType}")
+    require(!batch.columns.exists(_.equalsIgnoreCase(TiebreakColumn)),
+      s"$TiebreakColumn is reserved for the latest-wins tiebreak")
+    val ranked = batch.withColumn(TiebreakColumn, xxhash64(
+      batch.columns.filterNot(pk.contains).map(col(_).cast(StringType)).toSeq: _*))
+    val step = new LoadStep(url, table, pk, cursorField, deletedField,
+      batchSize, ranked.schema)
+    spark.sparkContext.register(step.tally)
+    (ranked, step)
+  }
+
+  /** The load step of every sync path but a pull that fits one batch:
+    * hash-partitioned and sorted by PK, so a key's versions are one run
+    * in one partition, then ONE Spark action in which each partition
+    * MERGEs the live latest-wins rows of its runs and DELETEs their
+    * tombstoned keys in one transaction ([[LoadStep]]), while a
+    * [[SyncTally]] counts what it wrote. A key's upsert and delete never
+    * span partitions. The write streams and the sort spills, so a
+    * task's memory stays bounded. */
+  private[graft] def load(spark: SparkSession, url: String, table: String,
+                          pk: Seq[String], batch: DataFrame,
+                          cursorField: String, deletedField: Option[String],
+                          batchSize: Int): Loaded = {
+    import org.apache.spark.sql.functions.col
+    val (ranked, step) = prepare(spark, url, table, pk, batch, cursorField,
+      deletedField, batchSize)
+    ranked.repartition(pk.map(col): _*).sortWithinPartitions(pk.map(col): _*)
+      .foreachPartition { rows: Iterator[Row] =>
+        step.write(step.bestOfRuns(rows), _ => ())
+      }
+    step.tally.value
   }
 
   /** [[syncOnce]]'s first attempt at a pull, with no pin: ONE task reads
     * the pull through `coalesce(1)`, buffering at most `batchSize + 1`
     * rows. If it sees more than `batchSize` rows it writes nothing,
     * opens no connection and flags the overflow, and the result is
-    * None. Otherwise the same task runs the [[load]] step with the
-    * cursor in its one transaction. The rows written, the rows counted
-    * and the cursor come from one read of the source, so the pull needs
-    * no snapshot; a retried task reads it again inside a new
-    * transaction. */
+    * None. Otherwise the same task writes each key's latest-wins row
+    * ([[LoadStep]]), and its one transaction also writes the largest
+    * non-null cursor it saw as `obj`'s cursor (none if every cursor was
+    * null). The plan is the scan, the tiebreak projection and the
+    * write. The rows written, the rows counted and the cursor come from
+    * one read of the source, so the pull needs no snapshot; a retried
+    * task reads it again inside a new transaction. */
   private def loadInOneTask(spark: SparkSession, url: String, table: String,
                             pk: Seq[String], pull: DataFrame,
                             cursorField: String, deletedField: Option[String],
                             batchSize: Int, cursors: JdbcCursorStore,
                             obj: String): Option[Loaded] = {
     val overflow = spark.sparkContext.longAccumulator
+    val (ranked, step) = prepare(spark, url, table, pk, pull, cursorField,
+      deletedField, batchSize)
     // Not `pull.limit(batchSize + 1)`: every limit plan names its
     // generated counter from a global sequence (`_limit_counter_<n>`),
     // so each sync would generate, and Janino compile, new classes.
-    val bounded = pull.coalesce(1).mapPartitions { rows: Iterator[Row] =>
+    ranked.coalesce(1).foreachPartition { rows: Iterator[Row] =>
       val head = rows.take(batchSize + 1).toArray
-      if (head.length > batchSize) { overflow.add(1); Iterator.empty }
-      else head.iterator
-    }(Encoders.row(pull.schema))
-    val loaded = load(spark, url, table, pk, bounded, cursorField,
-      deletedField, batchSize, Some((cursors, obj)))
-    if (overflow.sum == 0) Some(loaded) else None
+      if (head.length > batchSize) overflow.add(1)
+      // a task's copy of the tally holds this partition's rows only
+      else step.write(step.bestPerKey(head), conn =>
+        step.tally.value.maxCursor.foreach(cursors.putInTxn(conn, obj, _)))
+    }
+    if (overflow.sum == 0) Some(step.tally.value) else None
   }
 
   /** One incremental sync pass — the reference's extract→load loop
@@ -563,11 +654,12 @@ object JdbcExec {
     * How the cursor commits depends on the pull's row count:
     *  - `rows <= batchSize`: the pull loads in ONE task, straight from
     *    the source ([[loadInOneTask]]). One Spark job, one stage, one
-    *    task: its latest-wins window needs no exchange (no shuffle-map
-    *    job, no adaptive re-plan), and its transaction upserts, deletes
-    *    and advances the cursor before its single commit: the sync is
-    *    atomic. `batchSize` is the threshold because such a pull is one
-    *    JDBC batch per statement on one connection; splitting it over
+    *    task: it picks latest-wins itself, so it needs no exchange
+    *    (no shuffle-map job, no adaptive re-plan), and its transaction
+    *    upserts, deletes and advances the cursor before its single
+    *    commit: the sync is atomic. `batchSize` is the threshold
+    *    because such a pull is one JDBC batch per statement on one
+    *    connection; splitting it over
     *    parallel writers buys no throughput and costs an exchange,
     *    tasks, connections and commits. One task measured faster at
     *    every pull from 500 to 20,000 rows into embedded Derby
@@ -577,7 +669,7 @@ object JdbcExec {
     *  - a larger pull overflows that attempt after `batchSize + 1` rows,
     *    with nothing written. It is pulled again and EAGERLY pinned
     *    ([[graft.Pin.pin]]: materialize now + cut lineage), then takes
-    *    the parallel load — the window's hash exchange and one
+    *    the parallel [[load]] — a hash exchange by PK and one
     *    transaction per partition — and the cursor advances LAST, in
     *    its own transaction after every partition committed.
     *    Correctness then rests on the keyed writes being idempotent, so

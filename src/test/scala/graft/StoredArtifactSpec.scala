@@ -3,9 +3,11 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{Callable, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.catalog.{CreateTableEvent,
   ExternalCatalogEvent, ExternalCatalogEventListener}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.operators.{DedupArtifacts, LlmOps, TextOps}
 
 /** The store resolver's own rules ([[StoredArtifact]]): a name that
@@ -59,6 +61,56 @@ class StoredArtifactSpec extends SparkSpec {
         assert(stored(built(1)) == after,
           "the store served rows the direct derivation does not produce")
       } finally built.foreach(DedupArtifacts.reset(spark, _))
+    }
+  }
+
+  test("the CSV and ORC round-trips write their copy once per session, " +
+    "at a path no other session shares") {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def dir(df: org.apache.spark.sql.DataFrame): Path =
+      df.inputFiles.map(f => Paths.get(new java.net.URI(f)).getParent)
+        .distinct.toSeq match { case Seq(one) => one }
+    // the copy's files with their modification times
+    def listing(p: Path): Set[(String, Long)] = {
+      val files = Files.list(p)
+      try files.iterator().asScala
+        .map(f => f.getFileName.toString -> Files.getLastModifiedTime(f).toMillis).toSet
+      finally files.close()
+    }
+    val s2 = spark.newSession()
+    val s2Dirs = scala.collection.mutable.Buffer.empty[Path]
+    try {
+      for ((q, table) <- Seq("a_source_csv_roundtrip" -> "customer",
+                             "a_source_orc_roundtrip" -> "supplier")) {
+        val first = SparkEntry.queries(q)(spark, sfDir)
+        assert(first.count() == spark.read.parquet(s"$sfDir/$table.parquet").count())
+        val copy = listing(dir(first))
+        // building the query again runs no Spark job: the copy is not
+        // written again
+        sc.addSparkListener(listener)
+        val again = try {
+          jobs.set(0)
+          val df = SparkEntry.queries(q)(spark, sfDir)
+          org.apache.spark.GraftTestBus.waitUntilEmpty(sc)
+          assert(jobs.get() == 0, s"$q: a second build ran ${jobs.get()} Spark jobs")
+          df
+        } finally sc.removeSparkListener(listener)
+        assert(dir(again) == dir(first))
+        // another session on the same fixture writes its own copy
+        val other = SparkEntry.queries(q)(s2, sfDir)
+        s2Dirs += dir(other)
+        assert(dir(other) != dir(first), s"$q: two sessions share ${dir(first)}")
+        assert(other.collect().toSeq == first.collect().toSeq)
+        assert(listing(dir(first)) == copy, s"$q: the other session rewrote ${dir(first)}")
+      }
+    } finally {
+      Caches.release(s2)
+      s2Dirs.foreach(p => org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
     }
   }
 

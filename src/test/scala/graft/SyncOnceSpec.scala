@@ -2,7 +2,12 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.types._
 import graft.sources.{JdbcCursorStore, JdbcExec}
 
@@ -222,6 +227,22 @@ class SyncOnceSpec extends SparkSpec {
     assert(new JdbcCursorStore(url, "fn_state").get("fn").isEmpty)
   }
 
+  test("a pull that carries the reserved tiebreak column fails loudly, " +
+    "writes nothing and commits no cursor") {
+    val url = s"jdbc:derby:memory:ftie${System.nanoTime};create=true"
+    createTarget(url, "ft_tgt")
+    val batch = Seq[Ev]((1L, "a", 100L, Some(false)))
+      .toDF("id", "name", "cur", "is_deleted")
+      .withColumn(JdbcExec.TiebreakColumn.toUpperCase, lit(7L))
+    val err = intercept[IllegalArgumentException] {
+      JdbcExec.syncOnce(spark, url, "ft_tgt", Seq("id"), "ft_state", "ft",
+        _ => batch, "cur", "is_deleted")
+    }
+    assert(err.getMessage.contains(JdbcExec.TiebreakColumn), err.getMessage)
+    assert(JdbcExec.readTable(spark, url, "ft_tgt").count() == 0)
+    assert(new JdbcCursorStore(url, "ft_state").get("ft").isEmpty)
+  }
+
   test("one syncOnce of a non-empty pull within one batch submits " +
     "exactly 1 Spark job") {
     val url = s"jdbc:derby:memory:fjobs${System.nanoTime};create=true"
@@ -253,6 +274,63 @@ class SyncOnceSpec extends SparkSpec {
       // exchange, so no shuffle-map job
       assert(jobs.get() == 1, s"one syncOnce submitted ${jobs.get()} Spark jobs")
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The executed physical plans of every query `body` runs, each
+    * flattened through its adaptive stages. */
+  private def executedPlans(body: => Unit): Seq[Seq[SparkPlan]] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    object Nodes extends AdaptiveSparkPlanHelper
+    plans.asScala.toSeq.map(p => Nodes.collect(p) { case n => n })
+  }
+
+  test("a pull within one batch plans no window, sort, exchange or " +
+    "typed map; an overflowing one plans one exchange, on the pk, and " +
+    "no window") {
+    val url = s"jdbc:derby:memory:fplan${System.nanoTime};create=true"
+    createTarget(url, "fp_tgt")
+    var source: Seq[Ev] = Seq((1L, "a", 100L, Some(false)),
+      (2L, "b", 110L, Some(false)), (1L, "a2", 120L, Some(false)))
+    def sync(): Long = JdbcExec.syncOnce(spark, url, "fp_tgt", Seq("id"),
+      "fp_state", "fp",
+      past => source.toDF("id", "name", "cur", "is_deleted").filter($"cur" > past),
+      "cur", "is_deleted", batchSize = 3)
+    def names(plan: Seq[SparkPlan]): Seq[String] = plan.map(_.nodeName)
+    def window(n: String): Boolean = n.startsWith("Window")
+
+    val within = executedPlans(assert(sync() == 120L))
+    assert(within.nonEmpty, "no plan was captured")
+    within.map(names).foreach { ns =>
+      assert(!ns.exists(n => window(n) || n == "Sort" || n.contains("Exchange") ||
+        n == "MapPartitions"), ns.mkString(" <- "))
+    }
+
+    source = source ++ Seq[Ev]((3L, "c", 130L, Some(false)),
+      (2L, "b2", 140L, Some(true)), (4L, "d", 150L, Some(false)),
+      (3L, "c2", 160L, Some(false)))
+    val over = executedPlans(assert(sync() == 160L))
+    assert(!over.flatMap(names).exists(window), over.map(names))
+    val exchanges = over.flatten.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, over.map(names))
+    exchanges.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.expressions.flatMap(_.references.map(_.name)) == Seq("id"), h)
+      case other => fail(s"the exchange partitions by $other, not the pk")
+    }
+    assert(JdbcExec.readTable(spark, url, "fp_tgt").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "a2", 3L -> "c2", 4L -> "d"))
   }
 
   test("pulls of exactly batchSize and of batchSize + 1 rows both land " +
