@@ -26,7 +26,7 @@ import graft.sources.{IncrementalSource, JdbcExec}
   *
   * Scale notes: the pipeline never collects. A load has one shuffle, a
   * hash partitioning by PK followed by a sort within each partition, so
-  * a key's versions are one run in one write task and MERGE contention
+  * a key's versions are one run in one write task and upsert contention
   * stays partition-local; the exception is a
   * cursor-driven pull that fits one batch, which one task loads with no
   * shuffle and no pin. Cursor state is one scalar per object, in the
@@ -105,7 +105,7 @@ object Pipeline {
 
   /** Ad-hoc backfill (SURVEY §3.1 entry point 3): re-extract a cursor
     * range [lo, hi] and load it — idempotent because the sink is a
-    * keyed MERGE; the stored cursor is left alone. Returns the live
+    * keyed upsert; the stored cursor is left alone. Returns the live
     * rows written. */
   def backfillSync(spark: SparkSession, url: String, sync: ObjectSync,
                    lo: Any, hi: Any, batchSize: Int): Long = {
@@ -141,8 +141,8 @@ object Pipeline {
 
   /** The reference's §3.1 full sync path EXECUTED end-to-end through
     * both real endpoints (r14, VERDICT ask 6): describe → SOQL
-    * pushdown pull → type normalize → staged Derby MERGE + tombstone
-    * DELETEs → cursor advance, repeatable round after round.
+    * pushdown pull → type normalize → keyed Derby UPDATE + INSERT +
+    * tombstone DELETEs → cursor advance, repeatable round after round.
     *
     *  - source: the DSv2 `graft-soql` provider — `load()` runs
     *    describe() as schema inference, and the cursor predicate below
@@ -152,7 +152,7 @@ object Pipeline {
     *  - normalize: the target-type cast map ([[normalize]]), applied
     *    AFTER the pushable filter so the cast never blocks pushdown;
     *  - sink + cursor: [[graft.sources.JdbcExec.syncOnce]] — latest-wins
-    *    dedupe, keyed cursor-guarded MERGE/DELETE, and, for a pull of
+    *    dedupe, keyed cursor-guarded upsert/DELETE, and, for a pull of
     *    at most `batchSize` rows, one task that reads it and commits
     *    the cursor in its load transaction; a larger pull is pinned,
     *    and its cursor committed last after the loads;

@@ -5,33 +5,34 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.AccumulatorV2
 
-/** Derby ANSI-MERGE dialect of the load side — the EXECUTED sibling of
+/** Derby dialect of the load side — the EXECUTED sibling of
   * [[JdbcUpsertSink]]'s PostgreSQL SQL generation (r13, VERDICT item
   * 1): `/opt/spark/jars` ships embedded Derby 10.16, so the
-  * create-from-StructType DDL, staged keyed MERGE upsert, tombstone
-  * DELETE, and cursor-in-load-transaction cycle all run for real
-  * against `jdbc:derby:memory:` in JdbcSinkSpec — no stubbed seam.
+  * create-from-StructType DDL, keyed upsert, tombstone DELETE, and
+  * cursor-in-load-transaction cycle all run for real against
+  * `jdbc:derby:memory:` in JdbcSinkSpec — no stubbed seam.
   *
   * Dialect deltas vs PostgreSQL, each probed against Derby 10.16:
-  *  - no `INSERT … ON CONFLICT`; upsert is ANSI `MERGE INTO … USING`,
-  *    whose source must be a base table or table function — so each
-  *    writer stages its batch into a connection-scoped
-  *    `DECLARE GLOBAL TEMPORARY TABLE` (SESSION schema, NOT LOGGED)
-  *    and merges from it. Session temp tables are per-connection, so
-  *    concurrent partition writers never contend on staging.
+  *  - no `INSERT … ON CONFLICT`; the upsert is a keyed UPDATE batch
+  *    ([[updateSql]]) whose per-row counts pick the rows an INSERT
+  *    batch ([[insertSql]]) then adds. Both texts are fixed per table
+  *    and schema, so Derby compiles each once per database and serves
+  *    it from its statement cache (it never caches a statement that
+  *    names the SESSION schema, so a temp staging table would compile
+  *    again on every load).
   *  - no `IF NOT EXISTS` on CREATE/ALTER; existence goes through
   *    `DatabaseMetaData` ([[JdbcExec.ensureTable]]).
   *  - type map: VARCHAR(32672) for text (Derby's VARCHAR ceiling),
-  *    `VARCHAR … FOR BIT DATA` for binary (temp tables reject BLOB),
-  *    DECIMAL precision capped at 31. Array/map/struct columns have
-  *    no Derby lowering — callers flatten or JSON-encode first (the
-  *    PostgreSQL map's `jsonb` arm is the production answer).
+  *    `VARCHAR … FOR BIT DATA` for binary, DECIMAL precision capped at
+  *    31. Array/map/struct columns have no Derby lowering — callers
+  *    flatten or JSON-encode first (the PostgreSQL map's `jsonb` arm
+  *    is the production answer).
   *
-  * MERGE contract: the staged batch must be PK-UNIQUE — ANSI MERGE
-  * raises a duplicate-key error if two source rows hit the same
-  * target key (probed; Derby error 23505). The load step keeps one
-  * latest-wins row per key inside each write task, before the write
-  * ([[JdbcExec.load]]), like the `i_upsert_latest_wins` operator.
+  * Upsert contract: a batch must be PK-UNIQUE — two absent rows with
+  * one key would both reach the INSERT and raise a duplicate-key error
+  * (Derby error 23505). The load step keeps one latest-wins row per key
+  * inside each write task, before the write ([[JdbcExec.load]]), like
+  * the `i_upsert_latest_wins` operator.
   */
 object DerbySql {
 
@@ -67,39 +68,29 @@ object DerbySql {
     s"CREATE TABLE ${q(table)} (${(cols ++ pkc).mkString(", ")})"
   }
 
-  /** Connection-scoped staging table (SESSION schema; Derby requires
-    * NOT LOGGED, which is also exactly right for scratch staging). */
-  def declareStageSql(stage: String, schema: StructType): String = {
-    val cols = schema.fields
-      .map(f => s"${q(f.name)} ${derbyType(f.dataType)}").mkString(", ")
-    s"DECLARE GLOBAL TEMPORARY TABLE ${q(stage)} ($cols) " +
-      "NOT LOGGED ON COMMIT PRESERVE ROWS"
+  /** The upsert's keyed UPDATE. Every SET sits behind the cursor guard
+    * (the stored cursor null or not newer than the bound one, the guard
+    * [[JdbcUpsertSink.upsertSql]] renders for PostgreSQL) inside a CASE,
+    * so a row's update count is 1 exactly when its key exists, and a
+    * refused older version is left as it was: every SET reads the
+    * pre-update row. Binds: the cursor then the value, per non-key
+    * column, then the key. A table whose columns are all key columns
+    * sets its first key to itself, which still counts the row. */
+  def updateSql(table: String, schema: StructType, pk: Seq[String],
+                cursor: String): String = {
+    val nonPk = schema.fieldNames.toSeq.filterNot(pk.contains)
+    val set =
+      if (nonPk.isEmpty) Seq(s"${q(pk.head)} = ${q(pk.head)}")
+      else nonPk.map(c => s"${q(c)} = CASE WHEN ${q(cursor)} IS NULL OR " +
+        s"${q(cursor)} <= ? THEN ? ELSE ${q(c)} END")
+    s"UPDATE ${q(table)} SET ${set.mkString(", ")} WHERE " +
+      pk.map(c => s"${q(c)} = ?").mkString(" AND ")
   }
 
-  def insertStageSql(stage: String, schema: StructType): String =
-    s"INSERT INTO SESSION.${q(stage)} " +
-      s"(${schema.fieldNames.map(q).mkString(", ")}) " +
+  /** The upsert's INSERT, bound for the rows [[updateSql]] missed. */
+  def insertSql(table: String, schema: StructType): String =
+    s"INSERT INTO ${q(table)} (${schema.fieldNames.map(q).mkString(", ")}) " +
       s"VALUES (${schema.fieldNames.map(_ => "?").mkString(", ")})"
-
-  /** Keyed MERGE from the session staging table — the upsert. A
-    * matched row is updated only when its stored `cursor` is null or
-    * not newer than the staged one (the guard [[JdbcUpsertSink.upsertSql]]
-    * renders for PostgreSQL). */
-  def mergeSql(table: String, stage: String, schema: StructType,
-               pk: Seq[String], cursor: String): String = {
-    val cols = schema.fieldNames.toSeq
-    val nonPk = cols.filterNot(pk.contains)
-    val on = pk.map(c => s"t.${q(c)} = s.${q(c)}").mkString(" AND ")
-    val matched =
-      if (nonPk.isEmpty) ""
-      else s" WHEN MATCHED AND (t.${q(cursor)} IS NULL OR " +
-        s"t.${q(cursor)} <= s.${q(cursor)}) THEN UPDATE SET " +
-        nonPk.map(c => s"${q(c)} = s.${q(c)}").mkString(", ")
-    s"MERGE INTO ${q(table)} t USING SESSION.${q(stage)} s ON $on" +
-      matched +
-      s" WHEN NOT MATCHED THEN INSERT (${cols.map(q).mkString(", ")})" +
-      s" VALUES (${cols.map(c => s"s.${q(c)}").mkString(", ")})"
-  }
 
   /** Keyed, cursor-guarded tombstone delete — same text as the PG
     * dialect. */
@@ -110,10 +101,10 @@ object DerbySql {
 /** Pluggable statement dialect for the EXECUTED load path (r15,
   * VERDICT r14 ask 6): [[JdbcExec]] dispatches on the JDBC url —
   * `jdbc:postgresql:` → [[PgDialect]] (`INSERT … ON CONFLICT`, the
-  * reference's actual sink), anything else → [[DerbyDialect]] (ANSI
-  * MERGE via session staging, the offline executed twin). Both
-  * dialects run the same create → upsert → tombstone-delete → cursor
-  * SEQUENCE through the same orchestration code ([[JdbcExec.syncOnce]]
+  * reference's actual sink), anything else → [[DerbyDialect]] (a keyed
+  * UPDATE, then an INSERT of the keys it missed: the offline executed
+  * twin). Both dialects run the same create → upsert → tombstone-delete
+  * → cursor SEQUENCE through the same orchestration code ([[JdbcExec.syncOnce]]
   * / [[graft.Pipeline.syncOnceV2]]), so ordering/transaction bugs
   * cannot hide in an un-executed branch; offline the PG arm executes
   * against a recording fake connection (PgDialectSpec — no PostgreSQL
@@ -133,8 +124,13 @@ trait UpsertDialect extends Serializable {
                 batchSize: Int): Unit
 }
 
-/** ANSI-MERGE dialect over [[DerbySql]] — stage into a session temp
-  * table, MERGE, clear the stage. */
+/** The Derby dialect over [[DerbySql]]. Each `batchSize` chunk of the
+  * live rows is one [[DerbySql.updateSql]] batch, then one
+  * [[DerbySql.insertSql]] batch of the rows whose update count was 0.
+  * Any other count array (not one entry per row, or an entry other
+  * than 0 or 1) throws before the INSERT, so an insert is never
+  * skipped or doubled. A row's columns after `schema`'s are not
+  * bound. */
 object DerbyDialect extends UpsertDialect {
   val name = "derby"
   def createTableSql(table: String, schema: StructType,
@@ -148,14 +144,32 @@ object DerbyDialect extends UpsertDialect {
   def loadBatch(conn: Connection, table: String, schema: StructType,
                 pk: Seq[String], cursor: String, rows: Iterator[Row],
                 batchSize: Int): Unit = {
-    val stage = s"stg_$table"
-    val st = conn.createStatement()
-    try {
-      st.execute(DerbySql.declareStageSql(stage, schema))
-      JdbcExec.stageRows(conn, stage, schema, rows, batchSize)
-      st.execute(DerbySql.mergeSql(table, stage, schema, pk, cursor))
-      st.execute(s"""DELETE FROM SESSION."$stage"""")
-    } finally st.close()
+    val types = schema.fields.map(_.dataType)
+    val cursorAt = schema.fieldIndex(cursor)
+    val keyAt = pk.map(schema.fieldIndex).toArray
+    val setAt = schema.indices.filterNot(keyAt.contains).toArray
+    def bind(ps: PreparedStatement, pos: Int, r: Row, i: Int): Unit =
+      JdbcExec.bindValue(ps, pos, r.get(i), types(i))
+    val upd = conn.prepareStatement(DerbySql.updateSql(table, schema, pk, cursor))
+    val ins = conn.prepareStatement(DerbySql.insertSql(table, schema))
+    try rows.grouped(batchSize).foreach { chunk =>
+      chunk.foreach { r =>
+        var p = 1
+        setAt.foreach { i => bind(upd, p, r, cursorAt); bind(upd, p + 1, r, i); p += 2 }
+        keyAt.foreach { i => bind(upd, p, r, i); p += 1 }
+        upd.addBatch()
+      }
+      val counts = upd.executeBatch()
+      if (counts.length != chunk.length || counts.exists(c => c != 0 && c != 1))
+        throw new java.sql.SQLException(s"UPDATE batch on $table: " +
+          s"${chunk.length} rows, counts [${counts.mkString(", ")}]")
+      val absent = chunk.indices.filter(counts(_) == 0)
+      absent.foreach { k =>
+        schema.indices.foreach(i => bind(ins, i + 1, chunk(k), i))
+        ins.addBatch()
+      }
+      if (absent.nonEmpty) ins.executeBatch()
+    } finally try upd.close() finally ins.close()
   }
 }
 
@@ -251,11 +265,11 @@ object PgDialect extends UpsertDialect {
   *    versions of a key reach one write task, which keeps the key's
   *    latest-wins row (one comparator, `LoadStep`) whatever the input
   *    order, so a retried task writes the same rows;
-  *  - every partition write is ATOMIC (stage + MERGE + keyed DELETE +
+  *  - every partition write is ATOMIC (keyed upsert + keyed DELETE +
   *    commit is one transaction; a task failure before commit leaves
   *    the target untouched — upserts and deletes alike — and Spark's
   *    task retry replays the partition);
-  *  - every write is IDEMPOTENT (keyed MERGE / keyed DELETE), so
+  *  - every write is IDEMPOTENT (keyed upsert / keyed DELETE), so
   *    replaying a committed partition converges — this is what makes
   *    the multi-partition load safe without a global transaction;
   *  - every write is CURSOR-GUARDED: an upsert overwrites, and a
@@ -273,7 +287,7 @@ object PgDialect extends UpsertDialect {
   *    the advance is the last write, committed on its own connection
   *    after every partition has committed. A crash between the loads
   *    and the cursor commit re-pulls one batch into the idempotent
-  *    MERGE — never loses data, never double-applies it.
+  *    upsert — never loses data, never double-applies it.
   */
 object JdbcExec {
 
@@ -363,27 +377,10 @@ object JdbcExec {
       case other => ps.setObject(pos, jdbcValue(other))
     }
 
-  private[sources] def stageRows(conn: Connection, stage: String,
-                                 schema: StructType,
-                                 rows: Iterator[Row], batchSize: Int): Unit = {
-    val ps = conn.prepareStatement(DerbySql.insertStageSql(stage, schema))
-    val types = schema.fields.map(_.dataType)
-    try rows.grouped(batchSize).foreach { chunk =>
-      chunk.foreach { r =>
-        var i = 0
-        while (i < schema.length) {
-          bindValue(ps, i + 1, r.get(i), types(i)); i += 1
-        }
-        ps.addBatch()
-      }
-      ps.executeBatch()
-    } finally ps.close()
-  }
-
   /** The one per-partition write routine behind [[load]]: on ONE
     * connection and in ONE transaction, stream the partition's `live`
-    * rows through the url's dialect (staged MERGE on Derby, batched ON
-    * CONFLICT on PostgreSQL), then DELETE its tombstoned keys, then run
+    * rows through the url's dialect (keyed UPDATE then INSERT on Derby,
+    * batched ON CONFLICT on PostgreSQL), then DELETE its tombstoned keys, then run
     * `beforeCommit` on the same connection, then commit; any failure
     * rolls all of it back. Every write is guarded by the `cursor`
     * column. A `live` row may carry more columns after `schema`'s; they
@@ -594,7 +591,7 @@ object JdbcExec {
   /** The load step of every sync path but a pull that fits one batch:
     * hash-partitioned and sorted by PK, so a key's versions are one run
     * in one partition, then ONE Spark action in which each partition
-    * MERGEs the live latest-wins rows of its runs and DELETEs their
+    * upserts the live latest-wins rows of its runs and DELETEs their
     * tombstoned keys in one transaction ([[LoadStep]]), while a
     * [[SyncTally]] counts what it wrote. A key's upsert and delete never
     * span partitions. The write streams and the sort spills, so a
@@ -674,7 +671,7 @@ object JdbcExec {
     *    its own transaction after every partition committed.
     *    Correctness then rests on the keyed writes being idempotent, so
     *    a crash before the cursor commit replays at most one pull into
-    *    convergent MERGEs/DELETEs. The pin is needed there even though
+    *    convergent upserts and DELETEs. The pin is needed there even though
     *    only one action reads the pull: a retried shuffle map task or a
     *    re-planned AQE stage would otherwise re-read a live source, and
     *    the rows written, the rows counted and the cursor taken could

@@ -7,7 +7,9 @@ import org.apache.spark.sql.types._
   * ALTERs, the keyed upsert (`INSERT … ON CONFLICT (pk) DO UPDATE`),
   * the tombstone DELETE, and the jsonb rendering. This object only
   * renders SQL; [[PgDialect]] executes it through [[JdbcExec]]'s
-  * per-partition write, the same path the Derby dialect runs. No
+  * per-partition write, the same path the Derby dialect runs, where the
+  * upsert is a keyed UPDATE batch and then an INSERT batch of the keys
+  * it missed ([[DerbySql.updateSql]], [[DerbySql.insertSql]]). No
   * PostgreSQL server exists offline, so PgDialectSpec executes the PG
   * statements against a recording fake connection.
   */

@@ -19,7 +19,7 @@ import graft.sources.{JdbcCursorStore, JdbcExec}
   * [[RecordingJdbc]]'s one-shot injection (upsert batch / cursor
   * advance after the loads / cursor advance inside the load
   * transaction / that transaction's commit); branch 5 is a REAL
-  * constraint violation raised by embedded Derby's MERGE, with the
+  * constraint violation raised by embedded Derby's upsert, with the
   * corrected re-pull compared against a clean one-shot sync on a
   * fresh database. Under local[*]
   * a task failure is fatal (no retry), so the injected executor-side
@@ -251,7 +251,7 @@ class SyncFailureSpec extends SparkSpec {
       e.contains("executeUpdate[UPDATE \"fi4_state\"")), replay.mkString("\n"))
   }
 
-  test("REAL constraint violation (Derby CHECK rejects the MERGE): " +
+  test("REAL constraint violation (Derby CHECK rejects the upsert): " +
     "the violating partition rolls back, the cursor holds; the " +
     "corrected re-pull converges to the clean one-shot state") {
     val dSchema = StructType(Seq(

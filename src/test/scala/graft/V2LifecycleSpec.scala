@@ -10,8 +10,8 @@ import graft.sources.v2.{MutableSoqlEndpoint, SoqlEndpoint, SoqlEndpoints}
 /** §3.1's full sync lifecycle EXECUTED through BOTH real endpoints in
   * one test (r14, VERDICT ask 6): the DSv2 `graft-soql` source (fake
   * transport, real describe/pushdown/page-parallel scan) feeding the
-  * executed Derby MERGE sink via [[Pipeline.syncOnceV2]] —
-  * describe → SOQL pushdown read → type normalize → staged MERGE →
+  * executed Derby upsert sink via [[Pipeline.syncOnceV2]] —
+  * describe → SOQL pushdown read → type normalize → keyed upsert →
   * cursor advance → incremental second pass → soft-delete propagation
   * → idempotent replay, asserted on final Derby state and cursor
   * across sync rounds. Before this spec the two endpoints had each
