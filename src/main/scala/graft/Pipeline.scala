@@ -11,7 +11,7 @@ import graft.sources.{IncrementalSource, JdbcExec}
   * a JDBC target, plus the describe-driven V2 syncs over the
   * `graft-soql` source. There is one lifecycle: every entry point
   * creates (and drift-ALTERs) its target from the typed source schema,
-  * then runs [[JdbcExec.load]] — ONE Spark action whose partitions
+  * then runs [[JdbcExec.load]] — ONE Spark job whose partitions
   * each keep the latest-wins row of every key, then upsert their live
   * rows and delete their tombstoned keys in one transaction; every
   * write is guarded by the cursor column, so an older version never

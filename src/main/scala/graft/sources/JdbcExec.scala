@@ -1,9 +1,12 @@
 package graft.sources
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types._
-import org.apache.spark.util.AccumulatorV2
+import org.apache.spark.util.{AccumulatorV2, LongAccumulator}
 
 /** Derby dialect of the load side — the EXECUTED sibling of
   * [[JdbcUpsertSink]]'s PostgreSQL SQL generation (r13, VERDICT item
@@ -258,7 +261,9 @@ object PgDialect extends UpsertDialect {
   * transaction per partition that upserts the partition's live rows
   * and deletes its tombstoned keys. Every sync path runs its
   * [[JdbcExec.load]] step; the incremental ones add the cursor
-  * ([[JdbcExec.syncOnce]]).
+  * ([[JdbcExec.syncOnce]]). Every write, on either load path, is ONE
+  * Spark job that `SparkContext.runJob` runs inside one SQL execution,
+  * over a named write function ([[JdbcExec.runWrite]]).
   *
   * Exactly-once ladder, smallest honest claim first:
   *  - every partition write is PK-UNIQUE and DETERMINISTIC: all
@@ -428,12 +433,12 @@ object JdbcExec {
     spark.read.jdbc(url, s""""$table"""", props)
   }
 
-  /** What one [[load]] action wrote: every row after latest-wins, the
+  /** What one [[load]] job wrote: every row after latest-wins, the
     * live (upserted) rows among them, and the largest non-null cursor. */
   private[graft] final case class Loaded(rows: Long, live: Long,
                                         maxCursor: Option[Long])
 
-  /** The [[Loaded]] tally of one [[load]] action. Spark merges
+  /** The [[Loaded]] tally of one [[load]] job. Spark merges
     * accumulator updates from successful tasks only, so a failed or
     * retried partition attempt never counts. */
   private final class SyncTally extends AccumulatorV2[java.lang.Long, Loaded] {
@@ -588,14 +593,67 @@ object JdbcExec {
     (ranked, step)
   }
 
+  /** The function each write task of a sync runs, shipped as a named
+    * class rather than a lambda: `SparkContext.clean` returns at once
+    * for a class that is not a closure, so a sync's write costs the
+    * driver no class-file parsing in the ClosureCleaner. Each row is
+    * turned into a [[Row]] before the write buffers it (the plan's
+    * rows are reused); the converter is built in the task, so its date
+    * and time types follow the session conf the job propagates
+    * (`spark.sql.datetime.java8API.enabled`). */
+  private abstract class SyncWrite(ranked: StructType)
+      extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+    @transient private lazy val toRow =
+      CatalystTypeConverters.createToScalaConverter(ranked)
+    final def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Unit =
+      write(rows.map(toRow(_).asInstanceOf[Row]))
+    protected def write(rows: Iterator[Row]): Unit
+  }
+
+  /** [[load]]'s write: the best row of each run of equal keys. */
+  private final class RunsWrite(step: LoadStep, ranked: StructType)
+      extends SyncWrite(ranked) {
+    protected def write(rows: Iterator[Row]): Unit =
+      step.write(step.bestOfRuns(rows), _ => ())
+  }
+
+  /** [[loadInOneTask]]'s write: at most `batchSize` rows, each key's
+    * best, and the cursor in the same transaction; an overflow writes
+    * nothing and is flagged. */
+  private final class OneTaskWrite(step: LoadStep, ranked: StructType,
+                                   batchSize: Int, overflow: LongAccumulator,
+                                   cursors: JdbcCursorStore, obj: String)
+      extends SyncWrite(ranked) {
+    protected def write(rows: Iterator[Row]): Unit = {
+      val head = rows.take(batchSize + 1).toArray
+      if (head.length > batchSize) overflow.add(1)
+      // a task's copy of the tally holds this partition's rows only
+      else step.write(step.bestPerKey(head), conn =>
+        step.tally.value.maxCursor.foreach(cursors.putInTxn(conn, obj, _)))
+    }
+  }
+
+  /** The one runner of both load paths: ONE Spark job over every
+    * partition of `ranked`'s plan, inside one SQL execution named
+    * `name`, so listeners and the SQL status store see each write. A
+    * plan with no partition runs no task. */
+  private def runWrite(ranked: DataFrame, write: SyncWrite, name: String): Unit = {
+    val qe = ranked.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      val rdd = qe.toRdd
+      ranked.sparkSession.sparkContext.runJob(rdd, write,
+        0 until rdd.getNumPartitions, (_: Int, _: Unit) => ())
+    }
+  }
+
   /** The load step of every sync path but a pull that fits one batch:
     * hash-partitioned and sorted by PK, so a key's versions are one run
-    * in one partition, then ONE Spark action in which each partition
-    * upserts the live latest-wins rows of its runs and DELETEs their
-    * tombstoned keys in one transaction ([[LoadStep]]), while a
-    * [[SyncTally]] counts what it wrote. A key's upsert and delete never
-    * span partitions. The write streams and the sort spills, so a
-    * task's memory stays bounded. */
+    * in one partition, then ONE Spark job ([[runWrite]]) in which each
+    * partition upserts the live latest-wins rows of its runs and
+    * DELETEs their tombstoned keys in one transaction ([[LoadStep]]),
+    * while a [[SyncTally]] counts what it wrote. A key's upsert and
+    * delete never span partitions. The write streams and the sort
+    * spills, so a task's memory stays bounded. */
   private[graft] def load(spark: SparkSession, url: String, table: String,
                           pk: Seq[String], batch: DataFrame,
                           cursorField: String, deletedField: Option[String],
@@ -603,24 +661,23 @@ object JdbcExec {
     import org.apache.spark.sql.functions.col
     val (ranked, step) = prepare(spark, url, table, pk, batch, cursorField,
       deletedField, batchSize)
-    ranked.repartition(pk.map(col): _*).sortWithinPartitions(pk.map(col): _*)
-      .foreachPartition { rows: Iterator[Row] =>
-        step.write(step.bestOfRuns(rows), _ => ())
-      }
+    val sorted = ranked.repartition(pk.map(col): _*)
+      .sortWithinPartitions(pk.map(col): _*)
+    runWrite(sorted, new RunsWrite(step, sorted.schema), "graft.load")
     step.tally.value
   }
 
   /** [[syncOnce]]'s first attempt at a pull, with no pin: ONE task reads
-    * the pull through `coalesce(1)`, buffering at most `batchSize + 1`
-    * rows. If it sees more than `batchSize` rows it writes nothing,
-    * opens no connection and flags the overflow, and the result is
-    * None. Otherwise the same task writes each key's latest-wins row
-    * ([[LoadStep]]), and its one transaction also writes the largest
-    * non-null cursor it saw as `obj`'s cursor (none if every cursor was
-    * null). The plan is the scan, the tiebreak projection and the
-    * write. The rows written, the rows counted and the cursor come from
-    * one read of the source, so the pull needs no snapshot; a retried
-    * task reads it again inside a new transaction. */
+    * the pull through `coalesce(1)` ([[runWrite]]), buffering at most
+    * `batchSize + 1` rows. If it sees more than `batchSize` rows it
+    * writes nothing, opens no connection and flags the overflow, and
+    * the result is None. Otherwise the same task writes each key's
+    * latest-wins row ([[LoadStep]]), and its one transaction also
+    * writes the largest non-null cursor it saw as `obj`'s cursor (none
+    * if every cursor was null). The plan is the scan, the tiebreak
+    * projection and the write. The rows written, the rows counted and
+    * the cursor come from one read of the source, so the pull needs no
+    * snapshot; a retried task reads it again inside a new transaction. */
   private def loadInOneTask(spark: SparkSession, url: String, table: String,
                             pk: Seq[String], pull: DataFrame,
                             cursorField: String, deletedField: Option[String],
@@ -632,13 +689,9 @@ object JdbcExec {
     // Not `pull.limit(batchSize + 1)`: every limit plan names its
     // generated counter from a global sequence (`_limit_counter_<n>`),
     // so each sync would generate, and Janino compile, new classes.
-    ranked.coalesce(1).foreachPartition { rows: Iterator[Row] =>
-      val head = rows.take(batchSize + 1).toArray
-      if (head.length > batchSize) overflow.add(1)
-      // a task's copy of the tally holds this partition's rows only
-      else step.write(step.bestPerKey(head), conn =>
-        step.tally.value.maxCursor.foreach(cursors.putInTxn(conn, obj, _)))
-    }
+    val one = ranked.coalesce(1)
+    runWrite(one, new OneTaskWrite(step, one.schema, batchSize, overflow,
+      cursors, obj), "graft.loadInOneTask")
     if (overflow.sum == 0) Some(step.tally.value) else None
   }
 

@@ -277,7 +277,7 @@ class DerbySinkSpec extends SparkSpec {
     // ADVICE r13: untyped setObject(i, null) is driver-dependent; the
     // write path must go through ps.setNull(i, <sql type>). Exercise a
     // null in every non-PK type the schema carries, both on insert and
-    // on a MERGE-update that overwrites a non-null with a null.
+    // on a keyed UPDATE that overwrites a non-null with a null.
     val vschema = schema.add(StructField("ver", LongType))
     JdbcExec.withConnection(url) { conn =>
       JdbcExec.ensureTable(conn, "null_tgt", vschema, pk = Seq("id"))
@@ -293,7 +293,7 @@ class DerbySinkSpec extends SparkSpec {
     assert(got.length == 2)
     assert((1 to 5).forall(got(0).isNullAt))
     assert(got(1).getAs[String]("name") == "full")
-    // MERGE-update: row 2's name/score go null; typed nulls again
+    // keyed UPDATE: row 2's name/score go null; typed nulls again
     val upd = spark.createDataFrame(
       spark.sparkContext.parallelize(
         Seq(Row(2L, null, new java.math.BigDecimal("9.00"),
@@ -306,7 +306,7 @@ class DerbySinkSpec extends SparkSpec {
   }
 
   test("binary values round-trip EXECUTED through Derby: setBytes on " +
-    "insert and MERGE-update, typed VARBINARY null both ways (r18)") {
+    "insert and keyed UPDATE, typed VARBINARY null both ways (r18)") {
     // The PG dialect's bytea bind is render-asserted (PgDialectSpec);
     // Derby's VARCHAR FOR BIT DATA executes the SAME setBytes /
     // setNull(VARBINARY) calls end-to-end, shrinking the live-PG
@@ -329,7 +329,7 @@ class DerbySinkSpec extends SparkSpec {
     assert(got(0).getAs[Array[Byte]]("blob").toSeq ==
       Seq[Byte](1, 2, -1, 0, 127, -128))
     assert(got(1).isNullAt(1))
-    // MERGE-update: non-null -> null and null -> non-null
+    // keyed UPDATE: non-null -> null and null -> non-null
     val upd = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(
         Row(1L, null, 2L), Row(2L, Array[Byte](42), 2L)), 1), bschema)

@@ -50,7 +50,7 @@ class V2LifecycleSpec extends SparkSpec {
       targetTypes = Map("amount" -> DecimalType(12, 2)),
       stateTable = "v2_sync_state", batchSize = 3)
 
-  test("describe→pushdown→normalize→MERGE→cursor across two sync " +
+  test("describe→pushdown→normalize→upsert→cursor across two sync " +
     "rounds, with soft-delete propagation and idempotent replay") {
     val ep = new RecordingEndpoint(schema, Seq(
       row(1, "alpha", 10.125, 100),
@@ -110,7 +110,7 @@ class V2LifecycleSpec extends SparkSpec {
     assert(readTarget() == afterRound2)
 
     // ---- crash-replay: cursor reset to pre-round-2, re-run converges
-    // (keyed MERGE/DELETE idempotence — the exactly-once ladder) ----
+    // (keyed upsert/DELETE idempotence — the exactly-once ladder) ----
     JdbcExec.withConnection(url) { conn =>
       conn.setAutoCommit(false)
       new JdbcCursorStore(url, "v2_sync_state")
@@ -123,7 +123,7 @@ class V2LifecycleSpec extends SparkSpec {
 
   test("mid-lifecycle schema drift: describe() gains a field BETWEEN " +
     "sync rounds — re-describe → ALTER ADD COLUMN → null backfill → " +
-    "the new column flows through the staged MERGE (r15, VERDICT ask 5)") {
+    "the new column flows through the keyed upsert (r15, VERDICT ask 5)") {
     val url2 = s"jdbc:derby:memory:graftv2drift${System.nanoTime};create=true"
     val drifting = new DriftingEndpoint(new MutableSoqlEndpoint(schema, Seq(
       row(1, "alpha", 10.0, 100),
@@ -151,7 +151,7 @@ class V2LifecycleSpec extends SparkSpec {
           Seq(2L, "beta-v2", 21.0, 120L, false, "emea"),   // update
           Seq(3L, "gamma", 30.0, 130L, false, "apac"))))   // insert
 
-    // ---- round 2: re-describe drives the DDL, then the MERGE ----
+    // ---- round 2: re-describe drives the DDL, then the upsert ----
     assert(sync2() == 130L)
     val t1 = JdbcExec.readTable(spark, url2, "account_drift_tgt")
     assert(t1.columns.map(_.toLowerCase).contains("region"),
